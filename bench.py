@@ -1,7 +1,12 @@
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
-{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+tools/runner.py times each query: best of 2 after one warm run, built
+from scratch and materialized to a noop sink. HEADLINE is the scored
+subset, frozen so round-over-round totals compare like for like; every
+other registered query is timed as an extra. The full record goes to
+BENCH_result.json. The LAST stdout line is a compact JSON summary
+(metric/value/unit/queries/sf), at most 2,000 chars, because the driver
+reads only that tail.
 """
 
 from __future__ import annotations
@@ -9,14 +14,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from rag_system_vector_db_spark.registry import QUERIES  # noqa: E402
 from rag_system_vector_db_spark.session import get_spark  # noqa: E402
+from tools import runner  # noqa: E402
 
 # Headliners: vector search + dedup-ish + analytics; every registered
 # query that exists is eligible, this list is the stable scored subset.
@@ -64,512 +67,32 @@ HEADLINE = [
     "topk_per_group",
 ]
 
-# Timed and reported but not part of the scored total (added after r1;
-# keeping HEADLINE frozen keeps round-over-round totals comparable).
-EXTRA = [
-    "ann_ivf",
-    "ann_ivf_rerank",
-    "ann_probe_sweep",
-    "dedup_embedding_cosine",
-    "split_large_chunks",
-    # r2 curation suite
-    "repetition_stats",
-    "quality_filters",
-    "benchmark_contamination",
-    "corpus_mix",
-    "length_histogram",
-    "pca_project",
-    # r2 vector-index build suite
-    "ann_pq_adc",
-    "pq_reconstruction_error",
-    "embedding_quantize_int8",
-    "ann_ivf_indexed",
-    # r2 time-series joins
-    "events_asof_attribution",
-    "events_range_join",
-    # r4 diagnostics + cohort analytics
-    "skew_profile",
-    "cohort_retention",
-    # r4 dedup additions
-    "dedup_fuzzy_edit",
-    "semdedup",
-    # r4 materialized text index
-    "keyword_index_topk",
-    "minhash_accuracy",
-    "lm_perplexity",
-    "sequence_packing",
-    "incremental_dedup",
-    "funnel_analysis",
-    "matryoshka_recall",
-    "ivf_cell_stats",
-    "hybrid_index_rrf",
-    "embedding_drift",
-    "semdedup_clusters",
-    "knn_filtered",
-    "maxsim_group_retrieval",
-    "knn_graph_lsh",
-    "events_anomaly",
-    "retrieval_metrics",
-    # r5
-    "ivf_probe_sweep",
-    "quality_classifier",
-    "hard_negative_mining",
-    "cluster_purity",
-    "keyword_index_batch",
-    "hybrid_index_batch",
-    "multimodal_dedup",
-    "volume_shipping",
-    "promo_revenue",
-    "discounted_revenue",
-    "ann_ivfpq",
-    "substring_dedup",
-    "order_priority_check",
-    "customer_order_distribution",
-    "small_quantity_revenue",
-    "large_volume_customers",
-    "tokenizer_fertility",
-    "dsir_selection",
-    "top_supplier_revenue",
-    "suppliers_kept_waiting",
-    "keyword_index_phrase",
-    "bloom_dedup_probe",
-    "scd2_intervals",
-    "ann_ivfpq_indexed",
-    "shipping_priority",
-    "revenue_forecast",
-    "returned_items",
-    "market_share",
-    "keyword_index_merge",
-    "cdc_apply",
-    "ann_ivfpq_residual",
-    "dedup_cluster_stats",
-    "minhash_band_sweep",
-    "retrieval_ndcg",
-    "knn_graph_degree_stats",
-    # r5 second wave
-    "global_sales_opportunity",
-    "group_reservoir_sample",
-    "priority_sample",
-    "compaction_plan",
-    "zorder_layout",
-    "bpe_pair_counts",
-    "event_transitions",
-    "knn_graph_pagerank",
-    "mutual_knn",
-    "kmeans_refine",
-    "salted_join_topn",
-    "triangle_count",
-    "curation_pipeline",
-    "data_quality_checks",
-    "mlm_mask_corpus",
-    "span_corrupt_corpus",
-    "rag_context_budget",
-    "events_gap_fill",
-    "events_ohlc",
-    # r5 third wave
-    "lineitem_priority_mix",
-    "train_test_split",
-    "lang_confusion",
-    "pmi_collocations",
-    "query_expansion_prf",
-    "ann_binary_hamming",
-    "ann_sq8",
-    "soft_dedup_weights",
-    "revenue_cube",
-    "rerank_two_stage",
-    "events_ewma",
-    "incremental_agg_maintenance",
-    "token_entropy",
-    "qlm_dirichlet_topk",
-    "faceted_search_counts",
-    "rfm_segments",
-    "lm_perplexity_bigram",
-    "session_paths",
-    "skipgram_pairs",
-    "temporal_split",
-    "ann_ivf_sq8",
-    "dataset_card",
-    "quantization_recall",
-    "embedding_quality_checks",
-    "bpe_train_rounds",
-    "label_outliers",
-    "tfidf_vsm_topk",
-    "grouped_latency_slo",
-    "vocab_coverage",
-    "knn_graph_2hop",
-    "multimodal_shard_plan",
-    "pre_post_analysis",
-    "hybrid_combsum",
-    "chunk_overlap",
-    "dedup_containment",
-    "percolate_queries",
-    "snapshot_diff",
-    "events_twa",
-    "kmv_distinct_by_group",
-    "events_anomaly_mad",
-    "vocab_drift",
-    "split_ngram_leakage",
-    "discount_elasticity",
-    "trimmed_mean_stats",
-    "revenue_concentration",
-    "seasonality_profile",
-    "conversion_latency",
-    "topk_stability",
-    "cms_heavy_hitters",
-    "exactly_once_ingest",
-    "slo_burn_rate",
-    "audience_overlap",
-    "market_basket_lift",
-    "dau_stickiness",
-    "corr_matrix",
-    "cusum_changepoint",
-    "events_interarrival",
-    "ab_welch_ttest",
-    "corpus_temperature_mix",
-    "token_budget_plan",
-    "hll_distinct",
-    "retrieval_mmr",
-    "classifier_calibration",
-    "events_histogram_equidepth",
-    "describe_collection",
-    # r5 continuation: statistical testing + layout advisor
-    "chi_square_independence",
-    "layout_skipping_compare",
-    "events_decayed_topk",
-    "grouped_ols_slopes",
-    "mann_whitney_u",
-    "knn_classifier_eval",
-    "survival_km",
-    "silhouette_simplified",
-    "zipf_fit",
-    "jackknife_variance",
-    "bootstrap_ci",
-    "partition_plan_sim",
-    "postings_compression_stats",
-    "source_distinctive_terms",
-    "psi_drift",
-    "knn_graph_assortativity",
-    "bm25_tuning_grid",
-    "snippet_extraction",
-    "cross_source_duplication",
-    "holt_forecast",
-    "kendall_tau_ranks",
-    "ab_power_analysis",
-    "classifier_pr_curve",
-    "brier_decomposition",
-    "join_cardinality_estimate",
-    "filter_selectivity_estimate",
-    "embedding_dedup_recall",
-    "order_backlog_timeseries",
-    "rollup_grain_advisor",
-    "seasonal_decompose",
-    "dedup_keep_best",
-    "quantile_confidence_bands",
-    "intraclass_correlation",
-    "dedup_threshold_sweep",
-    "embedding_dim_profile",
-    "eb_rate_shrinkage",
-    "simpson_paradox_check",
-    "bloom_filter_sizing",
-    "recall_at_k_sweep",
-    "uncertainty_sampling",
-    "source_ngram_similarity",
-    "seasonal_residual_anomaly",
-    "lorenz_curve_points",
-    "partition_scheme_advisor",
-    "cache_hit_rate_plan",
-    "paired_ttest_users",
-    "benford_first_digit",
-    "heaps_law_fit",
-    "ks_two_sample",
-    "session_gap_sweep",
-    "srm_check",
-    "did_estimator",
-    "cuped_adjustment",
-    "link_prediction_jaccard",
-    "conformal_interval",
-    "dp_noise_calibration",
-    "oneway_anova_f",
-    "hill_tail_index",
-    "daily_autocorrelation",
-    "count_overdispersion",
-    "churn_auc_baseline",
-    "cohort_ltv_curve",
-    "term_burstiness",
-    "ratio_metric_delta",
-    "embedding_isotropy",
-    "boosting_stump_round",
-    "neyman_allocation",
-    "horvitz_thompson_total",
-    "quadratic_trend_fit",
-    "mix_shift_decomposition",
-    "cost_optimal_threshold",
-    "winsorized_mean_stats",
-    "revenue_max_drawdown",
-    "mix_entropy_trend",
-    "gate_agreement_kappa",
-    "sampling_weights_ess",
-    "knn_range_search",
-    "post_filter_recall",
-    "hnsw_layer_plan",
-    "fim_transform",
-    "k_anonymity_audit",
-    "filter_bias_audit",
-    "trigram_fuzzy_match",
-    "kmv_set_ops",
-    "forecast_backtest",
-    "list_collections",
-    "rag_groundedness",
-    "window_funnel",
-    "position_bias_coec",
-    "multitouch_attribution",
-    "pit_feature_join",
-    "histogram_quantile_sketch",
-    "broadcast_size_advisor",
-    "markov_attribution",
-    "wand_pruning_sim",
-    "padding_waste_audit",
-    "cascade_retrieval_sim",
-    "merge_into_apply",
-    "seeding_quality_eval",
-    "graph_random_walks",
-    "ood_mahalanobis",
-    "retention_halflife_fit",
-    "hll_merge_rollup",
-    "growth_accounting",
-    "ltr_pair_gen",
-    "prefix_autocomplete",
-    "ucb_bandit_replay",
-    "propensity_matching_att",
-    "gmm_em_round",
-    "mediation_analysis",
-    "graph_modularity",
-    "rank_biased_overlap",
-    "sliding_window_hll",
-    "cdc_chunking",
-    "backfill_plan",
-    "als_rank1_round",
-    "weighted_jaccard_pairs",
-    "jl_projection_audit",
-    "pca_explained_variance",
-    "textrank_keywords",
-    "count_sketch_estimate",
-    "itemcf_topk",
-    "kneser_ney_bigram_ppl",
-    "moe_router_balance",
-    "topic_coherence_npmi",
-    "holt_winters_forecast",
-    # r8: registered capped-dedup configuration + audit
-    "dedup_minhash_lsh_capped",
-    "dedup_simhash_capped",
-    "hot_bucket_report",
-]
 
-
-# Host-calibration reference for the INTERLEAVED protocol (r8): the
-# median of best-of-2 samples taken across a full sf0.1 run on a
-# quiet-start box (load_avg 1.5; steady-state samples 0.14-0.17,
-# mid-run samples up to 0.32 while the bench loads its own host —
-# the median absorbs both, so the reference must be measured the same
-# way). Re-baselined from the old single best-of-3 0.40: that sample
-# was JIT-cold by construction and is not comparable to steady-state
-# medians. The compact record reports raw + calibrated totals and the
-# sample spread so round-over-round comparisons read off the record
-# itself. Ratio only meaningful at the sf0.1 reference scale.
-CAL_REF_SEC = 0.168
-
-
-def calibration_run(spark, sf_dir: str, passes: int = 3) -> float:
-    """Fixed parquet scan+agg microbenchmark (code never changes round
-    to round): full lineitem scan, groupBy(returnflag,linestatus) with
-    4 aggregates. Pure JVM codegen path — measures host/JVM throughput,
-    not query-plan quality."""
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    best = float("inf")
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        df.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum("l_quantity"),
-            F.sum("l_extendedprice"),
-            F.avg("l_discount"),
-            F.count("*"),
-        ).count()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def main() -> None:
+def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
-    # Quiet-start gate (VERDICT r8 #3): the r8 record was taken at
-    # load 5.77 and became a phantom +24% regression. If the box is
-    # loaded, WAIT (up to 5 min) for 1-min load to drop below
-    # cores/8 rather than recording a polluted series point; the wait
-    # and the residual load are annotated so a still-loaded record is
-    # self-describing.
-    quiet_threshold = (os.cpu_count() or 32) / 8
-    load_wait_sec = 0.0
-    wait_t0 = time.perf_counter()
-    while os.getloadavg()[0] > quiet_threshold and load_wait_sec < 300:
-        time.sleep(10)
-        load_wait_sec = round(time.perf_counter() - wait_t0, 1)
-    # Sampled BEFORE the bench's own warmup loads the box — this, not
-    # load_avg_before (taken post-warmup, always elevated by our own
-    # 32-thread warmup), is what quiet_start is judged on.
-    load_at_start = os.getloadavg()[0]
     spark = get_spark("bench")
-    # warm the JVM + parquet footers once
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    # Interleaved calibration (VERDICT r7 #3): ONE bracketing sample
-    # cannot correct mid-run load swings — r7's −16% calibration vs
-    # +5% raw produced a phantom +24% calibrated regression. Samples
-    # (each best-of-2 of the fixed scan+agg) are taken before, DURING
-    # (between headline queries), and after the timed runs; the
-    # published calibration_sec is their median, and the spread is on
-    # the record so a noisy run flags itself instead of costing an
-    # adjudication.
-    cal_samples: list[float] = []
-
-    def take_cal() -> None:
-        cal_samples.append(calibration_run(spark, sf_dir, passes=2))
-    # Untimed warmup pass: compiles + caches each query's whole-stage
-    # codegen classes so the timed runs measure steady-state engine
-    # throughput rather than one-off JIT compilation. The calibration
-    # scan+agg warms here too (ADVICE r8): without it the FIRST
-    # interleaved sample measures the calibration query's own JIT
-    # compilation (~2x steady state), which inflated
-    # calibration_spread past the 10% noisy threshold on quiet runs
-    # and destroyed the flag's meaning.
-    calibration_run(spark, sf_dir, passes=1)
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is not None:
-            fn(spark, sf_dir).count()
-    # First calibration sample AFTER warmup: a pre-warmup sample
-    # measures JIT-cold throughput (observed 0.38 vs 0.15 steady) and
-    # inflates the spread with a structural artifact every run has.
-    take_cal()
-
-    # Best-of-2 timed passes: steady-state engine throughput, not
-    # scheduler/GC jitter (single-pass numbers swing ±40% locally).
-    OUTLIER_RETIME_SEC = 3.0
-    retimed: list[str] = []
-
-    def best_of(
-        names: list[str], passes: int = 2, cal_every: int = 0
-    ) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for qi, name in enumerate(names):
-            if cal_every and qi and qi % cal_every == 0:
-                take_cal()
-            fn = QUERIES.get(name)
-            if fn is None:
-                continue
-            best = float("inf")
-            for _ in range(passes):
-                t0 = time.perf_counter()
-                n = fn(spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-                assert n >= 0
-            # Long benchmark JVMs occasionally produce one query whose
-            # BOTH passes land in a GC/compaction window (observed
-            # 1.2 s -> 10.9 s once per ~70-query run, normal standalone
-            # and in every other run). One extra pass for slow results
-            # kills the outlier without lengthening the normal path.
-            # Every retimed query is RECORDED (outlier_retimed in the
-            # JSON) so best-of-3 numbers are never silently compared
-            # against other rounds' best-of-2.
-            if best > OUTLIER_RETIME_SEC:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-                retimed.append(name)
-            out[name] = round(best, 4)
-        return out
-
-    load_before = os.getloadavg()
-    timings = best_of(HEADLINE, cal_every=9)
-    take_cal()
-    # Newly-oracled scale paths: timed + reported, NOT in the scored
-    # total (the HEADLINE subset stays stable so round-over-round
-    # totals compare like for like).
-    for name in EXTRA:
-        fn = QUERIES.get(name)
-        if fn is not None:
-            fn(spark, sf_dir).count()  # warm
-    extra = best_of(EXTRA, cal_every=70)
-    take_cal()
-    total = round(sum(timings.values()), 4)
-    load_after = os.getloadavg()
-    cal_sorted = sorted(cal_samples)
-    m = len(cal_sorted) // 2
-    calibration_sec = round(
-        cal_sorted[m] if len(cal_sorted) % 2 else (cal_sorted[m - 1] + cal_sorted[m]) / 2,
-        4,
-    )
-    calibration_spread = round(
-        (cal_sorted[-1] - cal_sorted[0]) / calibration_sec, 4
-    )
+    headline = set(HEADLINE)
+    extra = [n for n in QUERIES if n not in headline]
+    results = runner.run(spark, sf_dir, HEADLINE + extra, "time")
+    secs, failures = runner.split(results)
+    timings = {n: secs[n] for n in HEADLINE if n in secs}
     result = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "queries": timings,
         "sf": sf,
+        "queries": timings,
         "timed_passes": 2,
-        # Fixed scan+agg microbenchmark (calibration_run above):
-        # measures host/JVM throughput this run vs the quiet-box
-        # reference, so a loaded host reads off the record itself
-        # instead of costing an adjudication (r5 lesson).
-        # calibration_sec = MEDIAN of the interleaved samples; samples
-        # + spread published so mid-run load swings are visible on the
-        # record (r7's phantom +24% came from one bracketing sample).
-        "calibration_sec": calibration_sec,
-        "calibration_samples": cal_samples,
-        "calibration_spread": calibration_spread,
-        # spread > 10% ⇒ the host's throughput moved mid-run; treat
-        # value_calibrated (and cross-round deltas) as unreliable.
-        "calibration_noisy": calibration_spread > 0.10,
-        "calibration_ref_sec": CAL_REF_SEC,
-        # CAL_REF_SEC was measured at sf0.1 (the driver's bench scale);
-        # at any other sf the ratio is meaningless, so the calibrated
-        # total is null there rather than parseable-but-wrong
-        # (ADVICE r6). calibration_valid flags it explicitly.
-        "calibration_valid": sf == 0.1,
-        "value_calibrated": (
-            round(total * CAL_REF_SEC / calibration_sec, 4) if sf == 0.1 else None
-        ),
-        # queries that got the one extra anti-outlier pass this run
-        # (their value is best-of-3; empty on a clean run)
-        "outlier_retimed": retimed,
-        "outlier_retime_threshold_sec": OUTLIER_RETIME_SEC,
-        "extra_queries": extra,
-        # 1/5/15-min load averages bracketing the timed runs:
-        # >~1.5 at start means machine noise inflated numbers
-        # (observed swing 20-40%) — re-run before reading a
-        # regression off this record.
-        "load_avg_before": [round(x, 2) for x in load_before],
-        "load_avg_after": [round(x, 2) for x in load_after],
-        # Quiet-start gate: seconds spent waiting for 1-min load to
-        # drop below quiet_start_threshold before starting (capped at
-        # 300). quiet_start=false means the wait timed out and this
-        # record was STILL taken on a loaded box.
-        "load_wait_sec": load_wait_sec,
-        "quiet_start_threshold": round(quiet_threshold, 2),
-        "load_at_start": round(load_at_start, 2),
-        "quiet_start": load_at_start <= quiet_threshold,
+        "sink": "noop",
+        "session": runner.stamp(spark),
+        "failures": failures,
+        "extra_queries": {n: secs[n] for n in extra if n in secs},
     }
-    # The driver records only the LAST 2000 stdout chars. The full
-    # record (282 extras) is ~8 KB, so it goes to the durable file +
-    # an early stdout line; the FINAL stdout line is a compact summary
-    # (headline total + 36-query headline dict + calibration, ~1.3 KB)
-    # that fits the tail window whole. r4 and r5 both lost the driver
-    # record to tail truncation — the compact-last-line contract is
-    # what BENCH_r06 parses.
+    spark.stop()
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_result.json")
     try:
         with open(out_path, "w") as f:
@@ -577,38 +100,18 @@ def main() -> None:
             f.write("\n")
     except OSError as e:
         print(f"warning: could not write {out_path}: {e}", file=sys.stderr)
-    print(json.dumps(result, separators=(",", ":")))
-    sys.stdout.flush()
-    spark.stop()
-    compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "queries": timings,
-        "calibration_sec": calibration_sec,
-        "calibration_samples": cal_samples,
-        "calibration_spread": calibration_spread,
-        "calibration_noisy": result["calibration_noisy"],
-        "calibration_ref_sec": CAL_REF_SEC,
-        "calibration_valid": result["calibration_valid"],
-        "value_calibrated": result["value_calibrated"],
-        "timed_passes": 2,
-        "extras": "BENCH_result.json",
-        "load_avg_before": result["load_avg_before"],
-        "load_at_start": result["load_at_start"],
-        "quiet_start": result["quiet_start"],
-    }
+    compact = {k: v for k, v in result.items() if k != "extra_queries"}
+    compact.update(failures=len(failures), extras="BENCH_result.json")
     line = json.dumps(compact, separators=(",", ":"))
-    # Hard guarantee: the summary line must fit the driver's 2000-char
-    # tail whole. If the headline dict ever outgrows it, drop to the
-    # totals-only form rather than ship an unparseable record.
+    # The summary line must fit the driver's 2000-char tail whole: if the
+    # headline dict ever outgrows it, drop to the totals-only form rather
+    # than ship an unparseable record.
     if len(line) > 1900:
         compact.pop("queries")
         line = json.dumps(compact, separators=(",", ":"))
-    print(line)
-    sys.stdout.flush()
+    print(line, flush=True)
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -357,7 +357,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -
     # double sum is order-sensitive in the last ulp, which the 6dp
     # round EXPOSES once a single session holds ~250k events (the skew
     # corpus's hot user: 12439640.049999 vs .05 — caught by
-    # tools/skew_parity.py r8). Long micro-units are associative, so
+    # the r8 skew-corpus parity run). Long micro-units are associative, so
     # Spark's partial-agg order and DuckDB's scan order produce the
     # identical integer at any scale.
     return (

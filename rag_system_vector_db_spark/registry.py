@@ -6,10 +6,10 @@ match exactly; float columns are rounded to 6 decimals on both sides
 AFTER any ordering/ranking on full precision, so value-hashes agree.
 
 r6: mechanically split by SURVEY §2 family into
-``registry_parts/partNN_*`` (statements unedited — see
-tools/split_registry.py); importing this module imports every part in
-the original order, so registration order and the driver's 50-entry
-window are byte-identical to the monolith.
+``registry_parts/partNN_*`` (statements unedited; the one-shot split
+script was deleted once the parts became the source); importing this
+module imports every part in the original order, so registration order
+and the driver's 50-entry window are byte-identical to the monolith.
 """
 
 from __future__ import annotations

@@ -918,8 +918,8 @@ def dedup_simhash(spark, sf_dir):
 # band bucket's pair volume at C(128,2) ~ 8k. At the N=500 gate scales
 # occupancy is ~0.5 so capped ≡ uncapped — the oracle replays the cap
 # as a membership-count filter either way, and the skew-corpus parity
-# run (tools/skew_parity.py) exercises the non-trivial drop path
-# cross-engine.
+# run (tools/runner.py check --names skew) exercises the non-trivial
+# drop path cross-engine.
 _SIMHASH_MAX_BUCKET = 128
 
 

@@ -1,7 +1,10 @@
 """Tuned SparkSession factory.
 
 Local mode for tests/bench; the same configs (AQE, Arrow, UTC) are the
-ones we'd ship on a real cluster — only master/memory differ.
+ones we'd ship on a real cluster — only master/memory differ. Cores and
+driver memory come from the host (the CPUs this process may run on,
+half of MemTotal); SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override
+them for a deployment.
 """
 
 from __future__ import annotations
@@ -11,13 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_mem_total() -> str:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 2 // 1024}m"
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(
     app_name: str = "rag_system_vector_db_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or (os.cpu_count() or 4)
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or len(os.sched_getaffinity(0))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_mem_total()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     # Python workers unpickle pandas_udf closures that reference this
@@ -42,7 +54,7 @@ def get_spark(
         # console progress bars write \r-frames to stderr that corrupt
         # captured output (the driver's bench-tail parse) — off always.
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -12,7 +12,10 @@ dtypes per column, not just 9-significant-digit string equality.
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 import time
+import uuid
 
 import duckdb
 
@@ -22,6 +25,12 @@ from rag_system_vector_db_spark.sources.tables import duck_parquet_path
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    # DuckDB's default spill directory is the relative ".tmp", i.e. inside
+    # whatever cwd the tests run from. A unique path under the system temp
+    # dir keeps spills out of the checkout; DuckDB creates it on the first
+    # spill and removes it when the connection closes.
+    spill = os.path.join(tempfile.gettempdir(), f"duckdb-oracle-{uuid.uuid4().hex}")
+    con.execute(f"SET temp_directory='{spill}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{duck_parquet_path(sf_dir, t)}')"

@@ -3,6 +3,8 @@ oracle must hash-match DuckDB at sf0.001."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from rag_system_vector_db_spark.registry import LAZY_ORACLES, ORACLES, QUERIES
@@ -32,3 +34,12 @@ def test_every_query_runs(spark, sf_dir):
     for name, fn in QUERIES.items():
         df = fn(spark, sf_dir)
         assert df.columns, name
+
+
+def test_duckdb_spills_outside_the_checkout(sf_dir, monkeypatch):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    monkeypatch.chdir(root)
+    con = duck_connection(sf_dir)
+    (spill,) = con.sql("SELECT current_setting('temp_directory')").fetchone()
+    con.close()
+    assert os.path.isabs(spill) and not os.path.abspath(spill).startswith(root + os.sep)

@@ -44,11 +44,11 @@ def test_oracle_sql_resolves_lazy_entries_to_strings():
 
 
 def test_bench_lists_name_registered_queries():
-    import bench
+    from tools import runner
 
-    missing = (set(bench.HEADLINE) | set(bench.EXTRA)) - set(QUERIES)
-    assert not missing, f"bench names not registered: {sorted(missing)}"
-    assert not set(bench.HEADLINE) & set(bench.EXTRA)
+    for name in runner.SETS:
+        missing = set(runner.resolve(name)) - set(QUERIES)
+        assert not missing, f"runner set {name!r} names unregistered: {sorted(missing)}"
 
 
 def test_no_forced_broadcast_of_data_proportional_relations():

@@ -1,0 +1,48 @@
+"""tools/runner.py: the one loop behind bench.py and every parity sweep."""
+
+from __future__ import annotations
+
+import pytest
+
+from rag_system_vector_db_spark.registry import ORACLES
+from tests.oracle import duck_connection
+from tools import runner
+
+NAMES = ["dedup_exact", "agg_pricing_summary"]
+
+
+@pytest.fixture
+def cli(spark, monkeypatch):
+    """runner.main on the test session instead of a fresh one."""
+    monkeypatch.setattr(runner, "get_spark", lambda *a, **k: spark)
+    return runner.main
+
+
+def test_check_mode_matches(cli, sf_dir, capsys):
+    assert cli(["check", "--sf", sf_dir, "--names", ",".join(NAMES)]) == 0
+    out = capsys.readouterr().out
+    assert [line.split()[1] for line in out.splitlines() if line.startswith("[")] == [
+        "MATCH",
+        "MATCH",
+    ]
+    assert "RUNNER DONE 2 entries, 0 failures" in out
+
+
+def test_check_mode_reports_a_wrong_oracle(cli, sf_dir, capsys, monkeypatch):
+    monkeypatch.setitem(ORACLES, NAMES[1], "SELECT 1 AS wrong")
+    assert cli(["check", "--sf", sf_dir, "--names", ",".join(NAMES)]) != 0
+    out = capsys.readouterr().out
+    assert f"MISMATCH {NAMES[1]}" in out
+    assert "RUNNER DONE 2 entries, 1 failures" in out
+
+
+def test_time_mode_returns_one_positive_time_per_name(spark, sf_dir):
+    results = runner.run(spark, sf_dir, NAMES, "time")
+    assert list(results) == NAMES
+    assert all(status == "TIME" and sec > 0 for status, sec in results.values())
+
+
+def test_checksum_compare_rejects_float_columns(spark, sf_dir):
+    df = spark.range(3).selectExpr("id * 0.5 AS x")
+    with pytest.raises(TypeError, match="int/str columns"):
+        runner.checksum_compare(df, duck_connection(sf_dir), "SELECT 0.5 AS x", "floaty")

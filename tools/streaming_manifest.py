@@ -82,7 +82,7 @@ def main() -> int:
     from rag_system_vector_db_spark.sources.tables import load_table
     from rag_system_vector_db_spark.streaming import pipeline as P
 
-    spark = get_spark("streaming-manifest", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("streaming-manifest")
     spark.sparkContext.setLogLevel("ERROR")
     results: dict = {}
     work = tempfile.mkdtemp(prefix="stream_manifest_")
