@@ -35,38 +35,29 @@ def _token_vec(token: str, dim: int = DIM) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal(dim)
 
 
-def embed_text_py(text: str, dim: int = DIM) -> np.ndarray:
-    """Driver-side single-text embedding (question path, app.py:55)."""
-    v = np.zeros(dim)
-    for tok in text.split(" "):
-        if tok:
-            v += _token_vec(tok, dim)
-    n = float(np.linalg.norm(v))
-    if n > 0:
-        v /= n
-    return v.astype(np.float32)
-
-
-# DataType object (not a DDL string) so the decorator doesn't need an
-# active SparkSession at import time.
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def embed_udf(texts: pd.Series) -> pd.Series:
+def hashing_encoder(texts, dim: int = DIM) -> np.ndarray:
+    """The stand-in batch encoder (list[str] -> (n, dim) float32): each
+    row is the normalized sum of its tokens' vectors, accumulated in
+    float64 in token order. Token vectors are cached per batch."""
     cache: dict[str, np.ndarray] = {}
-    out = []
-    for text in texts:
-        v = np.zeros(DIM)
-        for tok in (text or "").split(" "):
+    out = np.zeros((len(texts), dim))
+    for v, text in zip(out, texts):
+        for tok in text.split(" "):
             if not tok:
                 continue
             tv = cache.get(tok)
             if tv is None:
-                tv = cache[tok] = _token_vec(tok)
+                tv = cache[tok] = _token_vec(tok, dim)
             v += tv
         n = float(np.linalg.norm(v))
         if n > 0:
             v /= n
-        out.append(v.astype(np.float32))
-    return pd.Series(out)
+    return out.astype(np.float32)
+
+
+def embed_text_py(text: str, dim: int = DIM) -> np.ndarray:
+    """Driver-side single-text embedding (question path, app.py:55)."""
+    return hashing_encoder([text], dim)[0]
 
 
 # The documented swap point, made mechanical: any batch encoder
@@ -90,6 +81,8 @@ def make_embed_udf(encode_batch, dim: int = DIM):
     so it must be picklable (SentenceTransformer models are; they load
     lazily per worker on first batch)."""
 
+    # DataType object, not a DDL string: embed_udf below is built at
+    # import time, when no SparkSession may be active.
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def _udf(texts: pd.Series) -> pd.Series:
         # Zero-row Arrow batches are legal; real encoders return a 1-D
@@ -102,6 +95,9 @@ def make_embed_udf(encode_batch, dim: int = DIM):
         return pd.Series(list(vecs))
 
     return _udf
+
+
+embed_udf = make_embed_udf(hashing_encoder)
 
 
 def sentence_transformer_encoder(model_name: str = "Snowflake/snowflake-arctic-embed-s"):

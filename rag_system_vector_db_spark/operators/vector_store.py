@@ -2,10 +2,18 @@
 surface (scripts/milvus_db.py ZillizClient) as a Spark-native library.
 
 A collection is a parquet directory + a tiny JSON manifest (dim,
-metric, primary field). All operations are DataFrame plans; inserts
-are append-only parquet writes with last-write-wins upsert resolution
-at read time (a standard LSM-flavored pattern — no file rewrites on
-the write path, compaction is an explicit maintenance call).
+metric, primary field). All operations are DataFrame plans.
+
+Storage is an **upsert log**: parquet rows stamped with ``_batch``,
+appended and never rewritten in place. At read time the latest stamp
+per key wins; compaction (an explicit maintenance call) folds the log
+down to one row per key. ``append_log`` / ``resolve_log`` /
+``compact_log`` below own the format. Callers: ``VectorCollection``;
+the streaming IVF index (``streaming.pipeline``'s
+``start_ivf_index_maintenance``, ``read_ivf_index``,
+``compact_ivf_index``); and the registry entry ``insert_upsert``, so
+its DuckDB oracle checks the rule the store runs. The streaming corpus
+dedup also writes its stamped logs through ``append_log``.
 
 At 100 TB: a collection is just partitioned parquet — reads get
 pushdown/pruning, inserts are distributed writes, search is
@@ -14,13 +22,69 @@ operators.knn/ann over the scan.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import knn
+
+
+def append_log(df: DataFrame, path: str, stamp: int, partition_by=()) -> None:
+    """Append ``df`` to the upsert log at ``path`` under ``stamp``.
+
+    Each append must stamp higher than every earlier row of the keys it
+    writes: resolve_log keeps the highest stamp per key, and two rows of
+    one key under one stamp resolve arbitrarily. A bulk build or a
+    compaction writes stamp 0, so a writer appending over one starts at
+    1 (the streaming IVF maintenance stamps micro-batch id + 1).
+    Re-running an append under the same stamp rewrites identical rows,
+    which resolve the same: that makes a replayed micro-batch
+    idempotent."""
+    (
+        df.withColumn("_batch", F.lit(stamp).cast("long"))
+        .write.partitionBy(*partition_by)
+        .mode("append")
+        .parquet(path)
+    )
+
+
+def resolve_log(raw: DataFrame, key: str) -> DataFrame:
+    """Keep the latest-``_batch`` row per ``key`` (one shuffle on the
+    key). ``_batch`` stays in place for the caller to drop."""
+    w = Window.partitionBy(key).orderBy(F.col("_batch").desc())
+    return (
+        raw.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def compact_log(spark: SparkSession, path: str, key: str, partition_by=()) -> None:
+    """Fold the log at ``path`` down to its resolved rows, under stamp 0.
+
+    Crash-safe swap: write the resolved view to a tmp directory, rename
+    the live dir aside, rename tmp into place, then drop the old dir.
+    No read-back-and-overwrite of the live dir (a failure mid-overwrite
+    there would destroy the log), and the tmp dir never outlives the
+    call. A crash between the two renames leaves ``<path>_old`` intact
+    for manual recovery. (On object stores, directory rename is not
+    atomic — there, compaction swaps a manifest pointer instead.)"""
+    tmp = path.rstrip("/") + "_compacting"
+    old = path.rstrip("/") + "_old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    try:
+        live = resolve_log(spark.read.parquet(path), key).drop("_batch")
+        append_log(live, tmp, 0, partition_by)
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def list_collections(root: str) -> list[dict]:
@@ -85,14 +149,9 @@ class VectorCollection:
     # -- writes (milvus_db.py:61 insert_vectors) --
 
     def insert(self, df: DataFrame) -> None:
-        """Append a batch; a monotonically increasing _batch stamp makes
-        upserts last-write-wins at read time."""
-        batch = self._next_batch_id()
-        (
-            df.withColumn("_batch", F.lit(batch))
-            .write.mode("append")
-            .parquet(self._data_path())
-        )
+        """Append a batch under the next stamp: last write wins per
+        primary key at read time."""
+        append_log(df, self._data_path(), self._next_batch_id())
 
     def _next_batch_id(self) -> int:
         if not self._has_data():
@@ -105,44 +164,19 @@ class VectorCollection:
         )
 
     def compact(self) -> None:
-        """Materialize the resolved view (maintenance; optional).
-
-        Crash-safe swap: write the resolved view to a tmp directory,
-        rename the live data dir aside, rename tmp into place, then
-        drop the old dir. No read-back-and-overwrite of the live dir
-        (a failure mid-overwrite there would destroy the collection),
-        and the tmp dir never outlives the call. A crash between the
-        two renames leaves `<data>_old` intact for manual recovery.
-        (On object stores, directory rename is not atomic — there,
-        compaction swaps a manifest pointer instead.)"""
-        import shutil
-
-        final = self._data_path()
-        tmp = final + "_compacting"
-        old = final + "_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        try:
-            self.df().withColumn("_batch", F.lit(0)).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        """Fold the log to one row per primary key (maintenance;
+        optional). Nothing to fold in an empty collection."""
+        if self._has_data():
+            compact_log(self.spark, self._data_path(), self.id_col)
 
     # -- reads --
 
     def df(self) -> DataFrame:
         """Resolved collection: latest batch wins per primary key."""
+        if not self._has_data():
+            raise ValueError(f"collection {self.path!r} is empty: insert rows before reading it")
         raw = self.spark.read.parquet(self._data_path())
-        w = Window.partitionBy(self.id_col).orderBy(F.col("_batch").desc())
-        return (
-            raw.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_batch")
-        )
+        return resolve_log(raw, self.id_col).drop("_batch")
 
     def query(
         self,
@@ -168,19 +202,17 @@ class VectorCollection:
 
     def scan(self, batch_size: int = 100):
         """milvus_db.py:77 get_all_entities: stable-order paginated
-        iterator (driver-side paging over a sorted snapshot)."""
-        df = self.df().orderBy(self.id_col)
-        offset = 0
-        while True:
-            batch = df.offset(offset).limit(batch_size).collect()
-            if not batch:
-                return
+        iterator — one pass over a sorted snapshot, chunked on the
+        driver."""
+        if not self._has_data():
+            return
+        rows = self.df().orderBy(self.id_col).toLocalIterator()
+        while batch := list(itertools.islice(rows, batch_size)):
             yield batch
-            offset += batch_size
 
     def stats(self) -> dict:
         """milvus_db.py:70 get_collection_stats."""
-        n = self.df().count()
+        n = self.df().count() if self._has_data() else 0
         return {
             "collectionName": os.path.basename(self.path),
             "rowCount": n,

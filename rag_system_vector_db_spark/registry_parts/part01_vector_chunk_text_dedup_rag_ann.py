@@ -18,6 +18,7 @@ from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
+from ..operators.vector_store import resolve_log
 from ..sources import load_table  # noqa: F401
 
 from ..registry_core import (  # noqa: F401
@@ -162,20 +163,16 @@ def get_entities_by_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def insert_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Insert with last-write-wins upsert by primary key (milvus_db.py:61
-    insert_vectors). Window dedup, newest batch wins."""
+    insert_vectors), resolved by the vector store's own upsert-log rule."""
     emb = load_table(spark, sf_dir, "embeddings")
     existing = emb.filter(F.col("vec_id") < 100).select(
-        "vec_id", "label", F.lit(0).alias("batch")
+        "vec_id", "label", F.lit(0).alias("_batch")
     )
     incoming = emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 150)).select(
-        "vec_id", (F.col("label") + 1000).alias("label"), F.lit(1).alias("batch")
+        "vec_id", (F.col("label") + 1000).alias("label"), F.lit(1).alias("_batch")
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("batch").desc())
-    return (
-        existing.unionAll(incoming)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "batch")
+    return resolve_log(existing.unionAll(incoming), "vec_id").select(
+        "vec_id", "label", F.col("_batch").alias("batch")
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from ..operators.chunking import chunk_by_tokens
 from ..operators.embedding import embed_udf
+from ..operators.vector_store import append_log, compact_log, resolve_log
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -308,29 +309,19 @@ def start_ivf_index_maintenance(
     checkpoint_dir: str,
 ):
     """Incremental maintenance of the cell-partitioned IVF index
-    (operators.ann.ivf_index_build's layout): each micro-batch assigns
-    cells and APPENDS into the partitioned layout, stamped with the
-    micro-batch id. Upserts are resolved at read time (latest _batch
-    per vec_id — see read_ivf_index); a replayed batch after failure
-    rewrites identical rows under the same _batch stamp, so the
-    read-time resolution is also what makes the append sink effectively
-    idempotent. Periodic compact_ivf_index folds the log down so probe
-    reads stay O(live rows). This is the streaming half of the batch
-    index build: bulk-build once, then the index follows the ingest
-    stream without rebuilds."""
+    (operators.ann.ivf_index_build's layout, the stamp-0 base): each
+    micro-batch assigns cells and appends to the index's upsert log
+    (operators.vector_store.append_log) under stamp batch id + 1, so a
+    replayed batch is idempotent. read_ivf_index resolves the log;
+    periodic compact_ivf_index folds it down so probe reads stay
+    O(live rows). This is the streaming half of the batch index build:
+    bulk-build once, then the index follows the ingest stream without
+    rebuilds."""
     from ..operators.ann import with_cell
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         coded = with_cell(batch_df, "embedding", centroids, out_col="cell")
-        (
-            # +1: the bulk build owns _batch = 0 and streaming batch ids
-            # start at 0 — without the offset a first-batch upsert TIES
-            # with its base row and max_by resolution is arbitrary
-            coded.withColumn("_batch", F.lit(batch_id + 1).cast("long"))
-            .write.partitionBy("cell")
-            .mode("append")
-            .parquet(index_dir)
-        )
+        append_log(coded, index_dir, batch_id + 1, partition_by=("cell",))
 
     return (
         emb_stream.writeStream.foreachBatch(upsert)
@@ -341,45 +332,18 @@ def start_ivf_index_maintenance(
 
 def read_ivf_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """Resolved view of the maintained index: latest version of every
-    vector (max _batch per vec_id — an updated vector may have moved
-    cells, so resolution is global, one shuffle on vec_id). Probe-path
-    readers that prune cells first instead resolve within probed cells
-    only and rely on compaction to clear cross-cell staleness — the
-    standard LSM trade; this view is the correctness reference."""
-    idx = spark.read.parquet(index_dir)
-    payload = [c for c in idx.columns if c not in ("vec_id", "_batch")]
-    return (
-        idx.groupBy("vec_id")
-        .agg(F.max_by(F.struct(*payload), F.col("_batch")).alias("s"))
-        .select("vec_id", "s.*")
-    )
+    vector. An updated vector may have moved cells, so resolution is
+    global, one shuffle on vec_id. Probe-path readers that prune cells
+    first instead resolve within probed cells only and rely on
+    compaction to clear cross-cell staleness — the standard LSM trade;
+    this view is the correctness reference."""
+    return resolve_log(spark.read.parquet(index_dir), "vec_id").drop("_batch")
 
 
 def compact_ivf_index(spark: SparkSession, index_dir: str) -> None:
-    """Fold the append log down to one live row per vec_id, keeping the
-    cell-partitioned layout. Crash-safe swap like
-    VectorCollection.compact: write resolved tmp, rename live aside,
-    rename tmp in, drop old (object stores swap a manifest instead)."""
-    import os
-    import shutil
-
-    tmp = index_dir.rstrip("/") + "_compacting"
-    old = index_dir.rstrip("/") + "_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    try:
-        (
-            read_ivf_index(spark, index_dir)
-            .withColumn("_batch", F.lit(0))
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        os.rename(index_dir, old)
-        os.rename(tmp, index_dir)
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Fold the index log down to one live row per vec_id, keeping the
+    cell-partitioned layout."""
+    compact_log(spark, index_dir, "vec_id", partition_by=("cell",))
 
 
 # --- streaming corpus dedup against a persisted base index ---------------
@@ -427,8 +391,8 @@ def start_streaming_corpus_dedup(
     exactly the pre-batch index state regardless of which of its own
     appends survived the crash — it recomputes the identical novel
     set and rewrites all three artifacts (duplicate rows under the
-    same stamp are harmless: bands/hashes feed semi-joins, out
-    resolves latest-per-doc_id like read_ivf_index). This keeps the
+    same stamp are harmless: bands/hashes feed semi-joins, and out is
+    an upsert log keyed on doc_id). This keeps the
     completeness invariant — every doc the index hashes also has its
     band rows — which a stamp-free append order cannot guarantee
     across crashes."""
@@ -462,15 +426,11 @@ def start_streaming_corpus_dedup(
             .distinct()
         )
         novel = fresh.join(near_dup_ids, "doc_id", "left_anti")
-        stamp = F.lit(batch_id).cast("long")
-        out = novel.drop("_h").withColumn("_batch", stamp)
-        out.write.mode("append").parquet(out_dir)
-        bands.join(novel.select("doc_id"), "doc_id", "left_semi").withColumn(
-            "_batch", stamp
-        ).write.mode("append").parquet(f"{index_dir}/bands")
-        novel.select(F.col("_h").alias("text_hash")).distinct().withColumn(
-            "_batch", stamp
-        ).write.mode("append").parquet(f"{index_dir}/hashes")
+        append_log(novel.drop("_h"), out_dir, batch_id)
+        novel_bands = bands.join(novel.select("doc_id"), "doc_id", "left_semi")
+        append_log(novel_bands, f"{index_dir}/bands", batch_id)
+        novel_hashes = novel.select(F.col("_h").alias("text_hash")).distinct()
+        append_log(novel_hashes, f"{index_dir}/hashes", batch_id)
 
     return (
         docs_stream.writeStream.foreachBatch(upsert)

@@ -30,7 +30,7 @@ def test_distributed_matches_driver(spark, sf_dir):
     out = embed_documents(docs).select("doc_id", "text", "embedding").collect()
     for r in out:
         expected = embed_text_py(r.text)
-        assert np.allclose(np.array(r.embedding), expected, atol=1e-6)
+        assert np.array_equal(np.array(r.embedding, dtype=np.float32), expected)
         assert abs(float(np.linalg.norm(r.embedding)) - 1.0) < 1e-5
 
 

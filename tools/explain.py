@@ -35,7 +35,7 @@ def main() -> None:
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
     if name not in QUERIES:
         raise SystemExit(f"unknown query {name!r}; run with no args for the list")
-    spark = get_spark("explain", cpus=8)
+    spark = get_spark("explain")
     df = QUERIES[name](spark, sf_dir)
     df.count()  # finalize AQE so the printed plan is the executed one
     print(

@@ -352,7 +352,7 @@ NOTES = {
 
 
 def main() -> None:
-    spark = get_spark("plans", cpus=8)
+    spark = get_spark("plans")
     print("# PLANS — physical-plan evidence for the flagship queries")
     print()
     print("Generated with `.explain(formatted)` at sf0.01 (plans are scale-")

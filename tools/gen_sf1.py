@@ -58,7 +58,7 @@ def replicate(df: DataFrame, shifts: dict[str, int], extra=None) -> DataFrame:
 
 
 def main() -> None:
-    spark = get_spark("gen-sf1", cpus=16)
+    spark = get_spark("gen-sf1")
     os.makedirs(DST, exist_ok=True)
 
     def stride(table: str, key: str) -> int:

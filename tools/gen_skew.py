@@ -46,7 +46,7 @@ BOILER = (
 
 
 def main() -> None:
-    spark = get_spark("gen-skew", cpus=16)
+    spark = get_spark("gen-skew")
     os.makedirs(DST, exist_ok=True)
 
     def stride(table: str, key: str) -> int:
