@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .vector import lit_array
+
 # Small English stopword list (public-domain words); order matters only
 # for documentation — membership tests are set-like in both engines.
 EN_STOPWORDS = (
@@ -58,7 +60,7 @@ def char_shingles(col: Column, n: int = 8) -> Column:
 
 def stopword_count(col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     toks = tokens(col)
-    sw = F.array(*[F.lit(w) for w in stopwords])
+    sw = lit_array(stopwords)
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
 

@@ -16,8 +16,37 @@ matrix), scripts/milvus_db.py:40 (COSINE metric collections).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import _from_numpy_type
+
+
+def _sql_literal(x) -> str:
+    if isinstance(x, (list, tuple)):
+        return "array(" + ", ".join(map(_sql_literal, x)) + ")"
+    if isinstance(x, np.number):  # F.lit casts it to its dtype's Spark type
+        return f"CAST({_sql_literal(x.item())} AS {_from_numpy_type(x.dtype).simpleString()})"
+    if isinstance(x, int):
+        return str(x)
+    if isinstance(x, float):
+        # CAST('inf' ...) is nullable; the coalesce makes it NOT NULL, as F.lit is
+        return repr(x) + "D" if math.isfinite(x) else f"coalesce(CAST('{x}' AS DOUBLE), 0D)"
+    if isinstance(x, str):
+        # $ as a unicode escape: F.expr substitutes ${...} variables
+        return "'" + x.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
+    raise TypeError(f"lit_array: no SQL literal for {type(x).__name__}")
+
+
+def lit_array(values) -> Column:
+    """A driver-side constant (a number, a string, or nested lists of
+    them) as ONE SQL literal, so its py4j cost does not grow with its
+    size as F.lit(list) does. Each element gets F.lit's type and
+    nullability; doubles are written repr(x) + "D", which parses back
+    bit-exactly."""
+    return F.expr(_sql_literal(values))
 
 
 def _as_double(col: Column) -> Column:

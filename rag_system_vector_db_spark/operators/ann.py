@@ -31,22 +31,13 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return [[float(x) for x in rng.standard_normal(dim)] for _ in range(n_planes)]
 
 
-def _mat_lit(vecs: list[list[float]]):
-    """A list-of-vectors as ONE nested array literal. Building the same
-    thing as F.array(F.lit(x) per element, per vector) costs one py4j
-    round-trip per scalar — 512 calls for 8x64 centroids, several
-    seconds of pure plan-construction latency per query build. One
-    nested F.lit is one call."""
-    return F.lit([[float(x) for x in v] for v in vecs])
-
-
 def lsh_bucket(vec_col, planes: list[list[float]]):
     """Bucket id = bit b set iff dot(v, plane_b) > 0. The planes enter
     as one nested literal and each dot appears exactly once
     (transform), keeping both plan-build time and the interpreted-HOF
     tree size linear in n_planes."""
-    dots = F.transform(_mat_lit(planes), lambda p: V.dot(vec_col, p))
-    weights = F.lit([1 << b for b in range(len(planes))]).cast("array<long>")
+    dots = F.transform(V.lit_array(planes), lambda p: V.dot(vec_col, p))
+    weights = V.lit_array([1 << b for b in range(len(planes))]).cast("array<long>")
     return F.aggregate(
         F.zip_with(
             dots, weights, lambda d, w: F.when(d > 0, w).otherwise(F.lit(0).cast("long"))
@@ -447,7 +438,7 @@ def _centroid_dists(vec_col, centroids: list[list[float]]):
     subexpression elimination, so that formulation re-ran the 64-dim
     euclideans hundreds of times per row — measured 15x slower at
     sf0.1.)"""
-    return F.transform(_mat_lit(centroids), lambda c: V.euclidean(vec_col, c))
+    return F.transform(V.lit_array(centroids), lambda c: V.euclidean(vec_col, c))
 
 
 def _argmin(darr):
@@ -462,7 +453,7 @@ def _probe_structs(query_vec_col, centroids: list[list[float]]):
     """(cell, distance) structs for probe-order sorting — nested
     literal + index-transform, one euclidean subtree per centroid."""
     return F.transform(
-        _mat_lit(centroids),
+        V.lit_array(centroids),
         lambda c, i: F.struct(
             i.alias("cell"), V.euclidean(query_vec_col, c).alias("d")
         ),
@@ -780,23 +771,25 @@ def _euclid2(a, b):
     return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v * v)
 
 
-def _books_lit(codebooks: list[list[list[float]]]):
-    """codebooks[m][k][dsub] as ONE nested literal (see _mat_lit)."""
-    return F.lit([[[float(x) for x in c] for c in book] for book in codebooks])
-
-
-def _subvectors(vec_col, m: int, dsub: int):
-    """The m subspace slices of a vector, as an array of arrays."""
+def _subspace_d2(vec_col, codebooks: list[list[list[float]]]):
+    """d2[m][k] = ||v_m − codebook[m][k]||² for the m subspace slices
+    v_m of a vector. One zip_with pairs each slice with its codebook,
+    so every distance subtree evaluates exactly once."""
+    m = len(codebooks)
+    dsub = len(codebooks[0][0])
     v = vec_col.cast("array<double>")
-    return F.array(*[F.slice(v, mi * dsub + 1, dsub) for mi in range(m)])
+    return F.zip_with(
+        V.lit_array(codebooks),
+        F.array(*[F.slice(v, mi * dsub + 1, dsub) for mi in range(m)]),
+        lambda book, sv: F.transform(book, lambda c: _euclid2(sv, c)),
+    )
 
 
 def pq_code_expr(vec_col, codebooks: list[list[list[float]]]):
     """PQ encode: per subspace, the code of the nearest centroid by
     squared euclidean (ties -> lowest code, matching the oracle's
-    ORDER BY d, code). One zip_with pairs each subvector with its
-    codebook, so every distance subtree evaluates exactly once; the
-    argmin runs on the materialized per-subspace distance array.
+    ORDER BY d, code). The argmin runs on the materialized
+    per-subspace distance array (_subspace_d2).
     Returns an array<int> of m codes.
 
     Formulation note (measured at sf0.1): HOFs run interpreted, but
@@ -806,15 +799,9 @@ def pq_code_expr(vec_col, codebooks: list[list[list[float]]]):
     for ann_pq_adc): the giant tree defeats codegen and re-evaluates
     element accesses the zip_with formulation materializes once. The
     interpreted-but-materialized shape wins."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    dists = F.zip_with(
-        _books_lit(codebooks),
-        _subvectors(vec_col, m, dsub),
-        lambda book, sv: F.transform(book, lambda c: _euclid2(sv, c)),
-    )
     return F.transform(
-        dists, lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int")
+        _subspace_d2(vec_col, codebooks),
+        lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
     )
 
 
@@ -831,7 +818,7 @@ def pq_adc_dist(query_vec_col, codes_col, codebooks: list[list[list[float]]]):
     unit-tested against."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
-    cb = _books_lit(codebooks)
+    cb = V.lit_array(codebooks)
     total = None
     for mi in range(m):
         sv = F.slice(query_vec_col.cast("array<double>"), mi * dsub + 1, dsub)
@@ -849,21 +836,9 @@ def pq_adc_luts(query_vec_col, codebooks: list[list[list[float]]]):
     array lookups + m−1 adds per row instead of m interpreted
     dsub-dim euclideans. Each entry is the SAME _euclid2 expression
     pq_adc_dist would evaluate per corpus row — identical operands,
-    identical order — so LUT-served distances are bit-identical."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    qv = query_vec_col.cast("array<double>")
-
-    # one-arg lambda via a closure helper: a two-arg lambda would make
-    # F.transform pass the ELEMENT INDEX as the second argument
-    def _table(mi: int):
-        sv = F.slice(qv, mi * dsub + 1, dsub)
-        return F.transform(
-            F.lit([[float(x) for x in c] for c in codebooks[mi]]),
-            lambda c: _euclid2(sv, c),
-        )
-
-    return F.array(*[_table(mi) for mi in range(m)])
+    identical order — so LUT-served distances are bit-identical. The
+    tables are pq_code_expr's distance array, before its argmin."""
+    return _subspace_d2(query_vec_col, codebooks)
 
 
 def pq_adc_dist_lut(lut_col, codes_col, m: int):
@@ -921,13 +896,7 @@ def pq_reconstruction_error(
     against). Encode + per-subspace error in one narrow projection,
     then a single map-side-combinable groupBy(subspace).
     Returns (subspace, n, mse)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    errs = F.zip_with(
-        _books_lit(codebooks),
-        _subvectors(F.col(vec_col), m, dsub),
-        lambda book, sv: F.array_min(F.transform(book, lambda c: _euclid2(sv, c))),
-    )
+    errs = F.transform(_subspace_d2(F.col(vec_col), codebooks), lambda d: F.array_min(d))
     return (
         corpus.select(F.posexplode(errs).alias("subspace", "e2"))
         .groupBy("subspace")
@@ -1216,7 +1185,7 @@ def matryoshka_recall(
     qd = queries.select(
         query_id_col,
         query_vec_col,
-        F.explode(F.array(*[F.lit(d) for d in dims])).alias("dim"),
+        F.explode(V.lit_array(dims)).alias("dim"),
     )
     scored = corpus.crossJoin(F.broadcast(qd)).select(
         "dim",
@@ -1249,7 +1218,7 @@ def matryoshka_recall(
 def _residual_expr(vec_col, cell_col, centroids: list[list[float]]):
     """x − centroid[cell], elementwise (zip_with; the oracle's
     list_transform(list_zip(...)) computes the identical sequence)."""
-    cent = F.element_at(_mat_lit(centroids), cell_col + 1)
+    cent = F.element_at(V.lit_array(centroids), cell_col + 1)
     return F.zip_with(vec_col.cast("array<double>"), cent, lambda x, c: x - c)
 
 
@@ -1325,7 +1294,7 @@ def sign_bit_words(vec_col, dim: int = 64, word_bits: int = 32) -> list:
     words = []
     for w in range(0, dim, word_bits):
         n = min(word_bits, dim - w)
-        weights = F.lit([1 << b for b in range(n)]).cast("array<long>")
+        weights = V.lit_array([1 << b for b in range(n)]).cast("array<long>")
         sliced = F.slice(vec_col.cast("array<double>"), w + 1, n)
         words.append(
             F.aggregate(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
+from ..functions.vector import lit_array
 
 
 def repetition_stats(
@@ -284,7 +285,7 @@ def quality_classifier(
 
     w = weights if weights is not None else classifier_weights(n_features)
     w_micro = [int(round(x * 1_000_000)) for x in w]
-    warr = F.array(*[F.lit(x).cast("long") for x in w_micro])
+    warr = lit_array(w_micro).cast("array<long>")
     toks = docs.select(
         F.col(id_col), F.explode(X.tokens(F.col(text_col))).alias("tok")
     ).filter(F.col("tok") != "")
@@ -348,7 +349,7 @@ def dsir_selection(
 
     lams = lambdas if lambdas is not None else dsir_lambdas(n_features)
     lam_micro = [int(round(x * 1_000_000)) for x in lams]
-    larr = F.array(*[F.lit(x).cast("long") for x in lam_micro])
+    larr = lit_array(lam_micro).cast("array<long>")
     t = F.col(text_col)
     uni = docs.select(F.col(id_col), F.explode(X.tokens(t)).alias("f"))
     bi = docs.select(F.col(id_col), F.explode(X.word_shingles(t, 2)).alias("f"))

@@ -189,7 +189,7 @@ def pca_project(
 
     outs = [F.col(id_col)]
     for i, comp in enumerate(components, start=1):
-        lit = F.array(*[F.lit(float(c)) for c in comp])
+        lit = V.lit_array([float(c) for c in comp])
         # scalar offset computed the same sequential way both engines use
         off = 0.0
         for m, c in zip(mean, comp):

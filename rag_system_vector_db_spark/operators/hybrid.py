@@ -91,7 +91,7 @@ def hybrid_search_rrf(
     docs: DataFrame,
     vectors: DataFrame,
     query_terms: list[str],
-    query_vec: list[float] | DataFrame,
+    query_vec: DataFrame,
     k: int = 10,
     depth: int = 20,
     rrf_k: int = 60,
@@ -102,11 +102,10 @@ def hybrid_search_rrf(
 ) -> DataFrame:
     """RRF fusion of the BM25 top-``depth`` and cosine top-``depth``:
     fused = Σ 1/(rrf_k + rank), full-outer over the two lists (a doc
-    ranked by only one tower still scores). ``query_vec`` is either a
-    literal vector or a one-row DataFrame with column ``qv`` — the
-    latter enters the plan as a broadcast (no separate driver fetch
-    job). Returns (doc_id, bm25_rank, vec_rank, fused, rank) — top-k
-    by fused desc, id asc."""
+    ranked by only one tower still scores). ``query_vec`` is a one-row
+    DataFrame with column ``qv``, broadcast into the plan (no separate
+    driver fetch job). Returns (doc_id, bm25_rank, vec_rank, fused,
+    rank) — top-k by fused desc, id asc."""
     kw = bm25_scores(docs, query_terms, id_col, text_col).select(
         F.col(id_col).alias("_id"), F.col("bm25").alias("score")
     )
@@ -114,17 +113,10 @@ def hybrid_search_rrf(
         kw.withColumn("_q", F.lit(0)), "_q", "_id", depth
     ).select(F.col("_id"), F.col("rank").alias("bm25_rank"))
 
-    if isinstance(query_vec, DataFrame):
-        vec = vectors.crossJoin(F.broadcast(query_vec)).select(
-            F.col(vec_id_col).alias("_id"),
-            V.cosine(F.col(vec_col), F.col("qv")).alias("score"),
-        )
-    else:
-        qv = F.array(*[F.lit(float(x)) for x in query_vec])
-        vec = vectors.select(
-            F.col(vec_id_col).alias("_id"),
-            V.cosine(F.col(vec_col), qv).alias("score"),
-        )
+    vec = vectors.crossJoin(F.broadcast(query_vec)).select(
+        F.col(vec_id_col).alias("_id"),
+        V.cosine(F.col(vec_col), F.col("qv")).alias("score"),
+    )
     vec_top = topk_per_key_agg(
         vec.withColumn("_q", F.lit(0)), "_q", "_id", depth
     ).select(F.col("_id"), F.col("rank").alias("vec_rank"))

@@ -51,7 +51,7 @@ def topk(
 
     Returns (id_col, score) — score full-precision double.
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = V.lit_array([float(x) for x in query_vec])
     score = _score(metric, F.col(vec_col), q).alias("score")
     scored = corpus.select(F.col(id_col), score)
     order = [F.col("score").asc() if _ascending(metric) else F.col("score").desc(), F.col(id_col).asc()]

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.vector import lit_array
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -49,7 +51,7 @@ def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     the opaque payload + deterministic typed metadata. Stands in for a
     real binary ingest (S3 image/audio crawl)."""
     kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+        lit_array(["image", "audio", "video"]),
         (F.col(id_col) % 3 + 1).cast("int"),
     )
     meta = F.struct(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import text as X
+from ..functions.vector import lit_array
 from .hybrid import BM25_B, BM25_K1
 
 
@@ -604,7 +605,7 @@ def rerank_two_stage(
     )
     qset = sorted(set(query_terms))
     toks = F.array_distinct(X.tokens(F.col("text")))
-    inter = F.size(F.array_intersect(toks, F.lit(qset)))
+    inter = F.size(F.array_intersect(toks, lit_array(qset)))
     jac = F.round(inter / (F.size(toks) + F.lit(len(qset)) - inter), 6)
     cand = docs.join(F.broadcast(first), "doc_id").select(
         "doc_id", "bm25", jac.alias("jaccard")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import lit_array
 from ..sources import load_table
 
 
@@ -325,10 +326,10 @@ def quantile_stats(
     sketch accuracy at the margin."""
     li = load_table(spark, sf_dir, "lineitem")
     if exact_quantiles:
-        q = F.percentile("l_extendedprice", F.lit([0.25, 0.5, 0.75, 0.95]))
+        q = F.percentile("l_extendedprice", lit_array([0.25, 0.5, 0.75, 0.95]))
     else:
         q = F.percentile_approx(
-            "l_extendedprice", F.lit([0.25, 0.5, 0.75, 0.95]), F.lit(10000)
+            "l_extendedprice", lit_array([0.25, 0.5, 0.75, 0.95]), F.lit(10000)
         )
     return (
         li.groupBy("l_returnflag")

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import lit_array
+
 
 def write_bucketed(
     df: DataFrame,
@@ -72,7 +74,5 @@ def salted_join(
         "_salt",
         F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salt)).cast("int"),
     )
-    dim_salted = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
+    dim_salted = dim.withColumn("_salt", F.explode(lit_array(list(range(salt)))))
     return fact_salted.join(dim_salted, [key, "_salt"]).drop("_salt")

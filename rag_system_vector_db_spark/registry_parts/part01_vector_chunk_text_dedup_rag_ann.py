@@ -194,6 +194,14 @@ def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_corpus(corpus: DataFrame, emb: DataFrame, vec_id: int):
+    """(corpus, query vector) for a literal-vector search by embeddings
+    row ``vec_id``. Without that row nothing is scored: the oracles'
+    join with an empty ``q`` CTE returns no rows either."""
+    row = emb.filter(F.col("vec_id") == vec_id).select("embedding").first()
+    return (corpus, list(row[0])) if row else (corpus.limit(0), [])
+
+
 @query(
     "knn_topk_cosine",
     oracle=f"""
@@ -212,8 +220,7 @@ def knn_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     search_vectors). Plan: narrow projection + TakeOrderedAndProject
     (per-partition k-heap, no full sort)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    out = knn.topk(emb.filter(F.col("vec_id") != 0), list(qv), k=10)
+    out = knn.topk(*_query_corpus(emb.filter(F.col("vec_id") != 0), emb, 0), k=10)
     return out.withColumn("score", F.round("score", 6))
 
 
@@ -1021,8 +1028,7 @@ def rag_retrieve(spark, sf_dir):
     entity text as LLM context (LLM call itself is external)."""
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    qv = emb.filter(F.col("vec_id") == 7).select("embedding").first()[0]
-    hits = knn.topk(emb, list(qv), k=5)
+    hits = knn.topk(*_query_corpus(emb, emb, 7), k=5)
     w = Window.orderBy(F.col("score").desc(), F.col("vec_id"))
     ranked = hits.withColumn("rank", F.row_number().over(w).cast("long"))
     return (

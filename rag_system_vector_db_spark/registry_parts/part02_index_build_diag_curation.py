@@ -1750,7 +1750,7 @@ def multimodal_dedup(spark, sf_dir):
         .select(
             "media_id",
             F.element_at(
-                F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+                V.lit_array(["image", "audio", "video"]),
                 (F.col("media_id") % 3 + 1).cast("int"),
             ).alias("kind"),
             F.encode(F.col("_ptext"), "utf-8").alias("content"),
@@ -2858,7 +2858,7 @@ def retrieval_ndcg(spark, sf_dir):
         .agg(F.max("x.g").alias("g"))
     )
     top = knn.topk_batch(emb, q.select("query_id", "query_vec"), k=10)
-    disc = F.lit(_NDCG_DISC)
+    disc = V.lit_array(_NDCG_DISC)
     term = (F.pow(F.lit(2), F.col("g")) - 1) * F.element_at(disc, F.col("rank").cast("int"))
     dcg = (
         top.join(

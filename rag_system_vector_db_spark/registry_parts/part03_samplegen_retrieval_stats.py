@@ -1098,7 +1098,7 @@ def faceted_search_counts_q(spark, sf_dir):
     pruned postings scan as the ranked query (join doc_ids to facet
     columns) — here the direct form keeps the oracle index-free."""
     docs = load_table(spark, sf_dir, "documents")
-    terms = F.lit(["fast", "join", "spark"])
+    terms = V.lit_array(["fast", "join", "spark"])
     from ..functions import text as X
 
     m = docs.filter(F.size(F.array_intersect(X.tokens(F.col("text")), terms)) > 0)
@@ -1908,7 +1908,7 @@ def grouped_latency_slo_q(spark, sf_dir, exact_quantiles: bool = True):
     if not exact_quantiles:
         s = ev.groupBy("event_type").agg(
             F.count("*").cast("long").alias("n"),
-            F.percentile_approx("v_u", F.lit([0.5, 0.95, 0.99]), F.lit(10000)).alias("_qs"),
+            F.percentile_approx("v_u", V.lit_array([0.5, 0.95, 0.99]), F.lit(10000)).alias("_qs"),
             F.max("v_u").alias("_mx"),
             F.sum(F.when(F.col("v_u") < 1000000, 1).otherwise(0)).cast("long").alias("_ok"),
         )
@@ -2932,7 +2932,7 @@ def trimmed_mean_stats_q(spark, sf_dir, exact_quantiles: bool = True):
     )
     if not exact_quantiles:
         fences = ev.groupBy("event_type").agg(
-            F.percentile_approx("v_u", F.lit([0.1, 0.9]), F.lit(10000)).alias("_f")
+            F.percentile_approx("v_u", V.lit_array([0.1, 0.9]), F.lit(10000)).alias("_f")
         ).select(
             "event_type", F.col("_f")[0].alias("_lo"), F.col("_f")[1].alias("_hi")
         )
@@ -3159,7 +3159,7 @@ def conversion_latency_q(spark, sf_dir, exact_quantiles: bool = True):
     else:
         s = conv.agg(
             F.count("*").cast("long").alias("n_converted"),
-            F.percentile_approx("lat_ms", F.lit([0.5, 0.9]), F.lit(10000)).alias("_vs"),
+            F.percentile_approx("lat_ms", V.lit_array([0.5, 0.9]), F.lit(10000)).alias("_vs"),
         )
         med = F.col("_vs")[0].cast("long")
         p90 = F.col("_vs")[1].cast("long")
@@ -3293,7 +3293,7 @@ def cms_heavy_hitters_q(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("exact"))
         .localCheckpoint(eager=False)
     )
-    rows = F.array(*[F.lit(r) for r in range(_CMS_ROWS)])
+    rows = V.lit_array(list(range(_CMS_ROWS)))
     hashed = tf.select(
         "term", "exact", F.explode(rows).alias("r")
     ).select(

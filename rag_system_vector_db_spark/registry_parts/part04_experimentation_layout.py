@@ -31,7 +31,7 @@ from ..registry_core import (  # noqa: F401
     query,
 )
 
-from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _planes_sql  # noqa: F401
+from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _planes_sql, _query_corpus  # noqa: F401
 from .part02_index_build_diag_curation import _knn_graph_edges, _knn_graph_oracle, _qcls_weights_sql  # noqa: F401
 
 
@@ -630,16 +630,15 @@ def retrieval_mmr_q(spark, sf_dir):
     the greedy as a recursive CTE — the selection loop itself is
     hash-checked, not just the shortlist."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    shortlist = knn.topk(emb.filter(F.col("vec_id") != 0), list(qv), k=20)
+    shortlist = knn.topk(*_query_corpus(emb.filter(F.col("vec_id") != 0), emb, 0), k=20)
     cand = [(r["vec_id"], r["score"]) for r in shortlist.orderBy(F.col("score").desc(), "vec_id").collect()]
     ids = [c[0] for c in cand]
     sub = emb.filter(F.col("vec_id").isin(ids))
     pair_rows = knn.similarity_matrix(sub).filter(F.col("id_a") != F.col("id_b")).collect()
     sim = {(r["id_a"], r["id_b"]): r["score"] for r in pair_rows}
     qsim = dict(cand)
-    selected = [min(ids, key=lambda i: (-qsim[i], i))]
-    while len(selected) < 10:
+    selected = [min(ids, key=lambda i: (-qsim[i], i))] if ids else []
+    while len(selected) < min(10, len(ids)):
         best = min(
             (i for i in ids if i not in selected),
             key=lambda i: (
@@ -795,7 +794,7 @@ def events_histogram_equidepth_q(spark, sf_dir, exact_quantiles: bool = True):
         )
         edges = vu.groupBy("event_type").agg(
             F.percentile_approx(
-                "v_u", F.lit([i / 10 for i in range(1, 10)]), F.lit(10000)
+                "v_u", V.lit_array([i / 10 for i in range(1, 10)]), F.lit(10000)
             ).alias("_edges")
         )
         # percentile_approx returns TIED edges on heavily duplicated
@@ -2040,7 +2039,7 @@ def partition_plan_sim_q(spark, sf_dir):
     keyed = (
         ev.select(
             H.md5_long(F.col("user_id").cast("string")).alias("h"),
-            F.explode(F.array(F.lit(8), F.lit(16), F.lit(64))).alias("p"),
+            F.explode(V.lit_array([8, 16, 64])).alias("p"),
         )
         .groupBy("p", (F.col("h") % F.col("p")).alias("bucket"))
         .agg(F.count("*").cast("long").alias("rows_in_bucket"))
@@ -2782,7 +2781,7 @@ def holt_forecast_q(spark, sf_dir):
         "n_months",
         F.aggregate(
             F.col("ys"),
-            F.array(F.lit(0.0), F.lit(0.0), F.lit(0.0)),
+            V.lit_array([0.0, 0.0, 0.0]),
             step,
         ).alias("st"),
     )

@@ -169,7 +169,7 @@ def quantile_confidence_bands_q(spark, sf_dir, exact_quantiles: bool = True):
             F.count("*").cast("long").alias("n"),
             F.percentile_approx(
                 F.expr("cast(round(value * 1000000) as bigint)"),
-                F.lit(grid),
+                V.lit_array(grid),
                 F.lit(10000),
             ).alias("_grid"),
         )

@@ -1005,7 +1005,7 @@ def forecast_backtest_q(spark, sf_dir):
         F.first("rev_c").over(wo).alias("first_c"),
     )
     folds = w.filter(F.col("rn") > F.col("nm") - 3)
-    methods = F.explode(F.array(F.lit("naive"), F.lit("drift"), F.lit("seasonal_naive")))
+    methods = F.explode(V.lit_array(["naive", "drift", "seasonal_naive"]))
     p = folds.select("month_id", "rev_c", "rn", "prev_c", "seas_c", "first_c", methods.alias("method"))
     pred = (
         F.when(F.col("method") == "naive", F.col("prev_c").cast("double"))

@@ -579,7 +579,7 @@ def seeding_quality_eval_q(spark, sf_dir):
     def min_d2(vec, cents):
         exprs = []
         for c in cents:
-            lit = F.array(*[F.lit(float(v)) for v in c])
+            lit = V.lit_array(c)
             exprs.append(
                 F.aggregate(
                     F.zip_with(
@@ -976,7 +976,7 @@ def hll_merge_rollup_q(spark, sf_dir):
     )
     ex_all = ev.agg(F.count_distinct("user_id").alias("ndv"))
     ex_md = ex_all.select(
-        F.explode(F.array(F.lit("merged"), F.lit("direct"))).alias("scope"),
+        F.explode(V.lit_array(["merged", "direct"])).alias("scope"),
         F.col("ndv").alias("ndv_exact"),
     )
     exact = ex_t.unionByName(ex_md)

@@ -421,7 +421,7 @@ def jl_projection_audit_q(spark, sf_dir):
                 F.aggregate(
                     F.zip_with(
                         vec.cast("array<double>"),
-                        F.array(*[F.lit(v) for v in row]),
+                        V.lit_array(row),
                         lambda a, b: a * b,
                     ),
                     F.lit(0.0),
@@ -546,13 +546,13 @@ def pca_explained_variance_q(spark, sf_dir):
     refitting the basis."""
     mu, comps, shares = _pca_spectrum(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    mu_lit = F.array(*[F.lit(v) for v in mu])
+    mu_lit = V.lit_array(mu)
     centered = F.zip_with(
         F.col("embedding").cast("array<double>"), mu_lit, lambda a, b: a - b
     )
     projs = [
         F.aggregate(
-            F.zip_with(centered, F.array(*[F.lit(v) for v in c]), lambda a, b: a * b),
+            F.zip_with(centered, V.lit_array(c), lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )

@@ -14,11 +14,11 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _half_mem_total() -> str:
+def mem_total_mb() -> int:
     with open("/proc/meminfo") as f:
         for line in f:
             if line.startswith("MemTotal:"):
-                return f"{int(line.split()[1]) // 2 // 1024}m"
+                return int(line.split()[1]) // 1024
     raise RuntimeError("MemTotal missing from /proc/meminfo")
 
 
@@ -29,7 +29,7 @@ def get_spark(
 ) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or len(os.sched_getaffinity(0))
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_mem_total()
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{mem_total_mb() // 2}m"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     # Python workers unpickle pandas_udf closures that reference this

@@ -36,3 +36,11 @@ def pytest_terminal_summary(terminalreporter, exitstatus, config):
         terminalreporter.write_line(f"wheel-closure branches: {line}")
     except Exception as exc:  # never fail the run over the report line
         terminalreporter.write_line(f"wheel-closure branches: unavailable ({exc})")
+    # The reference-fixture replay skips as a whole module when the
+    # fixtures are absent; say so in every run rather than silently.
+    try:
+        from test_chunking_golden import golden_branch
+
+        terminalreporter.write_line(f"chunking-golden branch: {golden_branch()}")
+    except Exception as exc:
+        terminalreporter.write_line(f"chunking-golden branch: unavailable ({exc})")

@@ -39,10 +39,15 @@ from rag_system_vector_db_spark.operators.chunking import (
 
 REF_TESTS = Path("/root/reference/tests")
 
-pytestmark = pytest.mark.skipif(
-    not (REF_TESTS / "diary_chunks_3breaks.json").exists(),
-    reason="reference fixtures not present",
-)
+HAVE_FIXTURES = (REF_TESTS / "diary_chunks_3breaks.json").exists()
+
+pytestmark = pytest.mark.skipif(not HAVE_FIXTURES, reason=f"no reference fixtures in {REF_TESTS}")
+
+
+def golden_branch() -> str:
+    """Which branch this module takes, for the run summary (conftest):
+    the replay of the reference's fixtures, or a skip of every test."""
+    return "replay" if HAVE_FIXTURES else f"every test skipped (no reference fixtures in {REF_TESTS})"
 
 
 @pytest.fixture(scope="module")

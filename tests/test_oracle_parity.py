@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from rag_system_vector_db_spark.registry import LAZY_ORACLES, ORACLES, QUERIES
+from rag_system_vector_db_spark.sources import TABLES
 from tests.oracle import compare, duck_connection
 
 
@@ -43,3 +45,17 @@ def test_duckdb_spills_outside_the_checkout(sf_dir, monkeypatch):
     (spill,) = con.sql("SELECT current_setting('temp_directory')").fetchone()
     con.close()
     assert os.path.isabs(spill) and not os.path.abspath(spill).startswith(root + os.sep)
+
+
+@pytest.mark.parametrize("name", ["knn_topk_cosine", "rag_retrieve", "retrieval_mmr"])
+def test_absent_query_row_matches_oracle(name, spark, sf_dir, tmp_path):
+    """On a schema-preserving empty copy of the tables there is no
+    query row; the oracle returns no rows, and so must the entry."""
+    for t in TABLES:
+        schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
+        pq.write_table(schema.empty_table(), tmp_path / f"{t}.parquet")
+    con = duck_connection(str(tmp_path))
+    try:
+        compare(QUERIES[name](spark, str(tmp_path)), con, ORACLES[name])
+    finally:
+        con.close()

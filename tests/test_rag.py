@@ -106,7 +106,7 @@ def test_hybrid_rrf_fuses_both_towers(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]]
+    qv = emb.filter(F.col("vec_id") == 1).select(F.col("embedding").alias("qv"))
     out = hybrid.hybrid_search_rrf(
         docs, emb, ["spark", "join"], qv, k=10, depth=15
     ).collect()

@@ -46,3 +46,10 @@ def test_checksum_compare_rejects_float_columns(spark, sf_dir):
     df = spark.range(3).selectExpr("id * 0.5 AS x")
     with pytest.raises(TypeError, match="int/str columns"):
         runner.checksum_compare(df, duck_connection(sf_dir), "SELECT 0.5 AS x", "floaty")
+
+
+def test_stamp_names_the_host(spark):
+    rec = runner.stamp(spark)
+    assert {"nproc", "mem_total_mb", "cpus", "driver_memory", "spark", "duckdb", "pyarrow"} <= rec.keys()
+    assert rec["nproc"] >= 1 and rec["mem_total_mb"] > 0
+    assert rec["duckdb"] and rec["pyarrow"]

@@ -1,14 +1,21 @@
 """Regenerate PLANS.md — physical-plan evidence for flagship queries.
 
-Usage: python tools/gen_plans.py > PLANS.md
+Usage: python tools/gen_plans.py
+
+Rewrites, in place, the PLANS.md sections named in NOTES (one `## name`
+heading each) and the file's header. Every other section is
+hand-written and is kept as it stands; a NOTES name not yet in the file
+is appended.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rag_system_vector_db_spark.registry import QUERIES  # noqa: E402
 from rag_system_vector_db_spark.session import get_spark  # noqa: E402
@@ -30,13 +37,6 @@ NOTES = {
         "Region/year filters pushed to the parquet scans (PushedFilters); "
         "every dimension is a BroadcastHashJoin build side; single wide "
         "exchange for the final groupBy."
-    ),
-    "hybrid_search_rrf": (
-        "BM25 tower touches only query-term postings (filter under the "
-        "explode); corpus stats (N, avgdl) aggregate length-translate "
-        "scalars — no second tokenize/explode; both towers reduce via "
-        "agg-based top-k; RRF is a full-outer join of two depth-20 "
-        "relations; query vector enters as a broadcast row."
     ),
     "ann_probe_sweep": (
         "ONE bucket join serves every probe budget: probe rows carry "
@@ -348,47 +348,56 @@ NOTES = {
     ),
 }
 
+PLANS = os.path.join(ROOT, "PLANS.md")
+HEADER = """# PLANS — physical-plan evidence for the flagship queries
 
+Generated with `.explain(formatted)` at sf0.01 (plans are scale-
+invariant in shape; AQE may re-pick join strategies from runtime
+stats at larger inputs). Regenerate: `python tools/gen_plans.py`; it
+rewrites the sections named in its NOTES and keeps the hand-written
+ones."""
+
+
+def section(spark, name: str, note: str) -> str:
+    df = QUERIES[name](spark, SF)
+    df.count()  # finalize AQE
+    p = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    tree, _, details = p.partition("\n\n")
+    keep = [
+        line
+        for line in details.splitlines()
+        if line.startswith(("(", "PushedFilters", "PartitionFilters", "Join type"))
+        and (
+            "Scan parquet" in line
+            or line.startswith(("PushedFilters", "PartitionFilters", "Join type"))
+        )
+    ]
+    body = tree.strip() + ("\n\n" + "\n".join(keep) if keep else "")
+    return f"## {name}\n\n{note}\n\n```\n{body}\n```"
+
+
+def splice(text: str, generated: dict[str, str]) -> str:
+    """PLANS.md text with the header and each generated section
+    replaced where it stands; other sections are kept verbatim and new
+    names go at the end."""
+    _, *parts = re.split(r"(?m)^(?=## )", text)
+    out = [HEADER]
+    for part in parts:
+        name = part.splitlines()[0][3:].strip()
+        out.append(generated.pop(name, part.rstrip("\n")))
+    out.extend(generated.values())
+    return "\n\n".join(out) + "\n"
 
 
 def main() -> None:
     spark = get_spark("plans")
-    print("# PLANS — physical-plan evidence for the flagship queries")
-    print()
-    print("Generated with `.explain(formatted)` at sf0.01 (plans are scale-")
-    print("invariant in shape; AQE may re-pick join strategies from runtime")
-    print("stats at larger inputs). Regenerate: `python tools/gen_plans.py`.")
-    for name, note in NOTES.items():
-        df = QUERIES[name](spark, SF)
-        df.count()  # finalize AQE
-        p = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        tree, _, details = p.partition("\n\n")
-        keep = [
-            line
-            for line in details.splitlines()
-            if line.startswith(
-                ("(", "PushedFilters", "PartitionFilters", "Join type")
-            )
-            and (
-                "Scan parquet" in line
-                or line.startswith(
-                    ("PushedFilters", "PartitionFilters", "Join type")
-                )
-            )
-        ]
-        print(f"\n## {name}\n")
-        print(note)
-        print("\n```")
-        print(tree.strip())
-        if keep:
-            print()
-            print("\n".join(keep))
-        print("```")
+    generated = {name: section(spark, name, note) for name, note in NOTES.items()}
     spark.stop()
+    text = open(PLANS).read() if os.path.exists(PLANS) else ""
+    with open(PLANS, "w") as f:
+        f.write(splice(text, generated))
 
 
 if __name__ == "__main__":

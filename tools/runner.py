@@ -28,11 +28,14 @@ import threading
 import time
 import traceback
 
+import duckdb
+import pyarrow
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from rag_system_vector_db_spark.registry import LAZY_ORACLES, ORACLES, QUERIES  # noqa: E402
-from rag_system_vector_db_spark.session import get_spark  # noqa: E402
+from rag_system_vector_db_spark.session import get_spark, mem_total_mb  # noqa: E402
 from tests.oracle import compare, duck_connection  # noqa: E402
 
 # Scaling study: the candidate-volume-bound dedup family plus one
@@ -269,12 +272,16 @@ def split(results: dict[str, tuple[str, float]]) -> tuple[dict, dict]:
 
 
 def stamp(spark) -> dict:
-    """The session a record was measured with; compare records only
-    when these agree."""
+    """The host and session a record was measured with; compare records
+    only when these agree."""
     return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "mem_total_mb": mem_total_mb(),
         "cpus": spark.sparkContext.defaultParallelism,
         "driver_memory": spark.conf.get("spark.driver.memory"),
         "spark": spark.version,
+        "duckdb": duckdb.__version__,
+        "pyarrow": pyarrow.__version__,
     }
 
 
