@@ -58,7 +58,7 @@ def kmv_distinct(
             F.col("ndv_exact").cast("long"),
             F.round(est, 6).alias("ndv_est"),
             F.round(
-                F.abs(est - F.col("ndv_exact")) / F.col("ndv_exact"), 6
+                F.try_divide(F.abs(est - F.col("ndv_exact")), F.col("ndv_exact")), 6
             ).alias("rel_err"),
         )
     )

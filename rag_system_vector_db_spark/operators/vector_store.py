@@ -15,6 +15,17 @@ the streaming IVF index (``streaming.pipeline``'s
 its DuckDB oracle checks the rule the store runs. The streaming corpus
 dedup also writes its stamped logs through ``append_log``.
 
+Reads go through one cached snapshot per log listing, the analogue of
+the collection Milvus keeps loaded in query-node memory:
+``VectorCollection.df()`` keys the resolved view on the ``(name, size)``
+of every parquet file in the log, so search, get_by_ids, query, scan
+and stats share one resolve (one shuffle) until the listing changes.
+The key is sound because the log is append-only and no file is
+rewritten in place: an insert, a compaction, or a second instance or
+process writing the same path all change the listing. The snapshot
+reads exactly the files of its key, so a DataFrame built on it keeps
+reading that log state after later appends.
+
 At 100 TB: a collection is just partitioned parquet — reads get
 pushdown/pruning, inserts are distributed writes, search is
 operators.knn/ann over the scan.
@@ -26,6 +37,7 @@ import itertools
 import json
 import os
 import shutil
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -113,6 +125,9 @@ class VectorCollection:
         self.metric = m["metricType"]
         self.id_col = m["primaryField"]
         self.vec_col = m["vectorField"]
+        # df()'s snapshot: its log listing, and the call that unpersists it
+        self._key: tuple = ()
+        self._release = lambda: None
 
     # -- lifecycle (milvus_db.py:40 create_collection) --
 
@@ -142,15 +157,34 @@ class VectorCollection:
     def _data_path(self) -> str:
         return os.path.join(self.path, "data")
 
+    def _listing(self) -> tuple:
+        """(name, size) of every parquet file of the log, sorted."""
+        try:
+            with os.scandir(self._data_path()) as it:
+                files = [(e.name, e.stat().st_size) for e in it if e.name.endswith(".parquet")]
+        except FileNotFoundError:
+            return ()
+        return tuple(sorted(files))
+
     def _has_data(self) -> bool:
-        p = self._data_path()
-        return os.path.isdir(p) and any(n.endswith(".parquet") for n in os.listdir(p))
+        return bool(self._listing())
+
+    def _unload(self) -> None:
+        """Unpersist the snapshot now; the next read builds a new one."""
+        self._release()
+        self._key = ()
 
     # -- writes (milvus_db.py:61 insert_vectors) --
 
     def insert(self, df: DataFrame) -> None:
         """Append a batch under the next stamp: last write wins per
-        primary key at read time."""
+        primary key at read time.
+
+        The snapshot is unpersisted first: Spark's writer refreshes
+        every cached plan that reads under the path it writes, and would
+        re-list and re-plan a snapshot that the next read replaces
+        anyway."""
+        self._unload()
         append_log(df, self._data_path(), self._next_batch_id())
 
     def _next_batch_id(self) -> int:
@@ -165,18 +199,31 @@ class VectorCollection:
 
     def compact(self) -> None:
         """Fold the log to one row per primary key (maintenance;
-        optional). Nothing to fold in an empty collection."""
+        optional). Nothing to fold in an empty collection. The
+        snapshot is unpersisted first, so its memory is freed at once."""
+        self._unload()
         if self._has_data():
             compact_log(self.spark, self._data_path(), self.id_col)
 
     # -- reads --
 
     def df(self) -> DataFrame:
-        """Resolved collection: latest batch wins per primary key."""
-        if not self._has_data():
+        """Resolved collection: latest batch wins per primary key.
+
+        The cached snapshot of the current log listing (see the module
+        docstring): a new listing unpersists it and builds the next, and
+        a collection that is garbage collected unpersists its own."""
+        key = self._listing()
+        if not key:
             raise ValueError(f"collection {self.path!r} is empty: insert rows before reading it")
-        raw = self.spark.read.parquet(self._data_path())
-        return resolve_log(raw, self.id_col).drop("_batch")
+        if key != self._key:
+            self._release()
+            raw = self.spark.read.parquet(*[os.path.join(self._data_path(), n) for n, _ in key])
+            self._snap = resolve_log(raw, self.id_col).drop("_batch").cache()
+            self._release = weakref.finalize(self, self._snap.unpersist)
+            self._release.atexit = False  # the session may be stopped by then
+            self._key = key
+        return self._snap
 
     def query(
         self,

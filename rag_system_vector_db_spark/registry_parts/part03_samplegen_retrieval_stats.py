@@ -1497,9 +1497,9 @@ def dataset_card_q(spark, sf_dir):
         F.count_distinct("source").cast("long").alias("n_sources"),
         (F.count("*") - F.count_distinct(F.md5("text"))).cast("long").alias("n_dup_copies"),
         F.round(
-            (F.count("*") - F.count_distinct(F.md5("text"))) / F.count("*"), 6
+            F.try_divide(F.count("*") - F.count_distinct(F.md5("text")), F.count("*")), 6
         ).alias("dup_frac"),
-        F.round(F.sum(n_tok) / F.count("*"), 6).alias("mean_doc_tokens"),
+        F.round(F.try_divide(F.sum(n_tok), F.count("*")), 6).alias("mean_doc_tokens"),
     )
 
 

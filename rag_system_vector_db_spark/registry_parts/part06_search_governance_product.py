@@ -622,7 +622,7 @@ def k_anonymity_audit_q(spark, sf_dir):
         "min_k",
         "violating_groups",
         "rows_at_risk",
-        F.element_at("ks", F.expr("cast((n_groups + 1) div 2 as int)"))
+        F.get("ks", F.expr("cast((n_groups + 1) div 2 as int) - 1"))
         .cast("long")
         .alias("median_k"),
         "min_l",

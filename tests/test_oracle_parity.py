@@ -47,10 +47,21 @@ def test_duckdb_spills_outside_the_checkout(sf_dir, monkeypatch):
     assert os.path.isabs(spill) and not os.path.abspath(spill).startswith(root + os.sep)
 
 
-@pytest.mark.parametrize("name", ["knn_topk_cosine", "rag_retrieve", "retrieval_mmr"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_topk_cosine",
+        "rag_retrieve",
+        "retrieval_mmr",
+        "kmv_distinct",
+        "dataset_card",
+        "k_anonymity_audit",
+    ],
+)
 def test_absent_query_row_matches_oracle(name, spark, sf_dir, tmp_path):
     """On a schema-preserving empty copy of the tables there is no
-    query row; the oracle returns no rows, and so must the entry."""
+    query row: the retrieval entries return the oracle's no rows, and
+    the summaries its one row of zero counts and NULL ratios."""
     for t in TABLES:
         schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
         pq.write_table(schema.empty_table(), tmp_path / f"{t}.parquet")

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from rag_system_vector_db_spark.registry import ORACLES
+from rag_system_vector_db_spark.registry import ORACLES, QUERIES
 from tests.oracle import duck_connection
 from tools import runner
 
@@ -53,3 +53,18 @@ def test_stamp_names_the_host(spark):
     assert {"nproc", "mem_total_mb", "cpus", "driver_memory", "spark", "duckdb", "pyarrow"} <= rec.keys()
     assert rec["nproc"] >= 1 and rec["mem_total_mb"] > 0
     assert rec["duckdb"] and rec["pyarrow"]
+
+
+@pytest.mark.parametrize("mode", ["check", "time"])
+def test_jobs_carry_the_entry_name(spark, sf_dir, monkeypatch, mode):
+    seen = []
+
+    def stub(spark, sf_dir):
+        seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return spark.sql("SELECT 1 AS x")
+
+    monkeypatch.setitem(QUERIES, "stub_entry", stub)
+    monkeypatch.setitem(ORACLES, "stub_entry", "SELECT 1 AS x")
+    status, _ = runner.run(spark, sf_dir, ["stub_entry"], mode)["stub_entry"]
+    assert status in runner.OK and seen and set(seen) == {"stub_entry"}
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None

@@ -235,10 +235,13 @@ def run(
     per name. Returns {name: (status, seconds)}: seconds is the best
     time in time mode and the wall time of the check in check mode."""
     con = duck_connection(sf_dir) if mode == "check" else None
+    sc = spark.sparkContext
     results: dict[str, tuple[str, float]] = {}
     for i, name in enumerate(names, 1):
         t0 = time.perf_counter()
         sec = None
+        # Spark's job records and error logs carry the registry name.
+        sc.setJobDescription(name)
         with _Watchdog(spark, con, timeout) as dog:
             try:
                 if mode == "check":
@@ -252,6 +255,8 @@ def run(
                 status, detail = "ERROR", f"{type(e).__name__}: {str(e)[:300]}"
                 if not dog.fired.is_set():
                     traceback.print_exc(limit=5)
+            finally:
+                sc.setJobDescription(None)
         if status not in OK and dog.fired.is_set():
             status, detail = "TIMEOUT", f"over {timeout}s"
         if sec is None:
