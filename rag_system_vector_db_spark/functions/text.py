@@ -2,7 +2,8 @@
 
 Single-space tokenization is used (the synthetic corpus joins words
 with single spaces) so the DuckDB oracle's ``string_split(text, ' ')``
-produces byte-identical token arrays. All Column-expression / JVM-side.
+produces byte-identical token arrays. All JVM-side; the helpers with
+higher-order functions take SQL text, as functions.vector does.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .vector import lit_array
+from .vector import sql_literal
 
 # Small English stopword list (public-domain words); order matters only
 # for documentation — membership tests are set-like in both engines.
@@ -29,9 +30,9 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as space-joined strings; [] for texts
-    shorter than n tokens.
+def word_shingles(text: str, n: int = 3) -> Column:
+    """Word n-gram shingles of the SQL string expression ``text`` as
+    space-joined strings; [] for texts shorter than n tokens.
 
     Built by zip_with-folding n shifted slices of the token array.
     Higher-order functions run interpreted (CodegenFallback), so the
@@ -39,29 +40,31 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     faster than the transform(sequence, i -> concat_ws(slice(toks,i,n)))
     formulation, whose per-element slice allocates an array each call.
     Map-side only — no shuffle, unlike a posexplode+lead window plan.
+    The HOFs are SQL text, as in functions.vector: a Python lambda
+    costs a py4j round trip per node.
     """
-    toks = tokens(col)
-    k = F.size(toks) - F.lit(n - 1)
-    out = F.slice(toks, 1, k)
+    toks = f"split({text}, ' ')"
+    k = f"size({toks}) - {n - 1}"
+    out = f"slice({toks}, 1, {k})"
     for i in range(1, n):
-        out = F.zip_with(
-            out, F.slice(toks, i + 1, k), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.when(k <= 0, F.array().cast("array<string>")).otherwise(out)
+        out = f"zip_with({out}, slice({toks}, {i + 1}, {k}), (a, b) -> concat_ws(' ', a, b))"
+    return F.expr(f"CASE WHEN {k} <= 0 THEN CAST(array() AS ARRAY<STRING>) ELSE {out} END")
 
 
-def char_shingles(col: Column, n: int = 8) -> Column:
-    """Character n-gram shingles (fingerprinting / near-dup)."""
-    k = F.length(col) - F.lit(n - 1)
-    return F.when(k <= 0, F.array(col)).otherwise(
-        F.transform(F.sequence(F.lit(1), k), lambda i: F.substring(col, i, n))
+def char_shingles(text: str, n: int = 8) -> Column:
+    """Character n-gram shingles of a SQL string expression
+    (fingerprinting / near-dup)."""
+    k = f"length({text}) - {n - 1}"
+    return F.expr(
+        f"CASE WHEN {k} <= 0 THEN array({text})"
+        f" ELSE transform(sequence(1, {k}), i -> substring({text}, i, {n})) END"
     )
 
 
-def stopword_count(col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    toks = tokens(col)
-    sw = lit_array(stopwords)
-    return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
+def stopword_count(text: str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+    """Stopword tokens in a SQL string expression."""
+    sw = sql_literal(stopwords)
+    return F.expr(f"size(filter(split({text}, ' '), t -> array_contains({sw}, t)))")
 
 
 # --- DuckDB oracle snippets (same semantics) ---

@@ -31,19 +31,17 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return [[float(x) for x in rng.standard_normal(dim)] for _ in range(n_planes)]
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]):
-    """Bucket id = bit b set iff dot(v, plane_b) > 0. The planes enter
-    as one nested literal and each dot appears exactly once
-    (transform), keeping both plan-build time and the interpreted-HOF
-    tree size linear in n_planes."""
-    dots = F.transform(V.lit_array(planes), lambda p: V.dot(vec_col, p))
-    weights = V.lit_array([1 << b for b in range(len(planes))]).cast("array<long>")
-    return F.aggregate(
-        F.zip_with(
-            dots, weights, lambda d, w: F.when(d > 0, w).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+def lsh_bucket(vec: str, planes: list[list[float]]):
+    """Bucket id = bit b set iff dot(v, plane_b) > 0, for the SQL
+    vector expression ``vec``. The planes enter as one nested literal
+    and each dot appears exactly once (transform), keeping the
+    interpreted-HOF tree size linear in n_planes."""
+    dots = f"transform({V.sql_literal(planes)}, pl -> {V.dot(vec, 'pl')})"
+    weights = V.sql_literal([1 << b for b in range(len(planes))])
+    return F.expr(
+        f"aggregate(zip_with({dots}, CAST({weights} AS ARRAY<BIGINT>),"
+        " (d, w) -> CASE WHEN d > 0 THEN w ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
 
 
@@ -61,14 +59,14 @@ def ann_lsh_topk(
     Returns (query_id, id, score, rank)."""
     from .knn import topk_per_key_agg
 
-    cb = corpus.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes))
-    qb = queries.withColumn("_bucket", lsh_bucket(F.col(query_vec_col), planes))
+    cb = corpus.withColumn("_bucket", lsh_bucket(vec_col, planes))
+    qb = queries.withColumn("_bucket", lsh_bucket(query_vec_col, planes))
     scored = (
         cb.join(F.broadcast(qb), "_bucket")
         .select(
             query_id_col,
             id_col,
-            V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+            F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
         )
     )
     return topk_per_key_agg(scored, query_id_col, id_col, k)
@@ -94,8 +92,8 @@ def ann_lsh_multiprobe_topk(
     match at most one probe row and no dedup pass is needed.
     Returns (query_id, id, score, rank).
     """
-    cb = corpus.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes))
-    qb = queries.withColumn("_b0", lsh_bucket(F.col(query_vec_col), planes))
+    cb = corpus.withColumn("_bucket", lsh_bucket(vec_col, planes))
+    qb = queries.withColumn("_b0", lsh_bucket(query_vec_col, planes))
     probes = F.array(
         F.col("_b0"),
         *[F.col("_b0").bitwiseXOR(F.lit(1 << b)) for b in range(len(planes))],
@@ -108,7 +106,7 @@ def ann_lsh_multiprobe_topk(
     scored = cb.join(F.broadcast(qp), "_bucket").select(
         query_id_col,
         id_col,
-        V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+        F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
     )
     return topk_per_key_agg(scored, query_id_col, id_col, k)
 
@@ -196,8 +194,8 @@ def probe_sweep(
     at scale this is one corpus pass instead of n_planes+1.
     Returns (n_probes, mean_recall, mean_candidates)."""
     n_planes = len(planes)
-    cb = corpus.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes))
-    qb = queries.withColumn("_b0", lsh_bucket(F.col(query_vec_col), planes))
+    cb = corpus.withColumn("_bucket", lsh_bucket(vec_col, planes))
+    qb = queries.withColumn("_b0", lsh_bucket(query_vec_col, planes))
     probes = F.array(
         F.struct(F.col("_b0").alias("b"), F.lit(0).alias("m_min")),
         *[
@@ -223,7 +221,7 @@ def probe_sweep(
         query_id_col,
         id_col,
         F.col("_m_min"),
-        V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+        F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
     )
     per_budget = cand.withColumn(
         "m", F.explode(F.sequence(F.col("_m_min"), F.lit(n_planes)))
@@ -418,19 +416,7 @@ def kmeans_fit(
     return centroids
 
 
-def _by_dist_then_cell(a, b):
-    """array_sort comparator: (distance asc, cell id asc) — the explicit
-    cell tie-break makes probe order deterministic on exact-equal
-    distances, matching the oracle's ORDER BY d, cid."""
-    return (
-        F.when(a["d"] < b["d"], -1)
-        .when(a["d"] > b["d"], 1)
-        .when(a["cell"] < b["cell"], -1)
-        .otherwise(1)
-    )
-
-
-def _centroid_dists(vec_col, centroids: list[list[float]]):
+def _centroid_dists(vec: str, centroids: list[list[float]]):
     """Array of euclidean distances to each broadcast centroid literal
     — each distance expression appears exactly ONCE. (A nested
     when(d < best, ...)-chain argmin duplicates every distance subtree
@@ -438,7 +424,7 @@ def _centroid_dists(vec_col, centroids: list[list[float]]):
     subexpression elimination, so that formulation re-ran the 64-dim
     euclideans hundreds of times per row — measured 15x slower at
     sf0.1.)"""
-    return F.transform(V.lit_array(centroids), lambda c: V.euclidean(vec_col, c))
+    return F.expr(f"transform({V.sql_literal(centroids)}, c -> {V.euclidean(vec, 'c')})")
 
 
 def _argmin(darr):
@@ -449,22 +435,28 @@ def _argmin(darr):
     return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
 
 
-def _probe_structs(query_vec_col, centroids: list[list[float]]):
-    """(cell, distance) structs for probe-order sorting — nested
-    literal + index-transform, one euclidean subtree per centroid."""
-    return F.transform(
-        V.lit_array(centroids),
-        lambda c, i: F.struct(
-            i.alias("cell"), V.euclidean(query_vec_col, c).alias("d")
-        ),
+def _nearest_cells(query_vec: str, centroids: list[list[float]], nprobe: int):
+    """The array of a query's nprobe nearest cells as (cell, d)
+    structs: the nested literal + index-transform has one euclidean
+    subtree per centroid, and the sort is (distance asc, cell id asc)
+    — the explicit cell tie-break makes probe order deterministic on
+    exact-equal distances, matching the oracle's ORDER BY d, cid."""
+    structs = (
+        f"transform({V.sql_literal(centroids)},"
+        f" (c, i) -> named_struct('cell', i, 'd', {V.euclidean(query_vec, 'c')}))"
     )
+    order = (
+        "(a, b) -> CASE WHEN a.d < b.d THEN -1 WHEN a.d > b.d THEN 1"
+        " WHEN a.cell < b.cell THEN -1 ELSE 1 END"
+    )
+    return F.expr(f"slice(array_sort({structs}, {order}), 1, {nprobe})")
 
 
 def with_cell(df: DataFrame, vec_col, centroids, out_col: str = "_cell") -> DataFrame:
     """Attach the nearest-centroid cell id; the distance array is
     materialized once per row then dropped."""
     return (
-        df.withColumn("_cd", _centroid_dists(F.col(vec_col), centroids))
+        df.withColumn("_cd", _centroid_dists(vec_col, centroids))
         .withColumn(out_col, _argmin(F.col("_cd")))
         .drop("_cd")
     )
@@ -484,14 +476,11 @@ def ann_ivf_topk(
     """IVF probe search: per query, score only the nprobe nearest
     centroid cells. Returns (query_id, id, score, rank)."""
     cell = with_cell(corpus, vec_col, centroids)
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = (
         queries.select(
             query_id_col,
             query_vec_col,
-            F.explode(
-                F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-            ).alias("p"),
+            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
         )
         .select(query_id_col, query_vec_col, F.col("p.cell").alias("_cell"))
     )
@@ -502,7 +491,7 @@ def ann_ivf_topk(
         .select(
             query_id_col,
             id_col,
-            V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+            F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
         )
     )
     return topk_per_key_agg(scored, query_id_col, id_col, k)
@@ -532,9 +521,9 @@ def hard_negative_mining(
         F.col(id_col),
         F.col(vec_col),
         F.col(label_col),
-        lsh_bucket(F.col(vec_col), planes).alias("_bucket"),
+        lsh_bucket(vec_col, planes).alias("_bucket"),
         # norm hoist (see operators/dedup.semdedup): bit-identical
-        V.l2_norm(F.col(vec_col)).alias("_nrm"),
+        F.expr(V.l2_norm(vec_col)).alias("_nrm"),
     )
     a, c = b.alias("a"), b.alias("n")
     pairs = a.join(
@@ -547,7 +536,7 @@ def hard_negative_mining(
         F.col(f"n.{id_col}").alias("neg_id"),
         F.col(f"n.{label_col}").alias("neg_label"),
         (
-            V.dot(F.col(f"a.{vec_col}"), F.col(f"n.{vec_col}"))
+            F.expr(V.dot(f"a.{vec_col}", f"n.{vec_col}"))
             / (F.col("a._nrm") * F.col("n._nrm"))
         ).alias("score"),
     )
@@ -639,14 +628,11 @@ def ivf_probe_sweep(
     max_nprobe passes.
     Returns (n_probes, mean_recall, mean_candidates)."""
     cell = with_cell(corpus, vec_col, centroids)
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qp = (
         queries.select(
             query_id_col,
             query_vec_col,
-            F.posexplode(
-                F.slice(F.array_sort(probes, _by_dist_then_cell), 1, max_nprobe)
-            ).alias("_r0", "p"),
+            F.posexplode(_nearest_cells(query_vec_col, centroids, max_nprobe)).alias("_r0", "p"),
         )
         .select(
             query_id_col,
@@ -662,7 +648,7 @@ def ivf_probe_sweep(
         query_id_col,
         id_col,
         F.col("_m_min"),
-        V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+        F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
     )
     per_budget = cand.withColumn(
         "m", F.explode(F.sequence(F.col("_m_min"), F.lit(max_nprobe)))
@@ -761,31 +747,21 @@ def pq_fit_residual_sample(
     return _lloyd_books(x - c[assign], m, k, n_iter)
 
 
-def _euclid2(a, b):
-    """Squared euclidean between two array expressions, sequential
-    double accumulation (no sqrt — PQ argmin/ADC sum squared terms;
-    the oracle's list_sum matches this order exactly)."""
-    d = F.zip_with(
-        a.cast("array<double>"), b.cast("array<double>"), lambda x, y: x - y
-    )
-    return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v * v)
-
-
-def _subspace_d2(vec_col, codebooks: list[list[list[float]]]):
-    """d2[m][k] = ||v_m − codebook[m][k]||² for the m subspace slices
-    v_m of a vector. One zip_with pairs each slice with its codebook,
+def _subspace_d2(vec: str, codebooks: list[list[list[float]]]) -> str:
+    """SQL for d2[m][k] = ||v_m − codebook[m][k]||² over the m subspace
+    slices v_m of a vector (V.sq_euclidean: no sqrt, the oracle's
+    list_sum order). One zip_with pairs each slice with its codebook,
     so every distance subtree evaluates exactly once."""
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
-    v = vec_col.cast("array<double>")
-    return F.zip_with(
-        V.lit_array(codebooks),
-        F.array(*[F.slice(v, mi * dsub + 1, dsub) for mi in range(m)]),
-        lambda book, sv: F.transform(book, lambda c: _euclid2(sv, c)),
+    v = f"CAST(({vec}) AS ARRAY<DOUBLE>)"
+    slices = ", ".join(f"slice({v}, {mi * dsub + 1}, {dsub})" for mi in range(len(codebooks)))
+    return (
+        f"zip_with({V.sql_literal(codebooks)}, array({slices}),"
+        f" (book, sv) -> transform(book, c -> {V.sq_euclidean('sv', 'c')}))"
     )
 
 
-def pq_code_expr(vec_col, codebooks: list[list[list[float]]]):
+def pq_code_expr(vec: str, codebooks: list[list[list[float]]]):
     """PQ encode: per subspace, the code of the nearest centroid by
     squared euclidean (ties -> lowest code, matching the oracle's
     ORDER BY d, code). The argmin runs on the materialized
@@ -799,13 +775,13 @@ def pq_code_expr(vec_col, codebooks: list[list[list[float]]]):
     for ann_pq_adc): the giant tree defeats codegen and re-evaluates
     element accesses the zip_with formulation materializes once. The
     interpreted-but-materialized shape wins."""
-    return F.transform(
-        _subspace_d2(vec_col, codebooks),
-        lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
+    return F.expr(
+        f"transform({_subspace_d2(vec, codebooks)},"
+        " d -> CAST(array_position(d, array_min(d)) - 1 AS INT))"
     )
 
 
-def pq_adc_dist(query_vec_col, codes_col, codebooks: list[list[list[float]]]):
+def pq_adc_dist(query_vec: str, codes: str, codebooks: list[list[list[float]]]):
     """Asymmetric distance (ADC): euclidean between the full-precision
     query and a corpus vector's PQ reconstruction — computed straight
     from the codes, Σ_m ||q_m - codebook[m][code_m]||², left-to-right
@@ -816,29 +792,28 @@ def pq_adc_dist(query_vec_col, codes_col, codebooks: list[list[list[float]]]):
     pq_adc_dist_lut (bit-identical values, ~10x less per-row work);
     this stays as the direct-definition twin the LUT path is
     unit-tested against."""
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
-    cb = V.lit_array(codebooks)
-    total = None
-    for mi in range(m):
-        sv = F.slice(query_vec_col.cast("array<double>"), mi * dsub + 1, dsub)
-        cent = F.element_at(F.element_at(cb, mi + 1), codes_col[mi] + 1)
-        t = _euclid2(sv, cent)
-        total = t if total is None else total + t
-    return F.sqrt(total)
+    terms = [
+        V.sq_euclidean(
+            f"slice(CAST(({query_vec}) AS ARRAY<DOUBLE>), {mi * dsub + 1}, {dsub})",
+            f"element_at({V.sql_literal(book)}, ({codes})[{mi}] + 1)",
+        )
+        for mi, book in enumerate(codebooks)
+    ]
+    return F.expr(f"sqrt({' + '.join(terms)})")
 
 
-def pq_adc_luts(query_vec_col, codebooks: list[list[list[float]]]):
+def pq_adc_luts(query_vec: str, codebooks: list[list[list[float]]]):
     """Per-QUERY ADC lookup tables — faiss's actual ADC trick (Jégou
     PAMI'11 §V.A): luts[m][k] = ||q_m − codebook[m][k]||², computed
     once per query row (Q × m × k entries, interpreted-HOF cost paid
     on the tiny broadcast side), so the corpus-side distance is m
     array lookups + m−1 adds per row instead of m interpreted
-    dsub-dim euclideans. Each entry is the SAME _euclid2 expression
+    dsub-dim euclideans. Each entry is the SAME V.sq_euclidean expression
     pq_adc_dist would evaluate per corpus row — identical operands,
     identical order — so LUT-served distances are bit-identical. The
     tables are pq_code_expr's distance array, before its argmin."""
-    return _subspace_d2(query_vec_col, codebooks)
+    return F.expr(_subspace_d2(query_vec, codebooks))
 
 
 def pq_adc_dist_lut(lut_col, codes_col, m: int):
@@ -873,10 +848,10 @@ def ann_pq_adc_topk(
     from .knn import topk_per_key_agg
 
     coded = corpus.select(
-        F.col(id_col), pq_code_expr(F.col(vec_col), codebooks).alias("_codes")
+        F.col(id_col), pq_code_expr(vec_col, codebooks).alias("_codes")
     )
     qlut = queries.select(
-        query_id_col, pq_adc_luts(F.col(query_vec_col), codebooks).alias("_lut")
+        query_id_col, pq_adc_luts(query_vec_col, codebooks).alias("_lut")
     )
     scored = coded.join(F.broadcast(qlut)).select(
         query_id_col,
@@ -896,7 +871,7 @@ def pq_reconstruction_error(
     against). Encode + per-subspace error in one narrow projection,
     then a single map-side-combinable groupBy(subspace).
     Returns (subspace, n, mse)."""
-    errs = F.transform(_subspace_d2(F.col(vec_col), codebooks), lambda d: F.array_min(d))
+    errs = F.expr(f"transform({_subspace_d2(vec_col, codebooks)}, d -> array_min(d))")
     return (
         corpus.select(F.posexplode(errs).alias("subspace", "e2"))
         .groupBy("subspace")
@@ -940,20 +915,17 @@ def ann_ivf_rerank_topk(
         vec_col,
         centroids,
     ).select(id_col, "_qv", "_cell")
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = queries.select(
         query_id_col,
         query_vec_col,
-        F.explode(
-            F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-        ).alias("p"),
+        F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
     ).select(query_id_col, query_vec_col, F.col("p.cell").alias("_cell"))
     from .knn import topk_per_key_agg
 
     approx = cell.join(F.broadcast(qcells), "_cell").select(
         query_id_col,
         id_col,
-        V.cosine(F.col("_qv"), F.col(query_vec_col)).alias("_approx"),
+        F.expr(V.cosine("_qv", query_vec_col)).alias("_approx"),
     )
     short = topk_per_key_agg(
         approx, query_id_col, id_col, shortlist, score_col="_approx"
@@ -967,7 +939,7 @@ def ann_ivf_rerank_topk(
         .select(
             query_id_col,
             id_col,
-            V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+            F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
         )
     )
     return topk_per_key_agg(exact, query_id_col, id_col, k)
@@ -1003,18 +975,15 @@ def ann_ivfpq_topk(
     coded = with_cell(
         corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids
     ).select(
-        F.col(id_col), pq_code_expr(F.col(vec_col), codebooks).alias("_codes"), "_cell"
+        F.col(id_col), pq_code_expr(vec_col, codebooks).alias("_codes"), "_cell"
     )
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = queries.select(
         query_id_col,
         query_vec_col,
-        F.explode(
-            F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-        ).alias("p"),
+        F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
     ).select(
         query_id_col,
-        pq_adc_luts(F.col(query_vec_col), codebooks).alias("_lut"),
+        pq_adc_luts(query_vec_col, codebooks).alias("_lut"),
         F.col("p.cell").alias("_cell"),
     )
     scored = coded.join(F.broadcast(qcells), "_cell").select(
@@ -1043,7 +1012,7 @@ def ivfpq_index_build(
     coded = with_cell(
         corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids, out_col="cell"
     ).select(
-        F.col(id_col), pq_code_expr(F.col(vec_col), codebooks).alias("codes"), "cell"
+        F.col(id_col), pq_code_expr(vec_col, codebooks).alias("codes"), "cell"
     )
     coded.write.partitionBy("cell").mode("overwrite").parquet(index_dir)
 
@@ -1070,16 +1039,13 @@ def ann_ivfpq_indexed_topk(
     from .knn import topk_per_key_agg
 
     idx = spark.read.parquet(index_dir)
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = queries.select(
         query_id_col,
         query_vec_col,
-        F.explode(
-            F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-        ).alias("p"),
+        F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
     ).select(
         query_id_col,
-        pq_adc_luts(F.col(query_vec_col), codebooks).alias("_lut"),
+        pq_adc_luts(query_vec_col, codebooks).alias("_lut"),
         F.col("p.cell").alias("cell"),
     )
     scored = idx.join(F.broadcast(qcells), "cell").select(
@@ -1137,21 +1103,18 @@ def ann_ivf_indexed_topk(
     from .knn import topk_per_key_agg
 
     idx = spark.read.parquet(index_dir)
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = (
         queries.select(
             query_id_col,
             query_vec_col,
-            F.explode(
-                F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-            ).alias("p"),
+            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
         )
         .select(query_id_col, query_vec_col, F.col("p.cell").alias("cell"))
     )
     scored = idx.join(F.broadcast(qcells), "cell").select(
         query_id_col,
         id_col,
-        V.cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+        F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
     )
     return topk_per_key_agg(scored, query_id_col, id_col, k)
 
@@ -1191,10 +1154,7 @@ def matryoshka_recall(
         "dim",
         F.col(query_id_col),
         F.col(id_col),
-        V.cosine(
-            F.expr(f"slice({vec_col}, 1, dim)"),
-            F.expr(f"slice({query_vec_col}, 1, dim)"),
-        ).alias("score"),
+        F.expr(V.cosine(f"slice({vec_col}, 1, dim)", f"slice({query_vec_col}, 1, dim)")).alias("score"),
     )
     pair = F.struct((-F.col("score")).alias("_o"), F.col(id_col))
     tops = scored.groupBy("dim", query_id_col).agg(
@@ -1215,11 +1175,13 @@ def matryoshka_recall(
     )
 
 
-def _residual_expr(vec_col, cell_col, centroids: list[list[float]]):
+def _residual_expr(vec: str, cell: str, centroids: list[list[float]]):
     """x − centroid[cell], elementwise (zip_with; the oracle's
     list_transform(list_zip(...)) computes the identical sequence)."""
-    cent = F.element_at(V.lit_array(centroids), cell_col + 1)
-    return F.zip_with(vec_col.cast("array<double>"), cent, lambda x, c: x - c)
+    return F.expr(
+        f"zip_with(CAST(({vec}) AS ARRAY<DOUBLE>),"
+        f" element_at({V.sql_literal(centroids)}, ({cell}) + 1), (x, c) -> x - c)"
+    )
 
 
 def ann_ivfpq_residual_topk(
@@ -1249,29 +1211,24 @@ def ann_ivfpq_residual_topk(
     Returns (query_id, id, dist, rank), dist ascending."""
     from .knn import topk_per_key_agg
 
-    coded = with_cell(
-        corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids
-    ).select(
-        F.col(id_col),
-        pq_code_expr(
-            _residual_expr(F.col(vec_col), F.col("_cell"), centroids), codebooks
-        ).alias("_codes"),
-        "_cell",
+    # the residual is a column of its own: encoding slices it m times
+    coded = (
+        with_cell(corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids)
+        .select(id_col, _residual_expr(vec_col, "_cell", centroids).alias("_res"), "_cell")
+        .select(id_col, pq_code_expr("_res", codebooks).alias("_codes"), "_cell")
     )
-    probes = _probe_structs(F.col(query_vec_col), centroids)
-    qcells = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(
-            F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-        ).alias("p"),
-    ).select(
-        query_id_col,
-        pq_adc_luts(
-            _residual_expr(F.col(query_vec_col), F.col("p.cell"), centroids),
-            codebooks,
-        ).alias("_lut"),
-        F.col("p.cell").alias("_cell"),
+    qcells = (
+        queries.select(
+            query_id_col,
+            query_vec_col,
+            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
+        )
+        .select(
+            query_id_col,
+            _residual_expr(query_vec_col, "p.cell", centroids).alias("_res"),
+            F.col("p.cell").alias("_cell"),
+        )
+        .select(query_id_col, pq_adc_luts("_res", codebooks).alias("_lut"), "_cell")
     )
     scored = coded.join(F.broadcast(qcells), "_cell").select(
         query_id_col,
@@ -1474,15 +1431,12 @@ def ann_ivf_sq8_topk(
         .crossJoin(F.broadcast(absmax))
         .select(F.col(id_col), F.col("_cell"), code(F.col(vec_col)).alias("_codes"))
     )
-    probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = (
         queries.crossJoin(F.broadcast(absmax))
         .select(
             query_id_col,
             code(F.col(query_vec_col)).alias("_qcodes"),
-            F.explode(
-                F.slice(F.array_sort(probes, _by_dist_then_cell), 1, nprobe)
-            ).alias("p"),
+            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
         )
         .select(query_id_col, "_qcodes", F.col("p.cell").alias("_cell"))
     )
@@ -1532,7 +1486,7 @@ def quantization_recall(
         .select(
             "query_id",
             id_col,
-            V.euclidean(F.col(vec_col), F.col("_qv")).alias("dist"),
+            F.expr(V.euclidean(vec_col, "_qv")).alias("dist"),
         )
     )
     exact_top = topk_per_key_agg(exact, "query_id", id_col, k, "dist", asc=True)

@@ -54,7 +54,7 @@ def repetition_stats(
     )
     grams2 = docs.select(
         F.col(id_col),
-        F.explode(X.word_shingles(F.col(text_col), 2)).alias("g"),
+        F.explode(X.word_shingles(text_col, 2)).alias("g"),
     )
     t2 = (
         grams2.groupBy(id_col, "g")
@@ -109,7 +109,7 @@ def quality_filters(
     toks = X.tokens(t)
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
-    sw_frac = X.stopword_count(t) / n
+    sw_frac = X.stopword_count(text_col) / n
     ttr = F.size(F.array_distinct(toks)) / n
     ok_len = (n >= min_tokens) & (n <= max_tokens)
     ok_wl = (mean_wl >= min_word_len) & (mean_wl <= max_word_len)
@@ -153,7 +153,7 @@ def benchmark_contamination(
     """
     grams = docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(X.word_shingles(F.col(text_col), n))).alias("g"),
+        F.explode(F.array_distinct(X.word_shingles(text_col, n))).alias("g"),
     ).filter(F.col("g") != "")
     if bench is None:
         bench_grams = grams.filter(F.col(id_col) % bench_mod == 0).select(
@@ -163,7 +163,7 @@ def benchmark_contamination(
         bench_grams = bench.select(
             F.col(id_col).alias("bench_id"),
             F.explode(
-                F.array_distinct(X.word_shingles(F.col(text_col), n))
+                F.array_distinct(X.word_shingles(text_col, n))
             ).alias("g"),
         ).filter(F.col("g") != "")
     return (
@@ -352,7 +352,7 @@ def dsir_selection(
     larr = lit_array(lam_micro).cast("array<long>")
     t = F.col(text_col)
     uni = docs.select(F.col(id_col), F.explode(X.tokens(t)).alias("f"))
-    bi = docs.select(F.col(id_col), F.explode(X.word_shingles(t, 2)).alias("f"))
+    bi = docs.select(F.col(id_col), F.explode(X.word_shingles(text_col, 2)).alias("f"))
     feats = uni.unionAll(bi).filter(F.col("f") != "")
     per = (
         feats.select(

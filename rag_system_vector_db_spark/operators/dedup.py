@@ -17,8 +17,6 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -52,7 +50,7 @@ def shingle_set(
     within a doc never hit the shuffle."""
     return docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(X.word_shingles(F.col(text_col), n))).alias("shingle"),
+        F.explode(F.array_distinct(X.word_shingles(text_col, n))).alias("shingle"),
     ).filter(F.col("shingle") != "")
 
 
@@ -317,24 +315,19 @@ def simhash(
 
     One explode + one groupBy with 32 map-side-combinable sums (all
     codegen'd primitive ops; an HOF fold variant benched slower —
-    higher-order functions run interpreted).
+    higher-order functions run interpreted). The sums and the bit
+    assembly over them are one SQL aggregate expression, built with a
+    handful of py4j calls rather than thousands of Column nodes.
     """
     toks = docs.select(
         F.col(id_col),
         F.explode(F.array_distinct(X.tokens(F.col(text_col)))).alias("tok"),
     ).select(F.col(id_col), H.md5_int32(F.col("tok")).alias("hv"))
-    sums = toks.groupBy(id_col).agg(
-        *[
-            F.sum(F.shiftright(F.col("hv"), b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s{b}")
-            for b in range(SIMHASH_BITS)
-        ]
+    bits = " + ".join(
+        f"CASE WHEN sum((shiftright(hv, {b}) & 1) * 2 - 1) > 0 THEN {1 << b} ELSE 0 END"
+        for b in range(SIMHASH_BITS)
     )
-    sim = reduce(
-        lambda acc, b: acc + F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)),
-        range(SIMHASH_BITS),
-        F.lit(0).cast("long"),
-    )
-    return sums.select(F.col(id_col), sim.alias("simhash"))
+    return toks.groupBy(id_col).agg(F.expr(f"CAST(0 AS BIGINT) + {bits} AS simhash"))
 
 
 def dedup_simhash(
@@ -353,23 +346,13 @@ def dedup_simhash(
     boilerplate mega-buckets before the collect (cap_hot_buckets).
     Returns (doc_a, doc_b, hamming)."""
     s = simhash(docs, id_col, text_col)
-    bands = s.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), 8 * b)
-                        .bitwiseAND(F.lit(255))
-                        .alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("e"),
-    ).select(id_col, "simhash", F.col("e.band").alias("band"), F.col("e.band_val").alias("band_val"))
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'band_val', shiftright(simhash, {8 * b}) & 255)"
+        for b in range(4)
+    )
+    bands = s.select(id_col, "simhash", F.expr(f"explode(array({structs}))").alias("e")).select(
+        id_col, "simhash", F.col("e.band").alias("band"), F.col("e.band_val").alias("band_val")
+    )
     # Bucket-collect pair generation (see dedup_minhash_lsh): the
     # simhash aggregation runs once; sorted (id, simhash) structs give
     # doc_a < doc_b for free.
@@ -415,12 +398,9 @@ def dedup_simhash(
     if max_bucket is not None:
         out = sel.drop("_xor", "band").distinct()
     else:
-        first_band = F.lit(True)
-        for j in range(3):
-            first_band = first_band & (
-                (F.col("band") <= j)
-                | (F.shiftright(F.col("_xor"), 8 * j).bitwiseAND(F.lit(255)) != 0)
-            )
+        first_band = "true" + "".join(
+            f" AND (band <= {j} OR (shiftright(_xor, {8 * j}) & 255) != 0)" for j in range(3)
+        )
         out = sel.filter(first_band).drop("_xor", "band")
     return (out, report) if with_report else out
 
@@ -516,8 +496,8 @@ def dedup_embedding_lsh(
     b = vectors.select(
         F.col(id_col),
         F.col(vec_col),
-        lsh_bucket(F.col(vec_col), planes).alias("_bucket"),
-        V.l2_norm(F.col(vec_col)).alias("_nrm"),
+        lsh_bucket(vec_col, planes).alias("_bucket"),
+        F.expr(V.l2_norm(vec_col)).alias("_nrm"),
     )
     a, c = b.alias("a"), b.alias("b")
     return (
@@ -530,7 +510,7 @@ def dedup_embedding_lsh(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             (
-                V.dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+                F.expr(V.dot(f"a.{vec_col}", f"b.{vec_col}"))
                 / (F.col("a._nrm") * F.col("b._nrm"))
             ).alias("score"),
         )
@@ -568,7 +548,7 @@ def dedup_embedding_cosine(
         b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
         return (
             a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", V.cosine(F.col("_va"), F.col("_vb")).alias("score"))
+            .select("id_a", "id_b", F.expr(V.cosine("_va", "_vb")).alias("score"))
             .filter(F.col("score") >= threshold)
             .select("id_a", "id_b", F.round("score", 6).alias("score"))
         )
@@ -710,7 +690,7 @@ def semdedup(
         "cid",
         F.col(id_col),
         F.col(vec_col),
-        V.l2_norm(F.col(vec_col)).alias("_nrm"),
+        F.expr(V.l2_norm(vec_col)).alias("_nrm"),
     )
     # The self-join would otherwise evaluate the assignment subtree on
     # BOTH sides — and at k ∝ N the k interpreted per-centroid euclids
@@ -731,7 +711,7 @@ def semdedup(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             (
-                V.dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+                F.expr(V.dot(f"a.{vec_col}", f"b.{vec_col}"))
                 / (F.col("a._nrm") * F.col("b._nrm"))
             ).alias("score"),
         )
@@ -927,7 +907,7 @@ def substring_dedup(
     shuffle. Returns (doc_id, n_windows, n_dup_windows, dup_fraction).
     """
     wins = docs.select(
-        F.col(id_col), F.explode(X.word_shingles(F.col(text_col), w)).alias("_win")
+        F.col(id_col), F.explode(X.word_shingles(text_col, w)).alias("_win")
     ).select(F.col(id_col), H.md5_long(F.col("_win")).alias("_wh"))
     counts = wins.groupBy("_wh").agg(F.count("*").cast("long").alias("_cnt"))
     per_doc = (

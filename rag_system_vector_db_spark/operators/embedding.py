@@ -189,14 +189,12 @@ def pca_project(
 
     outs = [F.col(id_col)]
     for i, comp in enumerate(components, start=1):
-        lit = V.lit_array([float(c) for c in comp])
+        lit = V.sql_literal([float(c) for c in comp])
         # scalar offset computed the same sequential way both engines use
         off = 0.0
         for m, c in zip(mean, comp):
             off += m * c
-        outs.append(
-            F.round(V.dot(F.col(vec_col), lit) - F.lit(off), 6).alias(f"pc{i}")
-        )
+        outs.append(F.round(F.expr(V.dot(vec_col, lit)) - F.lit(off), 6).alias(f"pc{i}"))
     return vectors.select(*outs)
 
 

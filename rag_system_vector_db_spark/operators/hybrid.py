@@ -115,7 +115,7 @@ def hybrid_search_rrf(
 
     vec = vectors.crossJoin(F.broadcast(query_vec)).select(
         F.col(vec_id_col).alias("_id"),
-        V.cosine(F.col(vec_col), F.col("qv")).alias("score"),
+        F.expr(V.cosine(vec_col, "qv")).alias("score"),
     )
     vec_top = topk_per_key_agg(
         vec.withColumn("_q", F.lit(0)), "_q", "_id", depth

@@ -19,6 +19,8 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,7 +29,7 @@ from ..functions import vector as V
 _METRICS = {"cosine": V.cosine, "dot": V.dot, "euclidean": V.euclidean}
 
 
-def _score(metric: str, a, b):
+def _score(metric: str, a: str, b: str) -> str:
     try:
         fn = _METRICS[metric]
     except KeyError:
@@ -49,13 +51,27 @@ def topk(
 ) -> DataFrame:
     """Top-k for one literal query vector (milvus search_vectors shape).
 
-    Returns (id_col, score) — score full-precision double.
+    The query literal appears once in the plan. For cosine its norm is
+    taken on the driver with the same sequential double sum and
+    correctly rounded sqrt Spark's fold evaluates, so the score
+    dot(vec, q) / (l2_norm(vec) * qnorm) is the V.cosine arithmetic
+    tree, bit for bit. A zero-norm row or query scores NULL, which
+    sorts last. Returns (id_col, score) — score full-precision double.
     """
-    q = V.lit_array([float(x) for x in query_vec])
-    score = _score(metric, F.col(vec_col), q).alias("score")
-    scored = corpus.select(F.col(id_col), score)
-    order = [F.col("score").asc() if _ascending(metric) else F.col("score").desc(), F.col(id_col).asc()]
-    return scored.orderBy(*order).limit(k)
+    q = [float(x) for x in query_vec]
+    q_sql = V.sql_literal(q)
+    if metric == "cosine":
+        ss = 0.0
+        for x in q:
+            ss += x * x
+        score = (
+            f"try_divide({V.dot(vec_col, q_sql)},"
+            f" {V.l2_norm(vec_col)} * {V.sql_literal(math.sqrt(ss))})"
+        )
+    else:
+        score = _score(metric, vec_col, q_sql)
+    order = F.asc("score") if _ascending(metric) else F.desc("score")
+    return corpus.selectExpr(id_col, f"{score} AS score").orderBy(order, F.asc(id_col)).limit(k)
 
 
 def topk_batch(
@@ -81,31 +97,20 @@ def topk_batch(
         # dot(a,b) / (norm_a * norm_b) is the SAME arithmetic tree
         # V.cosine evaluates, so results are bit-identical — this cuts
         # 3 array folds per pair to 1 (measured 7.5 s -> 2.8 s on the
-        # 500-query classifier eval at sf0.1).
-        c2 = corpus.select(
-            F.col(id_col), F.col(vec_col), V.l2_norm(F.col(vec_col)).alias("_cnorm")
+        # 500-query classifier eval at sf0.1). Plain `/`, not V.cosine's
+        # try_divide: the sort_array prune below would rank a NULL first.
+        c2 = corpus.selectExpr(id_col, vec_col, f"{V.l2_norm(vec_col)} AS _cnorm")
+        q2 = queries.selectExpr(
+            query_id_col, query_vec_col, f"{V.l2_norm(query_vec_col)} AS _qnorm"
         )
-        q2 = queries.select(
-            F.col(query_id_col),
-            F.col(query_vec_col),
-            V.l2_norm(F.col(query_vec_col)).alias("_qnorm"),
-        )
-        scored = c2.crossJoin(F.broadcast(q2)).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            (
-                V.dot(F.col(vec_col), F.col(query_vec_col))
-                / (F.col("_cnorm") * F.col("_qnorm"))
-            ).alias("score"),
+        scored = c2.crossJoin(F.broadcast(q2)).selectExpr(
+            query_id_col,
+            id_col,
+            f"{V.dot(vec_col, query_vec_col)} / (_cnorm * _qnorm) AS score",
         )
     else:
-        scored = (
-            corpus.crossJoin(F.broadcast(queries))
-            .select(
-                F.col(query_id_col),
-                F.col(id_col),
-                _score(metric, F.col(vec_col), F.col(query_vec_col)).alias("score"),
-            )
+        scored = corpus.crossJoin(F.broadcast(queries)).selectExpr(
+            query_id_col, id_col, f"{_score(metric, vec_col, query_vec_col)} AS score"
         )
     asc = _ascending(metric)
     if prune_partial:
@@ -235,5 +240,5 @@ def similarity_matrix(
     b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     return (
         a.crossJoin(F.broadcast(b))
-        .select("id_a", "id_b", _score(metric, F.col("_va"), F.col("_vb")).alias("score"))
+        .selectExpr("id_a", "id_b", f"{_score(metric, '_va', '_vb')} AS score")
     )

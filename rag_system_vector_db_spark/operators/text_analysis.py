@@ -23,8 +23,8 @@ STOPWORDS = {
 }
 
 
-def _ratio(text_col, words: tuple[str, ...]):
-    return X.stopword_count(text_col, words) / X.token_count(text_col)
+def _ratio(text_col: str, words: tuple[str, ...]):
+    return X.stopword_count(text_col, words) / X.token_count(F.col(text_col))
 
 
 def lang_id(
@@ -32,8 +32,7 @@ def lang_id(
 ) -> DataFrame:
     """Stopword-ratio language guess. Argmax over per-language ratios,
     ties broken by language-code order (en first)."""
-    t = F.col(text_col)
-    ratios = {lang: _ratio(t, words) for lang, words in STOPWORDS.items()}
+    ratios = {lang: _ratio(text_col, words) for lang, words in STOPWORDS.items()}
     best = F.greatest(*ratios.values())
     pred = F.lit("unknown")
     for lang in reversed(list(STOPWORDS)):  # earlier langs win ties
@@ -261,14 +260,14 @@ def ngram_counts(
     Returns (gram, n_docs, n_occurrences) for the k most frequent."""
     grams = docs.select(
         F.col(text_col),
-        F.explode(X.word_shingles(F.col(text_col), n)).alias("gram"),
+        F.explode(X.word_shingles(text_col, n)).alias("gram"),
     ).filter(F.col("gram") != "")
     counts = grams.groupBy("gram").agg(
         F.count("*").cast("long").alias("n_occurrences")
     )
     per_doc = (
         docs.select(
-            F.explode(F.array_distinct(X.word_shingles(F.col(text_col), n))).alias(
+            F.explode(F.array_distinct(X.word_shingles(text_col, n))).alias(
                 "gram"
             )
         )
@@ -302,7 +301,7 @@ def doc_fingerprint(
     hashes = F.array_sort(
         F.array_distinct(
             F.transform(
-                F.array_distinct(X.char_shingles(F.col(text_col), shingle_len)),
+                F.array_distinct(X.char_shingles(text_col, shingle_len)),
                 lambda s: F.md5(s),
             )
         )
@@ -411,8 +410,7 @@ def lang_confusion(
     the ≤ |langs|² confusion frame, not the corpus. This is the audit
     that decides whether the cheap classifier is good enough to gate a
     corpus-mix decision, and per-language where it bleeds."""
-    t = F.col(text_col)
-    ratios = {lang: _ratio(t, words) for lang, words in STOPWORDS.items()}
+    ratios = {lang: _ratio(text_col, words) for lang, words in STOPWORDS.items()}
     best = F.greatest(*ratios.values())
     pred = F.lit("unknown")
     for lang in reversed(list(STOPWORDS)):
@@ -471,7 +469,7 @@ def pmi_collocations(
         .localCheckpoint(eager=False)
     )
     bi = (
-        docs.select(F.explode(X.word_shingles(t, 2)).alias("bigram"))
+        docs.select(F.explode(X.word_shingles(text_col, 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").cast("long").alias("c_xy"))
         .localCheckpoint(eager=False)
@@ -574,7 +572,7 @@ def lm_perplexity_bigram(
     Returns (doc_id, n_bigrams, avg_logp, perplexity)."""
     t = F.col(text_col)
     bi_occ = docs.select(
-        F.col(id_col), F.explode(X.word_shingles(t, 2)).alias("bigram")
+        F.col(id_col), F.explode(X.word_shingles(text_col, 2)).alias("bigram")
     )
     bi_counts = (
         bi_occ.groupBy("bigram")

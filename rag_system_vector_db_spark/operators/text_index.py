@@ -190,7 +190,7 @@ def hybrid_index_rrf(
     ).select(F.col("_id"), F.col("rank").alias("bm25_rank"))
     vec = vectors.crossJoin(F.broadcast(query_vec)).select(
         F.col("vec_id").alias("_id"),
-        V.cosine(F.col("embedding"), F.col("qv")).alias("score"),
+        F.expr(V.cosine("embedding", "qv")).alias("score"),
     )
     vec_top = topk_per_key_agg(
         vec.withColumn("_q", F.lit(0)), "_q", "_id", depth
@@ -771,7 +771,7 @@ def hybrid_combsum(
         vectors.crossJoin(F.broadcast(query_vec))
         .select(
             F.col("vec_id").alias("doc_id"),
-            V.cosine(F.col("embedding"), F.col("qv")).alias("_raw"),
+            F.expr(V.cosine("embedding", "qv")).alias("_raw"),
         )
         .orderBy(F.col("_raw").desc(), "doc_id")
         .limit(depth)

@@ -190,7 +190,7 @@ def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < 100)
-        .select("vec_id", F.round(V.l2_norm(F.col("embedding")), 6).alias("norm"))
+        .select("vec_id", F.round(F.expr(V.l2_norm("embedding")), 6).alias("norm"))
     )
 
 

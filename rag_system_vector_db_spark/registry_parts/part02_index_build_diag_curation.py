@@ -35,7 +35,7 @@ from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, 
 
 
 def _dd_euclid2(a: str, b: str) -> str:
-    # squared euclidean — matches operators.ann._euclid2's sequential sum
+    # squared euclidean — matches functions.vector.sq_euclidean's sequential sum
     return (
         f"list_sum(list_transform(list_zip(({a})::DOUBLE[], ({b})::DOUBLE[]),"
         f" x -> (x[1]-x[2])*(x[1]-x[2])))"
@@ -759,7 +759,7 @@ def ivf_cell_stats(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
     assigned = ann.with_cell(emb, "embedding", centroids, out_col="cid")
-    dists = ann._centroid_dists(F.col("embedding"), centroids)
+    dists = ann._centroid_dists("embedding", centroids)
     d = assigned.withColumn("_d", F.get(dists, F.col("cid")))
     total = d.select(F.count("*").alias("_t"))
     return (
@@ -957,7 +957,7 @@ def knn_filtered(spark, sf_dir):
     scored = (
         emb.join(allowed, "vec_id", "left_semi")
         .crossJoin(F.broadcast(qv))
-        .select("vec_id", V.cosine(F.col("embedding"), F.col("qv")).alias("score"))
+        .select("vec_id", F.expr(V.cosine("embedding", "qv")).alias("score"))
     )
     top = scored.orderBy(F.col("score").desc(), "vec_id").limit(5)
     w = Window.orderBy(F.col("score").desc(), "vec_id")
@@ -1001,7 +1001,7 @@ def maxsim_group_retrieval(spark, sf_dir):
     scored = emb.crossJoin(F.broadcast(qv)).select(
         "label",
         "vec_id",
-        V.cosine(F.col("embedding"), F.col("qv")).alias("score"),
+        F.expr(V.cosine("embedding", "qv")).alias("score"),
     )
     # max_by with (score, -vec_id) struct: ties on score pick the
     # SMALLEST vec_id, matching the oracle's min(vec_id) over argmax
@@ -1052,8 +1052,8 @@ def _knn_graph_edges(spark, sf_dir, max_bucket=None):
     b = emb.select(
         "vec_id",
         "embedding",
-        ann.lsh_bucket(F.col("embedding"), planes).alias("_b"),
-        V.l2_norm(F.col("embedding")).alias("_nrm"),
+        ann.lsh_bucket("embedding", planes).alias("_b"),
+        F.expr(V.l2_norm("embedding")).alias("_nrm"),
     )
     if max_bucket is not None:
         b = cap_hot_buckets(b, ["_b"], max_bucket)
@@ -1068,7 +1068,7 @@ def _knn_graph_edges(spark, sf_dir, max_bucket=None):
             F.col("a.vec_id").alias("src"),
             F.col("b.vec_id").alias("dst"),
             (
-                V.dot(F.col("a.embedding"), F.col("b.embedding"))
+                F.expr(V.dot("a.embedding", "b.embedding"))
                 / (F.col("a._nrm") * F.col("b._nrm"))
             ).alias("score"),
         )
@@ -3773,7 +3773,7 @@ def curation_pipeline_q(spark, sf_dir):
     toks = X.tokens(t)
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
-    swf = X.stopword_count(t) / n
+    swf = X.stopword_count("text") / n
     ttr = F.size(F.array_distinct(toks)) / n
     canon = F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(t), "[^a-z0-9 ]", ""), " +", " ")

@@ -338,7 +338,7 @@ def rag_context_budget_q(spark, sf_dir):
     scored = (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select("vec_id", V.cosine(F.col("embedding"), F.col("_qv")).alias("score"))
+        .select("vec_id", F.expr(V.cosine("embedding", "_qv")).alias("score"))
     )
     top = scored.orderBy(F.col("score").desc(), "vec_id").limit(10)
     wr = Window.orderBy(F.col("score").desc(), "vec_id")
@@ -1735,7 +1735,7 @@ def bpe_train_rounds_q(spark, sf_dir):
         return (
             sym.select(
                 "cnt",
-                F.explode(X.word_shingles(F.trim(F.col("s")), 2)).alias("pair"),
+                F.explode(X.word_shingles("trim(s)", 2)).alias("pair"),
             )
             .groupBy("pair")
             .agg(F.sum("cnt").cast("long").alias("pair_count"))
@@ -2811,7 +2811,7 @@ def split_ngram_leakage_q(spark, sf_dir):
     w = docs.select(
         split.alias("split"),
         F.explode(
-            F.transform(X.word_shingles(F.col("text"), 8), lambda s: F.md5(s))
+            F.transform(X.word_shingles("text", 8), lambda s: F.md5(s))
         ).alias("wh"),
     )
     train_w = w.filter(F.col("split") == "train").select("wh").distinct()

@@ -1631,7 +1631,7 @@ def silhouette_simplified_q(spark, sf_dir):
     order-free integer sums."""
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     cd = (
-        emb.select("label", F.posexplode(V._as_double(F.col("embedding"))))
+        emb.select("label", F.posexplode(F.col("embedding").cast("array<double>")))
         .groupBy("label", "pos")
         .agg(F.round(F.avg("col"), 6).alias("cv"))
     )
@@ -1644,7 +1644,7 @@ def silhouette_simplified_q(spark, sf_dir):
         "vec_id",
         "label",
         "clabel",
-        V.euclidean(F.col("embedding"), F.col("cvec")).alias("dst"),
+        F.expr(V.euclidean("embedding", "cvec")).alias("dst"),
     )
     ab = dist.groupBy("vec_id", "label").agg(
         F.min(F.when(F.col("label") == F.col("clabel"), F.col("dst"))).alias("a"),
@@ -3513,15 +3513,15 @@ def embedding_dedup_recall_q(spark, sf_dir):
     ).select(
         "vec_id",
         "embedding",
-        ann.lsh_bucket(F.col("embedding"), planes).alias("_b"),
+        ann.lsh_bucket("embedding", planes).alias("_b"),
         # norm hoist (see operators/dedup.semdedup): bit-identical
-        V.l2_norm(F.col("embedding")).alias("_nrm"),
+        F.expr(V.l2_norm("embedding")).alias("_nrm"),
     )
     a, b = sub.alias("a"), sub.alias("b")
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
         F.when(F.col("a._b") == F.col("b._b"), 1).otherwise(0).alias("cand"),
         F.when(
-            V.dot(F.col("a.embedding"), F.col("b.embedding"))
+            F.expr(V.dot("a.embedding", "b.embedding"))
             / (F.col("a._nrm") * F.col("b._nrm"))
             >= 0.3,
             1,

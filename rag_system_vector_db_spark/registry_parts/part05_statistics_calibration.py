@@ -363,15 +363,15 @@ def dedup_threshold_sweep_q(spark, sf_dir):
     v = emb.select(
         "vec_id",
         "embedding",
-        ann.lsh_bucket(F.col("embedding"), planes).alias("_b"),
-        V.l2_norm(F.col("embedding")).alias("_nrm"),
+        ann.lsh_bucket("embedding", planes).alias("_b"),
+        F.expr(V.l2_norm("embedding")).alias("_nrm"),
     )
     a, b = v.alias("a"), v.alias("b")
     scored = a.join(
         b, (F.col("a._b") == F.col("b._b")) & (F.col("a.vec_id") < F.col("b.vec_id"))
     ).select(
         (
-            V.dot(F.col("a.embedding"), F.col("b.embedding"))
+            F.expr(V.dot("a.embedding", "b.embedding"))
             / (F.col("a._nrm") * F.col("b._nrm"))
         ).alias("score")
     )
@@ -442,7 +442,7 @@ def embedding_dim_profile_q(spark, sf_dir):
     long at corpus scale), variance/min/max/near-zero flags derive
     from identical arithmetic."""
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    d = emb.select(F.posexplode(V._as_double(F.col("embedding")))).select(
+    d = emb.select(F.posexplode(F.col("embedding").cast("array<double>"))).select(
         F.col("pos").cast("long").alias("pos"),
         F.expr("cast(round(col * 1000000) as bigint)").alias("v_u"),
     )
@@ -2866,7 +2866,7 @@ def embedding_isotropy_q(spark, sf_dir):
     sums keep both means order-free."""
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     cd = (
-        emb.select(F.posexplode(V._as_double(F.col("embedding"))))
+        emb.select(F.posexplode(F.col("embedding").cast("array<double>")))
         .groupBy("pos")
         .agg(F.round(F.avg("col"), 6).alias("mv"))
     )
@@ -2882,10 +2882,8 @@ def embedding_isotropy_q(spark, sf_dir):
     )
     c = sub.crossJoin(F.broadcast(mu)).select(
         "vec_id",
-        V._as_double(F.col("embedding")).alias("ev"),
-        F.zip_with(
-            V._as_double(F.col("embedding")), F.col("mvec"), lambda x, m: x - m
-        ).alias("cv"),
+        F.col("embedding").cast("array<double>").alias("ev"),
+        F.expr("zip_with(CAST(embedding AS ARRAY<DOUBLE>), mvec, (x, m) -> x - m)").alias("cv"),
     )
     a, b = c.alias("a"), c.alias("b")
     gate = (
@@ -2900,8 +2898,8 @@ def embedding_isotropy_q(spark, sf_dir):
         < 0.02
     )
     pairs = a.join(b, (F.col("a.vec_id") < F.col("b.vec_id")) & gate).select(
-        V.cosine(F.col("a.ev"), F.col("b.ev")).alias("raw_cos"),
-        V.cosine(F.col("a.cv"), F.col("b.cv")).alias("cen_cos"),
+        F.expr(V.cosine("a.ev", "b.ev")).alias("raw_cos"),
+        F.expr(V.cosine("a.cv", "b.cv")).alias("cen_cos"),
     )
     return pairs.agg(
         F.count("*").cast("long").alias("n_pairs"),

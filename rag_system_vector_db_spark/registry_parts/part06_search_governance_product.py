@@ -287,16 +287,16 @@ def knn_range_search_q(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
-        V.l2_norm(F.col("embedding")).alias("_qnorm"),
+        F.expr(V.l2_norm("embedding")).alias("_qnorm"),
     )
     c = emb.select(
-        "vec_id", "embedding", V.l2_norm(F.col("embedding")).alias("_cnorm")
+        "vec_id", "embedding", F.expr(V.l2_norm("embedding")).alias("_cnorm")
     )
     scored = c.crossJoin(F.broadcast(queries)).select(
         "query_id",
         "vec_id",
         (
-            V.dot(F.col("embedding"), F.col("query_vec"))
+            F.expr(V.dot("embedding", "query_vec"))
             / (F.col("_cnorm") * F.col("_qnorm"))
         ).alias("score"),
     )
@@ -358,17 +358,17 @@ def post_filter_recall_q(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
-        V.l2_norm(F.col("embedding")).alias("_qnorm"),
+        F.expr(V.l2_norm("embedding")).alias("_qnorm"),
     )
     c = emb.select(
-        "vec_id", "label", "embedding", V.l2_norm(F.col("embedding")).alias("_cnorm")
+        "vec_id", "label", "embedding", F.expr(V.l2_norm("embedding")).alias("_cnorm")
     )
     scored = c.crossJoin(F.broadcast(queries)).select(
         "query_id",
         "vec_id",
         "label",
         (
-            V.dot(F.col("embedding"), F.col("query_vec"))
+            F.expr(V.dot("embedding", "query_vec"))
             / (F.col("_cnorm") * F.col("_qnorm"))
         ).alias("score"),
     )
@@ -677,7 +677,7 @@ def filter_bias_audit_q(spark, sf_dir):
     toks = X.tokens(t)
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
-    swf = X.stopword_count(t) / n
+    swf = X.stopword_count("text") / n
     ttr = F.size(F.array_distinct(toks)) / n
     keep = (
         (n >= 20)
@@ -1162,7 +1162,7 @@ def rag_groundedness_q(spark, sf_dir):
     ctx_bi = (
         ctx.join(dt, ctx.vec_id == dt.doc_id)
         .select(
-            "query_id", F.explode(X.word_shingles(F.col("text"), 2)).alias("bg")
+            "query_id", F.explode(X.word_shingles("text", 2)).alias("bg")
         )
         .distinct()
     )
@@ -1178,7 +1178,7 @@ def rag_groundedness_q(spark, sf_dir):
     ans_bi = ans.select(
         "query_id",
         "expected_id",
-        F.explode(F.array_distinct(X.word_shingles(F.col("head"), 2))).alias("bg"),
+        F.explode(F.array_distinct(X.word_shingles("head", 2))).alias("bg"),
     )
     j = ans_bi.join(
         ctx_bi.withColumn("_hit", F.lit(1)),

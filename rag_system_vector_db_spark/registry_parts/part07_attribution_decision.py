@@ -387,14 +387,14 @@ def cascade_retrieval_sim_q(spark, sf_dir):
     )
     s3 = (
         s2.crossJoin(F.broadcast(q.select("_qv")))
-        .select("vec_id", V.euclidean(F.col("embedding"), F.col("_qv")).alias("l2"))
+        .select("vec_id", F.expr(V.euclidean("embedding", "_qv")).alias("l2"))
         .orderBy("l2", "vec_id")
         .limit(10)
     )
     truth = (
         words.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q.select("_qv")))
-        .select("vec_id", V.euclidean(F.col("embedding"), F.col("_qv")).alias("tl2"))
+        .select("vec_id", F.expr(V.euclidean("embedding", "_qv")).alias("tl2"))
         .orderBy("tl2", "vec_id")
         .limit(10)
         .select(F.col("vec_id").alias("tid"))
@@ -577,26 +577,14 @@ def seeding_quality_eval_q(spark, sf_dir):
     firstk, far = _seeding_sets(sf_dir)
 
     def min_d2(vec, cents):
-        exprs = []
-        for c in cents:
-            lit = V.lit_array(c)
-            exprs.append(
-                F.aggregate(
-                    F.zip_with(
-                        vec.cast("array<double>"), lit, lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-        return F.least(*exprs)
+        return F.expr(f"least({', '.join(V.sq_euclidean(vec, V.sql_literal(c)) for c in cents)})")
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     costs = emb.select(
-        F.round(1_000_000 * min_d2(F.col("embedding"), firstk))
+        F.round(1_000_000 * min_d2("embedding", firstk))
         .cast("long")
         .alias("c_first"),
-        F.round(1_000_000 * min_d2(F.col("embedding"), far))
+        F.round(1_000_000 * min_d2("embedding", far))
         .cast("long")
         .alias("c_far"),
     )
@@ -2027,7 +2015,7 @@ def rank_biased_overlap_q(spark, sf_dir):
     )
     vec_sc = emb.crossJoin(F.broadcast(q)).select(
         F.col("vec_id").alias("_id"),
-        V.cosine(F.col("embedding"), F.col("qv")).alias("score"),
+        F.expr(V.cosine("embedding", "qv")).alias("score"),
     )
     vec = topk_per_key_agg(vec_sc.withColumn("_q", F.lit(0)), "_q", "_id", 20).select(
         F.col("_id").alias("doc_id"), F.col("rank").alias("rb")

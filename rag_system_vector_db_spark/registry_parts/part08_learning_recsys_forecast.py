@@ -444,8 +444,8 @@ def jl_projection_audit_q(spark, sf_dir):
     )
     pairs = a.join(b, F.col("ida") < F.col("idb")).select(
         (
-            V.euclidean(F.col("pa"), F.col("pb"))
-            / V.euclidean(F.col("ea"), F.col("eb"))
+            F.expr(V.euclidean("pa", "pb"))
+            / F.expr(V.euclidean("ea", "eb"))
         ).alias("ratio")
     )
     return pairs.agg(

@@ -113,6 +113,8 @@ def test_lit_array_call_count_is_constant(spark):
 
 
 def test_search_build_calls_do_not_grow_with_dim(spark, tmp_path):
+    """Also caps the count: the vector math is one SQL string per use,
+    not a tree of Python-lambda Column nodes (~420 calls)."""
     calls = {}
     for dim in (8, 384):
         col = VectorCollection.create(spark, str(tmp_path / f"d{dim}"), dimension=dim)
@@ -121,7 +123,7 @@ def test_search_build_calls_do_not_grow_with_dim(spark, tmp_path):
         with py4j_calls() as n:
             col.search([0.25] * dim, limit=1)
         calls[dim] = n[0]
-    assert calls[8] == calls[384], calls
+    assert calls[8] == calls[384] <= 40, calls
 
 
 def _is_lit(node) -> bool:

@@ -42,7 +42,7 @@ def _np_codes(mat, books):
 def test_pq_codes_match_numpy(emb, books):
     df, mat, ids = emb
     got = (
-        df.select("vec_id", ann.pq_code_expr(F.col("embedding"), books).alias("codes"))
+        df.select("vec_id", ann.pq_code_expr("embedding", books).alias("codes"))
         .orderBy("vec_id")
         .collect()
     )
@@ -167,24 +167,24 @@ def test_ivfpq_indexed_prunes_and_matches_inline(spark, sf_dir, tmp_path, books)
 
 def test_adc_lut_bit_identical_to_direct(spark, sf_dir, books):
     """The LUT-served ADC must be BIT-identical to the direct
-    definition (same _euclid2 operands, same left-assoc sum order) —
+    definition (same V.sq_euclidean operands, same left-assoc sum order) —
     the invariant that lets the serving paths swap formulations
     without touching the oracles."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     coded = emb.select(
-        F.col("vec_id"), ann.pq_code_expr(F.col("embedding"), books).alias("codes")
+        F.col("vec_id"), ann.pq_code_expr("embedding", books).alias("codes")
     )
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     both = coded.join(
         F.broadcast(
-            q.select("qid", "qv", ann.pq_adc_luts(F.col("qv"), books).alias("lut"))
+            q.select("qid", "qv", ann.pq_adc_luts("qv", books).alias("lut"))
         )
     ).select(
         "qid",
         "vec_id",
-        ann.pq_adc_dist(F.col("qv"), F.col("codes"), books).alias("direct"),
+        ann.pq_adc_dist("qv", "codes", books).alias("direct"),
         ann.pq_adc_dist_lut(F.col("lut"), F.col("codes"), len(books)).alias("lut_d"),
     )
     assert both.filter(F.col("direct") != F.col("lut_d")).count() == 0
