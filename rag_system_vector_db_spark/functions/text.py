@@ -2,8 +2,9 @@
 
 Single-space tokenization is used (the synthetic corpus joins words
 with single spaces) so the DuckDB oracle's ``string_split(text, ' ')``
-produces byte-identical token arrays. All JVM-side; the helpers with
-higher-order functions take SQL text, as functions.vector does.
+produces byte-identical token arrays; ``_split`` is that rule, once.
+All JVM-side; every helper takes a SQL string expression (a column
+name, say) and returns one ``F.expr``, as functions.vector does.
 """
 
 from __future__ import annotations
@@ -21,13 +22,18 @@ EN_STOPWORDS = (
 )
 
 
-def tokens(col: Column) -> Column:
-    """Split on single spaces (portable with DuckDB string_split)."""
-    return F.split(col, " ")
+def _split(text: str) -> str:
+    """SQL text of the token array: split on single spaces, as DuckDB's
+    string_split does."""
+    return f"split({text}, ' ')"
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
+def tokens(text: str) -> Column:
+    return F.expr(_split(text))
+
+
+def token_count(text: str) -> Column:
+    return F.expr(f"size({_split(text)})")
 
 
 def word_shingles(text: str, n: int = 3) -> Column:
@@ -43,7 +49,7 @@ def word_shingles(text: str, n: int = 3) -> Column:
     The HOFs are SQL text, as in functions.vector: a Python lambda
     costs a py4j round trip per node.
     """
-    toks = f"split({text}, ' ')"
+    toks = _split(text)
     k = f"size({toks}) - {n - 1}"
     out = f"slice({toks}, 1, {k})"
     for i in range(1, n):
@@ -64,7 +70,7 @@ def char_shingles(text: str, n: int = 8) -> Column:
 def stopword_count(text: str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     """Stopword tokens in a SQL string expression."""
     sw = sql_literal(stopwords)
-    return F.expr(f"size(filter(split({text}, ' '), t -> array_contains({sw}, t)))")
+    return F.expr(f"size(filter({_split(text)}, t -> array_contains({sw}, t)))")
 
 
 # --- DuckDB oracle snippets (same semantics) ---

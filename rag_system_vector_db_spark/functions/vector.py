@@ -88,10 +88,14 @@ def l2_norm(a: str) -> str:
 
 
 def cosine(a: str, b: str) -> str:
-    """Cosine similarity; full formula (no unit-norm assumption). A
-    zero-norm side scores NULL, as in the DuckDB oracle, rather than
-    raising ANSI DIVIDE_BY_ZERO."""
-    return f"try_divide({dot(a, b)}, {l2_norm(a)} * {l2_norm(b)})"
+    """Cosine similarity; full formula (no unit-norm assumption).
+
+    A zero-norm side raises ANSI DIVIDE_BY_ZERO, where DuckDB scores
+    NULL. That is deliberate: many callers rank with sort_array on
+    (-score, id) structs (knn.topk_per_key_agg), which would put a
+    NULL score first, not last as DuckDB does. knn.topk, whose
+    ``score DESC`` sort puts NULLs last, divides with try_divide."""
+    return f"({dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
 
 
 def euclidean(a: str, b: str) -> str:

@@ -39,7 +39,7 @@ def repetition_stats(
     top_token_frac, top_2gram_frac, dup_2gram_frac).
     """
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(F.col(text_col))).alias("g")
+        F.col(id_col), F.explode(X.tokens(text_col)).alias("g")
     ).filter(F.col("g") != "")
     t1 = (
         toks.groupBy(id_col, "g")
@@ -106,7 +106,7 @@ def quality_filters(
     keep).
     """
     t = F.col(text_col)
-    toks = X.tokens(t)
+    toks = X.tokens(text_col)
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
     sw_frac = X.stopword_count(text_col) / n
@@ -194,7 +194,7 @@ def corpus_mix(
     """
     agg = docs.groupBy("source", "lang").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(X.token_count(F.col(text_col))).cast("long").alias("total_tokens"),
+        F.sum(X.token_count(text_col)).cast("long").alias("total_tokens"),
         F.sum(F.length(F.col(text_col))).cast("long").alias("total_chars"),
     )
     w = Window.partitionBy()
@@ -224,7 +224,7 @@ def length_histogram(
     map-side-combinable groupBy. Returns (lang, bin_lo, n_docs,
     total_tokens, min_tokens, max_tokens).
     """
-    n = X.token_count(F.col(text_col)).cast("long")
+    n = X.token_count(text_col).cast("long")
     # integer modulo, not float-divide-then-cast: DuckDB casts DOUBLE ->
     # BIGINT by rounding-to-nearest while Spark truncates, so the float
     # route would disagree on odd half-bins.
@@ -287,7 +287,7 @@ def quality_classifier(
     w_micro = [int(round(x * 1_000_000)) for x in w]
     warr = lit_array(w_micro).cast("array<long>")
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(F.col(text_col))).alias("tok")
+        F.col(id_col), F.explode(X.tokens(text_col)).alias("tok")
     ).filter(F.col("tok") != "")
     feat = toks.select(
         F.col(id_col),
@@ -350,8 +350,7 @@ def dsir_selection(
     lams = lambdas if lambdas is not None else dsir_lambdas(n_features)
     lam_micro = [int(round(x * 1_000_000)) for x in lams]
     larr = lit_array(lam_micro).cast("array<long>")
-    t = F.col(text_col)
-    uni = docs.select(F.col(id_col), F.explode(X.tokens(t)).alias("f"))
+    uni = docs.select(F.col(id_col), F.explode(X.tokens(text_col)).alias("f"))
     bi = docs.select(F.col(id_col), F.explode(X.word_shingles(text_col, 2)).alias("f"))
     feats = uni.unionAll(bi).filter(F.col("f") != "")
     per = (

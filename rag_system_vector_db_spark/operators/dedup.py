@@ -321,7 +321,7 @@ def simhash(
     """
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(X.tokens(F.col(text_col)))).alias("tok"),
+        F.explode(F.array_distinct(X.tokens(text_col))).alias("tok"),
     ).select(F.col(id_col), H.md5_int32(F.col("tok")).alias("hv"))
     bits = " + ".join(
         f"CASE WHEN sum((shiftright(hv, {b}) & 1) * 2 - 1) > 0 THEN {1 << b} ELSE 0 END"

@@ -55,8 +55,10 @@ def topk(
     taken on the driver with the same sequential double sum and
     correctly rounded sqrt Spark's fold evaluates, so the score
     dot(vec, q) / (l2_norm(vec) * qnorm) is the V.cosine arithmetic
-    tree, bit for bit. A zero-norm row or query scores NULL, which
-    sorts last. Returns (id_col, score) — score full-precision double.
+    tree, bit for bit. Unlike V.cosine it divides with try_divide: a
+    zero-norm row or query scores NULL, as in DuckDB, and ``score
+    DESC`` sorts it last, so one empty document cannot fail every
+    search. Returns (id_col, score) — score full-precision double.
     """
     q = [float(x) for x in query_vec]
     q_sql = V.sql_literal(q)
@@ -97,8 +99,8 @@ def topk_batch(
         # dot(a,b) / (norm_a * norm_b) is the SAME arithmetic tree
         # V.cosine evaluates, so results are bit-identical — this cuts
         # 3 array folds per pair to 1 (measured 7.5 s -> 2.8 s on the
-        # 500-query classifier eval at sf0.1). Plain `/`, not V.cosine's
-        # try_divide: the sort_array prune below would rank a NULL first.
+        # 500-query classifier eval at sf0.1). Plain `/`, as in V.cosine:
+        # the sort_array prune below would rank a NULL score first.
         c2 = corpus.selectExpr(id_col, vec_col, f"{V.l2_norm(vec_col)} AS _cnorm")
         q2 = queries.selectExpr(
             query_id_col, query_vec_col, f"{V.l2_norm(query_vec_col)} AS _qnorm"

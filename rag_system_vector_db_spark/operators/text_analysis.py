@@ -24,7 +24,7 @@ STOPWORDS = {
 
 
 def _ratio(text_col: str, words: tuple[str, ...]):
-    return X.stopword_count(text_col, words) / X.token_count(F.col(text_col))
+    return X.stopword_count(text_col, words) / X.token_count(text_col)
 
 
 def lang_id(
@@ -51,7 +51,7 @@ def text_quality(
     """Quality metrics: token count, type-token ratio, mean word
     length, composite score in [0,1]."""
     t = F.col(text_col)
-    toks = X.tokens(t)
+    toks = X.tokens(text_col)
     n = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     ttr = n_uniq / n
@@ -73,7 +73,7 @@ def token_counts(
     """Whitespace token counting + distinct counts (BPE-ish proxy:
     distinct lowercase alphanumeric tokens)."""
     t = F.col(text_col)
-    toks = X.tokens(t)
+    toks = X.tokens(text_col)
     return docs.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
@@ -154,7 +154,7 @@ def tfidf_top_terms(
     window on the scored rows.
     Returns (doc_id, term, tf, df, tfidf, rank)."""
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(F.col(text_col))).alias("term")
+        F.col(id_col), F.explode(X.tokens(text_col)).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy(id_col, "term").agg(F.count("*").cast("long").alias("tf"))
     # df as an unordered count window OVER tf — the scan+explode+tf
@@ -333,7 +333,7 @@ def lm_perplexity(
     n_docs rows can't sort at your scale.
     Returns (doc_id, n_tokens, avg_logp, perplexity, ppl_bucket)."""
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(F.col(text_col))).alias("term")
+        F.col(id_col), F.explode(X.tokens(text_col)).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy(id_col, "term").agg(F.count("*").cast("long").alias("tf"))
     w_term = Window.partitionBy("term")
@@ -382,7 +382,7 @@ def tokenizer_fertility(
     per = docs.select(
         F.col(lang_col),
         F.size(toks).cast("long").alias("_bpe"),
-        F.size(X.tokens(t)).cast("long").alias("_words"),
+        F.size(X.tokens(text_col)).cast("long").alias("_words"),
         F.length(t).cast("long").alias("_chars"),
     )
     return per.groupBy(lang_col).agg(
@@ -455,14 +455,13 @@ def pmi_collocations(
     fixed-order sum of ln's over exact integer counts (no big
     products, no overflow), ordered at full precision and rounded to 6
     decimals after ranking."""
-    t = F.col(text_col)
     # The unigram frame feeds three consumers (x-join, y-join, totals)
     # and the bigram frame two (candidates, totals); a lazy
     # localCheckpoint materializes each VOCAB-SIZED count frame once so
     # the corpus is tokenized exactly twice — without it every consumer
     # re-runs its own corpus explode (observed: 5 parquet scans).
     uni = (
-        docs.select(F.explode(X.tokens(t)).alias("term"))
+        docs.select(F.explode(X.tokens(text_col)).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("c"))
@@ -523,8 +522,7 @@ def token_entropy(
     cross-term sum quantizes each term's contribution to micro-unit
     longs BEFORE the fold, so summation order can't move the result —
     the fold itself is exact integer addition."""
-    t = F.col(text_col)
-    toks = F.filter(X.tokens(t), lambda x: x != "")
+    toks = F.filter(X.tokens(text_col), lambda x: x != "")
     n = F.size(toks)
     uniq = F.array_distinct(toks)
     e_sum = F.aggregate(
@@ -570,7 +568,6 @@ def lm_perplexity_bigram(
     the per-doc sum is exact longs — order-free. V and the tercile
     bucketing mirror lm_perplexity's conventions.
     Returns (doc_id, n_bigrams, avg_logp, perplexity)."""
-    t = F.col(text_col)
     bi_occ = docs.select(
         F.col(id_col), F.explode(X.word_shingles(text_col, 2)).alias("bigram")
     )
@@ -586,7 +583,7 @@ def lm_perplexity_bigram(
         .agg(F.sum("c_xy").cast("long").alias("c_x"))
     )
     vocab = (
-        docs.select(F.explode(X.tokens(t)).alias("term"))
+        docs.select(F.explode(X.tokens(text_col)).alias("term"))
         .filter(F.col("term") != "")
         .agg(F.count_distinct("term").cast("long").alias("_v"))
     )

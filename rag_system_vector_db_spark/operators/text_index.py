@@ -55,8 +55,8 @@ def keyword_index_build(
     on the partition column so each bucket directory gets locality."""
     toks = docs.select(
         F.col(id_col),
-        F.size(X.tokens(F.col(text_col))).alias("_dl"),
-        F.explode(X.tokens(F.col(text_col))).alias("term"),
+        F.size(X.tokens(text_col)).alias("_dl"),
+        F.explode(X.tokens(text_col)).alias("term"),
     )
     postings = (
         toks.groupBy("term", id_col)
@@ -310,7 +310,7 @@ def positional_index_build(
     term's per-doc tf."""
     toks = docs.select(
         F.col(id_col),
-        F.posexplode(X.tokens(F.col(text_col))).alias("pos", "term"),
+        F.posexplode(X.tokens(text_col)).alias("pos", "term"),
     ).filter(F.col("term") != "")
     postings = (
         toks.groupBy("term", id_col)
@@ -395,8 +395,8 @@ def _batch_postings(docs: DataFrame, batch_id: int, n_buckets: int,
     plus the batch stamp that makes replays overwrite themselves."""
     toks = docs.select(
         F.col(id_col),
-        F.size(X.tokens(F.col(text_col))).alias("_dl"),
-        F.explode(X.tokens(F.col(text_col))).alias("term"),
+        F.size(X.tokens(text_col)).alias("_dl"),
+        F.explode(X.tokens(text_col)).alias("term"),
     )
     return (
         toks.groupBy("term", id_col)
@@ -547,8 +547,8 @@ def query_expansion_prf(
     ft = docs.join(F.broadcast(fb), "doc_id").select(
         "doc_id",
         "_bm25",
-        F.size(X.tokens(F.col("text"))).alias("_dl"),
-        F.explode(X.tokens(F.col("text"))).alias("term"),
+        F.size(X.tokens("text")).alias("_dl"),
+        F.explode(X.tokens("text")).alias("term"),
     )
     tf = (
         ft.filter((F.col("term") != "") & ~F.col("term").isin(query_terms))
@@ -604,7 +604,7 @@ def rerank_two_stage(
         .select("doc_id", F.round("_bm25", 6).alias("bm25"))
     )
     qset = sorted(set(query_terms))
-    toks = F.array_distinct(X.tokens(F.col("text")))
+    toks = F.array_distinct(X.tokens("text"))
     inter = F.size(F.array_intersect(toks, lit_array(qset)))
     jac = F.round(inter / (F.size(toks) + F.lit(len(qset)) - inter), 6)
     cand = docs.join(F.broadcast(first), "doc_id").select(

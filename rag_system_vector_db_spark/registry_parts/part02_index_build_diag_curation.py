@@ -3770,7 +3770,7 @@ def curation_pipeline_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", split=True)
     t = F.col("text")
-    toks = X.tokens(t)
+    toks = X.tokens("text")
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
     swf = X.stopword_count("text") / n

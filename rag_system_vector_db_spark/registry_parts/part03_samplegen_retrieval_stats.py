@@ -1101,7 +1101,7 @@ def faceted_search_counts_q(spark, sf_dir):
     terms = V.lit_array(["fast", "join", "spark"])
     from ..functions import text as X
 
-    m = docs.filter(F.size(F.array_intersect(X.tokens(F.col("text")), terms)) > 0)
+    m = docs.filter(F.size(F.array_intersect(X.tokens("text"), terms)) > 0)
     cells = m.groupBy("lang", "source").agg(F.count("*").cast("long").alias("n_hits"))
     w = Window.partitionBy()
     return cells.select(

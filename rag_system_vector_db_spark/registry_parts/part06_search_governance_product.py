@@ -674,7 +674,7 @@ def filter_bias_audit_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", split=True)
     t = F.col("text")
-    toks = X.tokens(t)
+    toks = X.tokens("text")
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
     swf = X.stopword_count("text") / n
@@ -1172,7 +1172,7 @@ def rag_groundedness_q(spark, sf_dir):
         .select(
             "query_id",
             "expected_id",
-            F.array_join(F.slice(X.tokens(F.col("text")), 1, 20), " ").alias("head"),
+            F.array_join(F.slice(X.tokens("text"), 1, 20), " ").alias("head"),
         )
     )
     ans_bi = ans.select(

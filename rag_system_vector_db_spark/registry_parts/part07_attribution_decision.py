@@ -108,8 +108,8 @@ def wand_pruning_sim_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     toks = docs.select(
         "doc_id",
-        F.size(X.tokens(F.col("text"))).alias("dl"),
-        F.explode(X.tokens(F.col("text"))).alias("term"),
+        F.size(X.tokens("text")).alias("dl"),
+        F.explode(X.tokens("text")).alias("term"),
     )
     qtoks = toks.filter(F.col("term").isin(*_WAND_TERMS))
     tf = qtoks.groupBy("doc_id", "term").agg(
@@ -117,7 +117,7 @@ def wand_pruning_sim_q(spark, sf_dir):
     )
     stats = docs.agg(
         F.count("*").alias("n"),
-        F.avg(F.size(X.tokens(F.col("text")))).alias("avgdl"),
+        F.avg(F.size(X.tokens("text"))).alias("avgdl"),
     )
     dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
     contrib = (
@@ -219,7 +219,7 @@ def padding_waste_audit_q(spark, sf_dir):
     from ..functions import text as X
 
     docs = load_table(spark, sf_dir, "documents", split=True)
-    d = docs.select(F.size(X.tokens(F.col("text"))).cast("long").alias("n"))
+    d = docs.select(F.size(X.tokens("text")).cast("long").alias("n"))
     grid = spark.createDataFrame([(32,), (64,), (128,)], "L int")
     per = (
         d.crossJoin(F.broadcast(grid))
@@ -1263,7 +1263,7 @@ def prefix_autocomplete_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", split=True)
     freq = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("term"))
+        docs.select(F.explode(X.tokens("text")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("freq"))

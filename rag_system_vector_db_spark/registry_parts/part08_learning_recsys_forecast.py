@@ -344,7 +344,7 @@ def weighted_jaccard_pairs_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     cand = dedup.dedup_minhash_lsh(docs).select("doc_a", "doc_b")
     tf = (
-        docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(X.tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("long").alias("tf"))
         .localCheckpoint(eager=False)
@@ -1103,7 +1103,7 @@ def moe_router_balance_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     toks = docs.select(
         "doc_id",
-        F.explode(F.sequence(F.lit(1), F.size(X.tokens(F.col("text"))))).alias("pos"),
+        F.explode(F.sequence(F.lit(1), F.size(X.tokens("text")))).alias("pos"),
     )
     e8 = spark.range(8).select(F.col("id").cast("int").alias("e"))
     logits = toks.crossJoin(F.broadcast(e8)).select(
@@ -1212,7 +1212,7 @@ def topic_coherence_npmi_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     pres = (
         docs.select(
-            "doc_id", "source", F.explode(X.tokens(F.col("text"))).alias("term")
+            "doc_id", "source", F.explode(X.tokens("text")).alias("term")
         )
         .filter(F.col("term") != "")
         .distinct()

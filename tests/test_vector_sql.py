@@ -4,8 +4,10 @@
 folds with the same sequential double sum the oracle's `_dd_*`
 snippets use, so the two engines must agree with `==`, not within a
 tolerance. `knn.topk` takes the query norm on the driver; its scores
-must still equal the oracle's cosine. A zero vector scores NULL on
-both engines instead of failing the whole search. An AST lint keeps
+must still equal the oracle's cosine. In `knn.topk` a zero vector
+scores NULL and ranks last on both engines instead of failing the
+whole search; rankers built on `V.cosine` fail loudly on it rather
+than rank it first. An AST lint keeps
 Python-lambda higher-order functions, which cost a py4j round trip
 per lambda node, out of the vector math.
 """
@@ -31,9 +33,10 @@ PKG = ROOT / "rag_system_vector_db_spark"
 LINTED = [PKG / "functions", PKG / "operators" / "knn.py"]
 
 
-def _random_parquet(path, n: int, dim: int, seed: int = 0) -> str:
+def _random_parquet(path, n: int, dim: int, seed: int = 0, zero_rows=()) -> str:
     rng = np.random.default_rng(seed)
     mat = rng.standard_normal((n, dim)).astype(np.float32)
+    mat[list(zero_rows)] = 0.0
     table = pa.table(
         {
             "vec_id": pa.array(range(n), pa.int64()),
@@ -123,6 +126,49 @@ def test_zero_query_scores_null_by_id(with_zero_row):
     coll, _ = with_zero_row
     got = [(r.id, r.score) for r in coll.search([0.0] * 8, limit=4).collect()]
     assert got == [(0, None), (1, None), (2, None), (3, None)]
+
+
+@pytest.fixture()
+def zero_parquet(tmp_path):
+    return _random_parquet(tmp_path / "z.parquet", 40, 8, seed=5, zero_rows=[0])
+
+
+def _dd_ranked(path: str, q: list[float]) -> list[tuple]:
+    """The oracle's cosine ranking: score DESC (NULLs last), id asc."""
+    return duckdb.connect().execute(
+        f"SELECT vec_id, {_dd_cosine('embedding', 'q')} AS score"
+        f" FROM read_parquet('{path}'), (SELECT ?::DOUBLE[] AS q)"
+        " ORDER BY score DESC NULLS LAST, vec_id",
+        [q],
+    ).fetchall()
+
+
+def test_topk_ranks_a_zero_row_as_duckdb_does(spark, zero_parquet):
+    df = spark.read.parquet(zero_parquet)
+    q = [float(x) + 0.5 for x in df.filter("vec_id = 7").first().embedding]
+    got = [(r.vec_id, r.score) for r in knn.topk(df, q, k=40).collect()]
+    assert got[-1] == (0, None)
+    assert got == _dd_ranked(zero_parquet, q)
+
+
+def test_ranked_cosine_fails_loudly_on_a_zero_row(spark, zero_parquet):
+    """ann_lsh_topk ranks through knn.topk_per_key_agg, whose sort_array
+    on (-score, id) would put a NULL score first, where DuckDB puts it
+    last. So V.cosine divides with ANSI `/`: a zero row must fail the
+    query, or rank exactly as the oracle ranks it, never silently
+    first. One all-zero plane puts every vector in bucket 0, which
+    makes the LSH search exact."""
+    from rag_system_vector_db_spark.operators.ann import ann_lsh_topk
+
+    df = spark.read.parquet(zero_parquet)
+    q = [float(x) + 0.5 for x in df.filter("vec_id = 7").first().embedding]
+    queries = spark.createDataFrame([(0, q)], "query_id int, query_vec array<double>")
+    try:
+        rows = ann_lsh_topk(df, queries, [[0.0] * 8], k=40).orderBy("rank").collect()
+    except Exception as e:  # noqa: BLE001 - the JVM error class varies by wrapper
+        assert "DIVIDE_BY_ZERO" in str(e)
+        return
+    assert [(r.vec_id, r.score) for r in rows] == _dd_ranked(zero_parquet, q)
 
 
 HOFS = {"aggregate", "zip_with", "transform", "filter"}
