@@ -10,35 +10,41 @@ exact same values:
 variants prepend ``"{seed}:"`` so independent hash families (minhash
 rows, hyperplanes) come from one primitive. md5 is a JVM intrinsic in
 Spark — no Python, codegen-friendly, identical across engines.
+
+Both sides are SQL text, as in functions.vector: each Spark builder
+takes the SQL text of a string expression (a column name, say) and
+returns the SQL text of the hash; callers wrap it in ``F.expr`` or
+``selectExpr``, or nest it in a larger expression. One string costs a
+few py4j calls to build, where the same tree of Column nodes costs
+about five per node.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .vector import sql_literal
 
 HEX_WIDTH = 15  # 60 bits
 
 
-def seeded(col: Column, seed: int | str | None = None) -> Column:
+def seeded(expr: str, seed: int | str | None = None) -> str:
     if seed is None:
-        return col
-    return F.concat(F.lit(f"{seed}:"), col)
+        return expr
+    return f"concat({sql_literal(f'{seed}:')}, {expr})"
 
 
-def md5_hex(col: Column, seed: int | str | None = None) -> Column:
+def md5_hex(expr: str, seed: int | str | None = None) -> str:
     """Full md5 hex digest (strings order identically in both engines)."""
-    return F.md5(seeded(col, seed))
+    return f"md5({seeded(expr, seed)})"
 
 
-def md5_long(col: Column, seed: int | str | None = None, width: int = HEX_WIDTH) -> Column:
+def md5_long(expr: str, seed: int | str | None = None, width: int = HEX_WIDTH) -> str:
     """60-bit (default) non-negative integer hash."""
-    return F.conv(F.substring(F.md5(seeded(col, seed)), 1, width), 16, 10).cast("long")
+    return f"CAST(conv(substring({md5_hex(expr, seed)}, 1, {width}), 16, 10) AS BIGINT)"
 
 
-def md5_int32(col: Column, seed: int | str | None = None) -> Column:
+def md5_int32(expr: str, seed: int | str | None = None) -> str:
     """32-bit hash (8 hex chars) for simhash-style bit tricks."""
-    return md5_long(col, seed, width=8)
+    return md5_long(expr, seed, width=8)
 
 
 # --- DuckDB SQL snippet builders (oracle side of the same primitives) ---

@@ -21,8 +21,29 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import text as X
+from ..functions.vector import sql_literal
+
 DATE_PATTERN = r"^\d{1,2}(st|nd|rd|th)? Day of [A-Za-z]+ 18\d{2} - .+$"
 TITLE_PATTERN = r" - (.+)$"
+WORD_SPLIT = r"\s+"  # Python's str.split(): runs of whitespace
+
+
+def _tokenized(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _t): the token array, split once per doc. Inlined into the
+    window lambda, the split would run again for every window."""
+    return docs.selectExpr(id_col, f"{X.tokens(text_col)} AS _t")
+
+
+def _windows(count: str, step: int, width: int) -> str:
+    """SQL text of ``count`` token windows of the token array ``_t``,
+    each joined by single spaces: window i spans tokens
+    [i·step, i·step + width). One transform(sequence) per row, SQL
+    text so that its lambda costs no py4j round trip to build."""
+    return (
+        f"transform(sequence(0, {count} - 1),"
+        f" i -> concat_ws(' ', slice(_t, i * {step} + 1, {width})))"
+    )
 
 
 def chunk_by_tokens(
@@ -34,24 +55,19 @@ def chunk_by_tokens(
     """Fixed token-window chunking (the generic strategy).
 
     Returns (id, chunk_number, chunk_text, word_count, n_chars).
-    transform(sequence) + posexplode stays inside codegen; one narrow
-    projection per doc, no shuffle.
+    One split, one transform(sequence) and one posexplode per doc,
+    map-side; no shuffle.
     """
-    toks = F.split(F.col(text_col), " ")
-    n_chunks = F.ceil(F.size(toks) / F.lit(window)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * window + 1, window)),
+    chunks = _windows(f"CAST(ceil(size(_t) / {window}) AS INT)", window, window)
+    exploded = _tokenized(docs, id_col, text_col).selectExpr(
+        id_col, f"posexplode({chunks}) AS (chunk_number, chunk_text)"
     )
-    return (
-        docs.select(F.col(id_col), F.posexplode(chunks).alias("chunk_number", "chunk_text"))
-        .select(
-            F.col(id_col),
-            F.col("chunk_number").cast("long"),
-            "chunk_text",
-            F.size(F.split(F.col("chunk_text"), " ")).cast("long").alias("word_count"),
-            F.length("chunk_text").cast("long").alias("n_chars"),
-        )
+    return exploded.selectExpr(
+        id_col,
+        "CAST(chunk_number AS BIGINT) AS chunk_number",
+        "chunk_text",
+        f"CAST({X.token_count('chunk_text')} AS BIGINT) AS word_count",
+        "CAST(length(chunk_text) AS BIGINT) AS n_chars",
     )
 
 
@@ -65,21 +81,15 @@ def diary_lines(
     deterministic date header line + the text re-wrapped N tokens per
     line. Lets the diary chunker run on the synthetic corpus with an
     exactly reproducible oracle."""
-    toks = F.split(F.col(text_col), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(tokens_per_line)).cast("int")
-    body = F.transform(
-        F.sequence(F.lit(0), n_lines - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * tokens_per_line + 1, tokens_per_line)),
+    n_lines = f"CAST(ceil(size(_t) / {tokens_per_line}) AS INT)"
+    body = _windows(n_lines, tokens_per_line, tokens_per_line)
+    header = (
+        f"concat(CAST({id_col} % 28 + 1 AS STRING), ' Day of March 1887 - Entry ',"
+        f" CAST({id_col} AS STRING))"
     )
-    header = F.concat(
-        (F.col(id_col) % 28 + 1).cast("string"),
-        F.lit(" Day of March 1887 - Entry "),
-        F.col(id_col).cast("string"),
-    )
-    lines = F.concat(F.array(header), body)
-    return docs.select(
-        F.col(id_col), F.posexplode(lines).alias("line_no", "line")
-    ).select(F.col(id_col), F.col("line_no").cast("long"), "line")
+    return _tokenized(docs, id_col, text_col).selectExpr(
+        id_col, f"posexplode(concat(array({header}), {body})) AS (line_no, line)"
+    ).selectExpr(id_col, "CAST(line_no AS BIGINT) AS line_no", "line")
 
 
 def chunk_diary(
@@ -104,70 +114,59 @@ def chunk_diary(
     PDF-extracted diary text is full of double spaces and the two
     differ on every such line.
     """
-    lines = lines.select(
-        F.col(id_col), F.col("line_no"), F.trim("line").alias("line")
-    ).filter(F.col("line") != "")
-    is_date = F.col("line").rlike(DATE_PATTERN)
-    w_doc = Window.partitionBy(id_col).orderBy("line_no")
-    lined = lines.withColumn("is_date", is_date).withColumn(
-        "day_id", F.sum(F.col("is_date").cast("int")).over(w_doc)
-    )
-
-    # Day metadata (full_date, title) — one row per day, broadcast-join back.
-    days = (
-        lined.filter("is_date")
-        .select(
-            id_col,
-            "day_id",
-            F.col("line").alias("full_date"),
-            F.regexp_extract("line", TITLE_PATTERN, 1).alias("title"),
+    words = f"size(split(line, {sql_literal(WORD_SPLIT)}))"
+    lined = (
+        lines.selectExpr(id_col, "line_no", "trim(line) AS line")
+        .filter("line != ''")
+        .selectExpr("*", f"line RLIKE {sql_literal(DATE_PATTERN)} AS is_date")
+        .selectExpr(
+            "*",
+            f"sum(CAST(is_date AS INT)) OVER (PARTITION BY {id_col} ORDER BY line_no) AS day_id",
         )
     )
 
-    date_chunks = lined.filter("is_date").select(
-        F.col(id_col),
-        "day_id",
-        F.lit(-1).cast("long").alias("chunk_id"),
-        F.lit(True).alias("is_date_chunk"),
-        F.col("line").alias("chunk_text"),
-        F.lit(1).cast("long").alias("line_count"),
-        F.size(F.split("line", r"\s+")).cast("long").alias("word_count"),
+    # Day metadata (title) — one row per day, joined back.
+    days = lined.filter("is_date").selectExpr(
+        id_col, "day_id", f"regexp_extract(line, {sql_literal(TITLE_PATTERN)}, 1) AS title"
     )
 
-    w_day = Window.partitionBy(id_col, "day_id").orderBy("line_no")
-    content = (
-        lined.filter((~F.col("is_date")) & (F.col("day_id") >= 1))
-        .withColumn("rn", F.row_number().over(w_day))
-        .withColumn("chunk_id", F.floor((F.col("rn") - 1) / lines_per_chunk))
+    date_chunks = lined.filter("is_date").selectExpr(
+        id_col,
+        "day_id",
+        "CAST(-1 AS BIGINT) AS chunk_id",
+        "true AS is_date_chunk",
+        "line AS chunk_text",
+        "CAST(1 AS BIGINT) AS line_count",
+        f"CAST({words} AS BIGINT) AS word_count",
     )
+
     content_chunks = (
-        content.groupBy(id_col, "day_id", "chunk_id")
+        lined.filter("NOT is_date AND day_id >= 1")
+        .selectExpr(
+            "*",
+            f"FLOOR((row_number() OVER (PARTITION BY {id_col}, day_id ORDER BY line_no) - 1)"
+            f" / {lines_per_chunk}) AS chunk_id",
+        )
+        .groupBy(id_col, "day_id", "chunk_id")
         .agg(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("line_no", "line"))),
-                    lambda x: x["line"],
-                ),
-            ).alias("chunk_text"),
-            F.count("*").cast("long").alias("line_count"),
+            F.expr(
+                "concat_ws('\\n', transform(array_sort(collect_list(struct(line_no, line))),"
+                " x -> x.line)) AS chunk_text"
+            ),
+            F.expr("CAST(count(*) AS BIGINT) AS line_count"),
             # per-line whitespace-token sum == tokens of '\n'.join(buffer)
             # because every buffered line is stripped and non-empty
-            F.sum(F.size(F.split("line", r"\s+"))).cast("long").alias("word_count"),
+            F.expr(f"CAST(sum({words}) AS BIGINT) AS word_count"),
         )
-        .withColumn("is_date_chunk", F.lit(False))
-        .select(
-            id_col, "day_id", "chunk_id", "is_date_chunk",
+        .selectExpr(
+            id_col, "day_id", "chunk_id", "false AS is_date_chunk",
             "chunk_text", "line_count", "word_count",
         )
     )
 
     # days is one row per detected day heading — corpus-proportional,
     # so no forced broadcast; AQE promotes the join when it is small.
-    return (
-        date_chunks.unionByName(content_chunks)
-        .join(days.select(id_col, "day_id", "title"), [id_col, "day_id"])
-    )
+    return date_chunks.unionByName(content_chunks).join(days, [id_col, "day_id"])
 
 
 def diary_stats(chunks: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -316,23 +315,15 @@ def chunk_overlapping(
     Same codegen shape as chunk_by_tokens (transform(sequence) +
     posexplode, no shuffle); returns (id, chunk_number, start_token,
     chunk_text, word_count)."""
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
-    n_starts = (
-        F.lit(1)
-        + F.ceil(F.greatest(n - F.lit(window), F.lit(0)) / F.lit(stride))
-    ).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_starts - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * stride + 1, window)),
+    n_starts = f"CAST(1 + ceil(greatest(size(_t) - {window}, 0) / {stride}) AS INT)"
+    chunks = _windows(n_starts, stride, window)
+    exploded = _tokenized(docs, id_col, text_col).selectExpr(
+        id_col, f"posexplode({chunks}) AS (chunk_number, chunk_text)"
     )
-    return (
-        docs.select(F.col(id_col), F.posexplode(chunks).alias("chunk_number", "chunk_text"))
-        .select(
-            F.col(id_col),
-            F.col("chunk_number").cast("long"),
-            (F.col("chunk_number") * stride).cast("long").alias("start_token"),
-            "chunk_text",
-            F.size(F.split(F.col("chunk_text"), " ")).cast("long").alias("word_count"),
-        )
+    return exploded.selectExpr(
+        id_col,
+        "CAST(chunk_number AS BIGINT) AS chunk_number",
+        f"CAST(chunk_number * {stride} AS BIGINT) AS start_token",
+        "chunk_text",
+        f"CAST({X.token_count('chunk_text')} AS BIGINT) AS word_count",
     )

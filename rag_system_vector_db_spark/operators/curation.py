@@ -39,7 +39,7 @@ def repetition_stats(
     top_token_frac, top_2gram_frac, dup_2gram_frac).
     """
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(text_col)).alias("g")
+        F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("g")
     ).filter(F.col("g") != "")
     t1 = (
         toks.groupBy(id_col, "g")
@@ -54,7 +54,7 @@ def repetition_stats(
     )
     grams2 = docs.select(
         F.col(id_col),
-        F.explode(X.word_shingles(text_col, 2)).alias("g"),
+        F.explode(F.expr(X.word_shingles(text_col, 2))).alias("g"),
     )
     t2 = (
         grams2.groupBy(id_col, "g")
@@ -106,10 +106,10 @@ def quality_filters(
     keep).
     """
     t = F.col(text_col)
-    toks = X.tokens(text_col)
+    toks = F.expr(X.tokens(text_col))
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
-    sw_frac = X.stopword_count(text_col) / n
+    sw_frac = F.expr(X.stopword_count(text_col)) / n
     ttr = F.size(F.array_distinct(toks)) / n
     ok_len = (n >= min_tokens) & (n <= max_tokens)
     ok_wl = (mean_wl >= min_word_len) & (mean_wl <= max_word_len)
@@ -153,7 +153,7 @@ def benchmark_contamination(
     """
     grams = docs.select(
         F.col(id_col),
-        F.explode(F.array_distinct(X.word_shingles(text_col, n))).alias("g"),
+        F.explode(F.array_distinct(F.expr(X.word_shingles(text_col, n)))).alias("g"),
     ).filter(F.col("g") != "")
     if bench is None:
         bench_grams = grams.filter(F.col(id_col) % bench_mod == 0).select(
@@ -163,7 +163,7 @@ def benchmark_contamination(
         bench_grams = bench.select(
             F.col(id_col).alias("bench_id"),
             F.explode(
-                F.array_distinct(X.word_shingles(text_col, n))
+                F.array_distinct(F.expr(X.word_shingles(text_col, n)))
             ).alias("g"),
         ).filter(F.col("g") != "")
     return (
@@ -194,7 +194,7 @@ def corpus_mix(
     """
     agg = docs.groupBy("source", "lang").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(X.token_count(text_col)).cast("long").alias("total_tokens"),
+        F.sum(F.expr(X.token_count(text_col))).cast("long").alias("total_tokens"),
         F.sum(F.length(F.col(text_col))).cast("long").alias("total_chars"),
     )
     w = Window.partitionBy()
@@ -224,7 +224,7 @@ def length_histogram(
     map-side-combinable groupBy. Returns (lang, bin_lo, n_docs,
     total_tokens, min_tokens, max_tokens).
     """
-    n = X.token_count(text_col).cast("long")
+    n = F.expr(X.token_count(text_col)).cast("long")
     # integer modulo, not float-divide-then-cast: DuckDB casts DOUBLE ->
     # BIGINT by rounding-to-nearest while Spark truncates, so the float
     # route would disagree on odd half-bins.
@@ -287,11 +287,11 @@ def quality_classifier(
     w_micro = [int(round(x * 1_000_000)) for x in w]
     warr = lit_array(w_micro).cast("array<long>")
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(text_col)).alias("tok")
+        F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("tok")
     ).filter(F.col("tok") != "")
     feat = toks.select(
         F.col(id_col),
-        F.element_at(warr, (H.md5_long(F.col("tok")) % n_features + 1).cast("int")).alias("wt"),
+        F.element_at(warr, (F.expr(H.md5_long("tok")) % n_features + 1).cast("int")).alias("wt"),
     )
     per = feat.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_tokens"),
@@ -350,14 +350,14 @@ def dsir_selection(
     lams = lambdas if lambdas is not None else dsir_lambdas(n_features)
     lam_micro = [int(round(x * 1_000_000)) for x in lams]
     larr = lit_array(lam_micro).cast("array<long>")
-    uni = docs.select(F.col(id_col), F.explode(X.tokens(text_col)).alias("f"))
-    bi = docs.select(F.col(id_col), F.explode(X.word_shingles(text_col, 2)).alias("f"))
+    uni = docs.select(F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("f"))
+    bi = docs.select(F.col(id_col), F.explode(F.expr(X.word_shingles(text_col, 2))).alias("f"))
     feats = uni.unionAll(bi).filter(F.col("f") != "")
     per = (
         feats.select(
             F.col(id_col),
             F.element_at(
-                larr, (H.md5_long(F.col("f")) % n_features + 1).cast("int")
+                larr, (F.expr(H.md5_long("f")) % n_features + 1).cast("int")
             ).alias("_lam"),
         )
         .groupBy(id_col)
@@ -406,7 +406,7 @@ def train_test_split(
     """
     from ..functions import hashing as H
 
-    bucket = H.md5_long(F.col(id_col).cast("string"), seed=seed) % 100
+    bucket = F.expr(H.md5_long(f"CAST({id_col} AS STRING)", seed=seed)) % 100
     split = (
         F.when(bucket < train_pct, F.lit("train"))
         .when(bucket < train_pct + valid_pct, F.lit("valid"))

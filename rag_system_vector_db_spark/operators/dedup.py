@@ -17,7 +17,7 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
@@ -32,9 +32,7 @@ def dedup_exact(
     Returns (id, text_hash, keeper_id, is_dup). The shuffle key is the
     md5, not the text — 32 bytes/row regardless of document size.
     """
-    hashed = docs.select(
-        F.col(id_col), H.md5_hex(F.col(text_col)).alias("text_hash")
-    )
+    hashed = docs.selectExpr(id_col, f"{H.md5_hex(text_col)} AS text_hash")
     w = Window.partitionBy("text_hash")
     return (
         hashed.withColumn("keeper_id", F.min(id_col).over(w))
@@ -48,10 +46,25 @@ def shingle_set(
     """Distinct (id, shingle) rows — the base relation for minhash and
     Jaccard. Explode happens after array_distinct so duplicate shingles
     within a doc never hit the shuffle."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(X.word_shingles(text_col, n))).alias("shingle"),
-    ).filter(F.col("shingle") != "")
+    return docs.selectExpr(
+        id_col, f"explode(array_distinct({X.word_shingles(text_col, n)})) AS shingle"
+    ).filter("shingle != ''")
+
+
+# The two md5 draws per shingle of the minhash family (a: 60-bit,
+# b: 56-bit), as selectExpr items over a shingle_set frame.
+_SHINGLE_DRAWS = (
+    f"{H.md5_long('shingle', seed=0)} AS _ha",
+    f"{H.md5_long('shingle', seed=1, width=14)} AS _hb",
+)
+
+
+def _minhash_mins(num_hashes: int) -> list[Column]:
+    """The signature aggregates h_r = min(a + r·b) over _SHINGLE_DRAWS
+    rows, one SQL expression each."""
+    if num_hashes > 64:
+        raise ValueError("num_hashes > 64 would overflow the a + r*b family")
+    return [F.expr(f"min(_ha + _hb * {r}) AS h{r}") for r in range(num_hashes)]
 
 
 def minhash_signatures(
@@ -66,15 +79,18 @@ def minhash_signatures(
     (id, num_hashes × 8B). b is 56-bit so r·b never overflows int64
     for num_hashes ≤ 64.
     """
-    if num_hashes > 64:
-        raise ValueError("num_hashes > 64 would overflow the a + r*b family")
-    base = shingles.select(
-        F.col(id_col),
-        H.md5_long(F.col("shingle"), seed=0).alias("_ha"),
-        H.md5_long(F.col("shingle"), seed=1, width=14).alias("_hb"),
-    )
-    return base.groupBy(id_col).agg(
-        *[F.min(F.col("_ha") + r * F.col("_hb")).alias(f"h{r}") for r in range(num_hashes)]
+    mins = _minhash_mins(num_hashes)
+    return shingles.selectExpr(id_col, *_SHINGLE_DRAWS).groupBy(id_col).agg(*mins)
+
+
+def _minhash_features(shingles: DataFrame, num_hashes: int, id_col: str) -> DataFrame:
+    """(id, sset, h0..): the shingle set next to the signature, from one
+    groupBy, for the harnesses that score candidates on exact sets."""
+    mins = _minhash_mins(num_hashes)
+    return (
+        shingles.selectExpr(id_col, "shingle", *_SHINGLE_DRAWS)
+        .groupBy(id_col)
+        .agg(F.expr("collect_set(shingle) AS sset"), *mins)
     )
 
 
@@ -82,19 +98,34 @@ def lsh_band_buckets(
     sigs: DataFrame, bands: int = 4, rows: int = 2, id_col: str = "doc_id"
 ) -> DataFrame:
     """Band the signature: (id, band, band_sig) where band_sig is the
-    md5 of the band's concatenated row-hashes."""
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)])
-            ).alias("band_sig"),
-        )
+    md5 of the band's '|'-joined row-hashes."""
+    entries = ", ".join(
+        f"named_struct('band', {b}, 'band_sig', "
+        + H.md5_hex("concat_ws('|', " + ", ".join(f"h{b * rows + r}" for r in range(rows)) + ")")
+        + ")"
         for b in range(bands)
-    ]
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*entries)).alias("e")
-    ).select(id_col, F.col("e.band").alias("band"), F.col("e.band_sig").alias("band_sig"))
+    )
+    return sigs.selectExpr(id_col, f"explode(array({entries})) AS e").selectExpr(
+        id_col, "e.band AS band", "e.band_sig AS band_sig"
+    )
+
+
+def _bucket_pairs(b: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """(doc_a, doc_b) with doc_a < doc_b, once per bucket the two share.
+
+    Pair generation via bucket-collect instead of a self-join: the
+    signature pipeline upstream runs ONCE, and one groupBy replaces
+    the join's two exchanges. Each bucket's sorted member list pairs
+    every member with the ones after it. Bucket arrays are bounded by
+    dup-cluster size; cap_hot_buckets caps pathological hot buckets
+    before this groupBy ever buffers them."""
+    return (
+        b.groupBy(*keys)
+        .agg(F.expr(f"sort_array(collect_list({id_col})) AS ids"))
+        .filter("size(ids) > 1")
+        .selectExpr("ids", "posexplode(ids) AS (i, doc_a)")
+        .selectExpr("doc_a", "explode(slice(ids, i + 2, size(ids))) AS doc_b")
+    )
 
 
 def cap_hot_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
@@ -112,10 +143,9 @@ def cap_hot_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFram
     window's exchange is REUSED (its output partitioning satisfies the
     aggregate's required distribution) — the cap costs one in-partition
     sort, never a second shuffle of the banded rows."""
-    w = Window.partitionBy(*keys)
     return (
-        df.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bsz") <= max_bucket)
+        df.selectExpr("*", f"count(1) OVER (PARTITION BY {', '.join(keys)}) AS _bsz")
+        .filter(f"_bsz <= {max_bucket}")
         .drop("_bsz")
     )
 
@@ -126,8 +156,8 @@ def hot_bucket_report(df: DataFrame, keys: list[str], max_bucket: int) -> DataFr
     curation run publishes next to its dedup output."""
     return (
         df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).cast("long").alias("n_members"))
-        .filter(F.col("n_members") > max_bucket)
+        .agg(F.expr("CAST(count(1) AS BIGINT) AS n_members"))
+        .filter(f"n_members > {max_bucket}")
     )
 
 
@@ -158,11 +188,6 @@ def dedup_minhash_lsh(
         rows,
         id_col,
     )
-    # Pair generation via bucket-collect instead of a self-join: the
-    # signature pipeline (shingle explode + md5s + mins) runs ONCE, and
-    # one groupBy replaces the join's two exchanges. Bucket arrays are
-    # bounded by dup-cluster size; max_bucket caps pathological hot
-    # buckets before this groupBy ever buffers them.
     if with_report and max_bucket is None:
         # ADVICE r8: an uncapped with_report call used to return
         # (pairs, None) — a silent shape change and a downstream
@@ -174,18 +199,10 @@ def dedup_minhash_lsh(
         if with_report:
             report = hot_bucket_report(b, ["band", "band_sig"], max_bucket)
         b = cap_hot_buckets(b, ["band", "band_sig"], max_bucket)
-    buckets = (
-        b.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    ex = buckets.select(F.col("ids"), F.posexplode("ids").alias("i", "doc_a"))
-    pairs = ex.select(
-        "doc_a",
-        F.explode(F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))).alias("doc_b"),
-    )
-    out = pairs.groupBy("doc_a", "doc_b").agg(
-        F.count("*").cast("long").alias("n_shared_bands")
+    out = (
+        _bucket_pairs(b, ["band", "band_sig"], id_col)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.expr("CAST(count(*) AS BIGINT) AS n_shared_bands"))
     )
     return (out, report) if with_report else out
 
@@ -213,8 +230,8 @@ def dedup_ngram_jaccard(
     (8-byte keys, never raw text); the full posting lists move once
     (groupBy) and are joined back only to the candidate pairs.
     Returns (doc_a, doc_b, inter, jaccard)."""
-    sh = shingle_set(docs, n, id_col, text_col).select(
-        F.col(id_col), H.md5_long(F.col("shingle")).alias("h")
+    sh = shingle_set(docs, n, id_col, text_col).selectExpr(
+        id_col, f"{H.md5_long('shingle')} AS h"
     )
     arrs = sh.groupBy(id_col).agg(F.array_sort(F.collect_set("h")).alias("arr"))
     # Prefix rows are BARE (id, sz, pos, h) — 24 bytes — never the hash
@@ -319,10 +336,9 @@ def simhash(
     assembly over them are one SQL aggregate expression, built with a
     handful of py4j calls rather than thousands of Column nodes.
     """
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(X.tokens(text_col))).alias("tok"),
-    ).select(F.col(id_col), H.md5_int32(F.col("tok")).alias("hv"))
+    toks = docs.selectExpr(
+        id_col, f"explode(array_distinct({X.tokens(text_col)})) AS tok"
+    ).selectExpr(id_col, f"{H.md5_int32('tok')} AS hv")
     bits = " + ".join(
         f"CASE WHEN sum((shiftright(hv, {b}) & 1) * 2 - 1) > 0 THEN {1 << b} ELSE 0 END"
         for b in range(SIMHASH_BITS)
@@ -749,39 +765,10 @@ def minhash_accuracy(
     re-planned the shingle pipeline five times (measured; now three).
     Exact Jaccard is computed ONLY on candidates, never all pairs.
     Returns (doc_a, doc_b, est_jaccard, exact_jaccard, abs_err)."""
-    if num_hashes > 64:
-        raise ValueError("num_hashes > 64 would overflow the a + r*b family")
     sh = shingle_set(docs, n, id_col, text_col)
-    feats = (
-        sh.select(
-            F.col(id_col),
-            F.col("shingle"),
-            H.md5_long(F.col("shingle"), seed=0).alias("_ha"),
-            H.md5_long(F.col("shingle"), seed=1, width=14).alias("_hb"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.collect_set("shingle").alias("sset"),
-            *[
-                F.min(F.col("_ha") + r * F.col("_hb")).alias(f"h{r}")
-                for r in range(num_hashes)
-            ],
-        )
-    )
+    feats = _minhash_features(sh, num_hashes, id_col)
     b = lsh_band_buckets(feats, bands, rows, id_col)
-    buckets = (
-        b.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    ex = buckets.select(F.col("ids"), F.posexplode("ids").alias("i", "doc_a"))
-    pairs = (
-        ex.select(
-            "doc_a",
-            F.explode(F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))).alias("doc_b"),
-        )
-        .distinct()
-    )
+    pairs = _bucket_pairs(b, ["band", "band_sig"], id_col).distinct()
     sa = feats.select(
         F.col(id_col).alias("doc_a"),
         F.col("sset").alias("set_a"),
@@ -906,9 +893,9 @@ def substring_dedup(
     bounded and AQE split-joins the residue. Raw text never crosses a
     shuffle. Returns (doc_id, n_windows, n_dup_windows, dup_fraction).
     """
-    wins = docs.select(
-        F.col(id_col), F.explode(X.word_shingles(text_col, w)).alias("_win")
-    ).select(F.col(id_col), H.md5_long(F.col("_win")).alias("_wh"))
+    wins = docs.selectExpr(
+        id_col, f"explode({X.word_shingles(text_col, w)}) AS _win"
+    ).selectExpr(id_col, f"{H.md5_long('_win')} AS _wh")
     counts = wins.groupBy("_wh").agg(F.count("*").cast("long").alias("_cnt"))
     per_doc = (
         wins.join(counts, "_wh")
@@ -996,22 +983,7 @@ def minhash_band_sweep(
             raise ValueError(f"config {b}x{r} exceeds {num_hashes} hashes")
     sub = docs.filter(F.col(id_col) < max_id)
     sh = shingle_set(sub, n, id_col, text_col)
-    feats = (
-        sh.select(
-            F.col(id_col),
-            F.col("shingle"),
-            H.md5_long(F.col("shingle"), seed=0).alias("_ha"),
-            H.md5_long(F.col("shingle"), seed=1, width=14).alias("_hb"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.collect_set("shingle").alias("sset"),
-            *[
-                F.min(F.col("_ha") + r * F.col("_hb")).alias(f"h{r}")
-                for r in range(num_hashes)
-            ],
-        )
-    )
+    feats = _minhash_features(sh, num_hashes, id_col)
     sa = feats.select(
         F.col(id_col).alias("doc_a"),
         F.col("sset").alias("set_a"),
@@ -1157,36 +1129,9 @@ def dedup_containment(
     Returns (doc_a, doc_b, jaccard, cont_a_in_b, cont_b_in_a,
     is_excerpt)."""
     sh = shingle_set(docs, n, id_col, text_col)
-    feats = (
-        sh.select(
-            F.col(id_col),
-            F.col("shingle"),
-            H.md5_long(F.col("shingle"), seed=0).alias("_ha"),
-            H.md5_long(F.col("shingle"), seed=1, width=14).alias("_hb"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.collect_set("shingle").alias("sset"),
-            *[
-                F.min(F.col("_ha") + r * F.col("_hb")).alias(f"h{r}")
-                for r in range(num_hashes)
-            ],
-        )
-    )
+    feats = _minhash_features(sh, num_hashes, id_col)
     b = lsh_band_buckets(feats, bands, rows, id_col)
-    buckets = (
-        b.groupBy("band", "band_sig")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    ex = buckets.select(F.col("ids"), F.posexplode("ids").alias("i", "doc_a"))
-    pairs = (
-        ex.select(
-            "doc_a",
-            F.explode(F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))).alias("doc_b"),
-        )
-        .distinct()
-    )
+    pairs = _bucket_pairs(b, ["band", "band_sig"], id_col).distinct()
     sa = feats.select(F.col(id_col).alias("doc_a"), F.col("sset").alias("set_a"))
     sb = feats.select(F.col(id_col).alias("doc_b"), F.col("sset").alias("set_b"))
     inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")

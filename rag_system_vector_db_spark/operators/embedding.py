@@ -13,11 +13,21 @@ similarity structure. Swap ``_token_vec`` for a real model's
 Execution: Arrow-batched pandas_udf (vectorized, ~10-100× over
 row-at-a-time UDFs); embarrassingly parallel per input split at
 cluster scale — no shuffle.
+
+Where the node's time goes, in the ingest build (10,000 docs → 18,936
+40-token chunks in 4 partitions, 4 cores, noop sink, median of 8):
+the chunks alone take 0.34 s; a pandas UDF that returns a constant
+vector takes 0.70 s, so the Arrow/Python boundary (rows out, vectors
+back, the worker hand-off) costs ~0.36 s; the encoder UDF takes
+0.82 s. Alone, hashing_encoder takes ~0.06 s per partition (the
+per-token loop it replaced took ~0.19 s). The boundary, not the
+encoder, is the larger share; a faster stand-in cannot remove it.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
 
 import numpy as np
 import pandas as pd
@@ -38,17 +48,30 @@ def _token_vec(token: str, dim: int = DIM) -> np.ndarray:
 def hashing_encoder(texts, dim: int = DIM) -> np.ndarray:
     """The stand-in batch encoder (list[str] -> (n, dim) float32): each
     row is the normalized sum of its tokens' vectors, accumulated in
-    float64 in token order. Token vectors are cached per batch."""
-    cache: dict[str, np.ndarray] = {}
-    out = np.zeros((len(texts), dim))
-    for v, text in zip(out, texts):
-        for tok in text.split(" "):
-            if not tok:
-                continue
-            tv = cache.get(tok)
-            if tv is None:
-                tv = cache[tok] = _token_vec(tok, dim)
-            v += tv
+    float64 in token order.
+
+    Vectorized over the batch. Tokens map to ids into a per-batch table
+    of token vectors. Rows are ordered longest first, so the rows that
+    have a j-th token are a prefix, and one numpy add per token
+    position adds the j-th token of every such row. Each row still
+    receives its token vectors one at a time, in token order, in
+    float64, so the sum is bit-identical to a per-row loop. The norm
+    stays per row: a vectorized norm reduces in another order."""
+    vocab: dict[str, int] = {}
+    ids = [[vocab.setdefault(t, len(vocab)) for t in text.split(" ") if t] for text in texts]
+    table = np.array([_token_vec(t, dim) for t in vocab]).reshape(len(vocab), dim)
+    lens = np.array([len(r) for r in ids], dtype=np.int64)
+    order = np.argsort(-lens, kind="stable")
+    lens = lens[order]
+    flat = np.fromiter(itertools.chain.from_iterable(ids[i] for i in order), np.int64)
+    starts = np.cumsum(lens) - lens
+    acc = np.zeros((len(ids), dim))
+    for j in range(int(lens[0]) if len(lens) else 0):
+        k = int(np.searchsorted(-lens, -j))  # rows with more than j tokens
+        acc[:k] += table[flat[starts[:k] + j]]
+    out = np.empty_like(acc)
+    out[order] = acc
+    for v in out:
         n = float(np.linalg.norm(v))
         if n > 0:
             v /= n

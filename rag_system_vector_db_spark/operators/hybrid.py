@@ -55,8 +55,8 @@ def bm25_scores(
     not per-query work."""
     toks = docs.select(
         F.col(id_col),
-        F.size(X.tokens(text_col)).alias("_dl"),
-        F.explode(X.tokens(text_col)).alias("term"),
+        F.size(F.expr(X.tokens(text_col))).alias("_dl"),
+        F.explode(F.expr(X.tokens(text_col))).alias("term"),
     ).filter(F.col("term").isin(query_terms))
     tf = toks.groupBy(id_col, "term").agg(
         F.count("*").cast("double").alias("tf"), F.first("_dl").alias("dl")

@@ -34,7 +34,7 @@ def kmv_distinct(
     alongside for the harness; a production pipeline drops it — that
     distinct IS what the sketch avoids.
     """
-    hashes = df.select(H.md5_long(F.col(key_col).cast("string")).alias("h"))
+    hashes = df.select(F.expr(H.md5_long(f"CAST({key_col} AS STRING)")).alias("h"))
     partial = (
         hashes.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -71,7 +71,7 @@ def stratified_sample(
     each stratum gets its own keep-rate, rows hash-threshold on the key
     so re-runs and engines agree. Strata absent from ``rates`` are
     dropped (rate 0)."""
-    u = H.md5_long(F.col(key_col).cast("string")) / F.lit(HASH_SPACE)
+    u = F.expr(H.md5_long(f"CAST({key_col} AS STRING)")) / F.lit(HASH_SPACE)
     rate = F.lit(0.0)
     for stratum, r in rates.items():
         rate = F.when(F.col(strata_col) == stratum, F.lit(float(r))).otherwise(rate)
@@ -86,7 +86,7 @@ def hash_sample(
     sizes and consistent per key (the same key always samples the same
     way — joins between same-rate samples of two tables stay aligned).
     """
-    u = H.md5_long(F.col(key_col).cast("string")) / F.lit(HASH_SPACE)
+    u = F.expr(H.md5_long(f"CAST({key_col} AS STRING)")) / F.lit(HASH_SPACE)
     return df.filter(u < rate)
 
 
@@ -115,33 +115,26 @@ def bloom_dedup_probe(
     map-side-combinable groupBy; the exact-dup check is a semi-join on
     16-byte content digests. Returns (doc_id, in_base, bloom_hit,
     exact_dup, false_positive)."""
-    content = H.md5_hex(F.col(text_col))
+    content = H.md5_hex(text_col)
+    positions = [F.expr(H.md5_long(content, seed=s)) % m for s in range(k_hashes)]
     base = docs.filter(F.col(id_col) % 2 == 0)
     bits = (
-        base.select(
-            F.explode(
-                F.array(
-                    *[(H.md5_long(content, seed=s) % m).alias("b") for s in range(k_hashes)]
-                )
-            ).alias("bit")
-        )
+        base.select(F.explode(F.array(*positions)).alias("bit"))
         .distinct()
         .withColumn("_set", F.lit(1))
     )
     probe = docs.select(
         F.col(id_col),
         (F.col(id_col) % 2 == 0).alias("in_base"),
-        content.alias("_c"),
-        F.explode(
-            F.array(*[(H.md5_long(content, seed=s) % m) for s in range(k_hashes)])
-        ).alias("bit"),
+        F.expr(content).alias("_c"),
+        F.explode(F.array(*positions)).alias("bit"),
     )
     hits = (
         probe.join(F.broadcast(bits), "bit", "left")
         .groupBy(id_col, "in_base", "_c")
         .agg((F.sum(F.coalesce(F.col("_set"), F.lit(0))) == k_hashes).alias("bloom_hit"))
     )
-    base_hashes = base.select(content.alias("_c")).distinct()
+    base_hashes = base.select(F.expr(content).alias("_c")).distinct()
     return (
         hits.join(base_hashes.withColumn("_dup", F.lit(1)), "_c", "left")
         .select(

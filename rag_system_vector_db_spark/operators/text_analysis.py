@@ -24,7 +24,7 @@ STOPWORDS = {
 
 
 def _ratio(text_col: str, words: tuple[str, ...]):
-    return X.stopword_count(text_col, words) / X.token_count(text_col)
+    return F.expr(X.stopword_count(text_col, words)) / F.expr(X.token_count(text_col))
 
 
 def lang_id(
@@ -51,7 +51,7 @@ def text_quality(
     """Quality metrics: token count, type-token ratio, mean word
     length, composite score in [0,1]."""
     t = F.col(text_col)
-    toks = X.tokens(text_col)
+    toks = F.expr(X.tokens(text_col))
     n = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     ttr = n_uniq / n
@@ -73,7 +73,7 @@ def token_counts(
     """Whitespace token counting + distinct counts (BPE-ish proxy:
     distinct lowercase alphanumeric tokens)."""
     t = F.col(text_col)
-    toks = X.tokens(text_col)
+    toks = F.expr(X.tokens(text_col))
     return docs.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
@@ -154,7 +154,7 @@ def tfidf_top_terms(
     window on the scored rows.
     Returns (doc_id, term, tf, df, tfidf, rank)."""
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(text_col)).alias("term")
+        F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy(id_col, "term").agg(F.count("*").cast("long").alias("tf"))
     # df as an unordered count window OVER tf — the scan+explode+tf
@@ -260,14 +260,14 @@ def ngram_counts(
     Returns (gram, n_docs, n_occurrences) for the k most frequent."""
     grams = docs.select(
         F.col(text_col),
-        F.explode(X.word_shingles(text_col, n)).alias("gram"),
+        F.explode(F.expr(X.word_shingles(text_col, n))).alias("gram"),
     ).filter(F.col("gram") != "")
     counts = grams.groupBy("gram").agg(
         F.count("*").cast("long").alias("n_occurrences")
     )
     per_doc = (
         docs.select(
-            F.explode(F.array_distinct(X.word_shingles(text_col, n))).alias(
+            F.explode(F.array_distinct(F.expr(X.word_shingles(text_col, n)))).alias(
                 "gram"
             )
         )
@@ -301,7 +301,7 @@ def doc_fingerprint(
     hashes = F.array_sort(
         F.array_distinct(
             F.transform(
-                F.array_distinct(X.char_shingles(text_col, shingle_len)),
+                F.array_distinct(F.expr(X.char_shingles(text_col, shingle_len))),
                 lambda s: F.md5(s),
             )
         )
@@ -333,7 +333,7 @@ def lm_perplexity(
     n_docs rows can't sort at your scale.
     Returns (doc_id, n_tokens, avg_logp, perplexity, ppl_bucket)."""
     toks = docs.select(
-        F.col(id_col), F.explode(X.tokens(text_col)).alias("term")
+        F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy(id_col, "term").agg(F.count("*").cast("long").alias("tf"))
     w_term = Window.partitionBy("term")
@@ -382,7 +382,7 @@ def tokenizer_fertility(
     per = docs.select(
         F.col(lang_col),
         F.size(toks).cast("long").alias("_bpe"),
-        F.size(X.tokens(text_col)).cast("long").alias("_words"),
+        F.size(F.expr(X.tokens(text_col))).cast("long").alias("_words"),
         F.length(t).cast("long").alias("_chars"),
     )
     return per.groupBy(lang_col).agg(
@@ -461,14 +461,14 @@ def pmi_collocations(
     # the corpus is tokenized exactly twice — without it every consumer
     # re-runs its own corpus explode (observed: 5 parquet scans).
     uni = (
-        docs.select(F.explode(X.tokens(text_col)).alias("term"))
+        docs.select(F.explode(F.expr(X.tokens(text_col))).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("c"))
         .localCheckpoint(eager=False)
     )
     bi = (
-        docs.select(F.explode(X.word_shingles(text_col, 2)).alias("bigram"))
+        docs.select(F.explode(F.expr(X.word_shingles(text_col, 2))).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").cast("long").alias("c_xy"))
         .localCheckpoint(eager=False)
@@ -522,7 +522,7 @@ def token_entropy(
     cross-term sum quantizes each term's contribution to micro-unit
     longs BEFORE the fold, so summation order can't move the result —
     the fold itself is exact integer addition."""
-    toks = F.filter(X.tokens(text_col), lambda x: x != "")
+    toks = F.filter(F.expr(X.tokens(text_col)), lambda x: x != "")
     n = F.size(toks)
     uniq = F.array_distinct(toks)
     e_sum = F.aggregate(
@@ -569,7 +569,7 @@ def lm_perplexity_bigram(
     bucketing mirror lm_perplexity's conventions.
     Returns (doc_id, n_bigrams, avg_logp, perplexity)."""
     bi_occ = docs.select(
-        F.col(id_col), F.explode(X.word_shingles(text_col, 2)).alias("bigram")
+        F.col(id_col), F.explode(F.expr(X.word_shingles(text_col, 2))).alias("bigram")
     )
     bi_counts = (
         bi_occ.groupBy("bigram")
@@ -583,7 +583,7 @@ def lm_perplexity_bigram(
         .agg(F.sum("c_xy").cast("long").alias("c_x"))
     )
     vocab = (
-        docs.select(F.explode(X.tokens(text_col)).alias("term"))
+        docs.select(F.explode(F.expr(X.tokens(text_col))).alias("term"))
         .filter(F.col("term") != "")
         .agg(F.count_distinct("term").cast("long").alias("_v"))
     )

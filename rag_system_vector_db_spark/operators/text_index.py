@@ -55,13 +55,13 @@ def keyword_index_build(
     on the partition column so each bucket directory gets locality."""
     toks = docs.select(
         F.col(id_col),
-        F.size(X.tokens(text_col)).alias("_dl"),
-        F.explode(X.tokens(text_col)).alias("term"),
+        F.size(F.expr(X.tokens(text_col))).alias("_dl"),
+        F.explode(F.expr(X.tokens(text_col))).alias("term"),
     )
     postings = (
         toks.groupBy("term", id_col)
         .agg(F.count("*").cast("double").alias("tf"), F.first("_dl").alias("dl"))
-        .withColumn("bucket", (H.md5_long(F.col("term")) % n_buckets).cast("int"))
+        .withColumn("bucket", (F.expr(H.md5_long("term")) % n_buckets).cast("int"))
     )
     (
         postings.repartition("bucket")
@@ -310,12 +310,12 @@ def positional_index_build(
     term's per-doc tf."""
     toks = docs.select(
         F.col(id_col),
-        F.posexplode(X.tokens(text_col)).alias("pos", "term"),
+        F.posexplode(F.expr(X.tokens(text_col))).alias("pos", "term"),
     ).filter(F.col("term") != "")
     postings = (
         toks.groupBy("term", id_col)
         .agg(F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"))
-        .withColumn("bucket", (H.md5_long(F.col("term")) % n_buckets).cast("int"))
+        .withColumn("bucket", (F.expr(H.md5_long("term")) % n_buckets).cast("int"))
     )
     (
         postings.repartition("bucket")
@@ -395,14 +395,14 @@ def _batch_postings(docs: DataFrame, batch_id: int, n_buckets: int,
     plus the batch stamp that makes replays overwrite themselves."""
     toks = docs.select(
         F.col(id_col),
-        F.size(X.tokens(text_col)).alias("_dl"),
-        F.explode(X.tokens(text_col)).alias("term"),
+        F.size(F.expr(X.tokens(text_col))).alias("_dl"),
+        F.explode(F.expr(X.tokens(text_col))).alias("term"),
     )
     return (
         toks.groupBy("term", id_col)
         .agg(F.count("*").cast("double").alias("tf"), F.first("_dl").alias("dl"))
         .withColumn("batch", F.lit(batch_id).cast("int"))
-        .withColumn("bucket", (H.md5_long(F.col("term")) % n_buckets).cast("int"))
+        .withColumn("bucket", (F.expr(H.md5_long("term")) % n_buckets).cast("int"))
     )
 
 
@@ -547,8 +547,8 @@ def query_expansion_prf(
     ft = docs.join(F.broadcast(fb), "doc_id").select(
         "doc_id",
         "_bm25",
-        F.size(X.tokens("text")).alias("_dl"),
-        F.explode(X.tokens("text")).alias("term"),
+        F.size(F.expr(X.tokens("text"))).alias("_dl"),
+        F.explode(F.expr(X.tokens("text"))).alias("term"),
     )
     tf = (
         ft.filter((F.col("term") != "") & ~F.col("term").isin(query_terms))
@@ -604,7 +604,7 @@ def rerank_two_stage(
         .select("doc_id", F.round("_bm25", 6).alias("bm25"))
     )
     qset = sorted(set(query_terms))
-    toks = F.array_distinct(X.tokens("text"))
+    toks = F.array_distinct(F.expr(X.tokens("text")))
     inter = F.size(F.array_intersect(toks, lit_array(qset)))
     jac = F.round(inter / (F.size(toks) + F.lit(len(qset)) - inter), 6)
     cand = docs.join(F.broadcast(first), "doc_id").select(

@@ -2955,9 +2955,7 @@ def knn_graph_degree_stats(spark, sf_dir):
         F.broadcast(
             ind.agg(
                 F.max("_id").cast("long").alias("max_in_degree"),
-                F.sum(F.when(F.col("_id") >= 6, 1).otherwise(0))
-                .cast("long")
-                .alias("n_hubs"),
+                F.count_if(F.col("_id") >= 6).cast("long").alias("n_hubs"),
             )
         )
     ).crossJoin(F.broadcast(recip))
@@ -2965,12 +2963,12 @@ def knn_graph_degree_stats(spark, sf_dir):
         "n_nodes",
         "n_edges",
         (F.col("n_nodes") - F.col("_n_src")).cast("long").alias("n_isolated"),
-        F.round(F.col("n_edges").cast("double") / F.col("n_nodes"), 6).alias(
+        F.round(F.try_divide(F.col("n_edges").cast("double"), F.col("n_nodes")), 6).alias(
             "mean_out_degree"
         ),
         "max_in_degree",
         "n_hubs",
-        F.round(F.col("n_recip").cast("double") / F.col("n_edges"), 6).alias(
+        F.round(F.try_divide(F.col("n_recip").cast("double"), F.col("n_edges")), 6).alias(
             "reciprocity"
         ),
     )
@@ -3037,7 +3035,7 @@ def group_reservoir_sample_q(spark, sf_dir):
         "source",
         "doc_id",
         "n_chars",
-        H.md5_long(F.col("doc_id").cast("string"), "rsv").alias("_pri"),
+        F.expr(H.md5_long("CAST(doc_id AS STRING)", "rsv")).alias("_pri"),
     )
     top = knn.topk_per_key_agg(scored, "source", "doc_id", 5, score_col="_pri", asc=True)
     meta = docs.select(F.col("doc_id").alias("_d"), F.col("n_chars").alias("_nc"))
@@ -3079,7 +3077,7 @@ def priority_sample_q(spark, sf_dir):
     precision, rounding only on output. Same agg-based top-k as the
     uniform reservoir — no window, no global sort."""
     docs = load_table(spark, sf_dir, "documents")
-    u = (H.md5_long(F.col("doc_id").cast("string"), "pps") + F.lit(1)) / F.lit(
+    u = (F.expr(H.md5_long("CAST(doc_id AS STRING)", "pps")) + F.lit(1)) / F.lit(
         1152921504606846976.0
     )
     scored = docs.select(
@@ -3770,10 +3768,10 @@ def curation_pipeline_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", split=True)
     t = F.col("text")
-    toks = X.tokens("text")
+    toks = F.expr(X.tokens("text"))
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
-    swf = X.stopword_count("text") / n
+    swf = F.expr(X.stopword_count("text")) / n
     ttr = F.size(F.array_distinct(toks)) / n
     canon = F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(t), "[^a-z0-9 ]", ""), " +", " ")

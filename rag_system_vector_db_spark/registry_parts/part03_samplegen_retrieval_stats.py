@@ -1101,7 +1101,7 @@ def faceted_search_counts_q(spark, sf_dir):
     terms = V.lit_array(["fast", "join", "spark"])
     from ..functions import text as X
 
-    m = docs.filter(F.size(F.array_intersect(X.tokens("text"), terms)) > 0)
+    m = docs.filter(F.size(F.array_intersect(F.expr(X.tokens("text")), terms)) > 0)
     cells = m.groupBy("lang", "source").agg(F.count("*").cast("long").alias("n_hits"))
     w = Window.partitionBy()
     return cells.select(
@@ -1735,7 +1735,7 @@ def bpe_train_rounds_q(spark, sf_dir):
         return (
             sym.select(
                 "cnt",
-                F.explode(X.word_shingles("trim(s)", 2)).alias("pair"),
+                F.explode(F.expr(X.word_shingles("trim(s)", 2))).alias("pair"),
             )
             .groupBy("pair")
             .agg(F.sum("cnt").cast("long").alias("pair_count"))
@@ -2585,7 +2585,7 @@ def kmv_distinct_by_group_q(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     k = 32
     hashes = ev.select(
-        "event_type", H.md5_long(F.col("user_id").cast("string")).alias("h")
+        "event_type", F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h")
     )
     partial = (
         hashes.withColumn("_pid", F.spark_partition_id())
@@ -2804,14 +2804,14 @@ def split_ngram_leakage_q(spark, sf_dir):
     is measuring memory, not generalization."""
     docs = load_table(spark, sf_dir, "documents", split=True)
     split = F.when(
-        H.md5_long(F.col("doc_id").cast("string"), seed="split") % 100 < 90, "train"
+        F.expr(H.md5_long("CAST(doc_id AS STRING)", seed="split")) % 100 < 90, "train"
     ).otherwise("test")
     from ..functions import text as X
 
     w = docs.select(
         split.alias("split"),
         F.explode(
-            F.transform(X.word_shingles("text", 8), lambda s: F.md5(s))
+            F.transform(F.expr(X.word_shingles("text", 8)), lambda s: F.md5(s))
         ).alias("wh"),
     )
     train_w = w.filter(F.col("split") == "train").select("wh").distinct()
@@ -3052,12 +3052,14 @@ def revenue_concentration_q(spark, sf_dir):
         .select(
             F.col("n").alias("n_customers"),
             F.round(
-                (2.0 * F.col("iws")) / (F.col("n").cast("double") * F.col("s"))
-                - (F.col("n") + 1.0) / F.col("n"),
+                F.try_divide(2.0 * F.col("iws"), F.col("n").cast("double") * F.col("s"))
+                - F.try_divide(F.col("n") + 1.0, F.col("n")),
                 6,
             ).alias("gini"),
             F.col("n80").alias("n_top80"),
-            F.round(F.col("n80") / F.col("n").cast("double"), 6).alias("top80_share"),
+            F.round(F.try_divide(F.col("n80"), F.col("n").cast("double")), 6).alias(
+                "top80_share"
+            ),
         )
     )
 
@@ -3171,7 +3173,7 @@ def conversion_latency_q(spark, sf_dir, exact_quantiles: bool = True):
         .select(
             "n_view_users",
             "n_converted",
-            F.round(F.col("n_converted") / F.col("n_view_users"), 6).alias("conversion_rate"),
+            F.round(F.try_divide("n_converted", "n_view_users"), 6).alias("conversion_rate"),
             med.alias("median_latency_ms"),
             p90.alias("p90_latency_ms"),
         )
@@ -3301,7 +3303,7 @@ def cms_heavy_hitters_q(spark, sf_dir):
         "exact",
         "r",
         (
-            H.md5_long(F.concat(F.lit("cms"), F.col("r").cast("string"), F.lit(":"), F.col("term")))
+            F.expr(H.md5_long("concat('cms', CAST(r AS STRING), ':', term)"))
             % _CMS_W
         ).alias("bucket"),
     )
@@ -3312,7 +3314,7 @@ def cms_heavy_hitters_q(spark, sf_dir):
         "exact",
         "r",
         (
-            H.md5_long(F.concat(F.lit("cms"), F.col("r").cast("string"), F.lit(":"), F.col("term")))
+            F.expr(H.md5_long("concat('cms', CAST(r AS STRING), ':', term)"))
             % _CMS_W
         ).alias("bucket"),
     )

@@ -526,7 +526,7 @@ def hll_distinct_q(spark, sf_dir):
     partition and merges by max(), exactly as this plan's partial
     aggregation already does."""
     ev = load_table(spark, sf_dir, "events")
-    h = ev.select(H.md5_long(F.col("user_id").cast("string")).alias("h")).distinct()
+    h = ev.select(F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h")).distinct()
     b = h.select(
         F.expr("shiftright(h, 52)").alias("idx"),
         F.expr("h & 4503599627370495").alias("w"),
@@ -1953,8 +1953,8 @@ def bootstrap_ci_q(spark, sf_dir):
     50x map-side rows, a 50-row agg — the canonical error-bar plan."""
     ev = load_table(spark, sf_dir, "events")
     # Spark-side expression built from the same md5-long primitive
-    u_col = H.md5_long(
-        F.concat(F.col("event_id").cast("string"), F.lit(":"), F.col("r").cast("string"))
+    u_col = F.expr(
+        H.md5_long("concat(CAST(event_id AS STRING), ':', CAST(r AS STRING))")
     ) / F.lit(1152921504606846976.0)
     w_col = F.lit(6)
     for k in range(len(_POISSON1_CUM) - 1, -1, -1):
@@ -2038,7 +2038,7 @@ def partition_plan_sim_q(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     keyed = (
         ev.select(
-            H.md5_long(F.col("user_id").cast("string")).alias("h"),
+            F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h"),
             F.explode(V.lit_array([8, 16, 64])).alias("p"),
         )
         .groupBy("p", (F.col("h") % F.col("p")).alias("bucket"))
@@ -3288,7 +3288,8 @@ def join_cardinality_estimate_q(spark, sf_dir):
         .unionByName(one("lineitem x orders", li, o, "l_orderkey", "o_orderkey"))
         .unionByName(one("lineitem x part", li, p, "l_partkey", "p_partkey"))
     )
-    est = F.expr("rows_a * rows_b div greatest(ndv_a, ndv_b)")
+    # empty inputs: DuckDB's // and / by zero give NULL, so nullif/try_divide
+    est = F.expr("rows_a * rows_b div nullif(greatest(ndv_a, ndv_b), 0)")
     return jo.select(
         "join_name",
         "rows_a",
@@ -3299,8 +3300,8 @@ def join_cardinality_estimate_q(spark, sf_dir):
         "actual_rows",
         F.round(
             F.greatest(
-                est.cast("double") / F.col("actual_rows"),
-                F.col("actual_rows").cast("double") / est,
+                F.try_divide(est.cast("double"), F.col("actual_rows")),
+                F.try_divide(F.col("actual_rows").cast("double"), est),
             ),
             6,
         ).alias("q_error"),
@@ -3504,7 +3505,7 @@ def embedding_dedup_recall_q(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = ann.planes_for(sf_dir)
-    h = H.md5_long(F.col("vec_id").cast("string"))
+    h = F.expr(H.md5_long("CAST(vec_id AS STRING)"))
     sub = (
         emb.withColumn("_h", h)
         .filter(F.col("_h") / F.lit(1152921504606846976.0) < 0.3)
@@ -3692,7 +3693,7 @@ def rollup_grain_advisor_q(spark, sf_dir):
         "n_groups",
         (F.col("n_groups") * 64).cast("long").alias("est_bytes"),
         "fact_rows",
-        F.round(F.col("fact_rows").cast("double") / F.col("n_groups"), 6).alias(
+        F.round(F.try_divide(F.col("fact_rows").cast("double"), F.col("n_groups")), 6).alias(
             "reduction_ratio"
         ),
         (F.col("n_groups") * 64 <= 65536).alias("fits_budget"),

@@ -710,10 +710,11 @@ def bloom_filter_sizing_q(spark, sf_dir):
     ln2 = F.log(F.lit(2.0))
     m_bits = F.ceil(-nd * F.log(F.col("target_fpr")) / F.pow(ln2, F.lit(2.0)))
     k_hashes = F.greatest(
-        F.lit(1).cast("long"), F.round(m_bits / F.col("n_keys") * ln2, 0).cast("long")
+        F.lit(1).cast("long"),
+        F.round(F.try_divide(m_bits, F.col("n_keys")) * ln2, 0).cast("long"),
     )
     actual = F.pow(
-        1 - F.exp(-k_hashes.cast("double") * nd / m_bits), k_hashes.cast("double")
+        1 - F.exp(F.try_divide(-k_hashes.cast("double") * nd, m_bits)), k_hashes.cast("double")
     )
     return n.crossJoin(F.broadcast(t)).select(
         "target_fpr",
@@ -1711,7 +1712,7 @@ def srm_check_q(spark, sf_dir):
     recommend."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.select("user_id").distinct().select(
-        (H.md5_long(F.col("user_id").cast("string")) % 2).alias("arm")
+        (F.expr(H.md5_long("CAST(user_id AS STRING)")) % 2).alias("arm")
     )
     c = u.agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long").alias("n_a"),
@@ -1777,7 +1778,7 @@ def did_estimator_q(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.expr("(min(ts_ns) + max(ts_ns)) div 2").alias("cut"))
     s = ev.crossJoin(F.broadcast(b)).select(
-        (H.md5_long(F.col("user_id").cast("string")) % 2).alias("grp"),
+        (F.expr(H.md5_long("CAST(user_id AS STRING)")) % 2).alias("grp"),
         F.when(F.col("ts_ns") <= F.col("cut"), 0).otherwise(1).alias("period"),
         F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
     )
@@ -2301,23 +2302,23 @@ def hill_tail_index_q(spark, sf_dir):
         F.reverse(F.sort_array(F.collect_list("v_c"))).alias("vs"),
     )
     ks = spark.createDataFrame([(50,), (100,), (500,)], "k long")
+    sum_u = F.aggregate(
+        F.transform(
+            F.slice("vs", 1, F.col("k").cast("int")),
+            lambda x: F.round(
+                F.log(
+                    x.cast("double")
+                    / F.element_at(F.col("vs"), (F.col("k") + 1).cast("int"))
+                )
+                * 1000000
+            ).cast("long"),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, y: acc + y,
+    )
+    # no orders: NULL, as DuckDB's list_sum([]) is
     h = s.crossJoin(F.broadcast(ks)).select(
-        "k",
-        "n",
-        F.aggregate(
-            F.transform(
-                F.slice("vs", 1, F.col("k").cast("int")),
-                lambda x: F.round(
-                    F.log(
-                        x.cast("double")
-                        / F.element_at(F.col("vs"), (F.col("k") + 1).cast("int"))
-                    )
-                    * 1000000
-                ).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, y: acc + y,
-        ).alias("sum_u"),
+        "k", "n", F.when(F.size("vs") > 0, sum_u).alias("sum_u")
     )
     return h.select(
         "k",
@@ -2326,7 +2327,7 @@ def hill_tail_index_q(spark, sf_dir):
             "hill_gamma"
         ),
         F.round(
-            F.col("k").cast("double") * 1000000 / F.col("sum_u"), 6
+            F.try_divide(F.col("k").cast("double") * 1000000, F.col("sum_u")), 6
         ).alias("tail_alpha"),
     )
 
@@ -2877,7 +2878,7 @@ def embedding_isotropy_q(spark, sf_dir):
     )
     sub = (
         emb.select("vec_id", "embedding")
-        .orderBy(H.md5_long(F.col("vec_id").cast("string")), "vec_id")
+        .orderBy(F.expr(H.md5_long("CAST(vec_id AS STRING)")), "vec_id")
         .limit(_ISO_SAMPLE_CAP)
     )
     c = sub.crossJoin(F.broadcast(mu)).select(
@@ -2887,13 +2888,7 @@ def embedding_isotropy_q(spark, sf_dir):
     )
     a, b = c.alias("a"), c.alias("b")
     gate = (
-        H.md5_long(
-            F.concat(
-                F.col("a.vec_id").cast("string"),
-                F.lit(":"),
-                F.col("b.vec_id").cast("string"),
-            )
-        )
+        F.expr(H.md5_long("concat(CAST(a.vec_id AS STRING), ':', CAST(b.vec_id AS STRING))"))
         / F.lit(1152921504606846976.0)
         < 0.02
     )
@@ -3230,7 +3225,7 @@ def horvitz_thompson_total_q(spark, sf_dir):
             / F.col("true_c").cast("double"),
         ).alias("pi"),
         (
-            H.md5_long(F.col("o_orderkey").cast("string"))
+            F.expr(H.md5_long("CAST(o_orderkey AS STRING)"))
             / F.lit(1152921504606846976.0)
         ).alias("u"),
         "nn",

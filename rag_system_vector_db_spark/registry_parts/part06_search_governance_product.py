@@ -229,7 +229,7 @@ def sampling_weights_ess_q(spark, sf_dir):
             / F.col("true_c").cast("double"),
         ).alias("pi"),
         (
-            H.md5_long(F.col("o_orderkey").cast("string"))
+            F.expr(H.md5_long("CAST(o_orderkey AS STRING)"))
             / F.lit(1152921504606846976.0)
         ).alias("u"),
     )
@@ -440,7 +440,7 @@ def hnsw_layer_plan_q(spark, sf_dir):
     + one map-side-combinable groupBy; windows run over the <=7-row
     level frame."""
     emb = load_table(spark, sf_dir, "embeddings")
-    hv = H.md5_long(F.col("vec_id").cast("string"), "hnsw")
+    hv = F.expr(H.md5_long("CAST(vec_id AS STRING)", "hnsw"))
     tz = F.length(F.regexp_extract(F.bin(hv), r"(0*)$", 1))
     lv = emb.select(F.least(tz.cast("long") / F.lit(2), F.lit(6)).cast("long").alias("level"))
     per = lv.groupBy("level").agg(F.count("*").cast("long").alias("n_nodes"))
@@ -512,10 +512,10 @@ def fim_transform_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     t = F.split(F.col("text"), " ")
     d = docs.select("doc_id", t.alias("t"), F.size(t).alias("n"))
-    h1 = H.md5_long(F.concat(F.col("doc_id").cast("string"), F.lit("|a")), "fim") % (
+    h1 = F.expr(H.md5_long("concat(CAST(doc_id AS STRING), '|a')", "fim")) % (
         F.col("n") + 1
     )
-    h2 = H.md5_long(F.concat(F.col("doc_id").cast("string"), F.lit("|b")), "fim") % (
+    h2 = F.expr(H.md5_long("concat(CAST(doc_id AS STRING), '|b')", "fim")) % (
         F.col("n") + 1
     )
     s = d.select(
@@ -674,10 +674,10 @@ def filter_bias_audit_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", split=True)
     t = F.col("text")
-    toks = X.tokens("text")
+    toks = F.expr(X.tokens("text"))
     n = F.size(toks)
     mean_wl = (F.length(t) - (n - 1)) / n
-    swf = X.stopword_count("text") / n
+    swf = F.expr(X.stopword_count("text")) / n
     ttr = F.size(F.array_distinct(toks)) / n
     keep = (
         (n >= 20)
@@ -872,7 +872,7 @@ def kmv_set_ops_q(spark, sf_dir):
         F.col("event_type").isin("click", "purchase")
     )
     du = ev.select("event_type", "user_id").distinct()
-    h = du.select("event_type", H.md5_long(F.col("user_id").cast("string")).alias("h"))
+    h = du.select("event_type", F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h"))
     # two-phase k-min (sketch.kmv_distinct's scale path): each input
     # partition collapses its hashes to <=k per type BEFORE the
     # exchange, so no NDV-sized array ever sits in one agg buffer
@@ -1162,7 +1162,7 @@ def rag_groundedness_q(spark, sf_dir):
     ctx_bi = (
         ctx.join(dt, ctx.vec_id == dt.doc_id)
         .select(
-            "query_id", F.explode(X.word_shingles("text", 2)).alias("bg")
+            "query_id", F.explode(F.expr(X.word_shingles("text", 2))).alias("bg")
         )
         .distinct()
     )
@@ -1172,13 +1172,13 @@ def rag_groundedness_q(spark, sf_dir):
         .select(
             "query_id",
             "expected_id",
-            F.array_join(F.slice(X.tokens("text"), 1, 20), " ").alias("head"),
+            F.array_join(F.slice(F.expr(X.tokens("text")), 1, 20), " ").alias("head"),
         )
     )
     ans_bi = ans.select(
         "query_id",
         "expected_id",
-        F.explode(F.array_distinct(X.word_shingles("head", 2))).alias("bg"),
+        F.explode(F.array_distinct(F.expr(X.word_shingles("head", 2)))).alias("bg"),
     )
     j = ans_bi.join(
         ctx_bi.withColumn("_hit", F.lit(1)),

@@ -108,8 +108,8 @@ def wand_pruning_sim_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     toks = docs.select(
         "doc_id",
-        F.size(X.tokens("text")).alias("dl"),
-        F.explode(X.tokens("text")).alias("term"),
+        F.size(F.expr(X.tokens("text"))).alias("dl"),
+        F.explode(F.expr(X.tokens("text"))).alias("term"),
     )
     qtoks = toks.filter(F.col("term").isin(*_WAND_TERMS))
     tf = qtoks.groupBy("doc_id", "term").agg(
@@ -117,7 +117,7 @@ def wand_pruning_sim_q(spark, sf_dir):
     )
     stats = docs.agg(
         F.count("*").alias("n"),
-        F.avg(F.size(X.tokens("text"))).alias("avgdl"),
+        F.avg(F.size(F.expr(X.tokens("text")))).alias("avgdl"),
     )
     dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
     contrib = (
@@ -219,7 +219,7 @@ def padding_waste_audit_q(spark, sf_dir):
     from ..functions import text as X
 
     docs = load_table(spark, sf_dir, "documents", split=True)
-    d = docs.select(F.size(X.tokens("text")).cast("long").alias("n"))
+    d = docs.select(F.size(F.expr(X.tokens("text"))).cast("long").alias("n"))
     grid = spark.createDataFrame([(32,), (64,), (128,)], "L int")
     per = (
         d.crossJoin(F.broadcast(grid))
@@ -674,9 +674,7 @@ def graph_random_walks_q(spark, sf_dir):
     ]
     for i in (1, 2, 3):
         chosen = (
-            H.md5_long(
-                F.concat(F.col("walk_id").cast("string"), F.lit(f"|{i}")), "walk"
-            )
+            F.expr(H.md5_long(f"concat(CAST(walk_id AS STRING), '|{i}')", "walk"))
             % F.col("deg")
             + 1
         )
@@ -924,7 +922,7 @@ def hll_merge_rollup_q(spark, sf_dir):
     def regs_for(frame, scope_col):
         h = frame.select(
             scope_col.alias("scope"),
-            H.md5_long(F.col("user_id").cast("string")).alias("h"),
+            F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h"),
         ).distinct()
         b = h.select(
             "scope",
@@ -1263,7 +1261,7 @@ def prefix_autocomplete_q(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", split=True)
     freq = (
-        docs.select(F.explode(X.tokens("text")).alias("term"))
+        docs.select(F.explode(F.expr(X.tokens("text"))).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("freq"))
@@ -2140,7 +2138,7 @@ def sliding_window_hll_q(spark, sf_dir):
         .distinct()
     )
     h = ud.select(
-        "day", H.md5_long(F.col("user_id").cast("string")).alias("h")
+        "day", F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h")
     ).distinct()
     b = h.select(
         "day",

@@ -344,7 +344,7 @@ def weighted_jaccard_pairs_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     cand = dedup.dedup_minhash_lsh(docs).select("doc_a", "doc_b")
     tf = (
-        docs.select("doc_id", F.explode(X.tokens("text")).alias("term"))
+        docs.select("doc_id", F.explode(F.expr(X.tokens("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("long").alias("tf"))
         .localCheckpoint(eager=False)
@@ -810,11 +810,11 @@ def count_sketch_estimate_q(spark, sf_dir):
     grid = ev.crossJoin(F.broadcast(r4)).select(
         "r",
         (
-            H.md5_long(F.concat(F.lit("csb"), F.col("r"), F.lit(":"), F.col("k")))
+            F.expr(H.md5_long("concat('csb', r, ':', k)"))
             % 256
         ).alias("b"),
         F.when(
-            H.md5_long(F.concat(F.lit("css"), F.col("r"), F.lit(":"), F.col("k"))) % 2
+            F.expr(H.md5_long("concat('css', r, ':', k)")) % 2
             == 0,
             1,
         )
@@ -832,13 +832,13 @@ def count_sketch_estimate_q(spark, sf_dir):
         exact.crossJoin(F.broadcast(r4))
         .withColumn(
             "b",
-            H.md5_long(F.concat(F.lit("csb"), F.col("r"), F.lit(":"), F.col("k")))
+            F.expr(H.md5_long("concat('csb', r, ':', k)"))
             % 256,
         )
         .withColumn(
             "s",
             F.when(
-                H.md5_long(F.concat(F.lit("css"), F.col("r"), F.lit(":"), F.col("k")))
+                F.expr(H.md5_long("concat('css', r, ':', k)"))
                 % 2
                 == 0,
                 1,
@@ -1103,19 +1103,14 @@ def moe_router_balance_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     toks = docs.select(
         "doc_id",
-        F.explode(F.sequence(F.lit(1), F.size(X.tokens("text")))).alias("pos"),
+        F.explode(F.sequence(F.lit(1), F.size(F.expr(X.tokens("text"))))).alias("pos"),
     )
     e8 = spark.range(8).select(F.col("id").cast("int").alias("e"))
     logits = toks.crossJoin(F.broadcast(e8)).select(
         "doc_id",
         "pos",
         "e",
-        H.md5_long(
-            F.concat(
-                F.col("doc_id"), F.lit("|"), F.col("pos"), F.lit("|"), F.col("e")
-            ),
-            "moe",
-        ).alias("h"),
+        F.expr(H.md5_long("concat(doc_id, '|', pos, '|', e)", "moe")).alias("h"),
     )
     wt = Window.partitionBy("doc_id", "pos")
     sm = logits.select(
@@ -1212,7 +1207,7 @@ def topic_coherence_npmi_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", split=True)
     pres = (
         docs.select(
-            "doc_id", "source", F.explode(X.tokens("text")).alias("term")
+            "doc_id", "source", F.explode(F.expr(X.tokens("text"))).alias("term")
         )
         .filter(F.col("term") != "")
         .distinct()

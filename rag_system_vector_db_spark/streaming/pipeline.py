@@ -573,7 +573,7 @@ def day_hll_registers(events_df: DataFrame) -> DataFrame:
         F.expr("unix_micros(cast(ts as timestamp)) * 1000 div 86400000000000").alias(
             "day"
         ),
-        H.md5_long(F.col("user_id").cast("string")).alias("h"),
+        F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h"),
     ).distinct()
     b = h.select(
         "day",

@@ -3,13 +3,18 @@ unit norm, determinism, token-overlap similarity structure."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from rag_system_vector_db_spark.operators.embedding import (
     DIM,
+    _token_vec,
     embed_documents,
     embed_text_py,
+    hashing_encoder,
 )
 
 
@@ -32,6 +37,41 @@ def test_distributed_matches_driver(spark, sf_dir):
         expected = embed_text_py(r.text)
         assert np.array_equal(np.array(r.embedding, dtype=np.float32), expected)
         assert abs(float(np.linalg.norm(r.embedding)) - 1.0) < 1e-5
+
+
+EDGE_TEXTS = ["", "a", "a  b", " a b", "a b ", "   ", "\t", "naïve café 日本 語"]
+
+
+def _loop_encoder(texts, dim: int = DIM) -> np.ndarray:
+    """The per-row, per-token loop the vectorized encoder replaced:
+    the bit-exact reference for its float64 accumulation order."""
+    cache: dict[str, np.ndarray] = {}
+    out = np.zeros((len(texts), dim))
+    for v, text in zip(out, texts):
+        for tok in text.split(" "):
+            if not tok:
+                continue
+            tv = cache.get(tok)
+            if tv is None:
+                tv = cache[tok] = _token_vec(tok, dim)
+            v += tv
+        n = float(np.linalg.norm(v))
+        if n > 0:
+            v /= n
+    return out.astype(np.float32)
+
+
+def test_vectorized_encoder_is_bit_equal_to_the_token_loop(sf_dir):
+    texts = list(EDGE_TEXTS)
+    for d in (sf_dir, os.path.join(os.path.dirname(sf_dir), "sf0.01")):
+        if os.path.exists(f"{d}/documents.parquet"):
+            texts += pq.read_table(f"{d}/documents.parquet").column("text").to_pylist()
+    assert len(texts) > len(EDGE_TEXTS)
+    for batch in (texts, EDGE_TEXTS, [], texts[:3] + EDGE_TEXTS[::-1]):
+        got, want = hashing_encoder(batch), _loop_encoder(batch)
+        assert got.dtype == want.dtype == np.float32
+        assert got.shape == want.shape == (len(batch), DIM)
+        assert got.tobytes() == want.tobytes()
 
 
 def test_empty_text(spark):

@@ -107,7 +107,7 @@ def test_reservoir_sample_is_stable_under_deletion(spark, sf_dir):
     scored = docs.filter(F.col("doc_id") != victim).select(
         "source",
         "doc_id",
-        H.md5_long(F.col("doc_id").cast("string"), "rsv").alias("_pri"),
+        F.expr(H.md5_long("CAST(doc_id AS STRING)", "rsv")).alias("_pri"),
     )
     again = {
         (r.source, r.doc_id)

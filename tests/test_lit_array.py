@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from rag_system_vector_db_spark.functions.vector import lit_array
 from rag_system_vector_db_spark.operators.vector_store import VectorCollection
+from rag_system_vector_db_spark.registry import QUERIES
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 LINTED = [ROOT / "rag_system_vector_db_spark", ROOT / "tools"]
@@ -124,6 +125,16 @@ def test_search_build_calls_do_not_grow_with_dim(spark, tmp_path):
             col.search([0.25] * dim, limit=1)
         calls[dim] = n[0]
     assert calls[8] == calls[384] <= 40, calls
+
+
+@pytest.mark.parametrize("name, cap", [("dedup_minhash_lsh", 200), ("chunk_documents", 40)])
+def test_ingest_build_calls_are_capped(spark, sf_dir, name, cap):
+    """The ingest_batch builds are SQL text: a Column-API tree costs
+    ~5 py4j calls per node (1,348 and 305 calls before)."""
+    QUERIES[name](spark, sf_dir)  # warm-up, as above
+    with py4j_calls() as n:
+        QUERIES[name](spark, sf_dir)
+    assert n[0] <= cap, n[0]
 
 
 def _is_lit(node) -> bool:

@@ -9,7 +9,9 @@ scores NULL and ranks last on both engines instead of failing the
 whole search; rankers built on `V.cosine` fail loudly on it rather
 than rank it first. An AST lint keeps
 Python-lambda higher-order functions, which cost a py4j round trip
-per lambda node, out of the vector math.
+per lambda node, out of the vector math and the ingest operators
+(chunking, dedup). `word_shingles`, one regex, equals the oracle's
+list slicing on edge inputs.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from rag_system_vector_db_spark.functions import text as X
 from rag_system_vector_db_spark.functions import vector as V
 from rag_system_vector_db_spark.operators import knn
 from rag_system_vector_db_spark.operators.vector_store import VectorCollection
@@ -30,7 +33,12 @@ from rag_system_vector_db_spark.registry_core import _dd_cosine, _dd_dot, _dd_eu
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = ROOT / "rag_system_vector_db_spark"
-LINTED = [PKG / "functions", PKG / "operators" / "knn.py"]
+LINTED = [
+    PKG / "functions",
+    PKG / "operators" / "knn.py",
+    PKG / "operators" / "dedup.py",
+    PKG / "operators" / "chunking.py",
+]
 
 
 def _random_parquet(path, n: int, dim: int, seed: int = 0, zero_rows=()) -> str:
@@ -171,6 +179,27 @@ def test_ranked_cosine_fails_loudly_on_a_zero_row(spark, zero_parquet):
     assert [(r.vec_id, r.score) for r in rows] == _dd_ranked(zero_parquet, q)
 
 
+SHINGLE_TEXTS = ["", "a", "a  b", " a b", "a b ", "   ", "\t", "naïve café  日本 語", None, "a b c d e"]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 8])
+def test_word_shingles_equal_duckdb_on_edge_inputs(spark, n):
+    """Empty tokens (doubled, leading and trailing spaces) are windows
+    like any other token; fewer than n tokens give []; NULL stays NULL."""
+    rows = list(enumerate(SHINGLE_TEXTS))
+    got = dict(
+        spark.createDataFrame(rows, "i int, t string")
+        .selectExpr("i", f"{X.word_shingles('t', n)} AS sh")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (i INTEGER, t VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    want = dict(con.execute(f"SELECT i, {X.dd_word_shingles('t', n)} FROM d").fetchall())
+    assert got == want
+    assert got[SHINGLE_TEXTS.index(None)] is None
+
+
 HOFS = {"aggregate", "zip_with", "transform", "filter"}
 
 
@@ -211,4 +240,4 @@ def test_no_python_lambda_hofs_in_vector_math():
         for p in files
         for line, kind in _offences(ast.parse(p.read_text(), str(p)))
     ]
-    assert not found, "write vector math as SQL text (functions.vector):\n" + "\n".join(found)
+    assert not found, "write the HOF as SQL text (see functions.vector):\n" + "\n".join(found)

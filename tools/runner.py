@@ -153,14 +153,13 @@ def checksum_compare(spark_df, con, sql: str, name: str) -> None:
     if bad:
         raise TypeError(f"{name}: checksum compare needs int/str columns, got {bad}")
     cols = sorted(spark_df.columns)
+    concat = "concat_ws('|', " + ", ".join(
+        "CAST(`{}` AS STRING)".format(c.replace("`", "``")) for c in cols
+    ) + ")"
     srow = spark_df.select(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.sum(
-                H.md5_long(
-                    F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-                ).cast("decimal(38,0)")
-            ),
+            F.sum(F.expr(H.md5_long(concat)).cast("decimal(38,0)")),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("chk"),
     ).collect()[0]
