@@ -1,3 +1,3 @@
-from . import hashing, text, vector
+from . import exact, hashing, text, vector
 
-__all__ = ["hashing", "text", "vector"]
+__all__ = ["exact", "hashing", "text", "vector"]

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
+from ..functions.exact import MICRO
 from ..functions.vector import lit_array
 
 
@@ -272,9 +273,9 @@ def quality_classifier(
     Plan: one explode + ONE map-side-combinable groupBy(doc); the
     weight lookup is element_at on a broadcast literal array (pure
     codegen, no join, no Python). Determinism across engines: weights
-    are INTEGER micro-units (weight x 1e6) summed exactly as longs —
+    are INTEGER micro-units (functions.exact) summed exactly as longs —
     order-free, no float accumulation anywhere — and the exact sum is
-    what the output carries: ``sum_micro / (n_tokens * 1e6)`` IS the
+    what the output carries: ``sum_micro / n_tokens`` in micro-units IS the
     raw mean-weight score, bit-recoverable. A rounded rational raw
     score is deliberately NOT emitted: s/n can land exactly on a 5e-7
     rounding boundary (observed at sf0.001), where engines' double
@@ -284,7 +285,7 @@ def quality_classifier(
     from ..functions import hashing as H
 
     w = weights if weights is not None else classifier_weights(n_features)
-    w_micro = [int(round(x * 1_000_000)) for x in w]
+    w_micro = [int(round(x * MICRO)) for x in w]
     warr = lit_array(w_micro).cast("array<long>")
     toks = docs.select(
         F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("tok")
@@ -297,7 +298,7 @@ def quality_classifier(
         F.count("*").cast("long").alias("n_tokens"),
         F.sum("wt").cast("long").alias("sum_micro"),
     )
-    raw = F.col("sum_micro").cast("double") / (F.col("n_tokens") * 1_000_000.0)
+    raw = F.col("sum_micro").cast("double") / (F.col("n_tokens") * float(MICRO))
     return per.select(
         F.col(id_col),
         "n_tokens",
@@ -348,7 +349,7 @@ def dsir_selection(
     from ..functions import hashing as H
 
     lams = lambdas if lambdas is not None else dsir_lambdas(n_features)
-    lam_micro = [int(round(x * 1_000_000)) for x in lams]
+    lam_micro = [int(round(x * MICRO)) for x in lams]
     larr = lit_array(lam_micro).cast("array<long>")
     uni = docs.select(F.col(id_col), F.explode(F.expr(X.tokens(text_col))).alias("f"))
     bi = docs.select(F.col(id_col), F.explode(F.expr(X.word_shingles(text_col, 2))).alias("f"))
@@ -374,7 +375,7 @@ def dsir_selection(
         "n_feats",
         "logratio_micro",
         F.round(
-            F.exp(F.col("logratio_micro").cast("double") / (F.col("n_feats") * 1_000_000.0)),
+            F.exp(F.col("logratio_micro").cast("double") / (F.col("n_feats") * float(MICRO))),
             6,
         ).alias("importance"),
         (F.col("logratio_micro") >= F.col("_cut")).alias("selected"),

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import text as X
+from ..functions.exact import from_micro, to_micro
 
 # Public-domain common-word lists per language (tiny on purpose — the
 # operator shape matters, swap lists freely).
@@ -522,30 +523,22 @@ def token_entropy(
     cross-term sum quantizes each term's contribution to micro-unit
     longs BEFORE the fold, so summation order can't move the result —
     the fold itself is exact integer addition."""
-    toks = F.filter(F.expr(X.tokens(text_col)), lambda x: x != "")
-    n = F.size(toks)
-    uniq = F.array_distinct(toks)
-    e_sum = F.aggregate(
-        F.transform(
-            uniq,
-            lambda u: F.round(
-                F.size(F.filter(toks, lambda x: x == u)).cast("double")
-                * F.log(F.size(F.filter(toks, lambda x: x == u)).cast("double"))
-                * 1e6
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    toks = f"filter({X.tokens(text_col)}, x -> x != '')"
+    n = f"size({toks})"
+    uniq = f"array_distinct({toks})"
+    tf = f"CAST(size(filter({toks}, x -> x = u)) AS DOUBLE)"
+    e_sum = (
+        f"aggregate(transform({uniq}, u -> {to_micro(f'{tf} * ln({tf})')}),"
+        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
-    h = F.log(n.cast("double")) - (e_sum / 1e6) / n
-    return docs.select(
-        F.col(id_col),
-        n.cast("long").alias("n_tokens"),
-        F.size(uniq).cast("long").alias("n_uniq"),
-        F.round(h, 6).alias("entropy"),
-        F.round(
-            F.when(n > 1, h / F.log(n.cast("double"))).otherwise(F.lit(0.0)), 6
-        ).alias("norm_entropy"),
+    h = f"ln(CAST({n} AS DOUBLE)) - {from_micro(e_sum)} / {n}"
+    return docs.selectExpr(
+        id_col,
+        f"CAST({n} AS BIGINT) AS n_tokens",
+        f"CAST(size({uniq}) AS BIGINT) AS n_uniq",
+        f"round({h}, 6) AS entropy",
+        f"round(CASE WHEN {n} > 1 THEN ({h}) / ln(CAST({n} AS DOUBLE)) ELSE 0.0D END, 6)"
+        " AS norm_entropy",
     )
 
 
@@ -590,9 +583,7 @@ def lm_perplexity_bigram(
     doc_tf = bi_occ.groupBy(id_col, "bigram").agg(
         F.count("*").cast("long").alias("tf")
     )
-    term_u = F.col("tf") * F.round(
-        F.log((F.col("c_xy") + 1) / (F.col("c_x") + F.col("_v")).cast("double")) * 1e6
-    ).cast("long")
+    term_u = F.expr(f"tf * {to_micro('ln((c_xy + 1) / CAST(c_x + _v AS DOUBLE))')}")
     per_doc = (
         doc_tf.join(bi_counts, "bigram")
         .join(px_counts, F.split("bigram", " ").getItem(0) == F.col("_x"))
@@ -603,7 +594,7 @@ def lm_perplexity_bigram(
             F.sum(term_u).alias("_lu"),
         )
     )
-    logp = (F.col("_lu") / 1e6) / F.col("n_bigrams")
+    logp = F.expr(f"{from_micro('_lu')} / n_bigrams")
     return per_doc.select(
         F.col(id_col),
         "n_bigrams",

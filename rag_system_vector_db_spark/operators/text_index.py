@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import text as X
+from ..functions.exact import emit_micro, from_micro, to_micro
 from ..functions.vector import lit_array
 from .hybrid import BM25_B, BM25_K1
 
@@ -92,10 +93,8 @@ def keyword_index_build(
     # at build; readers without the VSM scorer never touch it.
     n_docs_scalar = docs.agg(F.count("*").alias("_n"))
     dfreq_all = postings.groupBy("term").agg(F.count("*").cast("long").alias("_df"))
-    idf_all = F.log((F.col("_n") + 1) / (F.col("_df") + 1))
-    norm_contrib = F.round(
-        (F.col("tf") * idf_all) * (F.col("tf") * idf_all) * 1e6
-    ).cast("long")
+    idf_all = "ln((_n + 1) / (_df + 1))"
+    norm_contrib = F.expr(to_micro(f"(tf * {idf_all}) * (tf * {idf_all})"))
     norms = (
         postings.join(dfreq_all, "term")
         .crossJoin(F.broadcast(n_docs_scalar))
@@ -559,7 +558,7 @@ def query_expansion_prf(
             F.first("_bm25").alias("bm25"),
         )
     )
-    contrib_u = F.round(F.col("tf") / F.col("dl") * F.col("bm25") * 1e6).cast("long")
+    contrib_u = F.expr(to_micro("tf / dl * bm25"))
     wt = tf.groupBy("term").agg(
         F.sum(contrib_u).alias("_wu"),
         F.count("*").cast("long").alias("n_docs"),
@@ -569,7 +568,7 @@ def query_expansion_prf(
     return top.select(
         F.row_number().over(w).cast("long").alias("rank"),
         "term",
-        F.round(F.col("_wu") / 1e6, 6).alias("weight"),
+        F.expr(emit_micro("_wu")).alias("weight"),
         "n_docs",
     )
 
@@ -720,10 +719,7 @@ def tfidf_vsm_topk(
         .crossJoin(F.broadcast(q2))
         .select(
             "doc_id",
-            (
-                F.col("_num")
-                / (F.sqrt(F.col("norm2_u") / 1e6) * F.sqrt(F.col("_qnorm2")))
-            ).alias("_vsm"),
+            F.expr(f"_num / (sqrt({from_micro('norm2_u')}) * sqrt(_qnorm2))").alias("_vsm"),
         )
     )
     top = scored.orderBy(F.col("_vsm").desc(), "doc_id").limit(k)

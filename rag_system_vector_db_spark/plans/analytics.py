@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import emit_micro, to_micro
 from ..functions.vector import lit_array
 from ..sources import load_table
 
@@ -214,9 +215,7 @@ def window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             # exact micro-unit sum (see sessionize_events: a raw double
             # sum is order-sensitive once one window holds ~10^5 rows)
-            F.round(
-                F.sum(F.expr("cast(round(value * 1000000) as bigint)")) / 1e6, 6
-            ).alias("sum_value"),
+            F.expr(emit_micro(f"sum({to_micro('value')})")).alias("sum_value"),
             F.countDistinct("user_id").alias("n_users"),
         )
     )
@@ -233,9 +232,7 @@ def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "2 hours", "1 hour"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.expr("cast(round(value * 1000000) as bigint)")) / 1e6, 6
-            ).alias("sum_value"),
+            F.expr(emit_micro(f"sum({to_micro('value')})")).alias("sum_value"),
         )
         .select(
             (F.unix_timestamp("window.start") / 3600)
@@ -365,9 +362,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -
         with_sess.groupBy("user_id", "session_no")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.expr("cast(round(value * 1000000) as bigint)")) / 1e6, 6
-            ).alias("sum_value"),
+            F.expr(emit_micro(f"sum({to_micro('value')})")).alias("sum_value"),
         )
     )
 

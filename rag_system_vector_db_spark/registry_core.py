@@ -5,7 +5,9 @@ Every SURVEY §2 operator as (Spark callable, DuckDB oracle).
 ``QUERIES[name](spark, sf_dir) -> DataFrame`` and ``ORACLES[name]`` is
 ANSI SQL DuckDB runs on the same parquet views. Column names/aliases
 match exactly; float columns are rounded to 6 decimals on both sides
-AFTER any ordering/ranking on full precision, so value-hashes agree.
+AFTER any ordering/ranking on full precision, so value-hashes agree —
+through functions.exact (micro-unit integers, one emission) wherever
+a raw 6-dp round could differ between the engines.
 """
 
 from __future__ import annotations

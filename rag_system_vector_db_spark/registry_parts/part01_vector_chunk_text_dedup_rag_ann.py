@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..operators.vector_store import resolve_log
@@ -1186,15 +1187,16 @@ def _py_cosine(a: list[float], b: list[float]) -> float:
     return float("nan") if d == 0.0 else _py_dot(a, b) / d
 
 
-def _round6_half_up(x: float) -> float:
-    """Spark F.round / DuckDB round: 6dp, half away from zero."""
-    if x != x:  # NaN
-        return x
-    return _math.copysign(_math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
+
+
+def _values_sql(rows: list[str], cols: list[tuple[str, str]]) -> str:
+    """Literal rows as a relation of (name, type) columns; with no rows,
+    a typed empty relation (DuckDB cannot parse a VALUES list with none)."""
+    if not rows:
+        return "SELECT " + ", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in cols) + " WHERE false"
+    return f"SELECT * FROM (VALUES {', '.join(rows)}) AS t({', '.join(c for c, _ in cols)})"
 
 
 def _rag_e2e_oracle(sf_dir: str) -> str:
@@ -1218,12 +1220,10 @@ def _rag_e2e_oracle(sf_dir: str) -> str:
     for rank, (doc_id, score, text) in enumerate(scored[:5], start=1):
         rows.append(
             f"(CAST({rank} AS BIGINT), CAST({doc_id} AS BIGINT), "
-            f"CAST({_round6_half_up(score)!r} AS DOUBLE), {_sql_str(text[:60])})"
+            f"CAST({round6(score)!r} AS DOUBLE), {_sql_str(text[:60])})"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(rows)
-        + ') AS t("rank", doc_id, score, snippet)'
+    return _values_sql(
+        rows, [('"rank"', "BIGINT"), ("doc_id", "BIGINT"), ("score", "DOUBLE"), ("snippet", "VARCHAR")]
     )
 
 
@@ -1736,12 +1736,12 @@ LAZY_ORACLES["ann_recall_at_k"] = _recall_oracle
 
 @query(
     "agg_pricing_summary",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
            sum(l_quantity) AS sum_qty,
            CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS DOUBLE) / 100 AS sum_base_price,
            CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) * 10000 AS HUGEINT) AS DOUBLE) / 10000 AS sum_disc_price,
-           CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(3,2)))) * 1000000 AS HUGEINT) AS DOUBLE) / 1000000 AS sum_charge,
+           CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(3,2)))) * {MICRO} AS HUGEINT) AS DOUBLE) / {MICRO} AS sum_charge,
            round(avg(l_quantity), 6) AS avg_qty,
            round(avg(l_discount), 6) AS avg_disc,
            count(*) AS count_order
@@ -2231,10 +2231,10 @@ def dormant_customers(spark, sf_dir):
 
 @query(
     "window_events",
-    oracle="""
+    oracle=f"""
     SELECT epoch_ns(ts) // 3600000000000 AS hour_id, event_type,
            count(*) AS n_events,
-           round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1e6, 6) AS sum_value,
+           {emit_micro(f"sum({to_micro('value')})")} AS sum_value,
            count(DISTINCT user_id) AS n_users
     FROM events
     GROUP BY epoch_ns(ts) // 3600000000000, event_type
@@ -2249,10 +2249,10 @@ def window_events(spark, sf_dir):
 
 @query(
     "sliding_window_events",
-    oracle="""
+    oracle=f"""
     SELECT t.win_start_hour, event_type,
            count(*) AS n_events,
-           round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1e6, 6) AS sum_value
+           {emit_micro(f"sum({to_micro('value')})")} AS sum_value
     FROM (
         SELECT event_type, value,
                unnest([epoch_ns(ts) // 3600000000000,
@@ -2306,7 +2306,7 @@ def topk_per_group(spark, sf_dir):
 
 @query(
     "sessionize_events",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT user_id, event_id, value,
                epoch_ns(ts) // 1000000000 AS ts_s,
@@ -2322,7 +2322,7 @@ def topk_per_group(spark, sf_dir):
         FROM s
     )
     SELECT user_id, session_no, count(*) AS n_events,
-           round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1e6, 6) AS sum_value
+           {emit_micro(f"sum({to_micro('value')})")} AS sum_value
     FROM sess GROUP BY user_id, session_no
     """,
 )

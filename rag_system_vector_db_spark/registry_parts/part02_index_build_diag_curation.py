@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -1347,10 +1348,11 @@ def eval_results_artifact(spark, sf_dir):
     d = _os.path.join(_WAREHOUSE, f"qa_eval_{_os.path.basename(sf_dir.rstrip('/'))}")
     _os.makedirs(d, exist_ok=True)
     qf, af = f"{d}/questions.txt", f"{d}/answers.txt"
+    # one line per text: no texts, no lines (not one blank question)
     with open(qf, "w") as f:
-        f.write("\n".join(texts) + "\n")
+        f.writelines(t + "\n" for t in texts)
     with open(af, "w") as f:
-        f.write("\n".join(f"expected answer {i}" for i in range(len(texts))) + "\n")
+        f.writelines(f"expected answer {i}\n" for i in range(len(texts)))
     return rag.evaluation_results(spark, docs, qf, af, k=5)
 
 
@@ -1368,8 +1370,8 @@ def _eval_results_oracle(sf_dir: str) -> str:
     from ..operators.embedding import embed_text_py
     from ..registry_parts.part01_vector_chunk_text_dedup_rag_ann import (
         _py_cosine,
-        _round6_half_up,
         _sql_str,
+        _values_sql,
     )
     from ..sources.tables import duck_parquet_path
 
@@ -1397,17 +1399,14 @@ def _eval_results_oracle(sf_dir: str) -> str:
         hit_rank = next(
             (r for r, (i, _) in enumerate(scored, start=1) if i == expected_id), None
         )
-        grade = 0.0 if hit_rank is None else _round6_half_up(1.0 / hit_rank)
+        grade = 0.0 if hit_rank is None else round6(1.0 / hit_rank)
         out_rows.append(
             f"(CAST({qa_id} AS BIGINT), {_sql_str(q)}, "
             f"{_sql_str(f'expected answer {qa_id}')}, {_sql_str(predicted)}, "
             f"{_sql_str('Grade: ' + str(grade))})"
         )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(out_rows)
-        + ") AS t(qa_id, question, expected_answer, predicted_answer, groq_evaluation)"
-    )
+    text_cols = ("question", "expected_answer", "predicted_answer", "groq_evaluation")
+    return _values_sql(out_rows, [("qa_id", "BIGINT")] + [(c, "VARCHAR") for c in text_cols])
 
 
 LAZY_ORACLES["eval_results_artifact"] = _eval_results_oracle
@@ -1420,7 +1419,7 @@ LAZY_ORACLES["eval_results_artifact"] = _eval_results_oracle
 
 def _qcls_weights_sql(w: list[float]) -> str:
     rows = ", ".join(
-        f"({i}, {int(round(x * 1_000_000))}::BIGINT)" for i, x in enumerate(w)
+        f"({i}, {int(round(x * MICRO))}::BIGINT)" for i, x in enumerate(w)
     )
     return f"qw(i, wt) AS (VALUES {rows})"
 
@@ -1444,7 +1443,7 @@ def _quality_classifier_oracle() -> str:
         GROUP BY f.doc_id
     )
     SELECT doc_id, n_tokens, sum_micro,
-           round(1.0 / (1.0 + exp(-((sum_micro::DOUBLE) / (n_tokens * 1000000.0)))), 6) AS prob,
+           round(1.0 / (1.0 + exp(-((sum_micro::DOUBLE) / (n_tokens * {MICRO}.0)))), 6) AS prob,
            sum_micro >= 0 AS keep
     FROM per
     """
@@ -2336,7 +2335,7 @@ def _dsir_oracle() -> str:
         SELECT quantile_cont(logratio_micro, 0.75) AS c FROM per
     )
     SELECT doc_id, n_feats, logratio_micro,
-           round(exp((logratio_micro::DOUBLE) / (n_feats * 1000000.0)), 6) AS importance,
+           round(exp((logratio_micro::DOUBLE) / (n_feats * {MICRO}.0)), 6) AS importance,
            logratio_micro >= cut.c AS selected
     FROM per, cut
     """
@@ -3479,7 +3478,7 @@ def _kmeans_oracle() -> str:
     WITH q AS (
         SELECT vec_id,
                list_transform(embedding::DOUBLE[],
-                              v -> CAST(round(v * 1000000.0) AS BIGINT) + 1000000) AS vq
+                              v -> {to_micro('v')} + {MICRO}) AS vq
         FROM embeddings
     ), c0 AS (
         SELECT CAST(vec_id AS INT) AS cid, vq AS cq FROM q WHERE vec_id < 8
@@ -3488,7 +3487,7 @@ def _kmeans_oracle() -> str:
         SELECT cid, list(mq ORDER BY pos) AS cq FROM m1 GROUP BY cid
     ),{assign('c1', 'a2')},{means('a2', 'm2')}
     SELECT cid, CAST(pos AS BIGINT) AS pos,
-           round((mq - 1000000) / 1000000.0, 6) AS c,
+           {emit_micro(f'mq - {MICRO}')} AS c,
            n_vecs
     FROM m2
     """
@@ -3505,7 +3504,7 @@ def kmeans_refine_q(spark, sf_dir):
     The iteration runs in EXACT FIXED-POINT arithmetic so it is
     hash-checkable across engines (the same trick as
     knn_graph_pagerank's integer numerators): components quantize
-    ONCE to offset micro-units (round(v·1e6) + 1e6 ≥ 0 — the offset
+    ONCE to offset micro-units (v in micro-units plus one unit ≥ 0 — the offset
     makes the mean's integer division floor-consistent everywhere and
     cancels in every distance), squared-L2 distances are then exact
     longs with cid tie-break, and new centroids are sum div n — no
@@ -3523,10 +3522,7 @@ def kmeans_refine_q(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     q = emb.select(
         "vec_id",
-        F.expr(
-            "transform(embedding, v -> cast(round(cast(v as double) * 1000000.0)"
-            " as bigint) + 1000000)"
-        ).alias("vq"),
+        F.expr(f"transform(embedding, v -> {to_micro('cast(v as double)')} + {MICRO})").alias("vq"),
     )
     cents = q.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("vq").alias("cq")
@@ -3560,7 +3556,7 @@ def kmeans_refine_q(spark, sf_dir):
     return means.select(
         "cid",
         F.col("pos").cast("long"),
-        F.round((F.col("mq") - F.lit(1000000)) / F.lit(1000000.0), 6).alias("c"),
+        F.expr(emit_micro(f"mq - {MICRO}")).alias("c"),
         "n_vecs",
     )
 

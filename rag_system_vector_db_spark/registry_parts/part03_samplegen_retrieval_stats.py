@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -364,11 +365,11 @@ def rag_context_budget_q(spark, sf_dir):
 
 @query(
     "events_gap_fill",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
         SELECT epoch_ns(ts) // 3600000000000 AS h,
                CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS v_u
+               CAST(sum({to_micro('value')}) AS BIGINT) AS v_u
         FROM events GROUP BY 1
     ), bounds AS (
         SELECT min(h) AS h0, max(h) AS h1 FROM hourly
@@ -382,9 +383,9 @@ def rag_context_budget_q(spark, sf_dir):
     SELECT CAST(h AS BIGINT) AS hour_id,
            n_events,
            (n_events = 0) AS gap_filled,
-           round(COALESCE(v_u, last_value(v_u IGNORE NULLS) OVER (
-                   ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               )) / 1000000.0, 6) AS value_locf
+           {emit_micro('''COALESCE(v_u, last_value(v_u IGNORE NULLS) OVER (
+                   ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))''')}
+               AS value_locf
     FROM joined
     """,
 )
@@ -404,7 +405,7 @@ def events_gap_fill_q(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.select(
         F.expr("ts_ns div 3600000000000").alias("h"),
-        F.expr("cast(round(value * 1000000) as bigint)").alias("_vu"),
+        F.expr(to_micro("value")).alias("_vu"),
     ).groupBy("h").agg(
         F.count("*").cast("long").alias("n_events"),
         F.sum("_vu").cast("long").alias("v_u"),
@@ -414,26 +415,26 @@ def events_gap_fill_q(spark, sf_dir):
         .select(F.explode(F.sequence("_h0", "_h1")).alias("h"))
     )
     joined = spine.join(hourly, "h", "left")
-    w = Window.orderBy("h").rowsBetween(Window.unboundedPreceding, 0)
     return joined.select(
         F.col("h").cast("long").alias("hour_id"),
         F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
         (F.coalesce("n_events", F.lit(0)) == 0).alias("gap_filled"),
-        F.round(
-            F.coalesce(F.col("v_u"), F.last("v_u", ignorenulls=True).over(w))
-            / F.lit(1000000.0),
-            6,
+        F.expr(
+            emit_micro(
+                "coalesce(v_u, last(v_u, true) OVER"
+                " (ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))"
+            )
         ).alias("value_locf"),
     )
 
 
 @query(
     "events_ohlc",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT epoch_ns(ts) // 3600000000000 AS h, event_id,
                epoch_ns(ts) AS ts_ns,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events
     ), ranked AS (
         SELECT h, v_u,
@@ -443,10 +444,10 @@ def events_gap_fill_q(spark, sf_dir):
     )
     SELECT CAST(h AS BIGINT) AS hour_id,
            CAST(count(*) AS BIGINT) AS n_events,
-           round(max(CASE WHEN rn_a = 1 THEN v_u END) / 1000000.0, 6) AS open,
-           round(max(v_u) / 1000000.0, 6) AS high,
-           round(min(v_u) / 1000000.0, 6) AS low,
-           round(max(CASE WHEN rn_z = 1 THEN v_u END) / 1000000.0, 6) AS close,
+           {emit_micro('max(CASE WHEN rn_a = 1 THEN v_u END)')} AS open,
+           {emit_micro('max(v_u)')} AS high,
+           {emit_micro('min(v_u)')} AS low,
+           {emit_micro('max(CASE WHEN rn_z = 1 THEN v_u END)')} AS close,
            CAST(sum(v_u) AS BIGINT) AS volume_u
     FROM ranked GROUP BY h
     """,
@@ -466,15 +467,14 @@ def events_ohlc_q(spark, sf_dir):
         F.expr("ts_ns div 3600000000000").alias("h"),
         "ts_ns",
         "event_id",
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
     )
-    order = F.struct("ts_ns", "event_id")
     return e.groupBy("h").agg(
         F.count("*").cast("long").alias("n_events"),
-        F.round(F.min_by("v_u", order) / F.lit(1000000.0), 6).alias("open"),
-        F.round(F.max("v_u") / F.lit(1000000.0), 6).alias("high"),
-        F.round(F.min("v_u") / F.lit(1000000.0), 6).alias("low"),
-        F.round(F.max_by("v_u", order) / F.lit(1000000.0), 6).alias("close"),
+        F.expr(emit_micro("min_by(v_u, struct(ts_ns, event_id))")).alias("open"),
+        F.expr(emit_micro("max(v_u)")).alias("high"),
+        F.expr(emit_micro("min(v_u)")).alias("low"),
+        F.expr(emit_micro("max_by(v_u, struct(ts_ns, event_id))")).alias("close"),
         F.sum("v_u").cast("long").alias("volume_u"),
     ).select(
         F.col("h").cast("long").alias("hour_id"),
@@ -612,7 +612,7 @@ def pmi_collocations_q(spark, sf_dir):
 
 @query(
     "query_expansion_prf",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, len(string_split(text, ' ')) AS dl,
                unnest(string_split(text, ' ')) AS term
@@ -645,12 +645,12 @@ def pmi_collocations_q(spark, sf_dir):
         FROM ft GROUP BY term, doc_id
     ), wt AS (
         SELECT term,
-               CAST(sum(CAST(round(tf / dl * bm25 * 1e6) AS BIGINT)) AS BIGINT) AS wu,
+               CAST(sum({to_micro('tf / dl * bm25')}) AS BIGINT) AS wu,
                CAST(count(*) AS BIGINT) AS n_docs
         FROM tfq GROUP BY term
     )
     SELECT CAST(row_number() OVER (ORDER BY wu DESC, term) AS BIGINT) AS rank,
-           term, round(wu / 1e6, 6) AS weight, n_docs
+           term, {emit_micro('wu')} AS weight, n_docs
     FROM wt ORDER BY wu DESC, term LIMIT 10
     """,
 )
@@ -865,7 +865,7 @@ _DD_EWMA_WSUM = " + ".join(
     oracle=f"""
     WITH e AS (
         SELECT event_type, epoch_ns(ts) // 3600000000000 AS h,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events
     ), hourly AS (
         SELECT event_type, CAST(h AS BIGINT) AS h, CAST(sum(v_u) AS BIGINT) AS v_u
@@ -878,7 +878,7 @@ _DD_EWMA_WSUM = " + ".join(
         WINDOW w AS (PARTITION BY event_type ORDER BY h)
     )
     SELECT event_type, h AS hour_id, v_u,
-           round(wsum / CAST(avail AS DOUBLE) / 1000000.0, 6) AS ewma
+           {emit_micro('wsum / CAST(avail AS DOUBLE)')} AS ewma
     FROM smoothed
     """,
 )
@@ -901,37 +901,33 @@ def events_ewma_q(spark, sf_dir):
         ev.select(
             "event_type",
             F.expr("ts_ns div 3600000000000").alias("h"),
-            F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+            F.expr(to_micro("value")).alias("v_u"),
         )
         .groupBy("event_type", "h")
         .agg(F.sum("v_u").cast("long").alias("v_u"))
     )
-    w = Window.partitionBy("event_type").orderBy("h")
-    wsum = None
-    for j in range(_EWMA_TAPS):
-        term = F.coalesce(F.lag("v_u", j).over(w), F.lit(0)) * F.lit(
-            1 << (_EWMA_TAPS - 1 - j)
-        )
-        wsum = term if wsum is None else wsum + term
-    m = F.least(F.row_number().over(w), F.lit(_EWMA_TAPS))
+    w = "OVER (PARTITION BY event_type ORDER BY h)"
+    wsum = " + ".join(
+        f"coalesce(lag(v_u, {j}) {w}, 0) * {1 << (_EWMA_TAPS - 1 - j)}"
+        for j in range(_EWMA_TAPS)
+    )
+    m = f"least(row_number() {w}, {_EWMA_TAPS})"
     # 2^(16-m) via double pow — exact for exponents ≤ 16, then long
-    avail = F.lit(65536).cast("long") - F.pow(
-        F.lit(2.0), (F.lit(_EWMA_TAPS) - m).cast("double")
-    ).cast("long")
+    avail = f"CAST(65536 AS BIGINT) - CAST(POWER(2.0D, CAST({_EWMA_TAPS} - {m} AS DOUBLE)) AS BIGINT)"
     return hourly.select(
         "event_type",
         F.col("h").cast("long").alias("hour_id"),
         "v_u",
-        F.round(wsum.cast("long") / avail / 1e6, 6).alias("ewma"),
+        F.expr(emit_micro(f"CAST({wsum} AS BIGINT) / ({avail})")).alias("ewma"),
     )
 
 
 @query(
     "incremental_agg_maintenance",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT user_id, epoch_ns(ts) AS ts_ns,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events
     )
     SELECT user_id,
@@ -961,7 +957,7 @@ def incremental_agg_maintenance_q(spark, sf_dir):
     delta slice and rewrites merged partitions. Values quantize to
     micro-unit longs so every merged field is engine-exact."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts_ns", F.expr("cast(round(value * 1000000) as bigint)").alias("v_u")
+        "user_id", "ts_ns", F.expr(to_micro("value")).alias("v_u")
     )
     split = ev.agg(
         (F.min("ts_ns") + F.expr("(max(ts_ns) - min(ts_ns)) * 4 div 5")).alias("_split")
@@ -999,7 +995,7 @@ def incremental_agg_maintenance_q(spark, sf_dir):
 
 @query(
     "token_entropy",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
                list_filter(string_split(text, ' '), x -> x <> '') AS toks
@@ -1009,17 +1005,17 @@ def incremental_agg_maintenance_q(spark, sf_dir):
                len(toks) AS n,
                len(list_distinct(toks)) AS nu,
                CAST(list_sum(list_transform(list_distinct(toks),
-                    u -> CAST(round(CAST(len(list_filter(toks, x -> x = u)) AS DOUBLE)
-                              * ln(CAST(len(list_filter(toks, x -> x = u)) AS DOUBLE))
-                              * 1e6) AS BIGINT))) AS BIGINT) AS e_sum
+                    u -> {to_micro('''CAST(len(list_filter(toks, x -> x = u)) AS DOUBLE)
+                              * ln(CAST(len(list_filter(toks, x -> x = u)) AS DOUBLE))''')}))
+                    AS BIGINT) AS e_sum
         FROM t
     )
     SELECT doc_id,
            CAST(n AS BIGINT) AS n_tokens,
            CAST(nu AS BIGINT) AS n_uniq,
-           round(ln(CAST(n AS DOUBLE)) - (e_sum / 1e6) / n, 6) AS entropy,
+           round(ln(CAST(n AS DOUBLE)) - ({from_micro('e_sum')}) / n, 6) AS entropy,
            round(CASE WHEN n > 1
-                      THEN (ln(CAST(n AS DOUBLE)) - (e_sum / 1e6) / n) / ln(CAST(n AS DOUBLE))
+                      THEN (ln(CAST(n AS DOUBLE)) - ({from_micro('e_sum')}) / n) / ln(CAST(n AS DOUBLE))
                       ELSE 0.0 END, 6) AS norm_entropy
     FROM s
     """,
@@ -1114,12 +1110,12 @@ def faceted_search_counts_q(spark, sf_dir):
 
 @query(
     "rfm_segments",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
         SELECT user_id,
                CAST(max(epoch_ns(ts)) AS BIGINT) AS last_ts_ns,
                CAST(count(*) AS BIGINT) AS n_events,
-               CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS sum_u
+               CAST(sum({to_micro('value')}) AS BIGINT) AS sum_u
         FROM events GROUP BY user_id
     ), scored AS (
         SELECT *,
@@ -1146,7 +1142,7 @@ def rfm_segments_q(spark, sf_dir):
     per_user = ev.groupBy("user_id").agg(
         F.max("ts_ns").cast("long").alias("last_ts_ns"),
         F.count("*").cast("long").alias("n_events"),
-        F.sum(F.expr("cast(round(value * 1000000) as bigint)")).cast("long").alias("sum_u"),
+        F.sum(F.expr(to_micro("value"))).cast("long").alias("sum_u"),
     )
     r = Window.orderBy(F.col("last_ts_ns").desc(), "user_id")
     f = Window.orderBy(F.col("n_events").desc(), "user_id")
@@ -1165,7 +1161,7 @@ def rfm_segments_q(spark, sf_dir):
 
 @query(
     "lm_perplexity_bigram",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT doc_id, unnest(
             CASE WHEN len(t) < 2 THEN []::VARCHAR[]
@@ -1187,7 +1183,7 @@ def rfm_segments_q(spark, sf_dir):
     ), per_doc AS (
         SELECT d.doc_id,
                CAST(sum(d.tf) AS BIGINT) AS n_bigrams,
-               CAST(sum(d.tf * CAST(round(ln((b.c_xy + 1) / CAST(p.c_x + v.v AS DOUBLE)) * 1e6) AS BIGINT)) AS BIGINT) AS lu
+               CAST(sum(d.tf * {to_micro('ln((b.c_xy + 1) / CAST(p.c_x + v.v AS DOUBLE))')}) AS BIGINT) AS lu
         FROM dtf d
         JOIN bf b USING (bigram)
         JOIN px p ON string_split(d.bigram, ' ')[1] = p.x
@@ -1195,8 +1191,8 @@ def rfm_segments_q(spark, sf_dir):
         GROUP BY d.doc_id
     )
     SELECT doc_id, n_bigrams,
-           round((lu / 1e6) / n_bigrams, 6) AS avg_logp,
-           round(exp(-((lu / 1e6) / n_bigrams)), 6) AS perplexity
+           round(({from_micro('lu')}) / n_bigrams, 6) AS avg_logp,
+           round(exp(-(({from_micro('lu')}) / n_bigrams)), 6) AS perplexity
     FROM per_doc
     """,
 )
@@ -1819,7 +1815,7 @@ def label_outliers_q(spark, sf_dir):
 
 @query(
     "tfidf_vsm_topk",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
     ), tf AS (
@@ -1830,8 +1826,8 @@ def label_outliers_q(spark, sf_dir):
         SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
     ), norms AS (
         SELECT tf.doc_id,
-               CAST(sum(CAST(round((tf.tf * ln((n.n + 1) / (d.df + 1)))
-                    * (tf.tf * ln((n.n + 1) / (d.df + 1))) * 1e6) AS BIGINT)) AS BIGINT) AS norm2_u
+               CAST(sum({to_micro('''(tf.tf * ln((n.n + 1) / (d.df + 1)))
+                    * (tf.tf * ln((n.n + 1) / (d.df + 1)))''')}) AS BIGINT) AS norm2_u
         FROM tf JOIN dfreq d USING (term) CROSS JOIN n
         GROUP BY tf.doc_id
     ), q AS (
@@ -1846,7 +1842,7 @@ def label_outliers_q(spark, sf_dir):
         WHERE d.term IN ('spark', 'join', 'fast')
     ), scored AS (
         SELECT q.doc_id,
-               q.num / (sqrt(nm.norm2_u / 1e6) * sqrt(qn.qnorm2)) AS vsm
+               q.num / (sqrt({from_micro('nm.norm2_u')}) * sqrt(qn.qnorm2)) AS vsm
         FROM q JOIN norms nm USING (doc_id) CROSS JOIN qn
     )
     SELECT CAST(row_number() OVER (ORDER BY vsm DESC, doc_id) AS BIGINT) AS rank,
@@ -1867,21 +1863,21 @@ def tfidf_vsm_topk_q(spark, sf_dir):
 
 @query(
     "grouped_latency_slo",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT event_type, CAST(round(value * 1000000) AS BIGINT) AS v_u
+        SELECT event_type, {to_micro('value')} AS v_u
         FROM events
     ), s AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                list_sort(list(v_u)) AS vs,
-               CAST(sum(CASE WHEN v_u < 1000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_ok
+               CAST(sum(CASE WHEN v_u < {MICRO} THEN 1 ELSE 0 END) AS BIGINT) AS n_ok
         FROM e GROUP BY event_type
     )
     SELECT event_type, n,
-           round(vs[CAST(n * 50 // 100 AS INTEGER) + 1] / 1e6, 6) AS p50,
-           round(vs[CAST(n * 95 // 100 AS INTEGER) + 1] / 1e6, 6) AS p95,
-           round(vs[CAST(n * 99 // 100 AS INTEGER) + 1] / 1e6, 6) AS p99,
-           round(vs[n] / 1e6, 6) AS p_max,
+           {emit_micro('vs[CAST(n * 50 // 100 AS INTEGER) + 1]')} AS p50,
+           {emit_micro('vs[CAST(n * 95 // 100 AS INTEGER) + 1]')} AS p95,
+           {emit_micro('vs[CAST(n * 99 // 100 AS INTEGER) + 1]')} AS p99,
+           {emit_micro('vs[n]')} AS p_max,
            round(n_ok / CAST(n AS DOUBLE), 6) AS slo_attainment
     FROM s
     """,
@@ -1903,40 +1899,38 @@ def grouped_latency_slo_q(spark, sf_dir, exact_quantiles: bool = True):
     exact (max/sum partials). The exact default stays the oracle
     anchor — the sketch is engine-dependent at the margin."""
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("cast(round(value * 1000000) as bigint)").alias("v_u")
+        "event_type", F.expr(to_micro("value")).alias("v_u")
     )
     if not exact_quantiles:
         s = ev.groupBy("event_type").agg(
             F.count("*").cast("long").alias("n"),
             F.percentile_approx("v_u", V.lit_array([0.5, 0.95, 0.99]), F.lit(10000)).alias("_qs"),
             F.max("v_u").alias("_mx"),
-            F.sum(F.when(F.col("v_u") < 1000000, 1).otherwise(0)).cast("long").alias("_ok"),
+            F.sum(F.when(F.col("v_u") < MICRO, 1).otherwise(0)).cast("long").alias("_ok"),
         )
         return s.select(
             "event_type",
             "n",
-            F.round(F.col("_qs")[0] / 1e6, 6).alias("p50"),
-            F.round(F.col("_qs")[1] / 1e6, 6).alias("p95"),
-            F.round(F.col("_qs")[2] / 1e6, 6).alias("p99"),
-            F.round(F.col("_mx") / 1e6, 6).alias("p_max"),
+            F.expr(emit_micro("_qs[0]")).alias("p50"),
+            F.expr(emit_micro("_qs[1]")).alias("p95"),
+            F.expr(emit_micro("_qs[2]")).alias("p99"),
+            F.expr(emit_micro("_mx")).alias("p_max"),
             F.round(F.col("_ok") / F.col("n"), 6).alias("slo_attainment"),
         )
     s = ev.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
         F.sort_array(F.collect_list("v_u")).alias("_vs"),
-        F.sum(F.when(F.col("v_u") < 1000000, 1).otherwise(0)).cast("long").alias("_ok"),
+        F.sum(F.when(F.col("v_u") < MICRO, 1).otherwise(0)).cast("long").alias("_ok"),
     )
     def pick(p):
-        return F.round(
-            F.get("_vs", F.expr(f"CAST(n * {p} div 100 AS INT)")) / 1e6, 6
-        )
+        return F.expr(emit_micro(f"get(_vs, CAST(n * {p} div 100 AS INT))"))
     return s.select(
         "event_type",
         "n",
         pick(50).alias("p50"),
         pick(95).alias("p95"),
         pick(99).alias("p99"),
-        F.round(F.element_at("_vs", -1) / 1e6, 6).alias("p_max"),
+        F.expr(emit_micro("element_at(_vs, -1)")).alias("p_max"),
         F.round(F.col("_ok") / F.col("n"), 6).alias("slo_attainment"),
     )
 
@@ -2146,26 +2140,26 @@ def multimodal_shard_plan_q(spark, sf_dir):
 
 @query(
     "pre_post_analysis",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut FROM events
     ), s AS (
         SELECT event_type,
                epoch_ns(ts) <= b.cut AS pre,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events, b
     )
     SELECT event_type,
            CAST(sum(CASE WHEN pre THEN 1 ELSE 0 END) AS BIGINT) AS n_pre,
            CAST(sum(CASE WHEN pre THEN 0 ELSE 1 END) AS BIGINT) AS n_post,
-           round(sum(CASE WHEN pre THEN v_u ELSE 0 END)
-                 / CAST(sum(CASE WHEN pre THEN 1 ELSE 0 END) AS DOUBLE) / 1e6, 6) AS mean_pre,
-           round(sum(CASE WHEN pre THEN 0 ELSE v_u END)
-                 / CAST(sum(CASE WHEN pre THEN 0 ELSE 1 END) AS DOUBLE) / 1e6, 6) AS mean_post,
-           round((sum(CASE WHEN pre THEN 0 ELSE v_u END)
+           {emit_micro('''sum(CASE WHEN pre THEN v_u ELSE 0 END)
+                 / CAST(sum(CASE WHEN pre THEN 1 ELSE 0 END) AS DOUBLE)''')} AS mean_pre,
+           {emit_micro('''sum(CASE WHEN pre THEN 0 ELSE v_u END)
+                 / CAST(sum(CASE WHEN pre THEN 0 ELSE 1 END) AS DOUBLE)''')} AS mean_post,
+           {emit_micro('''sum(CASE WHEN pre THEN 0 ELSE v_u END)
                   / CAST(sum(CASE WHEN pre THEN 0 ELSE 1 END) AS DOUBLE)
                   - sum(CASE WHEN pre THEN v_u ELSE 0 END)
-                    / CAST(sum(CASE WHEN pre THEN 1 ELSE 0 END) AS DOUBLE)) / 1e6, 6) AS mean_diff
+                    / CAST(sum(CASE WHEN pre THEN 1 ELSE 0 END) AS DOUBLE)''')} AS mean_diff
     FROM s GROUP BY event_type
     """,
 )
@@ -2186,18 +2180,18 @@ def pre_post_analysis_q(spark, sf_dir):
     s = ev.crossJoin(F.broadcast(cut)).select(
         "event_type",
         (F.col("ts_ns") <= F.col("_cut")).alias("pre"),
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
     )
-    n_pre = F.sum(F.when(F.col("pre"), 1).otherwise(0))
-    n_post = F.sum(F.when(F.col("pre"), 0).otherwise(1))
-    s_pre = F.sum(F.when(F.col("pre"), F.col("v_u")).otherwise(0))
-    s_post = F.sum(F.when(F.col("pre"), 0).otherwise(F.col("v_u")))
+    n_pre = "sum(CASE WHEN pre THEN 1 ELSE 0 END)"
+    n_post = "sum(CASE WHEN pre THEN 0 ELSE 1 END)"
+    s_pre = "sum(CASE WHEN pre THEN v_u ELSE 0 END)"
+    s_post = "sum(CASE WHEN pre THEN 0 ELSE v_u END)"
     return s.groupBy("event_type").agg(
-        n_pre.cast("long").alias("n_pre"),
-        n_post.cast("long").alias("n_post"),
-        F.round(s_pre / n_pre / 1e6, 6).alias("mean_pre"),
-        F.round(s_post / n_post / 1e6, 6).alias("mean_post"),
-        F.round((s_post / n_post - s_pre / n_pre) / 1e6, 6).alias("mean_diff"),
+        F.expr(f"CAST({n_pre} AS BIGINT)").alias("n_pre"),
+        F.expr(f"CAST({n_post} AS BIGINT)").alias("n_post"),
+        F.expr(emit_micro(f"{s_pre} / {n_pre}")).alias("mean_pre"),
+        F.expr(emit_micro(f"{s_post} / {n_post}")).alias("mean_post"),
+        F.expr(emit_micro(f"{s_post} / {n_post} - {s_pre} / {n_pre}")).alias("mean_diff"),
     )
 
 
@@ -2500,10 +2494,10 @@ def snapshot_diff_q(spark, sf_dir):
 
 @query(
     "events_twa",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT event_type, epoch_ns(ts) AS ts_ns, event_id,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events
     ), seg AS (
         SELECT event_type, v_u,
@@ -2514,7 +2508,7 @@ def snapshot_diff_q(spark, sf_dir):
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_segments,
            CAST(sum(dt) AS BIGINT) AS span_ns,
-           round(sum(v_u * (dt // 1000000)) / CAST(sum(dt // 1000000) AS DOUBLE) / 1e6, 6) AS twa
+           {emit_micro('sum(v_u * (dt // 1000000)) / CAST(sum(dt // 1000000) AS DOUBLE)')} AS twa
     FROM seg WHERE dt IS NOT NULL
     GROUP BY event_type
     """,
@@ -2533,18 +2527,13 @@ def events_twa_q(spark, sf_dir):
     w = Window.partitionBy("event_type").orderBy("ts_ns", "event_id")
     seg = ev.select(
         "event_type",
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
         (F.lead("ts_ns").over(w) - F.col("ts_ns")).alias("dt"),
     ).filter(F.col("dt").isNotNull())
     return seg.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_segments"),
         F.sum("dt").cast("long").alias("span_ns"),
-        F.round(
-            F.sum(F.col("v_u") * F.expr("dt div 1000000"))
-            / F.sum(F.expr("dt div 1000000"))
-            / 1e6,
-            6,
-        ).alias("twa"),
+        F.expr(emit_micro("sum(v_u * (dt div 1000000)) / sum(dt div 1000000)")).alias("twa"),
     )
 
 
@@ -2620,7 +2609,7 @@ def kmv_distinct_by_group_q(spark, sf_dir):
 
 @query(
     "events_anomaly_mad",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
         SELECT epoch_ns(ts) // 3600000000000 AS hour_id,
                CAST(count(*) AS BIGINT) AS cnt
@@ -2638,12 +2627,9 @@ def kmv_distinct_by_group_q(spark, sf_dir):
     SELECT h.hour_id, h.cnt,
            CAST(m.med AS BIGINT) AS med,
            CAST(d.mad AS BIGINT) AS mad,
-           CAST((2 * (674500 * (h.cnt - m.med))
-                 + CASE WHEN h.cnt < m.med THEN -d.mad ELSE d.mad END)
-                // (2 * d.mad) AS DOUBLE) / 1000000 AS modified_z,
-           abs((2 * (674500 * (h.cnt - m.med))
-                + CASE WHEN h.cnt < m.med THEN -d.mad ELSE d.mad END)
-               // (2 * d.mad)) > 3500000 AS is_anomaly
+           {from_micro(f"CAST({dd_round_div('674500 * (h.cnt - m.med)', 'd.mad')} AS DOUBLE)")}
+               AS modified_z,
+           abs({dd_round_div('674500 * (h.cnt - m.med)', 'd.mad')}) > 3500000 AS is_anomaly
     FROM hourly h, med m, mad d
     """,
 )
@@ -2680,10 +2666,7 @@ def events_anomaly_mad_q(spark, sf_dir):
     # decimal boundary where the engines' round() primitives disagree;
     # 0.6745 = 674500 micro exactly, so z_u is an exact round-div
     # integer and the displayed double is ONE exact-integer division)
-    z_u = F.expr(
-        "(2 * (674500 * (cnt - med))"
-        " + CASE WHEN cnt < med THEN -mad ELSE mad END) div (2 * mad)"
-    )
+    z_u = round_div("674500 * (cnt - med)", "mad")
     return (
         hourly.crossJoin(F.broadcast(med))
         .crossJoin(F.broadcast(mad))
@@ -2692,8 +2675,8 @@ def events_anomaly_mad_q(spark, sf_dir):
             "cnt",
             "med",
             "mad",
-            (z_u.cast("double") / 1000000).alias("modified_z"),
-            (F.abs(z_u) > 3500000).alias("is_anomaly"),
+            F.expr(from_micro(f"CAST({z_u} AS DOUBLE)")).alias("modified_z"),
+            F.expr(f"abs({z_u}) > 3500000").alias("is_anomaly"),
         )
     )
 
@@ -2892,9 +2875,9 @@ def discount_elasticity_q(spark, sf_dir):
 
 @query(
     "trimmed_mean_stats",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT event_type, CAST(round(value * 1000000) AS BIGINT) AS v_u
+        SELECT event_type, {to_micro('value')} AS v_u
         FROM events
     ), s AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -2907,8 +2890,8 @@ def discount_elasticity_q(spark, sf_dir):
         FROM s
     )
     SELECT event_type, n,
-           round(su / CAST(n AS DOUBLE) / 1e6, 6) AS mean,
-           round(CAST(list_sum(core) AS BIGINT) / CAST(len(core) AS DOUBLE) / 1e6, 6) AS trimmed_mean,
+           {emit_micro('su / CAST(n AS DOUBLE)')} AS mean,
+           {emit_micro('CAST(list_sum(core) AS BIGINT) / CAST(len(core) AS DOUBLE)')} AS trimmed_mean,
            CAST(2 * cut AS BIGINT) AS n_trimmed
     FROM t
     """,
@@ -2928,7 +2911,7 @@ def trimmed_mean_stats_q(spark, sf_dir, exact_quantiles: bool = True):
     pass two — two scans, no row-count-sized buffer anywhere. Same
     output contract; n_trimmed counts the actually-excluded rows."""
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("cast(round(value * 1000000) as bigint)").alias("v_u")
+        "event_type", F.expr(to_micro("value")).alias("v_u")
     )
     if not exact_quantiles:
         fences = ev.groupBy("event_type").agg(
@@ -2949,8 +2932,8 @@ def trimmed_mean_stats_q(spark, sf_dir, exact_quantiles: bool = True):
             .select(
                 "event_type",
                 "n",
-                F.round(F.col("_su") / F.col("n") / 1e6, 6).alias("mean"),
-                F.round(F.col("_core_su") / F.col("_core_n") / 1e6, 6).alias("trimmed_mean"),
+                F.expr(emit_micro("_su / n")).alias("mean"),
+                F.expr(emit_micro("_core_su / _core_n")).alias("trimmed_mean"),
                 (F.col("n") - F.col("_core_n")).cast("long").alias("n_trimmed"),
             )
         )
@@ -2959,15 +2942,15 @@ def trimmed_mean_stats_q(spark, sf_dir, exact_quantiles: bool = True):
         F.sort_array(F.collect_list("v_u")).alias("_vs"),
         F.sum("v_u").cast("long").alias("_su"),
     )
-    cut = F.expr("CAST(n div 10 AS INT)")
-    core = F.slice(F.col("_vs"), cut + 1, F.col("n").cast("int") - 2 * cut)
-    core_sum = F.aggregate(core, F.lit(0).cast("long"), lambda a, b: a + b)
+    cut = "CAST(n div 10 AS INT)"
+    core = f"slice(_vs, {cut} + 1, CAST(n AS INT) - {cut} * 2)"
+    core_sum = f"aggregate({core}, CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     return s.select(
         "event_type",
         "n",
-        F.round(F.col("_su") / F.col("n") / 1e6, 6).alias("mean"),
-        F.round(core_sum / F.size(core) / 1e6, 6).alias("trimmed_mean"),
-        (F.lit(2) * cut).cast("long").alias("n_trimmed"),
+        F.expr(emit_micro("_su / n")).alias("mean"),
+        F.expr(emit_micro(f"{core_sum} / size({core})")).alias("trimmed_mean"),
+        (F.lit(2) * F.expr(cut)).cast("long").alias("n_trimmed"),
     )
 
 
@@ -3066,16 +3049,16 @@ def revenue_concentration_q(spark, sf_dir):
 
 @query(
     "seasonality_profile",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT CAST((epoch_ns(ts) // 3600000000000) % 24 AS BIGINT) AS hour_of_day,
                CAST((epoch_ns(ts) // 86400000000000 + 4) % 7 AS BIGINT) AS day_of_week,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events
     )
     SELECT hour_of_day, day_of_week,
            CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(v_u) / CAST(count(*) AS DOUBLE) / 1e6, 6) AS mean_value
+           {emit_micro('sum(v_u) / CAST(count(*) AS DOUBLE)')} AS mean_value
     FROM e GROUP BY hour_of_day, day_of_week
     """,
 )
@@ -3092,12 +3075,12 @@ def seasonality_profile_q(spark, sf_dir):
         ev.select(
             F.expr("(ts_ns div 3600000000000) % 24").cast("long").alias("hour_of_day"),
             F.expr("(ts_ns div 86400000000000 + 4) % 7").cast("long").alias("day_of_week"),
-            F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+            F.expr(to_micro("value")).alias("v_u"),
         )
         .groupBy("hour_of_day", "day_of_week")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("v_u") / F.count("*") / 1e6, 6).alias("mean_value"),
+            F.expr(emit_micro("sum(v_u) / count(*)")).alias("mean_value"),
         )
     )
 

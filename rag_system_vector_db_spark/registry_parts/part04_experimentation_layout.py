@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -134,16 +135,16 @@ def corr_matrix_q(spark, sf_dir):
 
 @query(
     "cusum_changepoint",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT event_type, event_id, epoch_ns(ts) AS ts_ns,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u,
+               {to_micro('value')} AS v_u,
                row_number() OVER w AS t,
-               sum(CAST(round(value * 1000000) AS BIGINT)) OVER
+               sum({to_micro('value')}) OVER
                    (PARTITION BY event_type ORDER BY epoch_ns(ts), event_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pfx,
                count(*) OVER (PARTITION BY event_type) AS n,
-               sum(CAST(round(value * 1000000) AS BIGINT))
+               sum({to_micro('value')})
                    OVER (PARTITION BY event_type) AS total
         FROM events
         WINDOW w AS (PARTITION BY event_type ORDER BY epoch_ns(ts), event_id)
@@ -156,7 +157,7 @@ def corr_matrix_q(spark, sf_dir):
     )
     SELECT event_type, CAST(n AS BIGINT) AS n, CAST(t AS BIGINT) AS t_star,
            ts_ns AS ts_ns_star,
-           round(s_abs / CAST(n AS DOUBLE) / 1e6, 6) AS cusum_peak
+           {emit_micro('s_abs / CAST(n AS DOUBLE)')} AS cusum_peak
     FROM c WHERE rk = 1
     """,
 )
@@ -179,7 +180,7 @@ def cusum_changepoint_q(spark, sf_dir):
         "event_type",
         "event_id",
         "ts_ns",
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
     ).select(
         "event_type",
         "ts_ns",
@@ -205,9 +206,7 @@ def cusum_changepoint_q(spark, sf_dir):
         F.col("n").cast("long").alias("n"),
         F.col("t").cast("long").alias("t_star"),
         F.col("ts_ns").alias("ts_ns_star"),
-        F.round(F.col("s_abs") / F.col("n").cast("double") / F.lit(1e6), 6).alias(
-            "cusum_peak"
-        ),
+        F.expr(emit_micro("s_abs / CAST(n AS DOUBLE)")).alias("cusum_peak"),
     )
 
 
@@ -675,7 +674,7 @@ def _classifier_calibration_oracle() -> str:
         GROUP BY f.doc_id
     ), probs AS (
         SELECT doc_id,
-               round(1.0 / (1.0 + exp(-((sum_micro::DOUBLE) / (n_tokens * 1000000.0)))), 6) AS prob
+               round(1.0 / (1.0 + exp(-((sum_micro::DOUBLE) / (n_tokens * {MICRO}.0)))), 6) AS prob
         FROM per
     ), labels AS (
         SELECT doc_id,
@@ -689,7 +688,7 @@ def _classifier_calibration_oracle() -> str:
         FROM documents
     ), binned AS (
         SELECT least(CAST(floor(p.prob * 10) AS BIGINT), 9) AS bin,
-               CAST(round(p.prob * 1000000) AS BIGINT) AS prob_u,
+               {to_micro('p.prob')} AS prob_u,
                CASE WHEN l.label THEN 1 ELSE 0 END AS pos
         FROM probs p JOIN labels l ON l.doc_id = p.doc_id
     ), g AS (
@@ -699,11 +698,11 @@ def _classifier_calibration_oracle() -> str:
         FROM binned GROUP BY bin
     )
     SELECT bin, n, n_pos,
-           round(sum_prob_u / (n * 1000000.0), 6) AS mean_prob,
+           round(sum_prob_u / (n * {MICRO}.0), 6) AS mean_prob,
            round(n_pos / CAST(n AS DOUBLE), 6) AS frac_pos,
-           round(abs(sum_prob_u / (n * 1000000.0) - n_pos / CAST(n AS DOUBLE)), 6) AS gap,
+           round(abs(sum_prob_u / (n * {MICRO}.0) - n_pos / CAST(n AS DOUBLE)), 6) AS gap,
            round(n / CAST(sum(n) OVER () AS DOUBLE)
-                 * abs(sum_prob_u / (n * 1000000.0) - n_pos / CAST(n AS DOUBLE)), 6) AS ece_contrib
+                 * abs(sum_prob_u / (n * {MICRO}.0) - n_pos / CAST(n AS DOUBLE)), 6) AS ece_contrib
     FROM g
     """
 
@@ -717,7 +716,7 @@ def classifier_calibration_q(spark, sf_dir):
     rate, the |gap|, and the corpus-weighted ECE contribution (Σ = the
     scalar ECE). One classifier pass + one zero-shuffle gate pass share
     the doc_id join key; mean probs come from exact micro-unit integer
-    sums (the 6-dp-rounded prob × 1e6 is integral, so engines sum
+    sums (the 6-dp-rounded prob is integral in micro-units, so engines sum
     identical longs); everything past the join is a ≤10-row frame.
     The window total rides that tiny frame — no extra action."""
     from ..operators import curation
@@ -727,7 +726,7 @@ def classifier_calibration_q(spark, sf_dir):
     labels = curation.quality_filters(docs).select("doc_id", F.col("keep").alias("label"))
     binned = probs.join(labels, "doc_id").select(
         F.least(F.floor(F.col("prob") * 10).cast("long"), F.lit(9).cast("long")).alias("bin"),
-        F.expr("cast(round(prob * 1000000) as bigint)").alias("prob_u"),
+        F.expr(to_micro("prob")).alias("prob_u"),
         F.when(F.col("label"), 1).otherwise(0).alias("pos"),
     )
     g = binned.groupBy("bin").agg(
@@ -735,7 +734,7 @@ def classifier_calibration_q(spark, sf_dir):
         F.sum("pos").cast("long").alias("n_pos"),
         F.sum("prob_u").cast("long").alias("sum_prob_u"),
     )
-    mean_prob = F.col("sum_prob_u") / (F.col("n") * F.lit(1000000.0))
+    mean_prob = F.col("sum_prob_u") / (F.col("n") * F.lit(float(MICRO)))
     frac_pos = F.col("n_pos") / F.col("n").cast("double")
     total = F.sum("n").over(Window.partitionBy())
     return g.select(
@@ -756,19 +755,19 @@ ORACLES["classifier_calibration"] = _classifier_calibration_oracle()
 
 @query(
     "events_histogram_equidepth",
-    oracle="""
+    oracle=f"""
     WITH r AS (
         SELECT event_type, event_id,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u,
+               {to_micro('value')} AS v_u,
                ntile(10) OVER (PARTITION BY event_type
                                ORDER BY value, event_id) AS decile
         FROM events
     )
     SELECT event_type, CAST(decile AS BIGINT) AS decile,
            CAST(count(*) AS BIGINT) AS n,
-           round(min(v_u) / 1e6, 6) AS lo,
-           round(max(v_u) / 1e6, 6) AS hi,
-           round(sum(v_u) / count(*) / 1e6, 6) AS mean_v
+           {emit_micro('min(v_u)')} AS lo,
+           {emit_micro('max(v_u)')} AS hi,
+           {emit_micro('sum(v_u) / count(*)')} AS mean_v
     FROM r GROUP BY event_type, decile
     """,
 )
@@ -790,7 +789,7 @@ def events_histogram_equidepth_q(spark, sf_dir, exact_quantiles: bool = True):
     ev = load_table(spark, sf_dir, "events")
     if not exact_quantiles:
         vu = ev.select(
-            "event_type", F.expr("cast(round(value * 1000000) as bigint)").alias("v_u")
+            "event_type", F.expr(to_micro("value")).alias("v_u")
         )
         edges = vu.groupBy("event_type").agg(
             F.percentile_approx(
@@ -821,14 +820,14 @@ def events_histogram_equidepth_q(spark, sf_dir, exact_quantiles: bool = True):
         w = Window.partitionBy("event_type").orderBy("value", "event_id")
         r = ev.select(
             "event_type",
-            F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+            F.expr(to_micro("value")).alias("v_u"),
             F.ntile(10).over(w).alias("decile"),
         )
     return r.groupBy("event_type", F.col("decile").cast("long").alias("decile")).agg(
         F.count("*").cast("long").alias("n"),
-        F.round(F.min("v_u") / F.lit(1e6), 6).alias("lo"),
-        F.round(F.max("v_u") / F.lit(1e6), 6).alias("hi"),
-        F.round(F.sum("v_u") / F.count("*") / F.lit(1e6), 6).alias("mean_v"),
+        F.expr(emit_micro("min(v_u)")).alias("lo"),
+        F.expr(emit_micro("max(v_u)")).alias("hi"),
+        F.expr(emit_micro("sum(v_u) / count(*)")).alias("mean_v"),
     )
 
 
@@ -893,7 +892,7 @@ def describe_collection_q(spark, sf_dir):
 
 @query(
     "chi_square_independence",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
         SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS observed
         FROM lineitem GROUP BY l_returnflag, l_linestatus
@@ -918,8 +917,7 @@ def describe_collection_q(spark, sf_dir):
         FROM tot CROSS JOIN dims
     )
     SELECT l_returnflag, l_linestatus, observed, expected, contribution,
-           round(CAST(sum(CAST(round(contribution * 1000000) AS BIGINT)) OVER () AS DOUBLE)
-                 / 1000000, 6) AS chi2,
+           {emit_micro(f"CAST(sum({to_micro('contribution')}) OVER () AS DOUBLE)")} AS chi2,
            dof
     FROM c
     """,
@@ -969,13 +967,9 @@ def chi_square_independence_q(spark, sf_dir):
         "observed",
         "expected",
         "contribution",
-        F.round(
-            F.sum(
-                F.expr("cast(round(contribution * 1000000) as bigint)")
-            ).over(Window.partitionBy()).cast("double")
-            / F.lit(1000000),
-            6,
-        ).alias("chi2"),
+        F.expr(emit_micro(f"CAST(sum({to_micro('contribution')}) OVER () AS DOUBLE)")).alias(
+            "chi2"
+        ),
         "dof",
     )
 
@@ -1088,7 +1082,7 @@ def layout_skipping_compare_q(spark, sf_dir):
 
 @query(
     "events_decayed_topk",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
                CAST(count(*) AS BIGINT) AS cnt
@@ -1100,12 +1094,12 @@ def layout_skipping_compare_q(spark, sf_dir):
     ), s AS (
         SELECT event_type,
                CAST(sum(cnt) AS BIGINT) AS n_events,
-               CAST(sum(cnt * CAST(round(pow(2.0, -k) * 1000000) AS BIGINT)) AS BIGINT)
+               CAST(sum(cnt * {to_micro('pow(2.0, -k)')}) AS BIGINT)
                    AS decayed_u
         FROM a GROUP BY event_type
     )
     SELECT event_type, n_events,
-           round(CAST(decayed_u AS DOUBLE) / 1000000, 6) AS decayed_count,
+           {emit_micro('CAST(decayed_u AS DOUBLE)')} AS decayed_count,
            CAST(rank() OVER (ORDER BY decayed_u DESC, event_type) AS BIGINT) AS rnk
     FROM s
     """,
@@ -1137,7 +1131,7 @@ def events_decayed_topk_q(spark, sf_dir):
         F.sum("cnt").cast("long").alias("n_events"),
         F.sum(
             F.col("cnt")
-            * F.expr("cast(round(pow(2.0, -k) * 1000000) as bigint)")
+            * F.expr(to_micro("pow(2.0, -k)"))
         )
         .cast("long")
         .alias("decayed_u"),
@@ -1145,9 +1139,7 @@ def events_decayed_topk_q(spark, sf_dir):
     return s.select(
         "event_type",
         "n_events",
-        F.round(F.col("decayed_u").cast("double") / F.lit(1000000), 6).alias(
-            "decayed_count"
-        ),
+        F.expr(emit_micro("CAST(decayed_u AS DOUBLE)")).alias("decayed_count"),
         F.rank()
         .over(Window.orderBy(F.col("decayed_u").desc(), "event_type"))
         .cast("long")
@@ -1581,7 +1573,7 @@ def survival_km_q(spark, sf_dir):
 
 @query(
     "silhouette_simplified",
-    oracle="""
+    oracle=f"""
     WITH cd AS (
         SELECT label, pos, round(avg(v), 6) AS cv
         FROM (
@@ -1604,7 +1596,7 @@ def survival_km_q(spark, sf_dir):
         FROM dist GROUP BY vec_id, label
     ), s AS (
         SELECT label,
-               CAST(round((b - a) / greatest(a, b) * 1000000) AS BIGINT) AS s_u
+               {to_micro('(b - a) / greatest(a, b)')} AS s_u
         FROM ab
     ), lab AS (
         SELECT CAST(label AS BIGINT) AS label, CAST(count(*) AS BIGINT) AS n,
@@ -1612,8 +1604,8 @@ def survival_km_q(spark, sf_dir):
         FROM s GROUP BY label
     )
     SELECT label, n,
-           round(CAST(su AS DOUBLE) / n / 1000000, 6) AS mean_silhouette,
-           round(CAST(sum(su) OVER () AS DOUBLE) / sum(n) OVER () / 1000000, 6)
+           {emit_micro('CAST(su AS DOUBLE) / n')} AS mean_silhouette,
+           {emit_micro('CAST(sum(su) OVER () AS DOUBLE) / sum(n) OVER ()')}
                AS overall_silhouette
     FROM lab
     """,
@@ -1653,28 +1645,25 @@ def silhouette_simplified_q(spark, sf_dir):
     s = ab.select(
         "label",
         F.expr(
-            "cast(round((b - a) / greatest(a, b) * 1000000) as bigint)"
+            to_micro("(b - a) / greatest(a, b)")
         ).alias("s_u"),
     )
     lab = s.groupBy(F.col("label").cast("long").alias("label")).agg(
         F.count("*").cast("long").alias("n"), F.sum("s_u").cast("long").alias("su")
     )
-    w = Window.partitionBy()
     return lab.select(
         "label",
         "n",
-        F.round(F.col("su").cast("double") / F.col("n") / F.lit(1000000), 6).alias(
-            "mean_silhouette"
+        F.expr(emit_micro("CAST(su AS DOUBLE) / n")).alias("mean_silhouette"),
+        F.expr(emit_micro("CAST(sum(su) OVER () AS DOUBLE) / sum(n) OVER ()")).alias(
+            "overall_silhouette"
         ),
-        F.round(
-            F.sum("su").over(w).cast("double") / F.sum("n").over(w) / F.lit(1000000), 6
-        ).alias("overall_silhouette"),
     )
 
 
 @query(
     "zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT unnest(string_split(text, ' ')) AS term FROM documents
     ), tc AS (
@@ -1684,8 +1673,8 @@ def silhouette_simplified_q(spark, sf_dir):
         SELECT cnt, CAST(row_number() OVER (ORDER BY cnt DESC, term) AS BIGINT) AS rnk
         FROM tc
     ), top AS (
-        SELECT CAST(round(ln(CAST(rnk AS DOUBLE)) * 1000000) AS BIGINT) AS x_u,
-               CAST(round(ln(CAST(cnt AS DOUBLE)) * 1000000) AS BIGINT) AS y_u
+        SELECT {to_micro('ln(CAST(rnk AS DOUBLE))')} AS x_u,
+               {to_micro('ln(CAST(cnt AS DOUBLE))')} AS y_u
         FROM ranked WHERE rnk <= 100
     ), s AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1698,9 +1687,9 @@ def silhouette_simplified_q(spark, sf_dir):
     SELECT n AS n_terms,
            round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
                  / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx), 6) AS zipf_slope,
-           round((CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
+           {emit_micro('''(CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
                   / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) * sx)
-                 / n / 1000000, 6) AS ln_c_intercept,
+                 / n''')} AS ln_c_intercept,
            round(pow(CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy, 2)
                  / ((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
                     * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6) AS r2
@@ -1732,8 +1721,8 @@ def zipf_fit_q(spark, sf_dir):
         .alias("rnk"),
     ).filter(F.col("rnk") <= 100)
     top = ranked.select(
-        F.expr("cast(round(ln(cast(rnk as double)) * 1000000) as bigint)").alias("x_u"),
-        F.expr("cast(round(ln(cast(cnt as double)) * 1000000) as bigint)").alias("y_u"),
+        F.expr(to_micro("ln(cast(rnk as double))")).alias("x_u"),
+        F.expr(to_micro("ln(cast(cnt as double))")).alias("y_u"),
     )
     s = top.agg(
         F.count("*").cast("long").alias("n"),
@@ -1743,26 +1732,23 @@ def zipf_fit_q(spark, sf_dir):
         F.sum(F.col("y_u") * F.col("y_u")).cast("long").alias("syy"),
         F.sum(F.col("x_u") * F.col("y_u")).cast("long").alias("sxy"),
     )
-    nd = F.col("n").cast("double")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    den = nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
-    deny = nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy")
+    num_sql = "CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy"
+    den_sql = "CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx"
+    num, den = F.expr(num_sql), F.expr(den_sql)
+    deny = F.expr("CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy")
     return s.select(
         F.col("n").alias("n_terms"),
         F.round(num / den, 6).alias("zipf_slope"),
-        F.round(
-            (F.col("sy").cast("double") - num / den * F.col("sx"))
-            / F.col("n")
-            / F.lit(1000000),
-            6,
-        ).alias("ln_c_intercept"),
+        F.expr(emit_micro(f"(CAST(sy AS DOUBLE) - ({num_sql}) / ({den_sql}) * sx) / n")).alias(
+            "ln_c_intercept"
+        ),
         F.round(F.pow(num, F.lit(2.0)) / (den * deny), 6).alias("r2"),
     )
 
 
 @query(
     "jackknife_variance",
-    oracle="""
+    oracle=f"""
     WITH j AS (
         SELECT n.n_name,
                CAST(count(*) AS BIGINT) AS n_g,
@@ -1779,8 +1765,7 @@ def zipf_fit_q(spark, sf_dir):
         FROM j
     ), t AS (
         SELECT g, nn, ss,
-               CAST(round(CAST(ss - s_g AS DOUBLE) / (nn - n_g) / 100 * 1000000)
-                    AS BIGINT) AS t_u
+               {to_micro('CAST(ss - s_g AS DOUBLE) / (nn - n_g) / 100')} AS t_u
         FROM w
     ), m AS (
         SELECT g, nn, ss, t_u,
@@ -1788,18 +1773,17 @@ def zipf_fit_q(spark, sf_dir):
         FROM t
     ), d AS (
         SELECT g, nn, ss, st_u,
-               CAST(round(pow(CAST(t_u AS DOUBLE) / 1000000
-                              - CAST(st_u AS DOUBLE) / g / 1000000, 2) * 1000000)
-                    AS BIGINT) AS dev_u
+               {to_micro(f"pow({from_micro('CAST(t_u AS DOUBLE)')} - {from_micro('CAST(st_u AS DOUBLE) / g')}, 2)")}
+                   AS dev_u
         FROM m
     )
     SELECT CAST(g AS BIGINT) AS n_groups,
            round(CAST(ss AS DOUBLE) / nn / 100, 6) AS theta_hat,
-           round(CAST(st_u AS DOUBLE) / g / 1000000, 6) AS theta_bar,
+           {emit_micro('CAST(st_u AS DOUBLE) / g')} AS theta_bar,
            round(sqrt((CAST(g AS DOUBLE) - 1) / g
-                      * (CAST(sum(dev_u) AS DOUBLE) / 1000000)), 6) AS jack_se,
+                      * ({from_micro('CAST(sum(dev_u) AS DOUBLE)')})), 6) AS jack_se,
            round((CAST(g AS DOUBLE) - 1)
-                 * (CAST(st_u AS DOUBLE) / g / 1000000
+                 * ({from_micro('CAST(st_u AS DOUBLE) / g')}
                     - CAST(ss AS DOUBLE) / nn / 100), 6) AS bias_est
     FROM d GROUP BY g, nn, ss, st_u
     """,
@@ -1841,7 +1825,7 @@ def jackknife_variance_q(spark, sf_dir):
         "nn",
         "ss",
         F.expr(
-            "cast(round(cast(ss - s_g as double) / (nn - n_g) / 100 * 1000000) as bigint)"
+            to_micro("cast(ss - s_g as double) / (nn - n_g) / 100")
         ).alias("t_u"),
     )
     m = t.select("g", "nn", "ss", "t_u", F.sum("t_u").over(wa).cast("long").alias("st_u"))
@@ -1851,27 +1835,22 @@ def jackknife_variance_q(spark, sf_dir):
         "ss",
         "st_u",
         F.expr(
-            "cast(round(pow(cast(t_u as double) / 1000000"
-            " - cast(st_u as double) / g / 1000000, 2) * 1000000) as bigint)"
+            to_micro(
+                f"pow({from_micro('cast(t_u as double)')}"
+                f" - {from_micro('cast(st_u as double) / g')}, 2)"
+            )
         ).alias("dev_u"),
     )
-    gd = F.col("g").cast("double")
     return d.groupBy("g", "nn", "ss", "st_u").agg(
         F.round(F.col("ss").cast("double") / F.col("nn") / F.lit(100), 6).alias("_th"),
-        F.round(F.col("st_u").cast("double") / F.col("g") / F.lit(1000000), 6).alias("_tb"),
-        F.round(
-            F.sqrt(
-                (gd - 1) / gd * (F.sum("dev_u").cast("double") / F.lit(1000000))
-            ),
-            6,
+        F.expr(emit_micro("CAST(st_u AS DOUBLE) / g")).alias("_tb"),
+        F.expr(
+            "round(sqrt((CAST(g AS DOUBLE) - 1) / CAST(g AS DOUBLE)"
+            f" * {from_micro('CAST(sum(dev_u) AS DOUBLE)')}), 6)"
         ).alias("_se"),
-        F.round(
-            (gd - 1)
-            * (
-                F.col("st_u").cast("double") / F.col("g") / F.lit(1000000)
-                - F.col("ss").cast("double") / F.col("nn") / F.lit(100)
-            ),
-            6,
+        F.expr(
+            f"round((CAST(g AS DOUBLE) - 1) * ({from_micro('CAST(st_u AS DOUBLE) / g')}"
+            " - CAST(ss AS DOUBLE) / nn / 100), 6)"
         ).alias("_bias"),
     ).select(
         F.col("g").cast("long").alias("n_groups"),
@@ -1909,14 +1888,14 @@ _BOOT_U = H.dd_md5_long("(e.event_id::VARCHAR || ':' || r::VARCHAR)") + " / 1152
     "bootstrap_ci",
     oracle=f"""
     WITH reps AS (
-        SELECT r, CAST(round(e.value * 1000000) AS BIGINT) AS v_u,
+        SELECT r, {to_micro('e.value')} AS v_u,
                {_poisson1_case(_BOOT_U)} AS w
         FROM events e CROSS JOIN (SELECT unnest(range(50)) AS r)
     ), m AS (
         SELECT r, CAST(sum(w) AS BIGINT) AS n_w, CAST(sum(w * v_u) AS BIGINT) AS s_w
         FROM reps GROUP BY r
     ), mm AS (
-        SELECT CAST(s_w AS DOUBLE) / n_w / 1000000 AS mean_r,
+        SELECT {from_micro('CAST(s_w AS DOUBLE) / n_w')} AS mean_r,
                CAST(round(CAST(s_w AS DOUBLE) / n_w) AS BIGINT) AS mean_u
         FROM m
     ), s AS (
@@ -1927,15 +1906,15 @@ _BOOT_U = H.dd_md5_long("(e.event_id::VARCHAR || ':' || r::VARCHAR)") + " / 1152
         FROM mm
     ), pt AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS sv
+               CAST(sum({to_micro('value')}) AS BIGINT) AS sv
         FROM events
     )
     SELECT pt.n AS n_rows, s.n_reps,
-           round(CAST(pt.sv AS DOUBLE) / pt.n / 1000000, 6) AS point_mean,
+           {emit_micro('CAST(pt.sv AS DOUBLE) / pt.n')} AS point_mean,
            round(s.vs[2], 6) AS ci_lo,
            round(s.vs[49], 6) AS ci_hi,
-           round(sqrt((CAST(s.smm AS DOUBLE) - CAST(s.sm AS DOUBLE) * s.sm / s.n_reps)
-                      / (s.n_reps - 1)) / 1000000, 6) AS boot_se
+           {emit_micro('''sqrt((CAST(s.smm AS DOUBLE) - CAST(s.sm AS DOUBLE) * s.sm / s.n_reps)
+                      / (s.n_reps - 1))''')} AS boot_se
     FROM s, pt
     """,
 )
@@ -1961,7 +1940,7 @@ def bootstrap_ci_q(spark, sf_dir):
         w_col = F.when(u_col < F.lit(_POISSON1_CUM[k]), F.lit(k)).otherwise(w_col)
     reps = ev.select(
         "event_id",
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
         F.explode(F.sequence(F.lit(0), F.lit(49))).alias("r"),
     ).select("r", "v_u", w_col.alias("w"))
     m = reps.groupBy("r").agg(
@@ -1969,7 +1948,7 @@ def bootstrap_ci_q(spark, sf_dir):
         F.sum(F.col("w") * F.col("v_u")).cast("long").alias("s_w"),
     )
     mm = m.select(
-        (F.col("s_w").cast("double") / F.col("n_w") / F.lit(1000000)).alias("mean_r"),
+        F.expr(from_micro("CAST(s_w AS DOUBLE) / n_w")).alias("mean_r"),
         F.expr("cast(round(cast(s_w as double) / n_w) as bigint)").alias("mean_u"),
     )
     s = mm.agg(
@@ -1980,27 +1959,19 @@ def bootstrap_ci_q(spark, sf_dir):
     )
     pt = ev.agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(F.expr("cast(round(value * 1000000) as bigint)")).cast("long").alias("sv"),
+        F.sum(F.expr(to_micro("value"))).cast("long").alias("sv"),
     )
-    nr = F.col("n_reps").cast("double")
     return s.crossJoin(F.broadcast(pt)).select(
         F.col("n").alias("n_rows"),
         "n_reps",
-        F.round(F.col("sv").cast("double") / F.col("n") / F.lit(1000000), 6).alias(
-            "point_mean"
-        ),
+        F.expr(emit_micro("CAST(sv AS DOUBLE) / n")).alias("point_mean"),
         F.round(F.get("vs", F.lit(1)), 6).alias("ci_lo"),
         F.round(F.get("vs", F.lit(48)), 6).alias("ci_hi"),
-        F.round(
-            F.sqrt(
-                (
-                    F.col("smm").cast("double")
-                    - F.col("sm").cast("double") * F.col("sm") / nr
-                )
-                / (nr - 1)
+        F.expr(
+            emit_micro(
+                "sqrt((CAST(smm AS DOUBLE) - CAST(sm AS DOUBLE) * sm / CAST(n_reps AS DOUBLE))"
+                " / (CAST(n_reps AS DOUBLE) - 1))"
             )
-            / F.lit(1000000),
-            6,
         ).alias("boot_se"),
     )
 
@@ -2242,15 +2213,15 @@ def source_distinctive_terms_q(spark, sf_dir):
 
 @query(
     "psi_drift",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut,
-               min(CAST(round(value * 1000000) AS BIGINT)) AS lo,
-               max(CAST(round(value * 1000000) AS BIGINT)) AS hi
+               min({to_micro('value')}) AS lo,
+               max({to_micro('value')}) AS hi
         FROM events
     ), s AS (
         SELECT event_type,
-               least(CAST((CAST(round(value * 1000000) AS BIGINT) - b.lo) * 10
+               least(CAST(({to_micro('value')} - b.lo) * 10
                           // (b.hi - b.lo + 1) AS BIGINT), 9) AS bin,
                CASE WHEN epoch_ns(ts) <= b.cut THEN 1 ELSE 0 END AS pre
         FROM events, b
@@ -2274,8 +2245,8 @@ def source_distinctive_terms_q(spark, sf_dir):
     )
     SELECT event_type, CAST(bin AS BIGINT) AS bin, c_a AS n_pre, c_b AS n_post,
            contrib,
-           round(CAST(sum(CAST(round(contrib * 1000000) AS BIGINT))
-                      OVER (PARTITION BY event_type) AS DOUBLE) / 1000000, 6) AS psi
+           {emit_micro(f"CAST(sum({to_micro('contrib')}) OVER (PARTITION BY event_type) AS DOUBLE)")}
+               AS psi
     FROM c
     """,
 )
@@ -2293,14 +2264,14 @@ def psi_drift_q(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(
         F.expr("(min(ts_ns) + max(ts_ns)) div 2").alias("cut"),
-        F.min(F.expr("cast(round(value * 1000000) as bigint)")).alias("lo"),
-        F.max(F.expr("cast(round(value * 1000000) as bigint)")).alias("hi"),
+        F.min(F.expr(to_micro("value"))).alias("lo"),
+        F.max(F.expr(to_micro("value"))).alias("hi"),
     )
     s = ev.crossJoin(F.broadcast(b)).select(
         "event_type",
         F.least(
             F.expr(
-                "(cast(round(value * 1000000) as bigint) - lo) * 10 div (hi - lo + 1)"
+                f"({to_micro('value')} - lo) * 10 div (hi - lo + 1)"
             ).cast("long"),
             F.lit(9).cast("long"),
         ).alias("bin"),
@@ -2334,12 +2305,8 @@ def psi_drift_q(spark, sf_dir):
         F.col("c_a").alias("n_pre"),
         F.col("c_b").alias("n_post"),
         "contrib",
-        F.round(
-            F.sum(F.expr("cast(round(contrib * 1000000) as bigint)"))
-            .over(wt)
-            .cast("double")
-            / F.lit(1000000),
-            6,
+        F.expr(
+            emit_micro(f"CAST(sum({to_micro('contrib')}) OVER (PARTITION BY event_type) AS DOUBLE)")
         ).alias("psi"),
     )
 
@@ -2897,7 +2864,7 @@ def kendall_tau_ranks_q(spark, sf_dir):
 
 @query(
     "ab_power_analysis",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut FROM events
     ), s AS (
@@ -2916,8 +2883,8 @@ def kendall_tau_ranks_q(spark, sf_dir):
     ), d AS (
         SELECT event_type, n1, n2,
                (CAST(s2 AS DOUBLE) / n2 - CAST(s1 AS DOUBLE) / n1) / 1000 AS delta,
-               ((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n1) / (n1 - 1)) / 1000000 AS var1,
-               ((CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE) * s2 / n2) / (n2 - 1)) / 1000000 AS var2
+               {from_micro('((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n1) / (n1 - 1))')} AS var1,
+               {from_micro('((CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE) * s2 / n2) / (n2 - 1))')} AS var2
         FROM a
     )
     SELECT event_type, n1 AS n_pre, n2 AS n_post,
@@ -2962,14 +2929,8 @@ def ab_power_analysis_q(spark, sf_dir):
         F.col("s2").cast("double") / F.col("n2")
         - F.col("s1").cast("double") / F.col("n1")
     ) / F.lit(1000)
-    var1 = (
-        (F.col("q1").cast("double") - F.col("s1").cast("double") * F.col("s1") / F.col("n1"))
-        / (F.col("n1") - 1)
-    ) / F.lit(1000000)
-    var2 = (
-        (F.col("q2").cast("double") - F.col("s2").cast("double") * F.col("s2") / F.col("n2"))
-        / (F.col("n2") - 1)
-    ) / F.lit(1000000)
+    var1 = F.expr(from_micro("(CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n1) / (n1 - 1)"))
+    var2 = F.expr(from_micro("(CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE) * s2 / n2) / (n2 - 1)"))
     req = F.ceil(
         F.pow(F.lit(1.959964) + F.lit(0.841621), F.lit(2.0))
         * (var1 + var2)
@@ -3077,16 +3038,16 @@ def _brier_decomposition_oracle() -> str:
     base = _classifier_calibration_oracle().rsplit(", binned AS", 1)[0]
     return (
         base
-        + """
+        + f"""
     , binned AS (
         SELECT least(CAST(floor(p.prob * 10) AS BIGINT), 9) AS bin,
-               CAST(round(p.prob * 1000000) AS BIGINT) AS prob_u,
+               {to_micro('p.prob')} AS prob_u,
                CASE WHEN l.label THEN 1 ELSE 0 END AS pos
         FROM probs p JOIN labels l ON l.doc_id = p.doc_id
     ), direct AS (
         SELECT CAST(count(*) AS BIGINT) AS nn,
                CAST(sum(pos) AS BIGINT) AS npos,
-               CAST(sum((prob_u - pos * 1000000) * (prob_u - pos * 1000000)) AS BIGINT)
+               CAST(sum((prob_u - pos * {MICRO}) * (prob_u - pos * {MICRO})) AS BIGINT)
                    AS sq_u
         FROM binned
     ), g AS (
@@ -3095,12 +3056,10 @@ def _brier_decomposition_oracle() -> str:
                CAST(sum(prob_u) AS BIGINT) AS sum_prob_u
         FROM binned GROUP BY bin
     ), terms AS (
-        SELECT CAST(sum(CAST(round(n * pow(sum_prob_u / (n * 1000000.0)
-                                           - CAST(n_pos AS DOUBLE) / n, 2) * 1000000)
-                             AS BIGINT)) AS BIGINT) AS rel_u,
-               CAST(sum(CAST(round(n * pow(CAST(n_pos AS DOUBLE) / n
-                                           - CAST(d.npos AS DOUBLE) / d.nn, 2) * 1000000)
-                             AS BIGINT)) AS BIGINT) AS res_u
+        SELECT CAST(sum({to_micro(f"n * pow(sum_prob_u / (n * {MICRO}.0) - CAST(n_pos AS DOUBLE) / n, 2)")})
+                   AS BIGINT) AS rel_u,
+               CAST(sum({to_micro("n * pow(CAST(n_pos AS DOUBLE) / n - CAST(d.npos AS DOUBLE) / d.nn, 2)")})
+                   AS BIGINT) AS res_u
         FROM g CROSS JOIN direct d
         GROUP BY d.nn
     )
@@ -3108,8 +3067,8 @@ def _brier_decomposition_oracle() -> str:
            round(CAST(d.sq_u AS DOUBLE) / d.nn / 1e12, 6) AS brier,
            round(CAST(d.npos AS DOUBLE) / d.nn
                  * (1 - CAST(d.npos AS DOUBLE) / d.nn), 6) AS uncertainty,
-           round(CAST(t.rel_u AS DOUBLE) / d.nn / 1e6, 6) AS reliability,
-           round(CAST(t.res_u AS DOUBLE) / d.nn / 1e6, 6) AS resolution
+           {emit_micro('CAST(t.rel_u AS DOUBLE) / d.nn')} AS reliability,
+           {emit_micro('CAST(t.res_u AS DOUBLE) / d.nn')} AS resolution
     FROM direct d CROSS JOIN terms t
     """
     )
@@ -3123,7 +3082,7 @@ def brier_decomposition_q(spark, sf_dir):
     resolution how much the scorer's bins separate outcomes,
     reliability the calibration penalty classifier_calibration plots.
     The direct Brier term is an EXACT integer sum of squared
-    micro-unit residuals (prob_u and the 0/1 label share the 1e6
+    micro-unit residuals (prob_u and the 0/1 label share the micro-unit
     scale); the bin terms quantize per-bin doubles to micro-units so
     the decile-frame sums stay order-free. One classifier + one gate
     pass, then everything runs on the 10-row bin frame."""
@@ -3138,15 +3097,15 @@ def brier_decomposition_q(spark, sf_dir):
         F.least(F.floor(F.col("prob") * 10).cast("long"), F.lit(9).cast("long")).alias(
             "bin"
         ),
-        F.expr("cast(round(prob * 1000000) as bigint)").alias("prob_u"),
+        F.expr(to_micro("prob")).alias("prob_u"),
         F.when(F.col("label"), 1).otherwise(0).alias("pos"),
     )
     direct = binned.agg(
         F.count("*").cast("long").alias("nn"),
         F.sum("pos").cast("long").alias("npos"),
         F.sum(
-            (F.col("prob_u") - F.col("pos") * 1000000)
-            * (F.col("prob_u") - F.col("pos") * 1000000)
+            (F.col("prob_u") - F.col("pos") * MICRO)
+            * (F.col("prob_u") - F.col("pos") * MICRO)
         )
         .cast("long")
         .alias("sq_u"),
@@ -3162,17 +3121,15 @@ def brier_decomposition_q(spark, sf_dir):
         .agg(
             F.sum(
                 F.expr(
-                    "cast(round(n * pow(sum_prob_u / (n * 1000000.0)"
-                    " - cast(n_pos as double) / n, 2) * 1000000) as bigint)"
+                    to_micro(
+                        f"n * pow(sum_prob_u / (n * {MICRO}.0) - cast(n_pos as double) / n, 2)"
+                    )
                 )
             )
             .cast("long")
             .alias("rel_u"),
             F.sum(
-                F.expr(
-                    "cast(round(n * pow(cast(n_pos as double) / n"
-                    " - cast(npos as double) / nn, 2) * 1000000) as bigint)"
-                )
+                F.expr(to_micro("n * pow(cast(n_pos as double) / n - cast(npos as double) / nn, 2)"))
             )
             .cast("long")
             .alias("res_u"),
@@ -3190,12 +3147,8 @@ def brier_decomposition_q(spark, sf_dir):
             * (1 - F.col("npos").cast("double") / F.col("nn")),
             6,
         ).alias("uncertainty"),
-        F.round(F.col("rel_u").cast("double") / F.col("nn") / F.lit(1e6), 6).alias(
-            "reliability"
-        ),
-        F.round(F.col("res_u").cast("double") / F.col("nn") / F.lit(1e6), 6).alias(
-            "resolution"
-        ),
+        F.expr(emit_micro("CAST(rel_u AS DOUBLE) / nn")).alias("reliability"),
+        F.expr(emit_micro("CAST(res_u AS DOUBLE) / nn")).alias("resolution"),
     )
 
 
@@ -3702,7 +3655,7 @@ def rollup_grain_advisor_q(spark, sf_dir):
 
 @query(
     "seasonal_decompose",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS month_id,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c
@@ -3715,11 +3668,8 @@ def rollup_grain_advisor_q(spark, sf_dir):
         WINDOW w AS (ORDER BY month_id ROWS BETWEEN 6 PRECEDING AND 6 FOLLOWING)
     ), dt AS (
         SELECT month_id, rev_c,
-               (2 * (win_sum * 10000)
-                + CASE WHEN win_sum < 0 THEN -13 ELSE 13 END) // 26 AS trend_u,
-               rev_c * 10000
-               - (2 * (win_sum * 10000)
-                  + CASE WHEN win_sum < 0 THEN -13 ELSE 13 END) // 26 AS det_u
+               {dd_round_div('win_sum * 10000', '13')} AS trend_u,
+               rev_c * 10000 - {dd_round_div('win_sum * 10000', '13')} AS det_u
         FROM tr WHERE win_n = 13
     ), si AS (
         SELECT month_id % 12 AS moy,
@@ -3727,14 +3677,14 @@ def rollup_grain_advisor_q(spark, sf_dir):
         FROM dt GROUP BY month_id % 12
     ), se AS (
         SELECT moy, n,
-               (2 * s_u + CASE WHEN s_u < 0 THEN -n ELSE n END) // (2 * n) AS seas_u
+               {dd_round_div('s_u', 'n')} AS seas_u
         FROM si
     )
     SELECT CAST(d.month_id AS BIGINT) AS month_id,
            CAST(d.rev_c AS DOUBLE) / 100 AS revenue,
-           CAST(d.trend_u AS DOUBLE) / 1000000 AS trend,
-           CAST(e.seas_u AS DOUBLE) / 1000000 AS seasonal,
-           CAST(d.det_u - e.seas_u AS DOUBLE) / 1000000 AS residual
+           {from_micro('CAST(d.trend_u AS DOUBLE)')} AS trend,
+           {from_micro('CAST(e.seas_u AS DOUBLE)')} AS seasonal,
+           {from_micro('CAST(d.det_u - e.seas_u AS DOUBLE)')} AS residual
     FROM dt d JOIN se e ON d.month_id % 12 = e.moy
     """,
 )
@@ -3775,10 +3725,7 @@ def seasonal_decompose_q(spark, sf_dir):
     dt = tr.filter(F.col("win_n") == 13).select(
         "month_id",
         "rev_c",
-        F.expr(
-            "(2 * (win_sum * 10000)"
-            " + CASE WHEN win_sum < 0 THEN -13 ELSE 13 END) div 26"
-        ).alias("trend_u"),
+        F.expr(round_div("win_sum * 10000", "13")).alias("trend_u"),
     ).withColumn("det_u", F.expr("rev_c * 10000 - trend_u"))
     si = dt.groupBy((F.col("month_id") % 12).alias("moy")).agg(
         F.sum("det_u").cast("long").alias("s_u"),
@@ -3786,19 +3733,15 @@ def seasonal_decompose_q(spark, sf_dir):
     )
     se = si.select(
         "moy",
-        F.expr(
-            "(2 * s_u + CASE WHEN s_u < 0 THEN -n ELSE n END) div (2 * n)"
-        ).alias("seas_u"),
+        F.expr(round_div("s_u", "n")).alias("seas_u"),
     )
     return (
         dt.join(F.broadcast(se), F.col("month_id") % 12 == F.col("moy"))
         .select(
             F.col("month_id").cast("long"),
             (F.col("rev_c").cast("double") / 100).alias("revenue"),
-            (F.col("trend_u").cast("double") / 1000000).alias("trend"),
-            (F.col("seas_u").cast("double") / 1000000).alias("seasonal"),
-            ((F.col("det_u") - F.col("seas_u")).cast("double") / 1000000).alias(
-                "residual"
-            ),
+            F.expr(from_micro("CAST(trend_u AS DOUBLE)")).alias("trend"),
+            F.expr(from_micro("CAST(seas_u AS DOUBLE)")).alias("seasonal"),
+            F.expr(from_micro("CAST(det_u - seas_u AS DOUBLE)")).alias("residual"),
         )
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -128,21 +129,19 @@ ORACLES["dedup_keep_best"] = _dedup_keep_best_oracle()
 
 @query(
     "quantile_confidence_bands",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-               list_sort(list(CAST(round(value * 1000000) AS BIGINT))) AS vs
+               list_sort(list({to_micro('value')})) AS vs
         FROM events GROUP BY event_type
     ), q AS (SELECT unnest([0.5, 0.9, 0.99]) AS qq)
     SELECT event_type, qq AS quantile, n,
-           round(vs[CAST(greatest(1, CAST(floor(n * qq
-                 - 1.959964 * sqrt(n * qq * (1 - qq))) AS BIGINT) + 1) AS INTEGER)]
-                 / 1e6, 6) AS ci_lo,
-           round(vs[CAST(CAST(floor(n * qq) AS BIGINT) + 1 AS INTEGER)] / 1e6, 6)
+           {emit_micro('''vs[CAST(greatest(1, CAST(floor(n * qq
+                 - 1.959964 * sqrt(n * qq * (1 - qq))) AS BIGINT) + 1) AS INTEGER)]''')} AS ci_lo,
+           {emit_micro('vs[CAST(CAST(floor(n * qq) AS BIGINT) + 1 AS INTEGER)]')}
                AS estimate,
-           round(vs[CAST(least(n, CAST(ceil(n * qq
-                 + 1.959964 * sqrt(n * qq * (1 - qq))) AS BIGINT) + 1) AS INTEGER)]
-                 / 1e6, 6) AS ci_hi
+           {emit_micro('''vs[CAST(least(n, CAST(ceil(n * qq
+                 + 1.959964 * sqrt(n * qq * (1 - qq))) AS BIGINT) + 1) AS INTEGER)]''')} AS ci_hi
     FROM g CROSS JOIN q
     """,
 )
@@ -168,54 +167,49 @@ def quantile_confidence_bands_q(spark, sf_dir, exact_quantiles: bool = True):
         g = ev.groupBy("event_type").agg(
             F.count("*").cast("long").alias("n"),
             F.percentile_approx(
-                F.expr("cast(round(value * 1000000) as bigint)"),
+                F.expr(to_micro("value")),
                 V.lit_array(grid),
                 F.lit(10000),
             ).alias("_grid"),
         )
         q = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "qq double")
-        half = F.lit(1.959964) * F.sqrt(
-            F.col("qq") * (1 - F.col("qq")) / F.col("n").cast("double")
-        )
+        half = "1.959964D * sqrt(qq * (1 - qq) / CAST(n AS DOUBLE))"
+
         def at(frac):
-            idx = F.round(
-                F.greatest(F.lit(0.0), F.least(F.lit(1.0), frac)) * 1000
-            ).cast("int")
-            return F.round(F.get("_grid", idx) / F.lit(1e6), 6)
+            idx = f"CAST(round(greatest(0.0D, least(1.0D, {frac})) * 1000) AS INT)"
+            return F.expr(emit_micro(f"get(_grid, {idx})"))
+
         return g.crossJoin(F.broadcast(q)).select(
             "event_type",
             F.col("qq").alias("quantile"),
             "n",
-            at(F.col("qq") - half).alias("ci_lo"),
-            at(F.col("qq")).alias("estimate"),
-            at(F.col("qq") + half).alias("ci_hi"),
+            at(f"qq - {half}").alias("ci_lo"),
+            at("qq").alias("estimate"),
+            at(f"qq + {half}").alias("ci_hi"),
         )
     g = ev.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
         F.sort_array(
-            F.collect_list(F.expr("cast(round(value * 1000000) as bigint)"))
+            F.collect_list(F.expr(to_micro("value")))
         ).alias("vs"),
     )
     q = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "qq double")
-    nd = F.col("n").cast("double")
-    spread = F.lit(1.959964) * F.sqrt(nd * F.col("qq") * (1 - F.col("qq")))
-    r_lo = F.greatest(
-        F.lit(1).cast("long"),
-        F.floor(nd * F.col("qq") - spread).cast("long") + 1,
-    )
-    r_est = F.floor(nd * F.col("qq")).cast("long") + 1
-    r_hi = F.least(
-        F.col("n"), F.ceil(nd * F.col("qq") + spread).cast("long") + 1
-    )
+    nq = "CAST(n AS DOUBLE) * qq"
+    spread = "1.959964D * sqrt(CAST(n AS DOUBLE) * qq * (1 - qq))"
+    r_lo = f"greatest(CAST(1 AS BIGINT), CAST(floor({nq} - {spread}) AS BIGINT) + 1)"
+    r_est = f"CAST(floor({nq}) AS BIGINT) + 1"
+    r_hi = f"least(n, CAST(ceil({nq} + {spread}) AS BIGINT) + 1)"
+
+    def at(rank):
+        return F.expr(emit_micro(f"element_at(vs, CAST({rank} AS INT))"))
+
     return g.crossJoin(F.broadcast(q)).select(
         "event_type",
         F.col("qq").alias("quantile"),
         "n",
-        F.round(F.element_at("vs", r_lo.cast("int")) / F.lit(1e6), 6).alias("ci_lo"),
-        F.round(F.element_at("vs", r_est.cast("int")) / F.lit(1e6), 6).alias(
-            "estimate"
-        ),
-        F.round(F.element_at("vs", r_hi.cast("int")) / F.lit(1e6), 6).alias("ci_hi"),
+        at(r_lo).alias("ci_lo"),
+        at(r_est).alias("estimate"),
+        at(r_hi).alias("ci_hi"),
     )
 
 
@@ -409,10 +403,10 @@ LAZY_ORACLES["dedup_threshold_sweep"] = _dedup_threshold_sweep_oracle
 
 @query(
     "embedding_dim_profile",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT unnest(range(len(embedding))) AS pos,
-               CAST(round(unnest(embedding::DOUBLE[]) * 1000000) AS BIGINT) AS v_u
+               {to_micro('unnest(embedding::DOUBLE[])')} AS v_u
         FROM embeddings
     ), g AS (
         SELECT CAST(pos AS BIGINT) AS pos, CAST(count(*) AS BIGINT) AS n,
@@ -422,11 +416,11 @@ LAZY_ORACLES["dedup_threshold_sweep"] = _dedup_threshold_sweep_oracle
         FROM d GROUP BY pos
     )
     SELECT pos, n,
-           round(CAST(s AS DOUBLE) / n / 1e6, 6) AS mean_v,
+           {emit_micro('CAST(s AS DOUBLE) / n')} AS mean_v,
            round((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n) / (n - 1) / 1e12, 6)
                AS variance,
-           round(mn / 1e6, 6) AS min_v,
-           round(mx / 1e6, 6) AS max_v,
+           {emit_micro('mn')} AS min_v,
+           {emit_micro('mx')} AS max_v,
            (CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n) / (n - 1) / 1e12 < 0.0001
                AS near_zero_var
     FROM g
@@ -444,7 +438,7 @@ def embedding_dim_profile_q(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     d = emb.select(F.posexplode(F.col("embedding").cast("array<double>"))).select(
         F.col("pos").cast("long").alias("pos"),
-        F.expr("cast(round(col * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("col")).alias("v_u"),
     )
     g = d.groupBy("pos").agg(
         F.count("*").cast("long").alias("n"),
@@ -462,17 +456,17 @@ def embedding_dim_profile_q(spark, sf_dir):
     return g.select(
         "pos",
         "n",
-        F.round(F.col("s").cast("double") / F.col("n") / F.lit(1e6), 6).alias("mean_v"),
+        F.expr(emit_micro("CAST(s AS DOUBLE) / n")).alias("mean_v"),
         F.round(var, 6).alias("variance"),
-        F.round(F.col("mn") / F.lit(1e6), 6).alias("min_v"),
-        F.round(F.col("mx") / F.lit(1e6), 6).alias("max_v"),
+        F.expr(emit_micro("mn")).alias("min_v"),
+        F.expr(emit_micro("mx")).alias("max_v"),
         (var < 0.0001).alias("near_zero_var"),
     )
 
 
 @query(
     "eb_rate_shrinkage",
-    oracle="""
+    oracle=f"""
     WITH u AS (
         SELECT user_id,
                CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS v,
@@ -480,7 +474,7 @@ def embedding_dim_profile_q(spark, sf_dir):
         FROM events GROUP BY user_id
     ), r AS (
         SELECT user_id, v, c,
-               CAST(round(CAST(c AS DOUBLE) / v * 1000000) AS BIGINT) AS r_u
+               {to_micro('CAST(c AS DOUBLE) / v')} AS r_u
         FROM u WHERE v >= 1
     ), m AS (
         SELECT CAST(count(*) AS BIGINT) AS uu,
@@ -489,7 +483,7 @@ def embedding_dim_profile_q(spark, sf_dir):
         FROM r
     ), ab AS (
         SELECT uu,
-               CAST(sr AS DOUBLE) / uu / 1000000 AS mean_r,
+               {from_micro('CAST(sr AS DOUBLE) / uu')} AS mean_r,
                (CAST(srr AS DOUBLE) - CAST(sr AS DOUBLE) * sr / uu)
                    / (uu - 1) / 1e12 AS var_r
         FROM m
@@ -535,14 +529,14 @@ def eb_rate_shrinkage_q(spark, sf_dir):
         "user_id",
         "v",
         "c",
-        F.expr("cast(round(cast(c as double) / v * 1000000) as bigint)").alias("r_u"),
+        F.expr(to_micro("cast(c as double) / v")).alias("r_u"),
     )
     m = r.agg(
         F.count("*").cast("long").alias("uu"),
         F.sum("r_u").cast("long").alias("sr"),
         F.sum(F.col("r_u") * F.col("r_u")).cast("long").alias("srr"),
     )
-    mean_r = F.col("sr").cast("double") / F.col("uu") / F.lit(1000000)
+    mean_r = F.expr(from_micro("CAST(sr AS DOUBLE) / uu"))
     var_r = (
         (F.col("srr").cast("double") - F.col("sr").cast("double") * F.col("sr") / F.col("uu"))
         / (F.col("uu") - 1)
@@ -948,7 +942,7 @@ def source_ngram_similarity_q(spark, sf_dir):
 
 @query(
     "seasonal_residual_anomaly",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS month_id,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c
@@ -966,12 +960,12 @@ def source_ngram_similarity_q(spark, sf_dir):
         FROM tr WHERE win_n = 13
     ), si AS (
         SELECT month_id % 12 AS moy,
-               CAST(sum(CAST(round(detrended * 1000000) AS BIGINT)) AS BIGINT) AS s_u,
+               CAST(sum({to_micro('detrended')}) AS BIGINT) AS s_u,
                CAST(count(*) AS BIGINT) AS n
         FROM dt GROUP BY month_id % 12
     ), res AS (
         SELECT d.month_id,
-               CAST(round(d.detrended * 1000000) AS BIGINT)
+               {to_micro('d.detrended')}
                - CAST(round(CAST(s.s_u AS DOUBLE) / s.n) AS BIGINT) AS r_u
         FROM dt d JOIN si s ON d.month_id % 12 = s.moy
     ), med AS (
@@ -986,9 +980,9 @@ def source_ngram_similarity_q(spark, sf_dir):
         SELECT avs[CAST(n // 2 AS INTEGER) + 1] AS mad_u FROM mad
     )
     SELECT CAST(r.month_id AS BIGINT) AS month_id,
-           round(r.r_u / 1e6, 6) AS residual,
-           round(m0.med_u / 1e6, 6) AS res_median,
-           round(mad0.mad_u / 1e6, 6) AS res_mad,
+           {emit_micro('r.r_u')} AS residual,
+           {emit_micro('m0.med_u')} AS res_median,
+           {emit_micro('mad0.mad_u')} AS res_mad,
            abs(r.r_u - m0.med_u) > 3 * mad0.mad_u AS is_anomaly
     FROM res r CROSS JOIN m0 CROSS JOIN mad0
     """,
@@ -1027,7 +1021,7 @@ def seasonal_residual_anomaly_q(spark, sf_dir):
         ).alias("detrended"),
     )
     si = dt.groupBy((F.col("month_id") % 12).alias("moy")).agg(
-        F.sum(F.expr("cast(round(detrended * 1000000) as bigint)"))
+        F.sum(F.expr(to_micro("detrended")))
         .cast("long")
         .alias("s_u"),
         F.count("*").cast("long").alias("n"),
@@ -1037,7 +1031,7 @@ def seasonal_residual_anomaly_q(spark, sf_dir):
         .select(
             "month_id",
             (
-                F.expr("cast(round(detrended * 1000000) as bigint)")
+                F.expr(to_micro("detrended"))
                 - F.expr("cast(round(cast(s_u as double) / n) as bigint)")
             ).alias("r_u"),
         )
@@ -1059,9 +1053,9 @@ def seasonal_residual_anomaly_q(spark, sf_dir):
         wm.crossJoin(F.broadcast(mad))
         .select(
             F.col("month_id").cast("long"),
-            F.round(F.col("r_u") / F.lit(1e6), 6).alias("residual"),
-            F.round(F.col("med_u") / F.lit(1e6), 6).alias("res_median"),
-            F.round(F.col("mad_u") / F.lit(1e6), 6).alias("res_mad"),
+            F.expr(emit_micro("r_u")).alias("residual"),
+            F.expr(emit_micro("med_u")).alias("res_median"),
+            F.expr(emit_micro("mad_u")).alias("res_mad"),
             (F.abs(F.col("r_u") - F.col("med_u")) > 3 * F.col("mad_u")).alias(
                 "is_anomaly"
             ),
@@ -1274,7 +1268,7 @@ def cache_hit_rate_plan_q(spark, sf_dir):
 
 @query(
     "paired_ttest_users",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut FROM events
     ), u AS (
@@ -1282,10 +1276,10 @@ def cache_hit_rate_plan_q(spark, sf_dir):
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 0 ELSE 1 END) AS BIGINT) AS n2,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut
-                             THEN CAST(round(value * 1000000) AS BIGINT)
+                             THEN {to_micro('value')}
                              ELSE 0 END) AS BIGINT) AS s1,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 0
-                             ELSE CAST(round(value * 1000000) AS BIGINT) END) AS BIGINT) AS s2
+                             ELSE {to_micro('value')} END) AS BIGINT) AS s2
         FROM events, b GROUP BY user_id
     ), d AS (
         SELECT CAST(round(CAST(s2 AS DOUBLE) / n2 - CAST(s1 AS DOUBLE) / n1)
@@ -1298,7 +1292,7 @@ def cache_hit_rate_plan_q(spark, sf_dir):
         FROM d
     )
     SELECT n AS n_pairs,
-           round(CAST(sd AS DOUBLE) / n / 1000000, 6) AS mean_diff,
+           {emit_micro('CAST(sd AS DOUBLE) / n')} AS mean_diff,
            round((CAST(sd AS DOUBLE) / n)
                  / sqrt(((CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * sd / n) / (n - 1))
                         / n), 6) AS t_stat
@@ -1316,7 +1310,7 @@ def paired_ttest_users_q(spark, sf_dir):
     moments over the user frame."""
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.expr("(min(ts_ns) + max(ts_ns)) div 2").alias("cut"))
-    v_u = "cast(round(value * 1000000) as bigint)"
+    v_u = to_micro("value")
     u = ev.crossJoin(F.broadcast(b)).groupBy("user_id").agg(
         F.sum(F.when(F.col("ts_ns") <= F.col("cut"), 1).otherwise(0))
         .cast("long")
@@ -1348,7 +1342,7 @@ def paired_ttest_users_q(spark, sf_dir):
     )
     return s.select(
         F.col("n").alias("n_pairs"),
-        F.round(mean_d / F.lit(1000000), 6).alias("mean_diff"),
+        F.expr(emit_micro("CAST(sd AS DOUBLE) / n")).alias("mean_diff"),
         F.round(mean_d / F.sqrt(var_d / nd), 6).alias("t_stat"),
     )
 
@@ -1419,7 +1413,7 @@ def benford_first_digit_q(spark, sf_dir):
 
 @query(
     "heaps_law_fit",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT CAST(max(doc_id) AS BIGINT) AS mx FROM documents),
     toks AS (
         SELECT d.doc_id, unnest(string_split(d.text, ' ')) AS term
@@ -1445,8 +1439,8 @@ def benford_first_digit_q(spark, sf_dir):
         CROSS JOIN (SELECT unnest([1, 2, 3, 4, 5]) AS k) p
         GROUP BY p.k, m.mx
     ), lg AS (
-        SELECT CAST(round(ln(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) AS x_u,
-               CAST(round(ln(CAST(vocab AS DOUBLE)) * 1000000) AS BIGINT) AS y_u
+        SELECT {to_micro('ln(CAST(n_tokens AS DOUBLE))')} AS x_u,
+               {to_micro('ln(CAST(vocab AS DOUBLE))')} AS y_u
         FROM pts WHERE n_tokens > 0 AND vocab > 0
     ), s AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1457,10 +1451,9 @@ def benford_first_digit_q(spark, sf_dir):
     SELECT n AS n_points,
            round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
                  / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx), 6) AS beta,
-           round(exp(((CAST(sy AS DOUBLE)
+           round(exp({from_micro('''(CAST(sy AS DOUBLE)
                  - (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                   / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) * sx) / n)
-                 / 1000000), 6) AS k_coef
+                   / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) * sx) / n''')}), 6) AS k_coef
     FROM s
     """,
 )
@@ -1509,10 +1502,10 @@ def heaps_law_fit_q(spark, sf_dir):
         tok_pts.join(voc_pts, "k")
         .filter((F.col("n_tokens") > 0) & (F.col("vocab") > 0))
         .select(
-            F.expr("cast(round(ln(cast(n_tokens as double)) * 1000000) as bigint)").alias(
+            F.expr(to_micro("ln(cast(n_tokens as double))")).alias(
                 "x_u"
             ),
-            F.expr("cast(round(ln(cast(vocab as double)) * 1000000) as bigint)").alias(
+            F.expr(to_micro("ln(cast(vocab as double))")).alias(
                 "y_u"
             ),
         )
@@ -1524,19 +1517,13 @@ def heaps_law_fit_q(spark, sf_dir):
         F.sum(F.col("x_u") * F.col("x_u")).cast("long").alias("sxx"),
         F.sum(F.col("x_u") * F.col("y_u")).cast("long").alias("sxy"),
     )
-    nd = F.col("n").cast("double")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    den = nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")
+    num_sql = "CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy"
+    den_sql = "CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx"
+    k_u = f"(CAST(sy AS DOUBLE) - ({num_sql}) / ({den_sql}) * sx) / n"
     return s.select(
         F.col("n").alias("n_points"),
-        F.round(num / den, 6).alias("beta"),
-        F.round(
-            F.exp(
-                ((F.col("sy").cast("double") - num / den * F.col("sx")) / F.col("n"))
-                / F.lit(1000000)
-            ),
-            6,
-        ).alias("k_coef"),
+        F.round(F.expr(num_sql) / F.expr(den_sql), 6).alias("beta"),
+        F.expr(f"round(exp({from_micro(k_u)}), 6)").alias("k_coef"),
     )
 
 
@@ -1737,7 +1724,7 @@ def srm_check_q(spark, sf_dir):
     ), s AS (
         SELECT {H.dd_md5_long('user_id::VARCHAR')} % 2 AS grp,
                CASE WHEN epoch_ns(ts) <= b.cut THEN 0 ELSE 1 END AS period,
-               CAST(round(value * 1000000) AS BIGINT) AS v_u
+               {to_micro('value')} AS v_u
         FROM events, b
     ), cells AS (
         SELECT grp, period, CAST(count(*) AS BIGINT) AS n,
@@ -1746,7 +1733,7 @@ def srm_check_q(spark, sf_dir):
         FROM s GROUP BY grp, period
     ), m AS (
         SELECT CAST(grp AS BIGINT) AS grp, CAST(period AS BIGINT) AS period, n,
-               CAST(sv AS DOUBLE) / n / 1000000 AS mean_v,
+               {from_micro('CAST(sv AS DOUBLE) / n')} AS mean_v,
                ((CAST(qv AS DOUBLE) - CAST(sv AS DOUBLE) * sv / n) / (n - 1))
                    / 1e12 / n AS var_of_mean
         FROM cells
@@ -1780,7 +1767,7 @@ def did_estimator_q(spark, sf_dir):
     s = ev.crossJoin(F.broadcast(b)).select(
         (F.expr(H.md5_long("CAST(user_id AS STRING)")) % 2).alias("grp"),
         F.when(F.col("ts_ns") <= F.col("cut"), 0).otherwise(1).alias("period"),
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
     )
     cells = s.groupBy("grp", "period").agg(
         F.count("*").cast("long").alias("n"),
@@ -1789,7 +1776,7 @@ def did_estimator_q(spark, sf_dir):
             F.col("v_u").cast("decimal(18,0)") * F.col("v_u").cast("decimal(18,0)")
         ).alias("qv"),
     )
-    mean_v = F.col("sv").cast("double") / F.col("n") / F.lit(1000000)
+    mean_v = F.expr(from_micro("CAST(sv AS DOUBLE) / n"))
     vom = (
         (F.col("qv").cast("double") - F.col("sv").cast("double") * F.col("sv") / F.col("n"))
         / (F.col("n") - 1)
@@ -1822,7 +1809,7 @@ def did_estimator_q(spark, sf_dir):
 
 @query(
     "cuped_adjustment",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut FROM events
     ), u AS (
@@ -1830,10 +1817,10 @@ def did_estimator_q(spark, sf_dir):
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 0 ELSE 1 END) AS BIGINT) AS n2,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut
-                             THEN CAST(round(value * 1000000) AS BIGINT) ELSE 0 END)
+                             THEN {to_micro('value')} ELSE 0 END)
                     AS BIGINT) AS s1,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 0
-                             ELSE CAST(round(value * 1000000) AS BIGINT) END)
+                             ELSE {to_micro('value')} END)
                     AS BIGINT) AS s2
         FROM events, b GROUP BY user_id
     ), xy AS (
@@ -1874,7 +1861,7 @@ def cuped_adjustment_q(spark, sf_dir):
     survives adjustment."""
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.expr("(min(ts_ns) + max(ts_ns)) div 2").alias("cut"))
-    v_u = "cast(round(value * 1000000) as bigint)"
+    v_u = to_micro("value")
     u = ev.crossJoin(F.broadcast(b)).groupBy("user_id").agg(
         F.sum(F.when(F.col("ts_ns") <= F.col("cut"), 1).otherwise(0))
         .cast("long")
@@ -2020,20 +2007,20 @@ LAZY_ORACLES["link_prediction_jaccard"] = _link_prediction_oracle
 
 @query(
     "conformal_interval",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut FROM events
     ), pred AS (
         SELECT event_type,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut
-                             THEN CAST(round(value * 1000000) AS BIGINT) ELSE 0 END)
+                             THEN {to_micro('value')} ELSE 0 END)
                     AS BIGINT) AS s_cal,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_cal
         FROM events, b GROUP BY event_type
     ), resid AS (
         SELECT e.event_type,
-               abs(CAST(round(e.value * 1000000) AS BIGINT)
+               abs({to_micro('e.value')}
                    - CAST(round(CAST(p.s_cal AS DOUBLE) / p.n_cal) AS BIGINT)) AS r_u
         FROM events e JOIN pred p USING (event_type) CROSS JOIN b
         WHERE epoch_ns(e.ts) <= b.cut
@@ -2049,7 +2036,7 @@ LAZY_ORACLES["link_prediction_jaccard"] = _link_prediction_oracle
     ), cov AS (
         SELECT e.event_type,
                CAST(count(*) AS BIGINT) AS n_test,
-               CAST(sum(CASE WHEN abs(CAST(round(e.value * 1000000) AS BIGINT)
+               CAST(sum(CASE WHEN abs({to_micro('e.value')}
                     - CAST(round(CAST(p.s_cal AS DOUBLE) / p.n_cal) AS BIGINT))
                     <= h.q_u THEN 1 ELSE 0 END) AS BIGINT) AS n_covered
         FROM events e
@@ -2060,7 +2047,7 @@ LAZY_ORACLES["link_prediction_jaccard"] = _link_prediction_oracle
         GROUP BY e.event_type
     )
     SELECT c.event_type, h.n_cal, c.n_test,
-           round(h.q_u / 1e6, 6) AS interval_halfwidth,
+           {emit_micro('h.q_u')} AS interval_halfwidth,
            round(CAST(c.n_covered AS DOUBLE) / c.n_test, 6) AS coverage
     FROM cov c JOIN qhat h USING (event_type)
     """,
@@ -2082,7 +2069,7 @@ def conformal_interval_q(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("ts_ns") <= F.col("cut"),
-                F.expr("cast(round(value * 1000000) as bigint)"),
+                F.expr(to_micro("value")),
             ).otherwise(0)
         )
         .cast("long")
@@ -2097,7 +2084,7 @@ def conformal_interval_q(spark, sf_dir):
         .join(F.broadcast(pred), "event_type")
         .select(
             "event_type",
-            F.abs(F.expr("cast(round(value * 1000000) as bigint)") - mu).alias("r_u"),
+            F.abs(F.expr(to_micro("value")) - mu).alias("r_u"),
         )
     )
     q = resid.groupBy("event_type").agg(
@@ -2123,7 +2110,7 @@ def conformal_interval_q(spark, sf_dir):
             F.count("*").cast("long").alias("n_test"),
             F.sum(
                 F.when(
-                    F.abs(F.expr("cast(round(value * 1000000) as bigint)") - mu)
+                    F.abs(F.expr(to_micro("value")) - mu)
                     <= F.col("q_u"),
                     1,
                 ).otherwise(0)
@@ -2136,7 +2123,7 @@ def conformal_interval_q(spark, sf_dir):
         "event_type",
         "n_cal",
         "n_test",
-        F.round(F.col("q_u") / F.lit(1e6), 6).alias("interval_halfwidth"),
+        F.expr(emit_micro("q_u")).alias("interval_halfwidth"),
         F.round(F.col("n_covered").cast("double") / F.col("n_test"), 6).alias(
             "coverage"
         ),
@@ -2188,7 +2175,7 @@ def dp_noise_calibration_q(spark, sf_dir):
 
 @query(
     "oneway_anova_f",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n_i,
                CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT) AS s_i,
@@ -2206,10 +2193,10 @@ def dp_noise_calibration_q(spark, sf_dir):
         FROM g
     )
     SELECT k AS n_groups, nn AS n_rows,
-           round((CAST(sb_u AS DOUBLE)
+           {emit_micro('''(CAST(sb_u AS DOUBLE)
                   - CAST(round(CAST(ss AS DOUBLE) * ss / nn) AS BIGINT))
-                 / (k - 1) / 1e6, 6) AS ms_between,
-           round(CAST(ssw_u AS DOUBLE) / (nn - k) / 1e6, 6) AS ms_within,
+                 / (k - 1)''')} AS ms_between,
+           {emit_micro('CAST(ssw_u AS DOUBLE) / (nn - k)')} AS ms_within,
            round(((CAST(sb_u AS DOUBLE)
                    - CAST(round(CAST(ss AS DOUBLE) * ss / nn) AS BIGINT)) / (k - 1))
                  / (CAST(ssw_u AS DOUBLE) / (nn - k)), 6) AS f_stat
@@ -2247,23 +2234,21 @@ def oneway_anova_f_q(spark, sf_dir):
         .cast("long")
         .alias("sb_u"),
     )
-    ssb = F.col("sb_u").cast("double") - F.expr(
-        "cast(round(cast(ss as double) * ss / nn) as bigint)"
-    )
-    msb = ssb / (F.col("k") - 1)
-    msw = F.col("ssw_u").cast("double") / (F.col("nn") - F.col("k"))
+    ssb = "CAST(sb_u AS DOUBLE) - cast(round(cast(ss as double) * ss / nn) as bigint)"
+    msb = f"({ssb}) / (k - 1)"
+    msw = "CAST(ssw_u AS DOUBLE) / (nn - k)"
     return t.select(
         F.col("k").alias("n_groups"),
         F.col("nn").alias("n_rows"),
-        F.round(msb / F.lit(1e6), 6).alias("ms_between"),
-        F.round(msw / F.lit(1e6), 6).alias("ms_within"),
-        F.round(msb / msw, 6).alias("f_stat"),
+        F.expr(emit_micro(msb)).alias("ms_between"),
+        F.expr(emit_micro(msw)).alias("ms_within"),
+        F.expr(f"round(({msb}) / ({msw}), 6)").alias("f_stat"),
     )
 
 
 @query(
     "hill_tail_index",
-    oracle="""
+    oracle=f"""
     WITH v AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v_c FROM orders
     ), s AS (
@@ -2274,14 +2259,14 @@ def oneway_anova_f_q(spark, sf_dir):
     h AS (
         SELECT ks.k, s.n,
                list_sum(list_transform(s.vs[1:ks.k],
-                   x -> CAST(round(ln(CAST(x AS DOUBLE)
-                        / s.vs[CAST(ks.k + 1 AS INTEGER)]) * 1000000) AS BIGINT)))
+                   x -> {to_micro('''ln(CAST(x AS DOUBLE)
+                        / s.vs[CAST(ks.k + 1 AS INTEGER)])''')}))
                    AS sum_u
         FROM s CROSS JOIN ks
     )
     SELECT CAST(k AS BIGINT) AS k, n,
-           round(CAST(sum_u AS DOUBLE) / k / 1000000, 6) AS hill_gamma,
-           round(CAST(k AS DOUBLE) * 1000000 / sum_u, 6) AS tail_alpha
+           {emit_micro('CAST(sum_u AS DOUBLE) / k')} AS hill_gamma,
+           round(CAST(k AS DOUBLE) * {MICRO} / sum_u, 6) AS tail_alpha
     FROM h
     """,
 )
@@ -2302,33 +2287,21 @@ def hill_tail_index_q(spark, sf_dir):
         F.reverse(F.sort_array(F.collect_list("v_c"))).alias("vs"),
     )
     ks = spark.createDataFrame([(50,), (100,), (500,)], "k long")
-    sum_u = F.aggregate(
-        F.transform(
-            F.slice("vs", 1, F.col("k").cast("int")),
-            lambda x: F.round(
-                F.log(
-                    x.cast("double")
-                    / F.element_at(F.col("vs"), (F.col("k") + 1).cast("int"))
-                )
-                * 1000000
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, y: acc + y,
+    # k or fewer orders: x_(k+1) is NULL, as DuckDB's vs[k + 1] is
+    ratio = "ln(CAST(x AS DOUBLE) / try_element_at(vs, CAST(k + 1 AS INT)))"
+    sum_u = (
+        f"aggregate(transform(slice(vs, 1, CAST(k AS INT)), x -> {to_micro(ratio)}),"
+        " CAST(0 AS BIGINT), (acc, y) -> acc + y)"
     )
     # no orders: NULL, as DuckDB's list_sum([]) is
-    h = s.crossJoin(F.broadcast(ks)).select(
-        "k", "n", F.when(F.size("vs") > 0, sum_u).alias("sum_u")
+    h = s.crossJoin(F.broadcast(ks)).selectExpr(
+        "k", "n", f"CASE WHEN size(vs) > 0 THEN {sum_u} END AS sum_u"
     )
     return h.select(
         "k",
         "n",
-        F.round(F.col("sum_u").cast("double") / F.col("k") / F.lit(1000000), 6).alias(
-            "hill_gamma"
-        ),
-        F.round(
-            F.try_divide(F.col("k").cast("double") * 1000000, F.col("sum_u")), 6
-        ).alias("tail_alpha"),
+        F.expr(emit_micro("CAST(sum_u AS DOUBLE) / k")).alias("hill_gamma"),
+        F.expr(f"round(try_divide(CAST(k AS DOUBLE) * {MICRO}, sum_u), 6)").alias("tail_alpha"),
     )
 
 
@@ -2561,7 +2534,7 @@ def churn_auc_baseline_q(spark, sf_dir):
 
 @query(
     "cohort_ltv_curve",
-    oracle="""
+    oracle=f"""
     WITH f AS (
         SELECT user_id, min(epoch_ns(ts)) // 86400000000000 // 7 AS cohort_week
         FROM events GROUP BY user_id
@@ -2572,7 +2545,7 @@ def churn_auc_baseline_q(spark, sf_dir):
         SELECT f.cohort_week,
                epoch_ns(e.ts) // 86400000000000 // 7 - f.cohort_week AS age_week,
                CAST(sum(CASE WHEN e.event_type = 'purchase'
-                             THEN CAST(round(e.value * 1000000) AS BIGINT)
+                             THEN {to_micro('e.value')}
                              ELSE 0 END) AS BIGINT) AS rev_u
         FROM events e JOIN f ON e.user_id = f.user_id
         GROUP BY f.cohort_week, age_week
@@ -2580,10 +2553,10 @@ def churn_auc_baseline_q(spark, sf_dir):
     SELECT CAST(r.cohort_week AS BIGINT) AS cohort_week,
            CAST(r.age_week AS BIGINT) AS age_week,
            c.n_users,
-           round(r.rev_u / 1e6, 6) AS revenue,
-           round(CAST(sum(r.rev_u) OVER (PARTITION BY r.cohort_week ORDER BY r.age_week
+           {emit_micro('r.rev_u')} AS revenue,
+           {emit_micro('''CAST(sum(r.rev_u) OVER (PARTITION BY r.cohort_week ORDER BY r.age_week
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-                 / c.n_users / 1e6, 6) AS cum_ltv_per_user
+                 / c.n_users''')} AS cum_ltv_per_user
     FROM r JOIN cs c USING (cohort_week)
     """,
 )
@@ -2613,7 +2586,7 @@ def cohort_ltv_curve_q(spark, sf_dir):
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.expr("cast(round(value * 1000000) as bigint)"),
+                    F.expr(to_micro("value")),
                 ).otherwise(0)
             )
             .cast("long")
@@ -2621,9 +2594,8 @@ def cohort_ltv_curve_q(spark, sf_dir):
         )
     )
     wc = (
-        Window.partitionBy("cohort_week")
-        .orderBy("age_week")
-        .rowsBetween(Window.unboundedPreceding, 0)
+        "OVER (PARTITION BY cohort_week ORDER BY age_week"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     return (
         r.join(F.broadcast(cs), "cohort_week")
@@ -2631,11 +2603,10 @@ def cohort_ltv_curve_q(spark, sf_dir):
             F.col("cohort_week").cast("long"),
             F.col("age_week").cast("long"),
             "n_users",
-            F.round(F.col("rev_u") / F.lit(1e6), 6).alias("revenue"),
-            F.round(
-                F.sum("rev_u").over(wc).cast("double") / F.col("n_users") / F.lit(1e6),
-                6,
-            ).alias("cum_ltv_per_user"),
+            F.expr(emit_micro("rev_u")).alias("revenue"),
+            F.expr(emit_micro(f"CAST(sum(rev_u) {wc} AS DOUBLE) / n_users")).alias(
+                "cum_ltv_per_user"
+            ),
         )
     )
 
@@ -2843,10 +2814,9 @@ _ISO_SAMPLE_CAP = 2000
               / 1152921504606846976.0 < 0.02
     )
     SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-           round(CAST(sum(CAST(round(raw_cos * 1000000) AS BIGINT)) AS DOUBLE)
-                 / count(*) / 1e6, 6) AS mean_cos,
-           round(CAST(sum(CAST(round(cen_cos * 1000000) AS BIGINT)) AS DOUBLE)
-                 / count(*) / 1e6, 6) AS mean_cos_centered
+           {emit_micro(f"CAST(sum({to_micro('raw_cos')}) AS DOUBLE) / count(*)")} AS mean_cos,
+           {emit_micro(f"CAST(sum({to_micro('cen_cos')}) AS DOUBLE) / count(*)")}
+               AS mean_cos_centered
     FROM pairs
     """,
 )
@@ -2898,18 +2868,12 @@ def embedding_isotropy_q(spark, sf_dir):
     )
     return pairs.agg(
         F.count("*").cast("long").alias("n_pairs"),
-        F.round(
-            F.sum(F.expr("cast(round(raw_cos * 1000000) as bigint)")).cast("double")
-            / F.count("*")
-            / F.lit(1e6),
-            6,
-        ).alias("mean_cos"),
-        F.round(
-            F.sum(F.expr("cast(round(cen_cos * 1000000) as bigint)")).cast("double")
-            / F.count("*")
-            / F.lit(1e6),
-            6,
-        ).alias("mean_cos_centered"),
+        F.expr(emit_micro(f"CAST(sum({to_micro('raw_cos')}) AS DOUBLE) / count(*)")).alias(
+            "mean_cos"
+        ),
+        F.expr(emit_micro(f"CAST(sum({to_micro('cen_cos')}) AS DOUBLE) / count(*)")).alias(
+            "mean_cos_centered"
+        ),
     )
 
 
@@ -2925,11 +2889,10 @@ _DD_QF_STOP = (
     WITH feat AS (
         SELECT doc_id,
                CAST(len({_DD_TOKS}) AS BIGINT) AS f_ntok,
-               CAST(round(round(CAST(len(list_filter({_DD_TOKS},
-                    t -> list_contains({_DD_QF_STOP}, t))) AS DOUBLE)
-                    / len({_DD_TOKS}), 6) * 1000000) AS BIGINT) AS f_stop,
-               CAST(round(round(CAST(len(list_distinct({_DD_TOKS})) AS DOUBLE)
-                    / len({_DD_TOKS}), 6) * 1000000) AS BIGINT) AS f_ttr,
+               {to_micro(f"round(CAST(len(list_filter({_DD_TOKS}, t -> list_contains({_DD_QF_STOP}, t))) AS DOUBLE) / len({_DD_TOKS}), 6)")}
+                   AS f_stop,
+               {to_micro(f"round(CAST(len(list_distinct({_DD_TOKS})) AS DOUBLE) / len({_DD_TOKS}), 6)")}
+                   AS f_ttr,
                (len({_DD_TOKS}) >= 20 AND len({_DD_TOKS}) <= 80
                 AND CAST(length(text) - (len({_DD_TOKS}) - 1) AS DOUBLE)
                     / len({_DD_TOKS}) >= 3.0
@@ -3005,8 +2968,8 @@ def boosting_stump_round_q(spark, sf_dir):
     qf = curation.quality_filters(docs).select(
         "doc_id",
         F.col("n_tokens").alias("f_ntok"),
-        F.expr("cast(round(stopword_frac * 1000000) as bigint)").alias("f_stop"),
-        F.expr("cast(round(ttr * 1000000) as bigint)").alias("f_ttr"),
+        F.expr(to_micro("stopword_frac")).alias("f_stop"),
+        F.expr(to_micro("ttr")).alias("f_ttr"),
         F.col("keep").alias("label"),
     )
     lf = (
@@ -3360,7 +3323,7 @@ def quadratic_trend_fit_q(spark, sf_dir):
 
 @query(
     "mix_shift_decomposition",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT (min(epoch_ns(ts)) + max(epoch_ns(ts))) // 2 AS cut FROM events
     ), g AS (
@@ -3368,10 +3331,10 @@ def quadratic_trend_fit_q(spark, sf_dir):
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 0 ELSE 1 END) AS BIGINT) AS n2,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut
-                             THEN CAST(round(value * 1000000) AS BIGINT) ELSE 0 END)
+                             THEN {to_micro('value')} ELSE 0 END)
                     AS BIGINT) AS s1,
                CAST(sum(CASE WHEN epoch_ns(ts) <= b.cut THEN 0
-                             ELSE CAST(round(value * 1000000) AS BIGINT) END)
+                             ELSE {to_micro('value')} END)
                     AS BIGINT) AS s2
         FROM events, b GROUP BY event_type
     ), t AS (
@@ -3382,8 +3345,8 @@ def quadratic_trend_fit_q(spark, sf_dir):
     ), c AS (
         SELECT event_type,
                CAST(n1 AS DOUBLE) / t1 AS share1, CAST(n2 AS DOUBLE) / t2 AS share2,
-               CAST(s1 AS DOUBLE) / n1 / 1e6 AS rate1,
-               CAST(s2 AS DOUBLE) / n2 / 1e6 AS rate2
+               {from_micro('CAST(s1 AS DOUBLE) / n1')} AS rate1,
+               {from_micro('CAST(s2 AS DOUBLE) / n2')} AS rate2
         FROM t WHERE n1 > 0 AND n2 > 0
     )
     SELECT event_type,
@@ -3391,9 +3354,8 @@ def quadratic_trend_fit_q(spark, sf_dir):
            round(rate1, 6) AS rate_pre, round(rate2, 6) AS rate_post,
            round((share2 - share1) * rate1, 6) AS mix_effect,
            round(share2 * (rate2 - rate1), 6) AS rate_effect,
-           round(CAST(sum(CAST(round(((share2 - share1) * rate1
-                 + share2 * (rate2 - rate1)) * 1000000) AS BIGINT)) OVER ()
-                 AS DOUBLE) / 1e6, 6) AS total_delta
+           {emit_micro(f"CAST(sum({to_micro('(share2 - share1) * rate1 + share2 * (rate2 - rate1)')}) OVER () AS DOUBLE)")}
+               AS total_delta
     FROM c
     """,
 )
@@ -3409,7 +3371,7 @@ def mix_shift_decomposition_q(spark, sf_dir):
     contributions so Δ decomposes EXACTLY on both engines."""
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.expr("(min(ts_ns) + max(ts_ns)) div 2").alias("cut"))
-    v_u = "cast(round(value * 1000000) as bigint)"
+    v_u = to_micro("value")
     g = ev.crossJoin(F.broadcast(b)).groupBy("event_type").agg(
         F.sum(F.when(F.col("ts_ns") <= F.col("cut"), 1).otherwise(0))
         .cast("long")
@@ -3432,8 +3394,8 @@ def mix_shift_decomposition_q(spark, sf_dir):
     ).filter((F.col("n1") > 0) & (F.col("n2") > 0))
     share1 = F.col("n1").cast("double") / F.col("t1")
     share2 = F.col("n2").cast("double") / F.col("t2")
-    rate1 = F.col("s1").cast("double") / F.col("n1") / F.lit(1e6)
-    rate2 = F.col("s2").cast("double") / F.col("n2") / F.lit(1e6)
+    rate1 = F.expr(from_micro("CAST(s1 AS DOUBLE) / n1"))
+    rate2 = F.expr(from_micro("CAST(s2 AS DOUBLE) / n2"))
     c = t.select(
         "event_type",
         F.round(share1, 6).alias("share_pre"),
@@ -3454,13 +3416,9 @@ def mix_shift_decomposition_q(spark, sf_dir):
         "rate_post",
         "mix_effect",
         "rate_effect",
-        F.round(
-            F.sum(F.expr("cast(round(_contrib * 1000000) as bigint)"))
-            .over(wa)
-            .cast("double")
-            / F.lit(1e6),
-            6,
-        ).alias("total_delta"),
+        F.expr(emit_micro(f"CAST(sum({to_micro('_contrib')}) OVER () AS DOUBLE)")).alias(
+            "total_delta"
+        ),
     )
 
 
@@ -3540,9 +3498,9 @@ ORACLES["cost_optimal_threshold"] = _cost_optimal_threshold_oracle()
 
 @query(
     "winsorized_mean_stats",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT event_type, CAST(round(value * 1000000) AS BIGINT) AS v_u
+        SELECT event_type, {to_micro('value')} AS v_u
         FROM events
     ), s AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -3555,11 +3513,11 @@ ORACLES["cost_optimal_threshold"] = _cost_optimal_threshold_oracle()
         FROM s
     )
     SELECT e.event_type, b.n,
-           round(b.lo / 1e6, 6) AS clamp_lo,
-           round(b.hi / 1e6, 6) AS clamp_hi,
-           round(CAST(sum(least(greatest(e.v_u, b.lo), b.hi)) AS DOUBLE)
-                 / b.n / 1e6, 6) AS winsorized_mean,
-           round(CAST(sum(e.v_u) AS DOUBLE) / b.n / 1e6, 6) AS raw_mean
+           {emit_micro('b.lo')} AS clamp_lo,
+           {emit_micro('b.hi')} AS clamp_hi,
+           {emit_micro('''CAST(sum(least(greatest(e.v_u, b.lo), b.hi)) AS DOUBLE)
+                 / b.n''')} AS winsorized_mean,
+           {emit_micro('CAST(sum(e.v_u) AS DOUBLE) / b.n')} AS raw_mean
     FROM e JOIN b USING (event_type)
     GROUP BY e.event_type, b.n, b.lo, b.hi
     """,
@@ -3575,7 +3533,7 @@ def winsorized_mean_stats_q(spark, sf_dir):
     readout."""
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
-        "event_type", F.expr("cast(round(value * 1000000) as bigint)").alias("v_u")
+        "event_type", F.expr(to_micro("value")).alias("v_u")
     )
     s = e.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
@@ -3599,21 +3557,17 @@ def winsorized_mean_stats_q(spark, sf_dir):
         .select(
             "event_type",
             "n",
-            F.round(F.col("lo") / F.lit(1e6), 6).alias("clamp_lo"),
-            F.round(F.col("hi") / F.lit(1e6), 6).alias("clamp_hi"),
-            F.round(F.col("_ws").cast("double") / F.col("n") / F.lit(1e6), 6).alias(
-                "winsorized_mean"
-            ),
-            F.round(F.col("_rs").cast("double") / F.col("n") / F.lit(1e6), 6).alias(
-                "raw_mean"
-            ),
+            F.expr(emit_micro("lo")).alias("clamp_lo"),
+            F.expr(emit_micro("hi")).alias("clamp_hi"),
+            F.expr(emit_micro("CAST(_ws AS DOUBLE) / n")).alias("winsorized_mean"),
+            F.expr(emit_micro("CAST(_rs AS DOUBLE) / n")).alias("raw_mean"),
         )
     )
 
 
 @query(
     "revenue_max_drawdown",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS month_id,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c
@@ -3642,14 +3596,12 @@ def winsorized_mean_stats_q(spark, sf_dir):
            -- magnitudes is sub-ulp and engine-dependent; round-div the
            -- exact integers to micro-dollars first (HUGEINT headroom),
            -- then ONE double division
-           CAST((2 * (CAST(cum_u AS HUGEINT) * 10000)
-                 + CASE WHEN cum_u < 0 THEN -nm ELSE nm END) // (2 * nm)
-                AS DOUBLE) / 1000000 AS cum_deviation,
-           CAST((2 * (CAST(peak_u AS HUGEINT) * 10000)
-                 + CASE WHEN peak_u < 0 THEN -nm ELSE nm END) // (2 * nm)
-                AS DOUBLE) / 1000000 AS running_peak,
-           CAST((2 * (CAST(peak_u - cum_u AS HUGEINT) * 10000) + nm) // (2 * nm)
-                AS DOUBLE) / 1000000 AS drawdown,
+           {from_micro(f"CAST({dd_round_div('CAST(cum_u AS HUGEINT) * 10000', 'nm')} AS DOUBLE)")}
+               AS cum_deviation,
+           {from_micro(f"CAST({dd_round_div('CAST(peak_u AS HUGEINT) * 10000', 'nm')} AS DOUBLE)")}
+               AS running_peak,
+           {from_micro(f"CAST({dd_round_div('CAST(peak_u - cum_u AS HUGEINT) * 10000', 'nm')} AS DOUBLE)")}
+               AS drawdown,
            CAST(peak_u - cum_u AS BIGINT)
                = CAST(max(peak_u - cum_u) OVER () AS BIGINT) AS is_max_drawdown
     FROM dd
@@ -3691,13 +3643,9 @@ def revenue_max_drawdown_q(spark, sf_dir):
     dd = c.select(
         "month_id", "nm", "cum_u", F.max("cum_u").over(wc).cast("long").alias("peak_u")
     )
-    micro = lambda a_sql: (  # noqa: E731 - exact round-div to micro-dollars
-        F.expr(
-            f"cast((2 * (cast({a_sql} as decimal(38,0)) * 10000)"
-            f" + (case when ({a_sql}) < 0 then -nm else nm end)) div (2 * nm)"
-            " as double) / 1000000"
-        )
-    )
+    def micro(a_sql):  # exact round-div to micro-dollars
+        u = round_div(f"cast({a_sql} as decimal(38,0)) * 10000", "nm")
+        return F.expr(from_micro(f"cast({u} as double)"))
     return dd.select(
         F.col("month_id").cast("long"),
         micro("cum_u").alias("cum_deviation"),

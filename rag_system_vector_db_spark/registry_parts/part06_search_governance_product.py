@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -37,7 +38,7 @@ from .part04_experimentation_layout import _classifier_calibration_oracle  # noq
 
 @query(
     "mix_entropy_trend",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT epoch_ns(ts) // 86400000000000 // 7 AS week_id, event_type,
                CAST(count(*) AS BIGINT) AS n
@@ -48,15 +49,15 @@ from .part04_experimentation_layout import _classifier_calibration_oracle  # noq
         FROM w
     ), h AS (
         SELECT week_id, CAST(max(tw) AS BIGINT) AS n_events,
-               CAST(sum(CAST(round(-(CAST(n AS DOUBLE) / tw)
-                    * ln(CAST(n AS DOUBLE) / tw) * 1000000) AS BIGINT)) AS BIGINT)
+               CAST(sum({to_micro('''-(CAST(n AS DOUBLE) / tw)
+                    * ln(CAST(n AS DOUBLE) / tw)''')}) AS BIGINT)
                    AS h_u,
                CAST(count(*) AS BIGINT) AS n_types
         FROM t GROUP BY week_id
     )
     SELECT CAST(week_id AS BIGINT) AS week_id, n_events, n_types,
-           round(h_u / 1e6, 6) AS mix_entropy,
-           round(h_u / 1e6 / ln(CAST(n_types AS DOUBLE)), 6) AS normalized_entropy
+           {emit_micro('h_u')} AS mix_entropy,
+           round({from_micro('h_u')} / ln(CAST(n_types AS DOUBLE)), 6) AS normalized_entropy
     FROM h WHERE n_types > 1
     """,
 )
@@ -81,10 +82,7 @@ def mix_entropy_trend_q(spark, sf_dir):
     p = F.col("n").cast("double") / F.col("tw")
     h = t.groupBy("week_id").agg(
         F.max("tw").cast("long").alias("n_events"),
-        F.sum(F.expr(
-            "cast(round(-(cast(n as double) / tw) * ln(cast(n as double) / tw)"
-            " * 1000000) as bigint)"
-        ))
+        F.sum(F.expr(to_micro("-(cast(n as double) / tw) * ln(cast(n as double) / tw)")))
         .cast("long")
         .alias("h_u"),
         F.count("*").cast("long").alias("n_types"),
@@ -93,10 +91,10 @@ def mix_entropy_trend_q(spark, sf_dir):
         F.col("week_id").cast("long"),
         "n_events",
         "n_types",
-        F.round(F.col("h_u") / F.lit(1e6), 6).alias("mix_entropy"),
-        F.round(
-            F.col("h_u") / F.lit(1e6) / F.log(F.col("n_types").cast("double")), 6
-        ).alias("normalized_entropy"),
+        F.expr(emit_micro("h_u")).alias("mix_entropy"),
+        F.expr(f"round({from_micro('h_u')} / ln(CAST(n_types AS DOUBLE)), 6)").alias(
+            "normalized_entropy"
+        ),
     )
 
 
@@ -1331,7 +1329,7 @@ def window_funnel_q(spark, sf_dir):
 
 @query(
     "position_bias_coec",
-    oracle="""
+    oracle=f"""
     WITH imp AS (
         SELECT user_id % 40 AS item,
                json_extract_string(props, '$.k')::BIGINT % 10 AS pos,
@@ -1347,15 +1345,15 @@ def window_funnel_q(spark, sf_dir):
         FROM imp GROUP BY item, pos
     ), j AS (
         SELECT item, cnt, clk,
-               CAST(round(cnt * c_p * 1000000.0 / n_p) AS BIGINT) AS exp_u
+               CAST(round(cnt * c_p * {MICRO}.0 / n_p) AS BIGINT) AS exp_u
         FROM cells JOIN ps USING (pos)
     )
     SELECT CAST(item AS BIGINT) AS item,
            CAST(sum(cnt) AS BIGINT) AS impressions,
            CAST(sum(clk) AS BIGINT) AS clicks,
-           round(CAST(sum(exp_u) AS DOUBLE) / 1e6, 6) AS expected_clicks,
+           {emit_micro('CAST(sum(exp_u) AS DOUBLE)')} AS expected_clicks,
            CASE WHEN sum(exp_u) = 0 THEN NULL
-                ELSE round(CAST(sum(clk) AS DOUBLE) * 1e6 / sum(exp_u), 6)
+                ELSE round(CAST(sum(clk) AS DOUBLE) * {MICRO} / sum(exp_u), 6)
            END AS coec
     FROM j GROUP BY item
     """,
@@ -1392,16 +1390,14 @@ def position_bias_coec_q(spark, sf_dir):
         "item",
         "cnt",
         "clk",
-        F.expr("cast(round(cnt * c_p * 1000000.0 / n_p) as bigint)").alias("exp_u"),
+        F.expr(f"cast(round(cnt * c_p * {MICRO}.0 / n_p) as bigint)").alias("exp_u"),
     )
     return j.groupBy("item").agg(
         F.sum("cnt").cast("long").alias("impressions"),
         F.sum("clk").cast("long").alias("clicks"),
-        F.round(F.sum("exp_u").cast("double") / F.lit(1e6), 6).alias(
-            "expected_clicks"
-        ),
+        F.expr(emit_micro("CAST(sum(exp_u) AS DOUBLE)")).alias("expected_clicks"),
         F.when(F.sum("exp_u") == 0, F.lit(None).cast("double"))
-        .otherwise(F.round(F.sum("clk").cast("double") * 1e6 / F.sum("exp_u"), 6))
+        .otherwise(F.round(F.sum("clk").cast("double") * float(MICRO) / F.sum("exp_u"), 6))
         .alias("coec"),
     ).select(
         F.col("item").cast("long").alias("item"),
@@ -1445,7 +1441,7 @@ def position_bias_coec_q(spark, sf_dir):
         GROUP BY lrow[3]
     ), lin AS (
         SELECT t.event_type AS touch_type,
-               CAST(sum(CAST(round(1000000.0 * cnt / n) AS BIGINT)) AS BIGINT) AS lin_u
+               CAST(sum(CAST(round({MICRO}.0 * cnt / n) AS BIGINT)) AS BIGINT) AS lin_u
         FROM (SELECT conv_id, event_type, CAST(count(*) AS BIGINT) AS cnt
               FROM touches GROUP BY conv_id, event_type) t
         JOIN per_conv USING (conv_id)
@@ -1458,7 +1454,7 @@ def position_bias_coec_q(spark, sf_dir):
         SELECT coalesce(f.touch_type, l.touch_type, n.touch_type) AS touch_type,
                coalesce(f.c, 0) AS first_touch,
                coalesce(l.c, 0) AS last_touch,
-               round(coalesce(n.lin_u, 0) / 1e6, 6) AS linear
+               {emit_micro('coalesce(n.lin_u, 0)')} AS linear
         FROM firsts f
         FULL OUTER JOIN lasts l USING (touch_type)
         FULL OUTER JOIN lin n USING (touch_type)
@@ -1531,7 +1527,7 @@ def multitouch_attribution_q(spark, sf_dir):
         .join(per_conv.select("conv_id", "n"), "conv_id")
         .groupBy(F.col("event_type").alias("touch_type"))
         .agg(
-            F.sum(F.expr("cast(round(1000000.0 * cnt / n) as bigint)"))
+            F.sum(F.expr(f"cast(round({MICRO}.0 * cnt / n) as bigint)"))
             .cast("long")
             .alias("lin_u")
         )
@@ -1543,7 +1539,7 @@ def multitouch_attribution_q(spark, sf_dir):
             "touch_type",
             F.coalesce("first_touch", F.lit(0)).cast("long").alias("first_touch"),
             F.coalesce("last_touch", F.lit(0)).cast("long").alias("last_touch"),
-            F.round(F.coalesce("lin_u", F.lit(0)) / F.lit(1e6), 6).alias("linear"),
+            F.expr(emit_micro("coalesce(lin_u, 0)")).alias("linear"),
         )
     )
     direct = (
@@ -1679,9 +1675,9 @@ def pit_feature_join_q(spark, sf_dir):
 
 @query(
     "histogram_quantile_sketch",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT event_type, CAST(round(value * 1000000) AS BIGINT) AS v_u
+        SELECT event_type, {to_micro('value')} AS v_u
         FROM events
     ), st AS (
         SELECT event_type, min(v_u) AS mn, max(v_u) AS mx,
@@ -1712,11 +1708,10 @@ def pit_feature_join_q(spark, sf_dir):
           AND (q.q * w.n + 99) // 100 > c.cum_before
     )
     SELECT event_type, CAST(q AS BIGINT) AS q,
-           round((mn + bin * width + ((target - cum_before) * width) // cnt)
-                 / 1e6, 6) AS approx,
-           round(vs[CAST(target AS INTEGER)] / 1e6, 6) AS exact,
-           round(abs(mn + bin * width + ((target - cum_before) * width) // cnt
-                     - vs[CAST(target AS INTEGER)]) / 1e6, 6) AS abs_err
+           {emit_micro('mn + bin * width + ((target - cum_before) * width) // cnt')} AS approx,
+           {emit_micro('vs[CAST(target AS INTEGER)]')} AS exact,
+           {emit_micro('''abs(mn + bin * width + ((target - cum_before) * width) // cnt
+                     - vs[CAST(target AS INTEGER)])''')} AS abs_err
     FROM qs
     """,
 )
@@ -1734,7 +1729,7 @@ def histogram_quantile_sketch_q(spark, sf_dir):
     (approx IS the 100 TB path)."""
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
-        "event_type", F.expr("cast(round(value * 1000000) as bigint)").alias("v_u")
+        "event_type", F.expr(to_micro("value")).alias("v_u")
     )
     st = e.groupBy("event_type").agg(
         F.min("v_u").alias("mn"),
@@ -1771,14 +1766,14 @@ def histogram_quantile_sketch_q(spark, sf_dir):
             (F.col("target") <= F.col("cum")) & (F.col("target") > F.col("cum_before"))
         )
     )
-    approx = F.expr("mn + bin * width + ((target - cum_before) * width) div cnt")
-    exact = F.element_at("vs", F.col("target").cast("int"))
+    approx = "mn + bin * width + ((target - cum_before) * width) div cnt"
+    exact = "element_at(vs, CAST(target AS INT))"
     return qs.select(
         "event_type",
         F.col("q").cast("long").alias("q"),
-        F.round(approx / F.lit(1e6), 6).alias("approx"),
-        F.round(exact / F.lit(1e6), 6).alias("exact"),
-        F.round(F.abs(approx - exact) / F.lit(1e6), 6).alias("abs_err"),
+        F.expr(emit_micro(approx)).alias("approx"),
+        F.expr(emit_micro(exact)).alias("exact"),
+        F.expr(emit_micro(f"abs(({approx}) - {exact})")).alias("abs_err"),
     )
 
 
@@ -1926,11 +1921,11 @@ def _markov_oracle() -> str:
     def step(p: str, removed: str | None, s: str) -> str:
         if removed is not None and s == removed:
             return f"CAST(0 AS BIGINT) AS {p}_{s}"
-        terms = [f"m.pu_{s}_conv * 1000000"]
+        terms = [f"m.pu_{s}_conv * {MICRO}"]
         for ch in _MARKOV_CHANNELS:
             if removed is None or ch != removed:
                 terms.append(f"m.pu_{s}_{ch} * it.{p}_{ch}")
-        return f"({' + '.join(terms)}) // 1000000 AS {p}_{s}"
+        return f"({' + '.join(terms)}) // {MICRO} AS {p}_{s}"
 
     steps = ",\n        ".join(
         step(p, rm, s) for p, rm in scen.items() for s in states
@@ -1990,8 +1985,8 @@ def _markov_oracle() -> str:
                         CASE c0.channel {" ".join(f"WHEN '{ch}' THEN fin.r{ch[0]}_start" for ch in _MARKOV_CHANNELS)} END AS pr_u) c
     ), eff AS (
         SELECT channel,
-               round(pf_u / 1e6, 6) AS p_full,
-               round(pr_u / 1e6, 6) AS p_removed,
+               {emit_micro('pf_u')} AS p_full,
+               {emit_micro('pr_u')} AS p_removed,
                CASE WHEN pf_u = 0 THEN NULL
                     ELSE CAST(pf_u - pr_u AS DOUBLE) / pf_u END AS re_raw
         FROM chans
@@ -2015,7 +2010,7 @@ def markov_attribution_q(spark, sf_dir):
     windows sharing the user partitioning), and the absorbing-chain
     fixed point runs 24 synchronous steps ENTIRELY IN EXACT
     MICRO-UNIT INTEGERS (transition probs as floor-rounded
-    micro-probs, each step an integer dot product div 1e6) — so the
+    micro-probs, each step an integer dot product in micro-units) — so the
     iteration is order-free and the DuckDB recursive CTE replays it
     bit-for-bit (the prove-the-iteration posture of kmeans_refine /
     knn_graph_pagerank applied to absorption probabilities). The
@@ -2080,13 +2075,13 @@ def markov_attribution_q(spark, sf_dir):
                     if ss != s:
                         continue
                     if t == "conv":
-                        pt = 1_000_000
+                        pt = MICRO
                     elif t == "null" or t == removed:
                         pt = 0
                     else:
                         pt = p.get(t, 0)
                     tot += w * pt
-                newp[s] = tot // 1_000_000
+                newp[s] = tot // MICRO
             p = newp
         return p["start"]
 
@@ -2102,23 +2097,18 @@ def markov_attribution_q(spark, sf_dir):
         if any(v is not None for v in effs.values())
         else None
     )
-    def _r6(x: float | None) -> float | None:
-        # DuckDB round() is half-away-from-zero; Python round() is
-        # banker's. Values here are non-negative, so half-up matches.
-        return None if x is None else _math.floor(x * 1e6 + 0.5) / 1e6
-
     out = []
     for ch, pfv, prv in rows:
         re_raw = effs[ch]
         share = (
-            None if re_raw is None or not tot_eff else _r6(re_raw / tot_eff)
+            None if re_raw is None or not tot_eff else round6(re_raw / tot_eff)
         )
         out.append(
             (
                 ch,
-                pfv / 1e6,  # exact micro-units: ≤6 decimals already
-                prv / 1e6,
-                _r6(re_raw),
+                pfv / MICRO,  # exact micro-units: ≤6 decimals already
+                prv / MICRO,
+                None if re_raw is None else round6(re_raw),
                 share,
             )
         )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -540,8 +541,8 @@ def _seeding_oracle(sf_dir: str) -> str:
     firstk, far = _seeding_sets(sf_dir)
     return f"""
     WITH costs AS (
-        SELECT CAST(round(1000000 * {_min_d2_sql('embedding', firstk)}) AS BIGINT) AS c_first,
-               CAST(round(1000000 * {_min_d2_sql('embedding', far)}) AS BIGINT) AS c_far
+        SELECT {to_micro(_min_d2_sql('embedding', firstk))} AS c_first,
+               {to_micro(_min_d2_sql('embedding', far))} AS c_far
         FROM embeddings
     ), s AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
@@ -554,8 +555,8 @@ def _seeding_oracle(sf_dir: str) -> str:
         SELECT 'farthest_point', n, t_far FROM s
     )
     SELECT seeding, n,
-           round(total_u / 1e6, 6) AS total_cost,
-           round(CAST(total_u AS DOUBLE) / n / 1e6, 6) AS mean_cost,
+           {emit_micro('total_u')} AS total_cost,
+           {emit_micro('CAST(total_u AS DOUBLE) / n')} AS mean_cost,
            round(CAST(total_u AS DOUBLE) / min(total_u) OVER (), 6) AS vs_best
     FROM u
     """
@@ -577,16 +578,12 @@ def seeding_quality_eval_q(spark, sf_dir):
     firstk, far = _seeding_sets(sf_dir)
 
     def min_d2(vec, cents):
-        return F.expr(f"least({', '.join(V.sq_euclidean(vec, V.sql_literal(c)) for c in cents)})")
+        return f"least({', '.join(V.sq_euclidean(vec, V.sql_literal(c)) for c in cents)})"
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     costs = emb.select(
-        F.round(1_000_000 * min_d2("embedding", firstk))
-        .cast("long")
-        .alias("c_first"),
-        F.round(1_000_000 * min_d2("embedding", far))
-        .cast("long")
-        .alias("c_far"),
+        F.expr(to_micro(min_d2("embedding", firstk))).alias("c_first"),
+        F.expr(to_micro(min_d2("embedding", far))).alias("c_far"),
     )
     s = costs.agg(
         F.count("*").cast("long").alias("n"),
@@ -606,10 +603,8 @@ def seeding_quality_eval_q(spark, sf_dir):
     return u.select(
         "seeding",
         "n",
-        F.round(F.col("total_u") / F.lit(1e6), 6).alias("total_cost"),
-        F.round(F.col("total_u").cast("double") / F.col("n") / F.lit(1e6), 6).alias(
-            "mean_cost"
-        ),
+        F.expr(emit_micro("total_u")).alias("total_cost"),
+        F.expr(emit_micro("CAST(total_u AS DOUBLE) / n")).alias("mean_cost"),
         F.round(
             F.col("total_u").cast("double") / F.min("total_u").over(wa), 6
         ).alias("vs_best"),
@@ -776,7 +771,7 @@ def ood_mahalanobis_q(spark, sf_dir):
 
 @query(
     "retention_halflife_fit",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT user_id, epoch_ns(ts) // 86400000000000 AS wk FROM events
     ), fw AS (
@@ -800,7 +795,7 @@ def ood_mahalanobis_q(spark, sf_dir):
         WHERE n.active > 0 AND d.eligible > 0
     ), q AS (
         SELECT CAST(x AS BIGINT) AS xi,
-               CAST(round(y * 1000000) AS BIGINT) AS yu
+               {to_micro('y')} AS yu
         FROM pts
     ), m AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
@@ -813,12 +808,12 @@ def ood_mahalanobis_q(spark, sf_dir):
     )
     SELECT n AS n_points,
            CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                ELSE round(-(CAST(n * sxy - sx * sy AS DOUBLE)
-                             / (n * sxx - sx * sx)) / 1e6, 6) END AS lambda,
+                ELSE {emit_micro('''-(CAST(n * sxy - sx * sy AS DOUBLE)
+                             / (n * sxx - sx * sx))''')} END AS lambda,
            CASE WHEN n * sxx - sx * sx = 0 OR n * sxy - sx * sy >= 0 THEN NULL
                 ELSE round(0.6931471805599453
                            / ((CAST(n * sxy - sx * sy AS DOUBLE)
-                               / (n * sxx - sx * sx)) / -1e6), 6) END
+                               / (n * sxx - sx * sx)) / -{MICRO}), 6) END
                AS half_life_days,
            CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
                 ELSE round(CAST(n * sxy - sx * sy AS DOUBLE) * (n * sxy - sx * sy)
@@ -865,7 +860,7 @@ def retention_halflife_fit_q(spark, sf_dir):
         .select(
             F.col("off").cast("long").alias("xi"),
             F.expr(
-                "cast(round(ln(cast(active as double) / eligible) * 1000000) as bigint)"
+                to_micro("ln(cast(active as double) / eligible)")
             ).alias("yu"),
         )
     )
@@ -880,16 +875,14 @@ def retention_halflife_fit_q(spark, sf_dir):
     sxx_d = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     sxy_n = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     syy_d = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = sxy_n.cast("double") / sxx_d
+    slope = "CAST(n * sxy - sx * sy AS DOUBLE) / (n * sxx - sx * sx)"
     return m.select(
         F.col("n").alias("n_points"),
         F.when(sxx_d == 0, F.lit(None).cast("double"))
-        .otherwise(F.round(-slope / 1e6, 6))
+        .otherwise(F.expr(emit_micro(f"-({slope})")))
         .alias("lambda"),
         F.when((sxx_d == 0) | (sxy_n >= 0), F.lit(None).cast("double"))
-        .otherwise(
-            F.round(F.lit(0.6931471805599453) / (slope / F.lit(-1e6)), 6)
-        )
+        .otherwise(F.expr(f"round(0.6931471805599453D / (({slope}) / -{MICRO}), 6)"))
         .alias("half_life_days"),
         F.when((sxx_d == 0) | (syy_d == 0), F.lit(None).cast("double"))
         .otherwise(
@@ -1313,7 +1306,7 @@ def _ucb_oracle() -> str:
     )
     ucb = {
         a: (
-            f"(CAST(it.s_{short[a]} AS DOUBLE) / it.n_{short[a]} / 1e6"
+            f"({from_micro(f'CAST(it.s_{short[a]} AS DOUBLE) / it.n_{short[a]}')}"
             f" + sqrt(2 * ln(CAST(it.t AS DOUBLE)) / it.n_{short[a]}))"
         )
         for a in arms
@@ -1344,7 +1337,7 @@ def _ucb_oracle() -> str:
     WITH RECURSIVE rt AS (
         SELECT event_type AS arm, epoch_ns(ts) // 86400000000000
                - (SELECT min(epoch_ns(ts) // 86400000000000) FROM events) AS day,
-               CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT)
+               CAST(sum({to_micro('value')}) AS BIGINT)
                  // CAST(count(*) AS BIGINT) AS r_u
         FROM events GROUP BY 1, 2
     ), spine AS (
@@ -1371,9 +1364,9 @@ def _ucb_oracle() -> str:
         ) ORDER BY tot DESC, arm LIMIT 1
     )
     SELECT CAST(it.t AS BIGINT) AS round, it.chosen AS arm,
-           round(it.reward_u / 1e6, 6) AS reward,
-           round(CAST(sum(({best_arr})[it.t] - it.reward_u)
-                      OVER (ORDER BY it.t) AS DOUBLE) / 1e6, 6) AS cum_regret
+           {emit_micro('it.reward_u')} AS reward,
+           {emit_micro(f"CAST(sum(({best_arr})[it.t] - it.reward_u) OVER (ORDER BY it.t) AS DOUBLE)")}
+               AS cum_regret
     FROM it, best, rrow
     WHERE it.t >= 1
     """
@@ -1405,7 +1398,7 @@ def ucb_bandit_replay_q(spark, sf_dir):
         )
         .agg(
             (
-                F.sum(F.expr("cast(round(value * 1000000) as bigint)"))
+                F.sum(F.expr(to_micro("value")))
                 .cast("long")
                 / F.count("*").cast("long")
             )
@@ -1425,7 +1418,7 @@ def ucb_bandit_replay_q(spark, sf_dir):
             tprev = t - 1
             best_u, arm = None, None
             us = {
-                a: s[a] / n[a] / 1e6 + _math.sqrt(2 * _math.log(float(tprev)) / n[a])
+                a: s[a] / n[a] / MICRO + _math.sqrt(2 * _math.log(float(tprev)) / n[a])
                 for a in _UCB_ARMS
             }
             mx = max(us.values())
@@ -1441,7 +1434,7 @@ def ucb_bandit_replay_q(spark, sf_dir):
     out, cum = [], 0
     for t, arm, r in steps:
         cum += rt.get((best_arm, t - 1), 0) - r
-        out.append((t, arm, r / 1e6, cum / 1e6))
+        out.append((t, arm, r / MICRO, cum / MICRO))
     return spark.createDataFrame(
         out, "round long, arm string, reward double, cum_regret double"
     )
@@ -1452,13 +1445,13 @@ ORACLES["ucb_bandit_replay"] = _ucb_oracle()
 
 @query(
     "propensity_matching_att",
-    oracle="""
+    oracle=f"""
     WITH u0 AS (
         SELECT user_id,
                CAST(count(*) AS BIGINT) AS n_ev,
                CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
                CAST(sum(CASE WHEN event_type = 'purchase'
-                             THEN CAST(round(value * 1000000) AS BIGINT)
+                             THEN {to_micro('value')}
                              ELSE 0 END) AS BIGINT) AS y_u
         FROM events GROUP BY user_id
     ), med AS (
@@ -1490,7 +1483,7 @@ ORACLES["ucb_bandit_replay"] = _ucb_oracle()
         SELECT CAST((SELECT count(*) FROM ps WHERE treated = 1) AS BIGINT) AS n_treated,
                CAST(count(*) AS BIGINT) AS n_matched,
                CAST(sum(y_u - m_y) AS BIGINT) AS att_num_u,
-               CAST(sum(CAST(round(abs(p - m_p) * 1000000) AS BIGINT)) AS BIGINT) AS gap_u
+               CAST(sum({to_micro('abs(p - m_p)')}) AS BIGINT) AS gap_u
         FROM matched
     ), naive AS (
         SELECT CAST(sum(CASE WHEN treated = 1 THEN y_u ELSE 0 END) AS BIGINT) AS yt,
@@ -1500,10 +1493,10 @@ ORACLES["ucb_bandit_replay"] = _ucb_oracle()
         FROM ps
     )
     SELECT a.n_treated, a.n_matched,
-           round(CAST(a.att_num_u AS DOUBLE) / a.n_matched / 1e6, 6) AS att,
-           round(CAST(n.yt AS DOUBLE) / n.nt / 1e6
-                 - CAST(n.yc AS DOUBLE) / n.nc / 1e6, 6) AS naive_diff,
-           round(CAST(a.gap_u AS DOUBLE) / a.n_matched / 1e6, 6) AS mean_ps_gap
+           {emit_micro('CAST(a.att_num_u AS DOUBLE) / a.n_matched')} AS att,
+           round({from_micro('CAST(n.yt AS DOUBLE) / n.nt')}
+                 - {from_micro('CAST(n.yc AS DOUBLE) / n.nc')}, 6) AS naive_diff,
+           {emit_micro('CAST(a.gap_u AS DOUBLE) / a.n_matched')} AS mean_ps_gap
     FROM agg a, naive n
     """,
 )
@@ -1531,7 +1524,7 @@ def propensity_matching_att_q(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.expr("cast(round(value * 1000000) as bigint)"),
+                F.expr(to_micro("value")),
             ).otherwise(0)
         )
         .cast("long")
@@ -1599,7 +1592,7 @@ def propensity_matching_att_q(spark, sf_dir):
         F.count("*").cast("long").alias("n_matched"),
         F.sum(F.col("y_u") - F.col("m_y")).cast("long").alias("att_num_u"),
         F.sum(
-            F.expr("cast(round(abs(p - m_p) * 1000000) as bigint)")
+            F.expr(to_micro("abs(p - m_p)"))
         )
         .cast("long")
         .alias("gap_u"),
@@ -1607,17 +1600,12 @@ def propensity_matching_att_q(spark, sf_dir):
     return agg.crossJoin(F.broadcast(nt_df)).select(
         "n_treated",
         "n_matched",
-        F.round(F.col("att_num_u").cast("double") / F.col("n_matched") / 1e6, 6).alias(
-            "att"
-        ),
-        F.round(
-            F.col("yt").cast("double") / F.col("nt") / 1e6
-            - F.col("yc").cast("double") / F.col("nc") / 1e6,
-            6,
+        F.expr(emit_micro("CAST(att_num_u AS DOUBLE) / n_matched")).alias("att"),
+        F.expr(
+            f"round({from_micro('CAST(yt AS DOUBLE) / nt')}"
+            f" - {from_micro('CAST(yc AS DOUBLE) / nc')}, 6)"
         ).alias("naive_diff"),
-        F.round(F.col("gap_u").cast("double") / F.col("n_matched") / 1e6, 6).alias(
-            "mean_ps_gap"
-        ),
+        F.expr(emit_micro("CAST(gap_u AS DOUBLE) / n_matched")).alias("mean_ps_gap"),
     )
 
 
@@ -1628,9 +1616,9 @@ def propensity_matching_att_q(spark, sf_dir):
 
 @query(
     "gmm_em_round",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT CAST(round(value * 1000000) AS BIGINT) AS v_u FROM events
+        SELECT {to_micro('value')} AS v_u FROM events
     ), s AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                list_sort(list(v_u)) AS vs,
@@ -1646,7 +1634,7 @@ def propensity_matching_att_q(spark, sf_dir):
         FROM s
     ), r AS (
         SELECT e.v_u, i.mu1, i.mu2, i.sig2, i.n,
-               CAST(round(1000000.0 / (1.0 + exp(
+               CAST(round({MICRO}.0 / (1.0 + exp(
                    (CAST(e.v_u - i.mu1 AS DOUBLE) * (e.v_u - i.mu1)
                     - CAST(e.v_u - i.mu2 AS DOUBLE) * (e.v_u - i.mu2))
                    / (2.0 * i.sig2)))) AS BIGINT) AS r_u
@@ -1656,16 +1644,16 @@ def propensity_matching_att_q(spark, sf_dir):
                any_value(sig2) AS sig2, any_value(n) AS n,
                CAST(sum(CAST(r_u AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sr,
                CAST(sum(CAST(r_u AS DECIMAL(38,0)) * v_u) AS DECIMAL(38,0)) AS srv,
-               CAST(sum(CAST(1000000 - r_u AS DECIMAL(38,0)) * v_u) AS DECIMAL(38,0)) AS scv,
-               CAST(sum(CAST(1000000 - r_u AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sc
+               CAST(sum(CAST({MICRO} - r_u AS DECIMAL(38,0)) * v_u) AS DECIMAL(38,0)) AS scv,
+               CAST(sum(CAST({MICRO} - r_u AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sc
         FROM r
     )
-    SELECT round(mu1 / 1e6, 6) AS mu1_init,
-           round(mu2 / 1e6, 6) AS mu2_init,
+    SELECT {emit_micro('mu1')} AS mu1_init,
+           {emit_micro('mu2')} AS mu2_init,
            round(sig2 / 1e12, 6) AS sigma2_init,
-           round(CAST(srv AS DOUBLE) / CAST(sr AS DOUBLE) / 1e6, 6) AS mu1_next,
-           round(CAST(scv AS DOUBLE) / CAST(sc AS DOUBLE) / 1e6, 6) AS mu2_next,
-           round(CAST(sr AS DOUBLE) / n / 1e6, 6) AS pi1_next
+           {emit_micro('CAST(srv AS DOUBLE) / CAST(sr AS DOUBLE)')} AS mu1_next,
+           {emit_micro('CAST(scv AS DOUBLE) / CAST(sc AS DOUBLE)')} AS mu2_next,
+           {emit_micro('CAST(sr AS DOUBLE) / n')} AS pi1_next
     FROM m
     """,
 )
@@ -1682,7 +1670,7 @@ def gmm_em_round_q(spark, sf_dir):
     per step; further rounds repeat the same shape (the
     prove-the-iteration posture, one round deep here)."""
     ev = load_table(spark, sf_dir, "events")
-    e = ev.select(F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"))
+    e = ev.select(F.expr(to_micro("value")).alias("v_u"))
     s = e.agg(
         F.count("*").cast("long").alias("n"),
         F.sort_array(F.collect_list("v_u")).alias("vs"),
@@ -1706,7 +1694,7 @@ def gmm_em_round_q(spark, sf_dir):
         "sig2",
         "n",
         F.round(
-            1000000.0
+            float(MICRO)
             / (
                 1.0
                 + F.exp(
@@ -1730,22 +1718,18 @@ def gmm_em_round_q(spark, sf_dir):
         F.first("n").alias("n"),
         F.sum(F.col("r_u").cast("decimal(38,0)")).alias("sr"),
         F.sum(F.col("r_u").cast("decimal(38,0)") * F.col("v_u")).alias("srv"),
-        F.sum((F.lit(1000000) - F.col("r_u")).cast("decimal(38,0)") * F.col("v_u")).alias(
+        F.sum((F.lit(MICRO) - F.col("r_u")).cast("decimal(38,0)") * F.col("v_u")).alias(
             "scv"
         ),
-        F.sum((F.lit(1000000) - F.col("r_u")).cast("decimal(38,0)")).alias("sc"),
+        F.sum((F.lit(MICRO) - F.col("r_u")).cast("decimal(38,0)")).alias("sc"),
     )
     return m.select(
-        F.round(F.col("mu1") / 1e6, 6).alias("mu1_init"),
-        F.round(F.col("mu2") / 1e6, 6).alias("mu2_init"),
+        F.expr(emit_micro("mu1")).alias("mu1_init"),
+        F.expr(emit_micro("mu2")).alias("mu2_init"),
         F.round(F.col("sig2") / 1e12, 6).alias("sigma2_init"),
-        F.round(
-            F.col("srv").cast("double") / F.col("sr").cast("double") / 1e6, 6
-        ).alias("mu1_next"),
-        F.round(
-            F.col("scv").cast("double") / F.col("sc").cast("double") / 1e6, 6
-        ).alias("mu2_next"),
-        F.round(F.col("sr").cast("double") / F.col("n") / 1e6, 6).alias("pi1_next"),
+        F.expr(emit_micro("CAST(srv AS DOUBLE) / CAST(sr AS DOUBLE)")).alias("mu1_next"),
+        F.expr(emit_micro("CAST(scv AS DOUBLE) / CAST(sc AS DOUBLE)")).alias("mu2_next"),
+        F.expr(emit_micro("CAST(sr AS DOUBLE) / n")).alias("pi1_next"),
     )
 
 

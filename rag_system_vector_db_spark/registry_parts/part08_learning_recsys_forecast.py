@@ -16,6 +16,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
+from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
@@ -207,13 +208,13 @@ def backfill_plan_q(spark, sf_dir):
 
 @query(
     "als_rank1_round",
-    oracle="""
+    oracle=f"""
     WITH r AS (
         SELECT o.o_custkey AS c, l.l_partkey AS p, CAST(count(*) AS BIGINT) AS r
         FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
         GROUP BY 1, 2
     ), u AS (
-        SELECT c, (1000000 * CAST(sum(r) AS BIGINT)) // CAST(count(*) AS BIGINT) AS u_u
+        SELECT c, ({MICRO} * CAST(sum(r) AS BIGINT)) // CAST(count(*) AS BIGINT) AS u_u
         FROM r GROUP BY c
     ), v AS (
         SELECT r.p,
@@ -223,9 +224,9 @@ def backfill_plan_q(spark, sf_dir):
         FROM r JOIN u USING (c) GROUP BY r.p
     ), ranked AS (
         SELECT p, n_raters,
-               CAST(num_u AS DOUBLE) * 1000000 / den_u AS v_next,
+               CAST(num_u AS DOUBLE) * {MICRO} / den_u AS v_next,
                row_number() OVER (
-                   ORDER BY CAST(num_u AS DOUBLE) * 1000000 / den_u DESC, p) AS rank
+                   ORDER BY CAST(num_u AS DOUBLE) * {MICRO} / den_u DESC, p) AS rank
         FROM v
     )
     SELECT CAST(rank AS BIGINT) AS rank, CAST(p AS BIGINT) AS partkey,
@@ -255,7 +256,7 @@ def als_rank1_round_q(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("r"))
     )
     u = r.groupBy("c").agg(
-        F.expr("(1000000 * cast(sum(r) as bigint)) div cast(count(*) as bigint)").alias(
+        F.expr(f"({MICRO} * cast(sum(r) as bigint)) div cast(count(*) as bigint)").alias(
             "u_u"
         )
     )
@@ -268,7 +269,7 @@ def als_rank1_round_q(spark, sf_dir):
             F.sum(F.col("u_u") * F.col("u_u")).cast("long").alias("den_u"),
         )
     )
-    v_next = F.col("num_u").cast("double") * 1000000 / F.col("den_u")
+    v_next = F.col("num_u").cast("double") * MICRO / F.col("den_u")
     w = Window.orderBy(v_next.desc(), "p")
     return (
         v.select(
@@ -450,12 +451,9 @@ def jl_projection_audit_q(spark, sf_dir):
     )
     return pairs.agg(
         F.count("*").cast("long").alias("n_pairs"),
-        F.round(
-            F.sum(F.expr("cast(round(ratio * 1000000) as bigint)")).cast("double")
-            / F.count("*")
-            / 1e6,
-            6,
-        ).alias("mean_ratio"),
+        F.expr(emit_micro(f"CAST(sum({to_micro('ratio')}) AS DOUBLE) / count(*)")).alias(
+            "mean_ratio"
+        ),
         F.round(F.min("ratio"), 6).alias("min_ratio"),
         F.round(F.max("ratio"), 6).alias("max_ratio"),
         F.round(
@@ -492,8 +490,7 @@ def _jl_oracle(sf_dir: str) -> str:
         FROM p a JOIN p b ON a.vec_id < b.vec_id
     )
     SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-           round(CAST(sum(CAST(round(ratio * 1000000) AS BIGINT)) AS DOUBLE)
-                 / count(*) / 1e6, 6) AS mean_ratio,
+           {emit_micro(f"CAST(sum({to_micro('ratio')}) AS DOUBLE) / count(*)")} AS mean_ratio,
            round(min(ratio), 6) AS min_ratio,
            round(max(ratio), 6) AS max_ratio,
            round(CAST(sum(CASE WHEN ratio >= 0.7 AND ratio <= 1.3 THEN 1 ELSE 0 END)
@@ -562,7 +559,7 @@ def pca_explained_variance_q(spark, sf_dir):
         *[p.alias(f"_raw{i}") for i, p in enumerate(projs)]
     ).select(
         *[
-            F.expr(f"cast(round(_raw{i} * 1000000) as bigint)").alias(f"p{i}")
+            F.expr(to_micro(f"_raw{i}")).alias(f"p{i}")
             for i in range(len(projs))
         ]
     )
@@ -612,11 +609,12 @@ def _pca_var_oracle(sf_dir: str) -> str:
     sel = []
     for i, c in enumerate(comps):
         lit = "[" + ", ".join(repr(v) for v in c) + "]"
-        sel.append(
-            f"CAST(round(list_sum(list_transform(list_zip("
+        proj = (
+            "list_sum(list_transform(list_zip("
             f"list_transform(list_zip(embedding::DOUBLE[], {mu_lit}::DOUBLE[]), x -> x[1]-x[2]),"
-            f" {lit}::DOUBLE[]), x -> x[1]*x[2])) * 1000000) AS BIGINT) AS p{i}"
+            f" {lit}::DOUBLE[]), x -> x[1]*x[2]))"
         )
+        sel.append(f"{to_micro(proj)} AS p{i}")
     rows = []
     for i in range(len(comps)):
         rows.append(
@@ -647,7 +645,7 @@ def _textrank_iter_sql(prev: str, out: str) -> str:
     {out} AS (
         SELECT n.term,
                150000 + CAST(coalesce((
-                   SELECT sum((p.p_u * e.w * 850000) // (wt.wtot * 1000000))
+                   SELECT sum((p.p_u * e.w * 850000) // (wt.wtot * {MICRO}))
                    FROM edges e
                    JOIN {prev} p ON p.term = e.a
                    JOIN wtot wt ON wt.term = e.a
@@ -666,7 +664,7 @@ def textrank_keywords_q(spark, sf_dir):
     bpe_pair_counts trick — iteration cost is independent of corpus
     size), then 3 damped power-iteration rounds run as unrolled
     join-aggregates in a DEFINED exact-integer arithmetic
-    (contributions (p·w·0.85e6) div (W·1e6), base 0.15 in
+    (contributions p·w·0.85 div W and base 0.15, all in exact
     micro-units) so both engines iterate bit-for-bit — the
     prove-the-iteration posture of knn_graph_pagerank generalized to
     arbitrary degree distributions via per-edge integer division.
@@ -694,7 +692,7 @@ def textrank_keywords_q(spark, sf_dir):
     )
     wtot = edges.groupBy("a").agg(F.sum("w").cast("long").alias("wtot"))
     nodes = edges.select(F.col("a").alias("term")).distinct()
-    p = nodes.select("term", F.lit(1_000_000).cast("long").alias("p_u"))
+    p = nodes.select("term", F.lit(MICRO).cast("long").alias("p_u"))
     for _ in range(3):
         contrib = (
             edges.join(p.select(F.col("term").alias("a"), "p_u"), "a")
@@ -702,7 +700,7 @@ def textrank_keywords_q(spark, sf_dir):
             .groupBy(F.col("b").alias("term"))
             .agg(
                 F.sum(
-                    F.expr("(p_u * w * 850000) div (wtot * 1000000)")
+                    F.expr(f"(p_u * w * 850000) div (wtot * {MICRO})")
                 )
                 .cast("long")
                 .alias("inflow")
@@ -719,7 +717,7 @@ def textrank_keywords_q(spark, sf_dir):
         .select(
             F.row_number().over(w10).cast("long").alias("rank"),
             "term",
-            F.round(F.col("p_u") / 1e6, 6).alias("score"),
+            F.expr(emit_micro("p_u")).alias("score"),
         )
     )
 
@@ -743,10 +741,10 @@ def _textrank_oracle() -> str:
     ), wtot AS (
         SELECT a AS term, CAST(sum(w) AS BIGINT) AS wtot FROM edges GROUP BY a
     ), nodes AS (SELECT DISTINCT a AS term FROM edges),
-    p0 AS (SELECT term, CAST(1000000 AS BIGINT) AS p_u FROM nodes),
+    p0 AS (SELECT term, CAST({MICRO} AS BIGINT) AS p_u FROM nodes),
     {its}
     SELECT CAST(row_number() OVER (ORDER BY p_u DESC, term) AS BIGINT) AS rank,
-           term, round(p_u / 1e6, 6) AS score
+           term, {emit_micro('p_u')} AS score
     FROM p3 ORDER BY p_u DESC, term LIMIT 10
     """
 
@@ -951,7 +949,7 @@ def itemcf_topk_q(spark, sf_dir):
 
 @query(
     "kneser_ney_bigram_ppl",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ), bg AS (
@@ -977,12 +975,12 @@ def itemcf_topk_q(spark, sf_dir):
     ), scored AS (
         SELECT g.doc_id,
                CAST(count(*) AS BIGINT) AS n_bigrams,
-               CAST(sum(CAST(round(ln(pkn.p) * 1000000) AS BIGINT)) AS BIGINT) AS lnp_u
+               CAST(sum({to_micro('ln(pkn.p)')}) AS BIGINT) AS lnp_u
         FROM bg g JOIN pkn ON pkn.w1 = g.w1 AND pkn.w2 = g.w2
         GROUP BY g.doc_id
     )
     SELECT doc_id, n_bigrams,
-           round(exp(-(CAST(lnp_u AS DOUBLE) / n_bigrams / 1e6)), 6) AS ppl
+           round(exp(-({from_micro('CAST(lnp_u AS DOUBLE) / n_bigrams')})), 6) AS ppl
     FROM scored
     """,
 )
@@ -1039,7 +1037,7 @@ def kneser_ney_bigram_ppl_q(spark, sf_dir):
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_bigrams"),
-            F.sum(F.expr("cast(round(ln(p) * 1000000) as bigint)"))
+            F.sum(F.expr(to_micro("ln(p)")))
             .cast("long")
             .alias("lnp_u"),
         )
@@ -1047,9 +1045,7 @@ def kneser_ney_bigram_ppl_q(spark, sf_dir):
     return scored.select(
         "doc_id",
         "n_bigrams",
-        F.round(
-            F.exp(-(F.col("lnp_u").cast("double") / F.col("n_bigrams") / 1e6)), 6
-        ).alias("ppl"),
+        F.expr(f"round(exp(-{from_micro('CAST(lnp_u AS DOUBLE) / n_bigrams')}), 6)").alias("ppl"),
     )
 
 
@@ -1073,15 +1069,15 @@ def kneser_ney_bigram_ppl_q(spark, sf_dir):
         FROM z
     ), per AS (
         SELECT e, CAST(sum(CASE WHEN routed THEN 1 ELSE 0 END) AS BIGINT) AS n_routed,
-               CAST(sum(CAST(round(p * 1000000) AS BIGINT)) AS BIGINT) AS p_u,
+               CAST(sum({to_micro('p')}) AS BIGINT) AS p_u,
                CAST(count(*) AS BIGINT) AS n_tok
         FROM sm GROUP BY e
     )
     SELECT CAST(e AS BIGINT) AS expert, n_routed,
            round(CAST(n_routed AS DOUBLE) / (n_tok / 8) / 8, 6) AS load_share,
-           round(CAST(p_u AS DOUBLE) / n_tok / 1e6, 6) AS mean_prob,
+           {emit_micro('CAST(p_u AS DOUBLE) / n_tok')} AS mean_prob,
            round(8 * sum(CAST(n_routed AS DOUBLE) / (n_tok / 8)
-                         * (CAST(p_u AS DOUBLE) / n_tok / 1e6)) OVER () / 8, 6)
+                         * ({from_micro('CAST(p_u AS DOUBLE) / n_tok')})) OVER () / 8, 6)
                AS aux_loss
     FROM per
     """,
@@ -1123,12 +1119,12 @@ def moe_router_balance_q(spark, sf_dir):
     )
     per = sm.groupBy("e").agg(
         F.sum(F.when(F.col("routed"), 1).otherwise(0)).cast("long").alias("n_routed"),
-        F.sum(F.expr("cast(round(p * 1000000) as bigint)")).cast("long").alias("p_u"),
+        F.sum(F.expr(to_micro("p"))).cast("long").alias("p_u"),
         F.count("*").cast("long").alias("n_tok"),
     )
     wa = Window.partitionBy()
     f_e = F.col("n_routed").cast("double") / (F.col("n_tok") / 8) / 8
-    p_e = F.col("p_u").cast("double") / F.col("n_tok") / 1e6
+    p_e = F.expr(from_micro("CAST(p_u AS DOUBLE) / n_tok"))
     return per.select(
         F.col("e").cast("long").alias("expert"),
         "n_routed",
@@ -1140,7 +1136,7 @@ def moe_router_balance_q(spark, sf_dir):
 
 @query(
     "topic_coherence_npmi",
-    oracle="""
+    oracle=f"""
     WITH pres AS (
         SELECT DISTINCT doc_id, source, term FROM (
             SELECT doc_id, source, unnest(string_split(text, ' ')) AS term
@@ -1172,9 +1168,8 @@ def moe_router_balance_q(spark, sf_dir):
         GROUP BY tp.source, tp.ta, tp.tb
     ), scored AS (
         SELECT c.source,
-               CAST(round(
-                   ln((CAST(c.cab AS DOUBLE) * n.n) / (da.df * CAST(db.df AS DOUBLE)))
-                   / -ln(CAST(c.cab AS DOUBLE) / n.n) * 1000000) AS BIGINT) AS npmi_u
+               {to_micro('''ln((CAST(c.cab AS DOUBLE) * n.n) / (da.df * CAST(db.df AS DOUBLE)))
+                   / -ln(CAST(c.cab AS DOUBLE) / n.n)''')} AS npmi_u
         FROM copres c
         JOIN dfreq da ON da.term = c.ta
         JOIN dfreq db ON db.term = c.tb
@@ -1186,7 +1181,7 @@ def moe_router_balance_q(spark, sf_dir):
     )
     SELECT s.source, tl.topic_terms,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           round(CAST(sum(npmi_u) AS DOUBLE) / count(*) / 1e6, 6) AS mean_npmi
+           {emit_micro('CAST(sum(npmi_u) AS DOUBLE) / count(*)')} AS mean_npmi
     FROM scored s JOIN tl USING (source)
     GROUP BY s.source, tl.topic_terms
     """,
@@ -1243,8 +1238,10 @@ def topic_coherence_npmi_q(spark, sf_dir):
         .select(
             "source",
             F.expr(
-                "cast(round(ln((cast(cab as double) * n) / (dfa * cast(dfb as double)))"
-                " / -ln(cast(cab as double) / n) * 1000000) as bigint)"
+                to_micro(
+                    "ln((cast(cab as double) * n) / (dfa * cast(dfb as double)))"
+                    " / -ln(cast(cab as double) / n)"
+                )
             ).alias("npmi_u"),
         )
     )
@@ -1255,9 +1252,7 @@ def topic_coherence_npmi_q(spark, sf_dir):
         scored.groupBy("source")
         .agg(
             F.count("*").cast("long").alias("n_pairs"),
-            F.round(F.sum("npmi_u").cast("double") / F.count("*") / 1e6, 6).alias(
-                "mean_npmi"
-            ),
+            F.expr(emit_micro("CAST(sum(npmi_u) AS DOUBLE) / count(*)")).alias("mean_npmi"),
         )
         .join(tl, "source")
         .select("source", "topic_terms", "n_pairs", "mean_npmi")
@@ -1272,7 +1267,7 @@ def topic_coherence_npmi_q(spark, sf_dir):
 
 @query(
     "holt_winters_forecast",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS month_id,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c
@@ -1304,10 +1299,9 @@ def topic_coherence_npmi_q(spark, sf_dir):
         FROM init
     )
     SELECT CAST(h AS BIGINT) AS horizon, n_months,
-           CAST(round(st[1] * 1000000) AS BIGINT) / 1000000.0 AS level_end,
-           CAST(round(st[2] * 1000000) AS BIGINT) / 1000000.0 AS trend_end,
-           CAST(round((st[1] + h * st[2] + st[2 + h]) * 1000000) AS BIGINT)
-               / 1000000.0 AS forecast
+           {from_micro(to_micro('st[1]'))} AS level_end,
+           {from_micro(to_micro('st[2]'))} AS trend_end,
+           {from_micro(to_micro('st[1] + h * st[2] + st[2 + h]'))} AS forecast
     FROM fit CROSS JOIN (SELECT unnest([1, 2, 3]) AS h)
     """,
 )
@@ -1385,19 +1379,9 @@ def holt_winters_forecast_q(spark, sf_dir):
     return fit.crossJoin(F.broadcast(hs)).select(
         F.col("h").cast("long").alias("horizon"),
         "n_months",
-        (
-            F.expr("cast(round(element_at(st, 1) * 1000000) as bigint)")
-            / F.lit(1e6)
-        ).alias("level_end"),
-        (
-            F.expr("cast(round(element_at(st, 2) * 1000000) as bigint)")
-            / F.lit(1e6)
-        ).alias("trend_end"),
-        (
-            F.expr(
-                "cast(round((element_at(st, 1) + h * element_at(st, 2)"
-                " + element_at(st, 2 + h)) * 1000000) as bigint)"
-            )
-            / F.lit(1e6)
+        F.expr(from_micro(to_micro("element_at(st, 1)"))).alias("level_end"),
+        F.expr(from_micro(to_micro("element_at(st, 2)"))).alias("trend_end"),
+        F.expr(
+            from_micro(to_micro("element_at(st, 1) + h * element_at(st, 2) + element_at(st, 2 + h)"))
         ).alias("forecast"),
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.exact import MICRO, to_micro
 from ..operators.chunking import chunk_by_tokens
 from ..operators.embedding import embed_udf
 from ..operators.vector_store import append_log, compact_log, resolve_log
@@ -521,7 +522,7 @@ def streaming_ewma(events_stream: DataFrame) -> DataFrame:
         "event_type",
         "ts_ns",
         "event_id",
-        F.expr("cast(round(value * 1000000) as bigint)").alias("v_u"),
+        F.expr(to_micro("value")).alias("v_u"),
     )
 
     def ewma_fn(key, pdf_iter, state: GroupState):
@@ -547,7 +548,7 @@ def streaming_ewma(events_stream: DataFrame) -> DataFrame:
                     {
                         "event_type": [key[0]],
                         "n_seen": [int(n_seen)],
-                        "ewma": [ewma_u / 1e6],
+                        "ewma": [ewma_u / MICRO],
                     }
                 )
             ]
