@@ -90,12 +90,10 @@ def l2_norm(a: str) -> str:
 def cosine(a: str, b: str) -> str:
     """Cosine similarity; full formula (no unit-norm assumption).
 
-    A zero-norm side raises ANSI DIVIDE_BY_ZERO, where DuckDB scores
-    NULL. That is deliberate: many callers rank with sort_array on
-    (-score, id) structs (knn.topk_per_key_agg), which would put a
-    NULL score first, not last as DuckDB does. knn.topk, whose
-    ``score DESC`` sort puts NULLs last, divides with try_divide."""
-    return f"({dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
+    A zero-norm side scores NULL (try_divide), as in DuckDB; every
+    ranker orders ``score DESC NULLS LAST`` (knn.topk, knn.topk_per_key),
+    so one empty document ranks last instead of failing the query."""
+    return f"try_divide({dot(a, b)}, {l2_norm(a)} * {l2_norm(b)})"
 
 
 def euclidean(a: str, b: str) -> str:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..sources.tables import duck_parquet_path as _duck_path
+from .knn import topk_per_key
 
 
 def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -57,8 +58,6 @@ def ann_lsh_topk(
 ) -> DataFrame:
     """Single-probe LSH search: score only same-bucket candidates.
     Returns (query_id, id, score, rank)."""
-    from .knn import topk_per_key_agg
-
     cb = corpus.withColumn("_bucket", lsh_bucket(vec_col, planes))
     qb = queries.withColumn("_bucket", lsh_bucket(query_vec_col, planes))
     scored = (
@@ -69,7 +68,7 @@ def ann_lsh_topk(
             F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
         )
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k)
+    return topk_per_key(scored, query_id_col, id_col, k)
 
 
 def ann_lsh_multiprobe_topk(
@@ -98,8 +97,6 @@ def ann_lsh_multiprobe_topk(
         F.col("_b0"),
         *[F.col("_b0").bitwiseXOR(F.lit(1 << b)) for b in range(len(planes))],
     )
-    from .knn import topk_per_key_agg
-
     qp = qb.select(
         query_id_col, query_vec_col, F.explode(probes).alias("_bucket")
     )
@@ -108,7 +105,7 @@ def ann_lsh_multiprobe_topk(
         id_col,
         F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k)
+    return topk_per_key(scored, query_id_col, id_col, k)
 
 
 def _budget_sweep_tail(
@@ -135,20 +132,17 @@ def _budget_sweep_tail(
     exact_arr = exact_hits.groupBy(query_id_col).agg(
         F.collect_set(id_col).alias("_exact")
     )
-    pair = F.struct((-F.col("score")).alias("_o"), F.col(id_col))
+    # NULL scores (zero-norm cosine) sort last, as in topk_per_key
+    pair = f"named_struct('_n', score IS NULL, '_o', -score, '_id', `{id_col}`)"
     agged = per_budget.groupBy("m", query_id_col).agg(
         F.count("*").alias("n_cand"),
-        F.slice(F.sort_array(F.collect_list(pair)), 1, k).alias("_top"),
+        F.expr(f"slice(sort_array(collect_list({pair})), 1, {k})").alias("_top"),
     )
     joined = agged.join(F.broadcast(exact_arr), query_id_col).select(
         "m",
         query_id_col,
         "n_cand",
-        F.size(
-            F.array_intersect(
-                F.transform("_top", lambda s: s[id_col]), F.col("_exact")
-            )
-        ).alias("n_hit"),
+        F.expr("size(array_intersect(transform(_top, s -> s._id), _exact))").alias("n_hit"),
     )
     grid = queries.select(query_id_col).distinct().crossJoin(
         F.broadcast(
@@ -484,8 +478,6 @@ def ann_ivf_topk(
         )
         .select(query_id_col, query_vec_col, F.col("p.cell").alias("_cell"))
     )
-    from .knn import topk_per_key_agg
-
     scored = (
         cell.join(F.broadcast(qcells), "_cell")
         .select(
@@ -494,7 +486,7 @@ def ann_ivf_topk(
             F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
         )
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k)
+    return topk_per_key(scored, query_id_col, id_col, k)
 
 
 def hard_negative_mining(
@@ -845,8 +837,6 @@ def ann_pq_adc_topk(
     with IVF cell pruning for the IVF-PQ serving shape
     (ann_ivf_rerank_topk shows the shortlist+rerank half).
     Returns (query_id, id, dist, rank), dist ascending."""
-    from .knn import topk_per_key_agg
-
     coded = corpus.select(
         F.col(id_col), pq_code_expr(vec_col, codebooks).alias("_codes")
     )
@@ -858,7 +848,7 @@ def ann_pq_adc_topk(
         id_col,
         pq_adc_dist_lut(F.col("_lut"), F.col("_codes"), len(codebooks)).alias("dist"),
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k, score_col="dist", asc=True)
+    return topk_per_key(scored, query_id_col, id_col, k, score_col="dist", asc=True)
 
 
 def pq_reconstruction_error(
@@ -920,14 +910,12 @@ def ann_ivf_rerank_topk(
         query_vec_col,
         F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
     ).select(query_id_col, query_vec_col, F.col("p.cell").alias("_cell"))
-    from .knn import topk_per_key_agg
-
     approx = cell.join(F.broadcast(qcells), "_cell").select(
         query_id_col,
         id_col,
         F.expr(V.cosine("_qv", query_vec_col)).alias("_approx"),
     )
-    short = topk_per_key_agg(
+    short = topk_per_key(
         approx, query_id_col, id_col, shortlist, score_col="_approx"
     ).select(query_id_col, id_col)
     exact = (
@@ -942,7 +930,7 @@ def ann_ivf_rerank_topk(
             F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
         )
     )
-    return topk_per_key_agg(exact, query_id_col, id_col, k)
+    return topk_per_key(exact, query_id_col, id_col, k)
 
 
 def ann_ivfpq_topk(
@@ -968,10 +956,8 @@ def ann_ivfpq_topk(
     At 100 TB this is THE serving shape for vector search: the scan is
     bounded by nprobe/K of the corpus and reads 64×-compressed codes;
     the cell join key is broadcast probe structs, the per-query top-k
-    reduces via a map-side-combinable agg (no window over the scored
-    relation). Returns (query_id, id, dist, rank), dist ascending."""
-    from .knn import topk_per_key_agg
-
+    is knn.topk_per_key (at most k rows per map partition and query
+    are shuffled). Returns (query_id, id, dist, rank), dist ascending."""
     coded = with_cell(
         corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids
     ).select(
@@ -991,7 +977,7 @@ def ann_ivfpq_topk(
         id_col,
         pq_adc_dist_lut(F.col("_lut"), F.col("_codes"), len(codebooks)).alias("dist"),
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k, score_col="dist", asc=True)
+    return topk_per_key(scored, query_id_col, id_col, k, score_col="dist", asc=True)
 
 
 def ivfpq_index_build(
@@ -1036,8 +1022,6 @@ def ann_ivfpq_indexed_topk(
     I/O, and what IS read is m bytes of codes per vector, not the
     embedding. The serving half of the build-once/probe-many story
     ann_ivf_indexed tells for full-precision IVF."""
-    from .knn import topk_per_key_agg
-
     idx = spark.read.parquet(index_dir)
     qcells = queries.select(
         query_id_col,
@@ -1053,7 +1037,7 @@ def ann_ivfpq_indexed_topk(
         id_col,
         pq_adc_dist_lut(F.col("_lut"), F.col("codes"), len(codebooks)).alias("dist"),
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k, score_col="dist", asc=True)
+    return topk_per_key(scored, query_id_col, id_col, k, score_col="dist", asc=True)
 
 
 # --- IVF as a materialized, partition-pruned index layout ---
@@ -1100,8 +1084,6 @@ def ann_ivf_indexed_topk(
     layout and the cell join key is the PARTITION column — Spark's
     dynamic partition pruning turns the broadcast probe set into
     directory-level skips before any I/O."""
-    from .knn import topk_per_key_agg
-
     idx = spark.read.parquet(index_dir)
     qcells = (
         queries.select(
@@ -1116,7 +1098,7 @@ def ann_ivf_indexed_topk(
         id_col,
         F.expr(V.cosine(vec_col, query_vec_col)).alias("score"),
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k)
+    return topk_per_key(scored, query_id_col, id_col, k)
 
 
 def matryoshka_recall(
@@ -1138,8 +1120,8 @@ def matryoshka_recall(
 
     ONE plan, ONE corpus scan serves every dim: the (query x dim) set
     is exploded on the broadcast side (|Q|*|dims| rows),
-    slice(vec, 1, dim) truncates inside the cosine, and top-k per
-    (dim, query) collapses to id-arrays in one agg. The full-dim
+    slice(vec, 1, dim) truncates inside the cosine, and the top-k per
+    (dim, query) survivors collapse to id-arrays. The full-dim
     baseline is then a max_by window over that tiny frame — reusing
     the top-k relation twice would replan the whole scoring subtree
     (Spark shares no subtrees), so the grading join is a window, not
@@ -1156,12 +1138,10 @@ def matryoshka_recall(
         F.col(id_col),
         F.expr(V.cosine(f"slice({vec_col}, 1, dim)", f"slice({query_vec_col}, 1, dim)")).alias("score"),
     )
-    pair = F.struct((-F.col("score")).alias("_o"), F.col(id_col))
-    tops = scored.groupBy("dim", query_id_col).agg(
-        F.transform(
-            F.slice(F.sort_array(F.collect_list(pair)), 1, k),
-            lambda s: s[id_col],
-        ).alias("ids")
+    tops = (
+        topk_per_key(scored, ["dim", query_id_col], id_col, k)
+        .groupBy("dim", query_id_col)
+        .agg(F.collect_list(id_col).alias("ids"))
     )
     w = Window.partitionBy(query_id_col)
     graded = tops.withColumn(
@@ -1207,10 +1187,8 @@ def ann_ivfpq_residual_topk(
     q − c changes with the cell — instead of per-query. That work
     lands on the exploded broadcast side (nprobe small LUT builds per
     query); the corpus side stays m lookups + m−1 adds per code row.
-    Same probe choice, join shape and top-k agg as ann_ivfpq_topk.
+    Same probe choice, join shape and top-k as ann_ivfpq_topk.
     Returns (query_id, id, dist, rank), dist ascending."""
-    from .knn import topk_per_key_agg
-
     # the residual is a column of its own: encoding slices it m times
     coded = (
         with_cell(corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids)
@@ -1235,7 +1213,7 @@ def ann_ivfpq_residual_topk(
         id_col,
         pq_adc_dist_lut(F.col("_lut"), F.col("_codes"), len(codebooks)).alias("dist"),
     )
-    return topk_per_key_agg(scored, query_id_col, id_col, k, score_col="dist", asc=True)
+    return topk_per_key(scored, query_id_col, id_col, k, score_col="dist", asc=True)
 
 
 # --- binary (sign-bit) index: faiss IndexBinaryFlat ----------------------
@@ -1440,8 +1418,6 @@ def ann_ivf_sq8_topk(
         )
         .select(query_id_col, "_qcodes", F.col("p.cell").alias("_cell"))
     )
-    from .knn import topk_per_key_agg
-
     dist = F.aggregate(
         F.zip_with(F.col("_codes"), F.col("_qcodes"), lambda a, b: (a - b) * (a - b)),
         F.lit(0).cast("long"),
@@ -1450,7 +1426,7 @@ def ann_ivf_sq8_topk(
     scored = coded.join(F.broadcast(qcells), "_cell").select(
         query_id_col, id_col, dist.alias("code_dist")
     )
-    return topk_per_key_agg(
+    return topk_per_key(
         scored, query_id_col, id_col, k, score_col="code_dist", asc=True
     )
 
@@ -1470,11 +1446,9 @@ def quantization_recall(
 
     One corpus pass per representation (float, int8 codes, sign
     words), each with the broadcast query side and a keyed per-query
-    top-k agg; the intersections are k-row joins. Exact integer
+    top-k; the intersections are k-row joins. Exact integer
     kernels for both compressed towers, so the only float ranking is
     the exact-L2 reference itself."""
-    from .knn import topk_per_key_agg
-
     qs = vectors.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
@@ -1489,7 +1463,7 @@ def quantization_recall(
             F.expr(V.euclidean(vec_col, "_qv")).alias("dist"),
         )
     )
-    exact_top = topk_per_key_agg(exact, "query_id", id_col, k, "dist", asc=True)
+    exact_top = topk_per_key(exact, "query_id", id_col, k, "dist", asc=True)
 
     absmax = vectors.agg(
         F.max(
@@ -1522,7 +1496,7 @@ def quantization_recall(
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", id_col, sq_dist.cast("double").alias("dist"))
     )
-    sq_top = topk_per_key_agg(sq, "query_id", id_col, k, "dist", asc=True)
+    sq_top = topk_per_key(sq, "query_id", id_col, k, "dist", asc=True)
 
     lo, hi = sign_bit_words(F.col(vec_col))
     words = corpus.select(F.col(id_col), lo.alias("_lo"), hi.alias("_hi"))
@@ -1542,7 +1516,7 @@ def quantization_recall(
             .alias("dist"),
         )
     )
-    ham_top = topk_per_key_agg(ham, "query_id", id_col, k, "dist", asc=True)
+    ham_top = topk_per_key(ham, "query_id", id_col, k, "dist", asc=True)
 
     marked = exact_top.select("query_id", F.col(id_col), F.lit(1).alias("_hit"))
 

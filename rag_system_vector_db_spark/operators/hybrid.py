@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..functions import vector as V
-from .knn import topk_per_key_agg
+from .knn import topk_per_key
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -109,17 +109,17 @@ def hybrid_search_rrf(
     kw = bm25_scores(docs, query_terms, id_col, text_col).select(
         F.col(id_col).alias("_id"), F.col("bm25").alias("score")
     )
-    kw_top = topk_per_key_agg(
-        kw.withColumn("_q", F.lit(0)), "_q", "_id", depth
-    ).select(F.col("_id"), F.col("rank").alias("bm25_rank"))
+    kw_top = topk_per_key(kw, [], "_id", depth).select(
+        F.col("_id"), F.col("rank").alias("bm25_rank")
+    )
 
     vec = vectors.crossJoin(F.broadcast(query_vec)).select(
         F.col(vec_id_col).alias("_id"),
         F.expr(V.cosine(vec_col, "qv")).alias("score"),
     )
-    vec_top = topk_per_key_agg(
-        vec.withColumn("_q", F.lit(0)), "_q", "_id", depth
-    ).select(F.col("_id"), F.col("rank").alias("vec_rank"))
+    vec_top = topk_per_key(vec, [], "_id", depth).select(
+        F.col("_id"), F.col("rank").alias("vec_rank")
+    )
 
     return rrf_fuse(kw_top, vec_top, k=k, rrf_k=rrf_k, id_col=id_col)
 
@@ -158,13 +158,13 @@ def rrf_fuse_batch(
 ) -> DataFrame:
     """Keyed RRF fusion — THE fusion implementation (``rrf_fuse`` is a
     constant-key wrapper). Inputs carry (query_id, _id, bm25_rank) /
-    (query_id, _id, vec_rank); the full-outer join and the
-    payload-carrying top-k agg both key on query_id, so every query
-    fuses inside ONE plan with no per-query loop. The top-k carries
-    the rank payload THROUGH one sort_array/slice agg — joining top-k
-    ids back against the fused frame would replan both towers (Spark
-    shares no subtrees; measured 10 scans vs 5). Returns (query_id,
-    doc_id, bm25_rank, vec_rank, fused, rank)."""
+    (query_id, _id, vec_rank); the full-outer join and the top-k
+    (knn.topk_per_key) both key on query_id, so every query fuses
+    inside ONE plan with no per-query loop. The top-k keeps the rank
+    payload columns — joining top-k ids back against the fused frame
+    would replan both towers (Spark shares no subtrees; measured 10
+    scans vs 5). Returns (query_id, doc_id, bm25_rank, vec_rank,
+    fused, rank)."""
     fused = (
         kw_top.join(vec_top, [query_id_col, "_id"], "full_outer")
         .withColumn(
@@ -176,23 +176,11 @@ def rrf_fuse_batch(
             ),
         )
     )
-    pair = F.struct(
-        (-F.col("fused")).alias("_o"),
-        F.col("_id"),
-        F.col("bm25_rank"),
-        F.col("vec_rank"),
-        F.col("fused"),
-    )
-    return (
-        fused.groupBy(query_id_col)
-        .agg(F.slice(F.sort_array(F.collect_list(pair)), 1, k).alias("_top"))
-        .select(query_id_col, F.posexplode("_top").alias("_pos", "_p"))
-        .select(
-            query_id_col,
-            F.col("_p._id").alias(id_col),
-            F.col("_p.bm25_rank").cast("long").alias("bm25_rank"),
-            F.col("_p.vec_rank").cast("long").alias("vec_rank"),
-            F.col("_p.fused").alias("fused"),
-            (F.col("_pos") + 1).cast("long").alias("rank"),
-        )
+    return topk_per_key(fused, query_id_col, "_id", k, score_col="fused").select(
+        query_id_col,
+        F.col("_id").alias(id_col),
+        F.col("bm25_rank").cast("long").alias("bm25_rank"),
+        F.col("vec_rank").cast("long").alias("vec_rank"),
+        "fused",
+        F.col("rank").cast("long").alias("rank"),
     )

@@ -10,11 +10,10 @@ Scale design (100 TB posture):
   task keeps a k-heap, only n_partitions×k rows reach the driver-side
   merge. No full sort, no wide shuffle.
 - Batch queries: the query set is the small side → ``F.broadcast`` —
-  corpus never shuffles for the join. Per-query top-k then runs as a
-  two-phase prune: partial top-k per (shuffle-free) map partition via
-  groupBy(spark_partition_id, query) with a bounded sorted-list agg,
-  then a final window over candidates only (n_partitions×k×Q rows, not
-  N×Q). Falls back to plain window for tiny inputs.
+  corpus never shuffles for the join. Per-query top-k is
+  ``topk_per_key``, a row_number window that Spark plans as a partial
+  WindowGroupLimit before the exchange: at most k rows per (map
+  partition, query) are shuffled, not N×Q.
 """
 
 from __future__ import annotations
@@ -55,7 +54,7 @@ def topk(
     taken on the driver with the same sequential double sum and
     correctly rounded sqrt Spark's fold evaluates, so the score
     dot(vec, q) / (l2_norm(vec) * qnorm) is the V.cosine arithmetic
-    tree, bit for bit. Unlike V.cosine it divides with try_divide: a
+    tree, bit for bit, and divides with try_divide as V.cosine does: a
     zero-norm row or query scores NULL, as in DuckDB, and ``score
     DESC`` sorts it last, so one empty document cannot fail every
     search. Returns (id_col, score) — score full-precision double.
@@ -85,7 +84,6 @@ def topk_batch(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     metric: str = "cosine",
-    prune_partial: bool = True,
 ) -> DataFrame:
     """Per-query top-k for a (small, broadcast) query set.
 
@@ -99,8 +97,8 @@ def topk_batch(
         # dot(a,b) / (norm_a * norm_b) is the SAME arithmetic tree
         # V.cosine evaluates, so results are bit-identical — this cuts
         # 3 array folds per pair to 1 (measured 7.5 s -> 2.8 s on the
-        # 500-query classifier eval at sf0.1). Plain `/`, as in V.cosine:
-        # the sort_array prune below would rank a NULL score first.
+        # 500-query classifier eval at sf0.1). try_divide, as in
+        # V.cosine: a zero-norm side scores NULL and ranks last.
         c2 = corpus.selectExpr(id_col, vec_col, f"{V.l2_norm(vec_col)} AS _cnorm")
         q2 = queries.selectExpr(
             query_id_col, query_vec_col, f"{V.l2_norm(query_vec_col)} AS _qnorm"
@@ -108,34 +106,13 @@ def topk_batch(
         scored = c2.crossJoin(F.broadcast(q2)).selectExpr(
             query_id_col,
             id_col,
-            f"{V.dot(vec_col, query_vec_col)} / (_cnorm * _qnorm) AS score",
+            f"try_divide({V.dot(vec_col, query_vec_col)}, _cnorm * _qnorm) AS score",
         )
     else:
         scored = corpus.crossJoin(F.broadcast(queries)).selectExpr(
             query_id_col, id_col, f"{_score(metric, vec_col, query_vec_col)} AS score"
         )
-    asc = _ascending(metric)
-    if prune_partial:
-        # Phase 1: map-side prune — k best per (map partition, query).
-        # groupBy(spark_partition_id) never shuffles corpus rows wide:
-        # the agg input is already partition-local, so partial
-        # aggregation collapses each partition to ≤k candidate structs
-        # before any exchange. The sort key is (orientation-fixed
-        # score, id) so boundary score-ties keep the SAME candidate the
-        # final ordering prefers (id asc).
-        order = F.col("score") if asc else -F.col("score")
-        pair = F.struct(order.alias("_o"), F.col(id_col), F.col("score").alias("_s"))
-        cand = (
-            scored.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid", query_id_col)
-            .agg(F.slice(F.sort_array(F.collect_list(pair)), 1, k).alias("top"))
-            .select(query_id_col, F.explode("top").alias("p"))
-            .select(query_id_col, F.col("p." + id_col).alias(id_col), F.col("p._s").alias("score"))
-        )
-    else:
-        cand = scored
-    # Final merge as one agg (topk_per_key_agg) — no window sort stage.
-    return topk_per_key_agg(cand, query_id_col, id_col, k, asc=asc)
+    return topk_per_key(scored, query_id_col, id_col, k, asc=_ascending(metric))
 
 
 def topk_batch_np(
@@ -193,39 +170,37 @@ def topk_batch_np(
             )
 
     cand = corpus.select(id_col, vec_col).mapInPandas(score_batches, schema)
-    return topk_per_key_agg(cand, query_id_col, id_col, k)
+    return topk_per_key(cand, query_id_col, id_col, k)
 
 
-def topk_per_key_agg(
+def topk_per_key(
     scored: DataFrame,
-    key_col: str | list[str],
+    keys: str | list[str],
     id_col: str,
     k: int,
     score_col: str = "score",
     asc: bool = False,
 ) -> DataFrame:
-    """Per-key top-k as ONE sort_array/slice aggregation instead of a
-    row_number window — saves the window's separate sort stage. Right
-    when k is small and per-key candidate counts are bounded (LSH
-    buckets, partial-pruned kNN candidates); ties break on id asc.
-    ``key_col`` may be one column name or a list (composite key).
-    Returns (*keys, id, score, rank)."""
-    keys = [key_col] if isinstance(key_col, str) else list(key_col)
-    order = F.col(score_col) if asc else -F.col(score_col)
-    pair = F.struct(
-        order.alias("_o"), F.col(id_col), F.col(score_col).alias("_s")
-    )
-    return (
-        scored.groupBy(*keys)
-        .agg(F.slice(F.sort_array(F.collect_list(pair)), 1, k).alias("_top"))
-        .select(*keys, F.posexplode("_top").alias("_pos", "_p"))
-        .select(
-            *keys,
-            F.col(f"_p.{id_col}").alias(id_col),
-            F.col("_p._s").alias(score_col),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    """The k best rows of each key: ``score_col`` DESC (ASC with
+    ``asc``) NULLS LAST, ties by ``id_col`` asc — DuckDB's order, so a
+    NULL score (a zero-norm cosine) ranks last. Keeps every column of
+    ``scored`` and adds ``rank`` (INT, 1..k).
+
+    The one per-key top-k rule: ``row_number() OVER (PARTITION BY keys
+    ORDER BY ...) <= k`` as SQL text. Spark plans it as a partial
+    WindowGroupLimit before the exchange and a final one after it, so
+    at most k rows per (map partition, key) are shuffled, while k is
+    below ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+    default; tests/test_window_lint.py checks every registered plan).
+    With no keys (``[]``) Spark pushes ``LIMIT k`` below the window:
+    one TakeOrderedAndProject, then the rank numbered over k rows.
+    """
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    part = "PARTITION BY " + ", ".join(f"`{c}`" for c in keys) if keys else ""
+    order = f"`{score_col}` {'ASC' if asc else 'DESC'} NULLS LAST, `{id_col}` ASC"
+    return scored.selectExpr(
+        "*", f"row_number() OVER ({part} ORDER BY {order}) AS rank"
+    ).where(f"rank <= {int(k)}")
 
 
 def similarity_matrix(

@@ -27,12 +27,13 @@ def kmv_distinct(
     """KMV ndv estimate vs the exact count, one output row:
     (k, ndv_exact, ndv_est, rel_err).
 
-    Scale path: per-partition partial top-k first (each input partition
-    collapses its distinct hashes to ≤k BEFORE the exchange — the
-    groupBy(spark_partition_id) agg is partition-local), then a global
-    merge of ≤ n_partitions×k candidates. The exact count is computed
-    alongside for the harness; a production pipeline drops it — that
-    distinct IS what the sketch avoids.
+    Two phases: a k-min per input partition (groupBy
+    spark_partition_id), then a global merge of ≤ n_partitions×k
+    candidates. The first phase does not bound its shuffle: the
+    collect_set partial ships every distinct hash of the partition
+    across the exchange, and slice cuts to k only after it. The exact
+    count is computed alongside for the harness; a production pipeline
+    drops it — that distinct IS what the sketch avoids.
     """
     hashes = df.select(F.expr(H.md5_long(f"CAST({key_col} AS STRING)")).alias("h"))
     partial = (

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as H
 from ..functions import text as X
 from ..functions.exact import from_micro, to_micro
+from .knn import topk_per_key
 
 # Public-domain common-word lists per language (tiny on purpose — the
 # operator shape matters, swap lists freely).
@@ -170,22 +171,13 @@ def tfidf_top_terms(
         .crossJoin(F.broadcast(n_docs))
         .withColumn("tfidf", F.col("tf") * F.log((F.col("_n") + 1) / (F.col("df") + 1)))
     )
-    # Top-k per doc as ONE groupBy agg (sort_array + slice on bounded
-    # per-doc term lists) instead of a window — drops the window's
-    # extra sort stage; ties break on term asc via the struct order.
-    pair = F.struct((-F.col("tfidf")).alias("neg"), F.col("term"), F.col("tf"), F.col("df"))
-    return (
-        scored.groupBy(id_col)
-        .agg(F.slice(F.sort_array(F.collect_list(pair)), 1, k).alias("top"))
-        .select(F.col(id_col), F.posexplode("top").alias("pos", "p"))
-        .select(
-            id_col,
-            F.col("p.term").alias("term"),
-            F.col("p.tf").alias("tf"),
-            F.col("p.df").alias("df"),
-            F.round(-F.col("p.neg"), 6).alias("tfidf"),
-            (F.col("pos") + 1).cast("long").alias("rank"),
-        )
+    return topk_per_key(scored, id_col, "term", k, score_col="tfidf").select(
+        id_col,
+        "term",
+        "tf",
+        "df",
+        F.round("tfidf", 6).alias("tfidf"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 

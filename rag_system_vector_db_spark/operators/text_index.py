@@ -179,21 +179,21 @@ def hybrid_index_rrf(
     index is built once and queried many times."""
     from ..functions import vector as V
     from .hybrid import rrf_fuse
-    from .knn import topk_per_key_agg
+    from .knn import topk_per_key
 
     kw = bm25_from_index(spark, index_dir, query_terms, n_buckets).select(
         F.col("doc_id").alias("_id"), F.col("_bm25").alias("score")
     )
-    kw_top = topk_per_key_agg(
-        kw.withColumn("_q", F.lit(0)), "_q", "_id", depth
-    ).select(F.col("_id"), F.col("rank").alias("bm25_rank"))
+    kw_top = topk_per_key(kw, [], "_id", depth).select(
+        F.col("_id"), F.col("rank").alias("bm25_rank")
+    )
     vec = vectors.crossJoin(F.broadcast(query_vec)).select(
         F.col("vec_id").alias("_id"),
         F.expr(V.cosine("embedding", "qv")).alias("score"),
     )
-    vec_top = topk_per_key_agg(
-        vec.withColumn("_q", F.lit(0)), "_q", "_id", depth
-    ).select(F.col("_id"), F.col("rank").alias("vec_rank"))
+    vec_top = topk_per_key(vec, [], "_id", depth).select(
+        F.col("_id"), F.col("rank").alias("vec_rank")
+    )
     return rrf_fuse(kw_top, vec_top, k=k, rrf_k=rrf_k, id_col="doc_id")
 
 
@@ -214,9 +214,9 @@ def keyword_index_batch(
     (partition-column bucket IN + term IN pushed into the pruned
     files); a broadcast (query_id, term) frame fans each posting out
     only to the queries that asked for its term; df/idf compute once
-    per term and are shared across queries; per-query top-k reduces by
-    one agg (no window over the scored set). Adding a query to the
-    batch costs only its term fan-out — the index I/O is shared.
+    per term and are shared across queries; per-query top-k is
+    knn.topk_per_key. Adding a query to the batch costs only its term
+    fan-out — the index I/O is shared.
 
     NOTE: the BM25 pruning/df/idf/contrib expressions intentionally
     mirror ``bm25_from_index`` (kept separate so the driver-green
@@ -224,7 +224,7 @@ def keyword_index_batch(
     two is caught by tests/test_text_index.py's batch-vs-single
     equality tests.
     Returns (query_id, rank, doc_id, bm25)."""
-    from .knn import topk_per_key_agg
+    from .knn import topk_per_key
 
     all_terms = sorted({t for _, ts in queries for t in ts})
     buckets = sorted({term_bucket_py(t, n_buckets) for t in all_terms})
@@ -249,7 +249,7 @@ def keyword_index_batch(
         .groupBy("query_id", "doc_id")
         .agg(F.sum(contrib).alias("_bm25"))
     )
-    top = topk_per_key_agg(scored, "query_id", "doc_id", k, score_col="_bm25")
+    top = topk_per_key(scored, "query_id", "doc_id", k, score_col="_bm25")
     return top.select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),

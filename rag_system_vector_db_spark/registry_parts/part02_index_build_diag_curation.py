@@ -1037,14 +1037,13 @@ def _graph_planes(sf_dir: str) -> list[list[float]]:
 def _knn_graph_edges(spark, sf_dir, max_bucket=None):
     """Shared kNN-graph edge build for knn_graph_lsh and its degree
     diagnostics: per-vector top-3 cosine neighbors among LSH-bucket
-    candidates (corpus-sized planes, _graph_planes), agg-based
-    per-source prune. ``max_bucket`` (cap_hot_buckets) drops
+    candidates (corpus-sized planes, _graph_planes), knn.topk_per_key
+    per source. ``max_bucket`` (cap_hot_buckets) drops
     over-occupied buckets before the self-join — the same mega-bucket
     guard the pair-dedup family has; capped ≡ uncapped when no bucket
     exceeds the cap."""
     from ..operators import ann
     from ..operators.dedup import cap_hot_buckets
-    from ..operators.knn import topk_per_key_agg
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = _graph_planes(sf_dir)
@@ -1068,13 +1067,12 @@ def _knn_graph_edges(spark, sf_dir, max_bucket=None):
         .select(
             F.col("a.vec_id").alias("src"),
             F.col("b.vec_id").alias("dst"),
-            (
-                F.expr(V.dot("a.embedding", "b.embedding"))
-                / (F.col("a._nrm") * F.col("b._nrm"))
+            F.expr(
+                f"try_divide({V.dot('a.embedding', 'b.embedding')}, a._nrm * b._nrm)"
             ).alias("score"),
         )
     )
-    return topk_per_key_agg(scored, "src", "dst", 3)
+    return knn.topk_per_key(scored, "src", "dst", 3)
 
 
 @query("knn_graph_lsh")  # oracle: LAZY_ORACLES (corpus-sized plane literals)
@@ -3025,9 +3023,9 @@ def group_reservoir_sample_q(spark, sf_dir):
     eval-set carving, per-source spot-check extraction). Priority =
     seeded md5 of the id — a uniform 60-bit draw that is reproducible
     across engines, runs AND cluster sizes, unlike rand(seed) whose
-    stream depends on partitioning. Smallest-k-per-group via the
-    sort_array/slice agg (one map-side-combinable shuffle, no window
-    sort stage); adding a doc never evicts more than one survivor —
+    stream depends on partitioning. Smallest-k-per-group via
+    knn.topk_per_key (at most k rows per map partition and group are
+    shuffled); adding a doc never evicts more than one survivor —
     the reservoir property — so incremental re-runs are stable."""
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
@@ -3036,12 +3034,8 @@ def group_reservoir_sample_q(spark, sf_dir):
         "n_chars",
         F.expr(H.md5_long("CAST(doc_id AS STRING)", "rsv")).alias("_pri"),
     )
-    top = knn.topk_per_key_agg(scored, "source", "doc_id", 5, score_col="_pri", asc=True)
-    meta = docs.select(F.col("doc_id").alias("_d"), F.col("n_chars").alias("_nc"))
-    return (
-        top.join(meta, top.doc_id == F.col("_d"))
-        .select("source", "doc_id", F.col("_nc").alias("n_chars"), F.col("rank").cast("long"))
-    )
+    top = knn.topk_per_key(scored, "source", "doc_id", 5, score_col="_pri", asc=True)
+    return top.select("source", "doc_id", "n_chars", F.col("rank").cast("long"))
 
 
 @query(
@@ -3073,8 +3067,8 @@ def priority_sample_q(spark, sf_dir):
     inclusion probability ∝ weight (n_chars here — byte-budgeted
     selection). Per-row arithmetic only (two IEEE ops in a fixed
     order, bit-identical in both engines); ranking happens on full
-    precision, rounding only on output. Same agg-based top-k as the
-    uniform reservoir — no window, no global sort."""
+    precision, rounding only on output. Same per-group top-k as the
+    uniform reservoir — no global sort."""
     docs = load_table(spark, sf_dir, "documents")
     u = (F.expr(H.md5_long("CAST(doc_id AS STRING)", "pps")) + F.lit(1)) / F.lit(
         1152921504606846976.0
@@ -3085,17 +3079,13 @@ def priority_sample_q(spark, sf_dir):
         "n_chars",
         (F.col("n_chars").cast("double") / u).alias("_pri"),
     )
-    top = knn.topk_per_key_agg(scored, "source", "doc_id", 5, score_col="_pri", asc=False)
-    meta = docs.select(F.col("doc_id").alias("_d"), F.col("n_chars").alias("_nc"))
-    return (
-        top.join(meta, top.doc_id == F.col("_d"))
-        .select(
-            "source",
-            "doc_id",
-            F.col("_nc").alias("n_chars"),
-            F.round("_pri", 4).alias("priority"),
-            F.col("rank").cast("long"),
-        )
+    top = knn.topk_per_key(scored, "source", "doc_id", 5, score_col="_pri")
+    return top.select(
+        "source",
+        "doc_id",
+        "n_chars",
+        F.round("_pri", 4).alias("priority"),
+        F.col("rank").cast("long"),
     )
 
 

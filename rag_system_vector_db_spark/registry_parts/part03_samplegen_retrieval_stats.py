@@ -1239,11 +1239,12 @@ def session_paths_q(spark, sf_dir):
     """Top session-opening paths (the flow-discovery mining behind
     funnel design: which 3-step sequences do sessions actually start
     with): gap-based sessionization (30 min, same convention as
-    sessionize_events) via one (user, time) window, path assembly as a
-    sort_array/slice aggregation (deterministic (ts_ns, event_id)
-    order — no second window), counts + share over the ≤|types|³ path
-    frame, top-10 via sort-limit. Two fact shuffles total: the user
-    window and the session rollup."""
+    sessionize_events) via one (user, time) window, path assembly from
+    each session's first 3 events (knn.topk_per_key in (ts_ns,
+    event_id) order, on the user partitioning the first window left),
+    counts + share over the ≤|types|³ path frame, top-10 via
+    sort-limit. Two fact shuffles total: the user window and the path
+    rollup."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
     gap = F.lit(1800000000000)
@@ -1260,20 +1261,13 @@ def session_paths_q(spark, sf_dir):
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .alias("sess_id"),
     )
-    triple = F.struct("ts_ns", "event_id", "event_type")
     paths = (
-        sess.groupBy("user_id", "sess_id")
+        knn.topk_per_key(sess, ["user_id", "sess_id"], "event_id", 3, score_col="ts_ns", asc=True)
+        .groupBy("user_id", "sess_id")
         .agg(
-            F.concat_ws(
-                ">",
-                F.slice(
-                    F.transform(
-                        F.sort_array(F.collect_list(triple)),
-                        lambda s: s["event_type"],
-                    ),
-                    1,
-                    3,
-                ),
+            F.expr(
+                "concat_ws('>', transform(array_sort(collect_list(struct(rank, event_type))),"
+                " s -> s.event_type))"
             ).alias("path")
         )
     )
@@ -2565,12 +2559,12 @@ def events_twa_q(spark, sf_dir):
 def kmv_distinct_by_group_q(spark, sf_dir):
     """Per-group KMV distinct sketch (the GROUP BY form of
     kmv_distinct — per-event-type distinct users with BOUNDED state:
-    k hashes per group, not NDV): per-(partition, group) partial top-k
-    collapses each group's contribution to ≤k hashes BEFORE any
-    cross-partition movement (the mergeability that makes KMV a
-    distributed sketch), the merge keeps the k smallest of
-    ≤ n_partitions·k candidates per group; exact counts ride along
-    for the harness only."""
+    k hashes per group, not NDV): a per-(partition, group) k-min pass,
+    then the merge keeps the k smallest of ≤ n_partitions·k candidates
+    per group. The first pass does NOT bound its shuffle: the
+    collect_set partial ships every distinct hash of each partition
+    across the exchange, and slice cuts to k only after it. Exact
+    counts ride along for the harness only."""
     ev = load_table(spark, sf_dir, "events")
     k = 32
     hashes = ev.select(

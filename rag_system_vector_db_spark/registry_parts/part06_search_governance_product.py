@@ -346,12 +346,12 @@ def post_filter_recall_q(spark, sf_dir):
     the measurement behind knn_filtered's pre-filter posture (Milvus
     filtered search design: filtering AFTER top-k loses every hit the
     filter would have admitted below rank k): the corpus is scored
-    ONCE per query (norm-factored cosine), a map-side partial prune
-    keeps BOTH candidate sets per partition (top-10 overall carrying
-    labels, top-10 among label matches), and one final agg per query
-    merges both and computes the intersection — no second corpus
-    pass, no join between the two rankings. Truth = filter-then-rank;
-    post = rank-then-filter; recall = |post ∩ truth| / |truth|."""
+    ONCE per query (norm-factored cosine), one top-10 per (query,
+    label match) bounds both candidate sets (top-10 overall, top-10
+    among label matches), and one final agg per query computes the
+    intersection — no second corpus pass, no join between the two
+    rankings. Truth = filter-then-rank; post = rank-then-filter;
+    recall = |post ∩ truth| / |truth|."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -361,43 +361,33 @@ def post_filter_recall_q(spark, sf_dir):
     c = emb.select(
         "vec_id", "label", "embedding", F.expr(V.l2_norm("embedding")).alias("_cnorm")
     )
-    scored = c.crossJoin(F.broadcast(queries)).select(
+    scored = c.crossJoin(F.broadcast(queries)).selectExpr(
         "query_id",
         "vec_id",
-        "label",
-        (
-            F.expr(V.dot("embedding", "query_vec"))
-            / (F.col("_cnorm") * F.col("_qnorm"))
-        ).alias("score"),
+        "label = 3 AS _f",
+        f"try_divide({V.dot('embedding', 'query_vec')}, _cnorm * _qnorm) AS score",
     )
-    pair = F.struct(
-        (-F.col("score")).alias("_o"), F.col("vec_id"), F.col("label").alias("_l")
+    # The overall top 10 lies within the union of each label group's
+    # top 10, so one bounded top-k per (query, is-match) feeds both
+    # rankings; the overall rank is numbered over those few rows.
+    ranked = knn.topk_per_key(scored, ["query_id", "_f"], "vec_id", 10).selectExpr(
+        "query_id",
+        "vec_id",
+        "_f",
+        "row_number() OVER (PARTITION BY query_id"
+        " ORDER BY score DESC NULLS LAST, vec_id) AS rank_full",
     )
-    # map-side partial: both k-sets per (partition, query) in one agg
-    part = (
-        scored.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid", "query_id")
-        .agg(
-            F.slice(F.sort_array(F.collect_list(pair)), 1, 10).alias("full"),
-            F.slice(
-                F.sort_array(F.collect_list(F.when(F.col("label") == 3, pair))), 1, 10
-            ).alias("filt"),
-        )
+    merged = ranked.groupBy("query_id").agg(
+        F.expr("collect_list(CASE WHEN _f THEN vec_id END)").alias("truth"),
+        F.expr("collect_list(CASE WHEN _f AND rank_full <= 10 THEN vec_id END)").alias("post"),
     )
-    # final merge: flatten partials, re-sort, cut to 10, then set math
-    merged = part.groupBy("query_id").agg(
-        F.slice(F.sort_array(F.flatten(F.collect_list("full"))), 1, 10).alias("full"),
-        F.slice(F.sort_array(F.flatten(F.collect_list("filt"))), 1, 10).alias("filt"),
-    )
-    truth_ids = F.expr("transform(filt, x -> x.vec_id)")
-    post_ids = F.expr("transform(filter(full, x -> x._l = 3), x -> x.vec_id)")
-    hits = F.size(F.array_intersect(post_ids, truth_ids))
+    hits = F.size(F.array_intersect("post", "truth"))
     return merged.select(
         "query_id",
-        F.size(truth_ids).cast("long").alias("truth_n"),
-        F.size(post_ids).cast("long").alias("post_kept"),
+        F.size("truth").cast("long").alias("truth_n"),
+        F.size("post").cast("long").alias("post_kept"),
         hits.cast("long").alias("hits"),
-        F.round(hits.cast("double") / F.size(truth_ids), 6).alias("recall"),
+        F.round(hits.cast("double") / F.size("truth"), 6).alias("recall"),
     )
 
 
@@ -752,8 +742,8 @@ def trigram_fuzzy_match_q(spark, sf_dir):
     vocabulary-sized, independent of corpus size), candidates come
     from the trigram-keyed equi-join (a query term only meets vocab
     terms SHARING a trigram — never all of vocab), and per-query
-    top-3 reduces via the agg-based top-k (rank on full-precision
-    sim with term tie-break, round at emit)."""
+    top-3 is knn.topk_per_key (rank on full-precision sim with term
+    tie-break, round at emit)."""
     docs = load_table(spark, sf_dir, "documents", split=True)
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("term"))
@@ -789,20 +779,12 @@ def trigram_fuzzy_match_q(spark, sf_dir):
             ).alias("sim"),
         )
     )
-    cand = F.struct(
-        (-F.col("sim")).alias("_o"), F.col("term"), F.col("shared"), F.col("sim").alias("_s")
-    )
-    top = (
-        pairs.groupBy("qterm")
-        .agg(F.slice(F.sort_array(F.collect_list(cand)), 1, 3).alias("top"))
-        .select("qterm", F.posexplode("top").alias("pos", "p"))
-    )
-    return top.select(
+    return knn.topk_per_key(pairs, "qterm", "term", 3, score_col="sim").select(
         "qterm",
-        F.col("p.term").alias("term"),
-        F.col("p.shared").alias("shared"),
-        F.round(F.col("p._s"), 6).alias("sim"),
-        (F.col("pos") + 1).cast("long").alias("rank"),
+        "term",
+        "shared",
+        F.round("sim", 6).alias("sim"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 
@@ -871,9 +853,9 @@ def kmv_set_ops_q(spark, sf_dir):
     )
     du = ev.select("event_type", "user_id").distinct()
     h = du.select("event_type", F.expr(H.md5_long("CAST(user_id AS STRING)")).alias("h"))
-    # two-phase k-min (sketch.kmv_distinct's scale path): each input
-    # partition collapses its hashes to <=k per type BEFORE the
-    # exchange, so no NDV-sized array ever sits in one agg buffer
+    # two-phase k-min (sketch.kmv_distinct's): the collect_set partial
+    # still ships each partition's distinct hashes across the first
+    # exchange; only the merge sees ≤ n_partitions·k per type
     partial = (
         h.withColumn("_pid", F.spark_partition_id())
         .groupBy("event_type", "_pid")

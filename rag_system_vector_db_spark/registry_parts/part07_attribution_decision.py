@@ -1247,7 +1247,7 @@ def prefix_autocomplete_q(spark, sf_dir):
     vocabulary-sized), terms explode into 1-4 char edge prefixes (the
     materialization an autocomplete index stores), live-typed
     prefixes join by exact key, completions rank by corpus frequency
-    with term tie-break via the agg-based top-k. At 100 TB the edge
+    with term tie-break via knn.topk_per_key. At 100 TB the edge
     table is the build artifact — query cost is a point lookup per
     keystroke, independent of corpus size."""
     from ..functions import text as X
@@ -1273,19 +1273,8 @@ def prefix_autocomplete_q(spark, sf_dir):
         [(p,) for p in _AUTOCOMPLETE_PREFIXES], "prefix string"
     )
     pairs = edge.join(F.broadcast(q), "prefix")
-    cand = F.struct(
-        (-F.col("freq")).alias("_o"), F.col("term"), F.col("freq").alias("_f")
-    )
-    top = (
-        pairs.groupBy("prefix")
-        .agg(F.slice(F.sort_array(F.collect_list(cand)), 1, 5).alias("top"))
-        .select("prefix", F.posexplode("top").alias("pos", "p"))
-    )
-    return top.select(
-        "prefix",
-        (F.col("pos") + 1).cast("long").alias("rank"),
-        F.col("p.term").alias("term"),
-        F.col("p._f").alias("freq"),
+    return knn.topk_per_key(pairs, "prefix", "term", 5, score_col="freq").select(
+        "prefix", F.col("rank").cast("long").alias("rank"), "term", "freq"
     )
 
 
@@ -1984,7 +1973,6 @@ def rank_biased_overlap_q(spark, sf_dir):
     nano-units so the 20-term sum is order-free. Everything after
     the two top-k cuts is constant-bounded."""
     from ..operators.hybrid import bm25_scores
-    from ..operators.knn import topk_per_key_agg
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1992,14 +1980,14 @@ def rank_biased_overlap_q(spark, sf_dir):
     kw_sc = bm25_scores(docs, ["spark", "join", "fast"]).select(
         F.col("doc_id").alias("_id"), F.col("bm25").alias("score")
     )
-    kw = topk_per_key_agg(kw_sc.withColumn("_q", F.lit(0)), "_q", "_id", 20).select(
+    kw = knn.topk_per_key(kw_sc, [], "_id", 20).select(
         F.col("_id").alias("doc_id"), F.col("rank").alias("ra")
     )
     vec_sc = emb.crossJoin(F.broadcast(q)).select(
         F.col("vec_id").alias("_id"),
         F.expr(V.cosine("embedding", "qv")).alias("score"),
     )
-    vec = topk_per_key_agg(vec_sc.withColumn("_q", F.lit(0)), "_q", "_id", 20).select(
+    vec = knn.topk_per_key(vec_sc, [], "_id", 20).select(
         F.col("_id").alias("doc_id"), F.col("rank").alias("rb")
     )
     shared = kw.join(vec, "doc_id").select("ra", "rb")

@@ -927,18 +927,12 @@ def itemcf_topk_q(spark, sf_dir):
             ).alias("jac"),
         )
     )
-    cand = F.struct((-F.col("jac")).alias("_o"), F.col("pb"), F.col("co"), F.col("jac").alias("_j"))
-    top = (
-        scored.groupBy("pa")
-        .agg(F.slice(F.sort_array(F.collect_list(cand)), 1, 3).alias("top"))
-        .select("pa", F.posexplode("top").alias("pos", "t"))
-    )
-    return top.select(
+    return knn.topk_per_key(scored, "pa", "pb", 3, score_col="jac").select(
         F.col("pa").cast("long").alias("partkey"),
-        (F.col("pos") + 1).cast("long").alias("rank"),
-        F.col("t.pb").cast("long").alias("neighbor"),
-        F.col("t.co").alias("common_buyers"),
-        F.round(F.col("t._j"), 6).alias("jaccard"),
+        F.col("rank").cast("long").alias("rank"),
+        F.col("pb").cast("long").alias("neighbor"),
+        F.col("co").alias("common_buyers"),
+        F.round("jac", 6).alias("jaccard"),
     )
 
 

@@ -50,19 +50,6 @@ def test_topk_batch_matches_numpy(emb, spark):
         assert sorted(by_q[qid]) == [(i + 1, e[0]) for i, e in enumerate(exp)]
 
 
-def test_topk_batch_prune_equals_plain(emb, spark):
-    df, _, _ = emb
-    queries = df.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = knn.topk_batch(df, queries, k=4, prune_partial=True).collect()
-    b = knn.topk_batch(df, queries, k=4, prune_partial=False).collect()
-    key = lambda r: (r.query_id, r.rank)
-    assert sorted([(r.query_id, r.rank, r.vec_id) for r in a]) == sorted(
-        [(r.query_id, r.rank, r.vec_id) for r in b]
-    )
-
-
 def test_topk_batch_np_ranks_equal_hof_path(emb, spark):
     """The Arrow+BLAS path must produce identical (query, rank, id)
     triples to the exact HOF path; scores agree to 1e-9."""

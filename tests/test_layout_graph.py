@@ -111,7 +111,7 @@ def test_reservoir_sample_is_stable_under_deletion(spark, sf_dir):
     )
     again = {
         (r.source, r.doc_id)
-        for r in knn.topk_per_key_agg(
+        for r in knn.topk_per_key(
             scored, "source", "doc_id", 5, score_col="_pri", asc=True
         ).collect()
     }

@@ -83,8 +83,8 @@ def test_q5_pushdown_and_broadcasts(spark, sf_dir):
 def test_tfidf_single_subtree_no_sorts(spark, sf_dir):
     """The scan+explode+tf subtree must appear ONCE (df is an
     unordered count window over tf, not a join-back of a second
-    aggregation), and nothing in the plan needs a Sort node — the df
-    window has no orderBy and the top-k is a sort_array agg."""
+    aggregation), and no Sort is global — the df window has no
+    orderBy, and the per-doc top-k window sorts within partitions."""
     df = QUERIES["tfidf_top_terms"](spark, sf_dir)
     df.count()  # finalize AQE so the executed plan is the real one
     plan = _plan(df)
@@ -446,15 +446,70 @@ def test_q22_anti_join_and_scalar_broadcast(spark, sf_dir):
     ), "orders scan must project o_custkey only"
 
 
-def test_sampling_uses_agg_topk_not_window(spark, sf_dir):
-    """Both samplers rank via the sort_array/slice agg — no Window
-    sort stage over the corpus."""
-    for name in ("group_reservoir_sample", "priority_sample"):
-        plan = _plan(QUERIES[name](spark, sf_dir))
-        assert "Window" not in plan, name
-        # the sort_array/slice top-k lowers to a collect_list
-        # ObjectHashAggregate with a partial (map-side) phase
-        assert "partial_collect_list" in plan, name
+def _limit_before_exchange(plan: str) -> bool:
+    """A partial WindowGroupLimit sits below a hash exchange that a
+    final WindowGroupLimit reads (the printed tree runs top-down)."""
+    lines = plan.splitlines()
+    at = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and "Partial" in ln]
+    return any(
+        any("Exchange hashpartitioning" in ln for ln in lines[:i])
+        and any("WindowGroupLimit" in ln and "Final" in ln for ln in lines[:i])
+        for i in at
+    )
+
+
+def test_topk_limits_rows_before_the_exchange(spark, sf_dir):
+    """knn.topk_per_key plans a partial WindowGroupLimit below the
+    exchange, so each map partition ships at most k rows per key."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.limit(5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    frames = {
+        "group_reservoir_sample": QUERIES["group_reservoir_sample"](spark, sf_dir),
+        "priority_sample": QUERIES["priority_sample"](spark, sf_dir),
+        "knn.topk_batch": knn.topk_batch(emb, queries, k=5),
+    }
+    for name, df in frames.items():
+        df.collect()  # the final adaptive plan
+        assert _limit_before_exchange(_plan(df)), name
+
+
+def _shuffle_bytes_written(df) -> int:
+    """Bytes the executed plan's shuffle exchanges wrote (SQL metrics)."""
+    df.collect()
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from walk(node.executedPlan())
+            return
+        if name.endswith("QueryStageExec"):
+            yield from walk(node.plan())
+            return
+        if name == "ShuffleExchangeExec":
+            yield node.metrics().apply("shuffleBytesWritten").value()
+        kids = node.children()
+        for i in range(kids.length()):
+            yield from walk(kids.apply(i))
+
+    return sum(walk(df._jdf.queryExecution().executedPlan()))
+
+
+def test_topk_batch_shuffle_is_bounded_by_k_not_corpus(spark):
+    """topk_batch's shuffle scales with k × queries × map partitions,
+    not with corpus rows. The bound is 64 bytes per surviving row; a
+    collect_list top-k ships every scored pair (0.8 MB at 2,000 rows
+    and 3.5 MB at 8,000 rows here)."""
+    parts, n_queries, k = 4, 20, 3
+    corpus = spark.range(0, 4000, 1, parts).selectExpr(
+        "id AS vec_id", "transform(sequence(1, 8), i -> sin((id + 1) * i)) AS embedding"
+    )
+    queries = spark.range(0, n_queries, 1, 1).selectExpr(
+        "id AS query_id", "transform(sequence(1, 8), i -> cos(id * i)) AS query_vec"
+    )
+    written = _shuffle_bytes_written(knn.topk_batch(corpus, queries, k=k))
+    assert 0 < written <= 64 * k * n_queries * parts
 
 
 def test_zorder_is_codegen_single_shuffle(spark, sf_dir):
@@ -745,13 +800,13 @@ def test_range_search_is_map_only(spark, sf_dir):
 
 
 def test_post_filter_recall_single_corpus_pass(spark, sf_dir):
-    """Both k-sets come from ONE scored pass: the map-side partial
-    prune keys on spark_partition_id, and the corpus parquet is
-    scanned at most twice (query side + corpus side), never once per
-    ranking."""
+    """Both k-sets come from ONE scored pass: one bounded top-k per
+    (query, label match) with its limit before the exchange, and the
+    corpus parquet is scanned at most twice (query side + corpus
+    side), never once per ranking."""
     df = QUERIES["post_filter_recall"](spark, sf_dir)
     plan = _plan(df)
-    assert "SPARK_PARTITION_ID" in plan.upper()
+    assert _limit_before_exchange(plan)
     assert plan.count("Scan parquet") <= 2
     assert "EvalPython" not in plan
 

@@ -4,10 +4,9 @@
 folds with the same sequential double sum the oracle's `_dd_*`
 snippets use, so the two engines must agree with `==`, not within a
 tolerance. `knn.topk` takes the query norm on the driver; its scores
-must still equal the oracle's cosine. In `knn.topk` a zero vector
-scores NULL and ranks last on both engines instead of failing the
-whole search; rankers built on `V.cosine` fail loudly on it rather
-than rank it first. An AST lint keeps
+must still equal the oracle's cosine. A zero vector scores NULL and
+ranks last on both engines, in `knn.topk` and in every ranker built
+on `V.cosine`, instead of failing the whole search. An AST lint keeps
 Python-lambda higher-order functions, which cost a py4j round trip
 per lambda node, out of the vector math and the ingest operators
 (chunking, dedup). `word_shingles`, one regex, equals the oracle's
@@ -28,6 +27,8 @@ import pytest
 from rag_system_vector_db_spark.functions import text as X
 from rag_system_vector_db_spark.functions import vector as V
 from rag_system_vector_db_spark.operators import knn
+from rag_system_vector_db_spark.operators.ann import ann_lsh_topk
+from rag_system_vector_db_spark.operators.hybrid import hybrid_search_rrf
 from rag_system_vector_db_spark.operators.vector_store import VectorCollection
 from rag_system_vector_db_spark.registry_core import _dd_cosine, _dd_dot, _dd_euclid, _dd_norm
 
@@ -159,24 +160,45 @@ def test_topk_ranks_a_zero_row_as_duckdb_does(spark, zero_parquet):
     assert got == _dd_ranked(zero_parquet, q)
 
 
-def test_ranked_cosine_fails_loudly_on_a_zero_row(spark, zero_parquet):
-    """ann_lsh_topk ranks through knn.topk_per_key_agg, whose sort_array
-    on (-score, id) would put a NULL score first, where DuckDB puts it
-    last. So V.cosine divides with ANSI `/`: a zero row must fail the
-    query, or rank exactly as the oracle ranks it, never silently
-    first. One all-zero plane puts every vector in bucket 0, which
-    makes the LSH search exact."""
-    from rag_system_vector_db_spark.operators.ann import ann_lsh_topk
+def _one_query(spark, q):
+    return spark.createDataFrame([(0, q)], "query_id int, query_vec array<double>")
 
+
+def _lsh(spark, df, q):
+    # one all-zero plane puts every vector in bucket 0: the search is exact
+    return ann_lsh_topk(df, _one_query(spark, q), [[0.0] * 8], k=40)
+
+
+def _batch(spark, df, q):
+    return knn.topk_batch(df, _one_query(spark, q), k=40)
+
+
+def _hybrid_vector_leg(spark, df, q):
+    # no keyword hit, so the fused order is the vector leg's order
+    docs = spark.createDataFrame([(0, "a")], "doc_id long, text string")
+    qv = spark.createDataFrame([(q,)], "qv array<double>")
+    return hybrid_search_rrf(docs, df, ["zzz"], qv, k=40, depth=40).withColumnRenamed(
+        "doc_id", "vec_id"
+    )
+
+
+@pytest.mark.parametrize(
+    "ranker",
+    [_lsh, _batch, _hybrid_vector_leg],
+    ids=["ann_lsh_topk", "topk_batch", "hybrid_vector_leg"],
+)
+def test_ranked_cosine_puts_a_zero_row_last(spark, zero_parquet, ranker):
+    """Every cosine ranker orders score DESC NULLS LAST, id asc
+    (knn.topk_per_key), so a zero row, whose V.cosine is NULL, ranks
+    last exactly as in the oracle."""
     df = spark.read.parquet(zero_parquet)
     q = [float(x) + 0.5 for x in df.filter("vec_id = 7").first().embedding]
-    queries = spark.createDataFrame([(0, q)], "query_id int, query_vec array<double>")
-    try:
-        rows = ann_lsh_topk(df, queries, [[0.0] * 8], k=40).orderBy("rank").collect()
-    except Exception as e:  # noqa: BLE001 - the JVM error class varies by wrapper
-        assert "DIVIDE_BY_ZERO" in str(e)
-        return
-    assert [(r.vec_id, r.score) for r in rows] == _dd_ranked(zero_parquet, q)
+    rows = ranker(spark, df, q).orderBy("rank").collect()
+    want = _dd_ranked(zero_parquet, q)
+    assert want[-1] == (0, None)
+    assert [r.vec_id for r in rows] == [i for i, _ in want]
+    if "score" in rows[0].asDict():
+        assert [(r.vec_id, r.score) for r in rows] == want
 
 
 SHINGLE_TEXTS = ["", "a", "a  b", " a b", "a b ", "   ", "\t", "naïve café  日本 語", None, "a b c d e"]

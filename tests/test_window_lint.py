@@ -24,9 +24,22 @@ unpartitioned Window sits on a bounded subtree:
 
 New entries that ship an accidental single-partition window over a
 raw scan fail here with the entry name.
+
+The same walk checks that every ``rank <= k`` filter over a
+partitioned row_number Window (knn.topk_per_key) reads a
+WindowGroupLimit, so each map partition ships at most k rows per key.
+Spark skips that limit when k reaches
+spark.sql.optimizer.windowGroupLimitThreshold (1000 by default) or
+when the Window computes anything besides rank functions. An
+unpartitioned one must read a limit (Spark pushes ``LIMIT k`` below
+it, a TakeOrderedAndProject).
 """
 
 from __future__ import annotations
+
+import re
+
+import pytest
 
 from rag_system_vector_db_spark.registry import QUERIES
 
@@ -63,11 +76,37 @@ def _unbounded_unpartitioned_windows(node, out: list) -> None:
         _unbounded_unpartitioned_windows(k, out)
 
 
-def test_every_unpartitioned_window_is_bounded(spark, sf_dir):
+def _unlimited_topk_filters(node, out: list) -> None:
+    """Filters on a row_number rank whose Window reads no
+    WindowGroupLimit (partitioned) or limit (unpartitioned)."""
+    if _name(node) == "Filter" and _name(node.child()) == "Window":
+        window, cond = node.child(), node.condition().toString()
+        exprs = window.windowExpressions()
+        ranks = [
+            exprs.apply(i).toAttribute().toString()
+            for i in range(exprs.length())
+            if exprs.apply(i).toString().startswith("row_number()")
+        ]
+        if any(re.search(rf"\b{re.escape(r)} <=? ", cond) for r in ranks):
+            limit = "WindowGroupLimit" if window.partitionSpec().length() else "GlobalLimit"
+            if _name(window.child()) != limit:
+                out.append(f"{cond} over {window.toString().splitlines()[0][:120]}")
+    for k in _children(node):
+        _unlimited_topk_filters(k, out)
+
+
+@pytest.fixture(scope="module")
+def optimized_plans(spark, sf_dir):
+    return {
+        name: fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        for name, fn in QUERIES.items()
+    }
+
+
+def test_every_unpartitioned_window_is_bounded(optimized_plans):
     offenders: dict[str, list] = {}
-    for name, fn in QUERIES.items():
+    for name, plan in optimized_plans.items():
         bad: list = []
-        plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
         _unbounded_unpartitioned_windows(plan, bad)
         if bad:
             offenders[name] = bad
@@ -75,4 +114,30 @@ def test_every_unpartitioned_window_is_bounded(spark, sf_dir):
         "unpartitioned Window over an unbounded frame — repartition it, "
         "or derive the frame from an aggregate/limit: "
         f"{offenders}"
+    )
+
+
+def test_lint_flags_a_topk_past_the_limit_threshold(spark):
+    ranked = spark.range(20).selectExpr("id % 2 AS g", "id").selectExpr(
+        "*", "row_number() OVER (PARTITION BY g ORDER BY id) AS rank"
+    )
+    found = {}
+    for k in (3, 1000):
+        found[k] = []
+        _unlimited_topk_filters(
+            ranked.where(f"rank <= {k}")._jdf.queryExecution().optimizedPlan(), found[k]
+        )
+    assert found[3] == [] and len(found[1000]) == 1
+
+
+def test_every_topk_filter_limits_before_the_exchange(optimized_plans):
+    offenders: dict[str, list] = {}
+    for name, plan in optimized_plans.items():
+        bad: list = []
+        _unlimited_topk_filters(plan, bad)
+        if bad:
+            offenders[name] = bad
+    assert not offenders, (
+        "a row_number top-k with no WindowGroupLimit ships every row "
+        f"across the exchange: {offenders}"
     )

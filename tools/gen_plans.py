@@ -25,8 +25,8 @@ SF = os.environ.get("SPARK_GRAFT_PLAN_SF_DIR", "/root/testdata/sf0.01")
 NOTES = {
     "knn_batch": (
         "Query side broadcast (BroadcastNestedLoopJoin / BroadcastExchange); "
-        "corpus scans once, per-partition partial top-k collapses each "
-        "partition to <=k rows before the only exchange; no global sort."
+        "corpus scans once; a partial WindowGroupLimit keeps <=k rows per "
+        "(partition, query) before the only exchange; no global sort."
     ),
     "dedup_minhash_lsh": (
         "Shingle explode + codegen md5s; ONE groupBy produces signatures "
@@ -295,10 +295,10 @@ NOTES = {
         "exchange, no aggregate, no sort anywhere in the plan."
     ),
     "post_filter_recall": (
-        "Corpus scored ONCE; the spark_partition_id partial prune "
-        "keeps BOTH k-sets (overall + filtered) per partition, one "
-        "final agg merges and intersects — no second scoring pass, "
-        "no ranking join."
+        "Corpus scored ONCE; one top-10 per (query, label match), "
+        "limited before the exchange, holds BOTH k-sets (overall + "
+        "filtered); one final agg intersects — no second scoring "
+        "pass, no ranking join."
     ),
     "pit_feature_join": (
         "Point-in-time lookup with NO join operator: dimension "
