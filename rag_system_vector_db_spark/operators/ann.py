@@ -6,9 +6,10 @@ Two classic index families re-expressed as DataFrame plans:
   query only scores vectors in its bucket. Hyperplanes are
   deterministic (seeded hash) so plans — and the DuckDB oracle, which
   receives the same planes as SQL literals — are reproducible.
-- IVF (inverted file): Lloyd k-means coarse quantizer (driver holds
-  only K×dim centroids — the iterative loop moves KB, not data), then
-  probe the nprobe nearest centroid cells per query.
+- IVF (inverted file): a Lloyd k-means coarse quantizer fit in numpy
+  on a bounded sample (``kmeans_fit_sample``; only K×dim centroids
+  enter the plan, as literals), then probe the nprobe nearest centroid
+  cells per query.
 
 At 100 TB: bucket/cell assignment is a narrow map; candidate scoring
 shuffles only matching buckets (AQE skew-join for hot cells); the
@@ -38,12 +39,7 @@ def lsh_bucket(vec: str, planes: list[list[float]]):
     and each dot appears exactly once (transform), keeping the
     interpreted-HOF tree size linear in n_planes."""
     dots = f"transform({V.sql_literal(planes)}, pl -> {V.dot(vec, 'pl')})"
-    weights = V.sql_literal([1 << b for b in range(len(planes))])
-    return F.expr(
-        f"aggregate(zip_with({dots}, CAST({weights} AS ARRAY<BIGINT>),"
-        " (d, w) -> CASE WHEN d > 0 THEN w ELSE CAST(0 AS BIGINT) END),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
+    return F.expr(V.sign_bits(dots, len(planes)))
 
 
 def ann_lsh_topk(
@@ -380,36 +376,6 @@ def kmeans_fit_sample(
     return [[float(v) for v in c] for c in centroids]
 
 
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Lloyd iterations as DataFrame aggs. Init = first k vectors by id
-    (deterministic). Each iteration: broadcast centroids → argmin
-    assignment (narrow) → per-cluster mean (one shuffle of dim doubles
-    per row, map-side combined). Only centroids ever reach the driver."""
-    init = vectors.orderBy(id_col).limit(k).select(vec_col).collect()
-    centroids = [[float(x) for x in r[0]] for r in init]
-    dim = len(centroids[0])
-    for _ in range(n_iter):
-        assigned = with_cell(vectors, vec_col, centroids, out_col="cluster").select(
-            F.col(vec_col), "cluster"
-        )
-        sums = assigned.groupBy("cluster").agg(
-            *[F.sum(F.col(vec_col)[d].cast("double")).alias(f"s{d}") for d in range(dim)],
-            F.count("*").alias("n"),
-        )
-        rows = {r["cluster"]: r for r in sums.collect()}
-        centroids = [
-            [rows[c][f"s{d}"] / rows[c]["n"] for d in range(dim)] if c in rows else centroids[c]
-            for c in range(k)
-        ]
-    return centroids
-
-
 def _centroid_dists(vec: str, centroids: list[list[float]]):
     """Array of euclidean distances to each broadcast centroid literal
     — each distance expression appears exactly ONCE. (A nested
@@ -514,7 +480,6 @@ def hard_negative_mining(
         F.col(vec_col),
         F.col(label_col),
         lsh_bucket(vec_col, planes).alias("_bucket"),
-        # norm hoist (see operators/dedup.semdedup): bit-identical
         F.expr(V.l2_norm(vec_col)).alias("_nrm"),
     )
     a, c = b.alias("a"), b.alias("n")
@@ -527,13 +492,12 @@ def hard_negative_mining(
         F.col(f"a.{label_col}").alias(label_col),
         F.col(f"n.{id_col}").alias("neg_id"),
         F.col(f"n.{label_col}").alias("neg_label"),
-        (
-            F.expr(V.dot(f"a.{vec_col}", f"n.{vec_col}"))
-            / (F.col("a._nrm") * F.col("n._nrm"))
-        ).alias("score"),
+        F.expr(V.cosine(f"a.{vec_col}", f"n.{vec_col}", "a._nrm", "n._nrm")).alias("score"),
     )
     # max_by on (score, -neg_id): highest cosine wins, exact ties go to
-    # the lowest negative id — deterministic, oracle-matched.
+    # the lowest negative id — deterministic, oracle-matched. A NULL
+    # score (a zero vector) loses to any other, as the oracle's NULLS
+    # LAST does.
     return (
         pairs.groupBy(id_col, label_col)
         .agg(
@@ -897,8 +861,8 @@ def ann_ivf_rerank_topk(
     # cast-then-round in DOUBLE so the quantized values are exactly
     # reproducible in SQL oracles (round(float32) would round a
     # different binary value than the oracle's DOUBLE[] cast sees)
-    quant = F.transform(
-        F.col(vec_col).cast("array<double>"), lambda x: F.round(x, quant_decimals)
+    quant = F.expr(
+        f"transform(CAST(({vec_col}) AS ARRAY<DOUBLE>), x -> round(x, {int(quant_decimals)}))"
     )
     cell = with_cell(
         corpus.select(F.col(id_col), quant.alias("_qv"), F.col(vec_col)),
@@ -1219,29 +1183,15 @@ def ann_ivfpq_residual_topk(
 # --- binary (sign-bit) index: faiss IndexBinaryFlat ----------------------
 
 
-def sign_bit_words(vec_col, dim: int = 64, word_bits: int = 32) -> list:
+def sign_bit_words(vec: str, dim: int = 64, word_bits: int = 32) -> list[str]:
     """Binarize a vector to sign-bit machine words (faiss
     IndexBinaryFlat's layout; ITQ/sign-hash binarization): bit i of
-    word w is set iff vec[w·32 + i] > 0. Two 32-bit words cover 64
-    dims without touching the sign bit of a long. The per-bit weights
-    enter as ONE literal array (no shiftleft-by-column), so the fold
-    is exact integer arithmetic — bit-identical across engines."""
+    word w is set iff vec[w·32 + i] > 0 (``V.sign_bits``). Two 32-bit
+    words cover 64 dims without touching the sign bit of a long."""
     words = []
     for w in range(0, dim, word_bits):
         n = min(word_bits, dim - w)
-        weights = V.lit_array([1 << b for b in range(n)]).cast("array<long>")
-        sliced = F.slice(vec_col.cast("array<double>"), w + 1, n)
-        words.append(
-            F.aggregate(
-                F.zip_with(
-                    sliced,
-                    weights,
-                    lambda x, wt: F.when(x > 0, wt).otherwise(F.lit(0).cast("long")),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-        )
+        words.append(V.sign_bits(f"slice({vec}, {w + 1}, {n})", n))
     return words
 
 
@@ -1264,10 +1214,8 @@ def binary_hamming_topk(
     the words column is the thing you'd MATERIALIZE (8 B/vector) and
     scan instead of the embeddings — the same build-once posture as
     ann_ivf_indexed."""
-    lo, hi = sign_bit_words(F.col(vec_col))
-    words = vectors.select(
-        F.col(id_col), lo.alias("_lo"), hi.alias("_hi")
-    )
+    lo, hi = sign_bit_words(vec_col)
+    words = vectors.selectExpr(id_col, f"{lo} AS _lo", f"{hi} AS _hi")
     q = (
         words.filter(F.col(id_col) == query_id)
         .select(F.col("_lo").alias("_qlo"), F.col("_hi").alias("_qhi"))
@@ -1316,38 +1264,17 @@ def sq8_topk(
     (one sqrt + one multiply per emitted row). The per-dimension-scale
     variant (QT_8bit) is quantize_int8_profile's scheme — this op
     keeps the uniform scale so the distance stays integer."""
-    absmax = vectors.agg(
-        F.max(
-            F.array_max(
-                F.transform(F.col(vec_col).cast("array<double>"), F.abs)
-            )
-        ).alias("_absmax")
-    )
-    code = lambda vec: F.transform(  # noqa: E731
-        vec.cast("array<double>"),
-        lambda x: F.greatest(
-            F.lit(-127).cast("long"),
-            F.least(
-                F.lit(127).cast("long"),
-                F.floor(x / (F.col("_absmax") / 127) + F.lit(0.5)),
-            ),
-        ),
-    )
-    coded = vectors.crossJoin(F.broadcast(absmax)).select(
-        F.col(id_col), code(F.col(vec_col)).alias("_codes"), "_absmax"
+    absmax = vectors.selectExpr(f"{V.sq8_absmax(vec_col)} AS _absmax")
+    coded = vectors.crossJoin(F.broadcast(absmax)).selectExpr(
+        id_col, f"{V.sq8_code(vec_col, '_absmax')} AS _codes", "_absmax"
     )
     q = coded.filter(F.col(id_col) == query_id).select(
         F.col("_codes").alias("_qcodes")
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("_codes"), F.col("_qcodes"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     scored = (
         coded.filter(F.col(id_col) != query_id)
         .crossJoin(F.broadcast(q))
-        .select(id_col, dist.alias("code_dist"), "_absmax")
+        .selectExpr(id_col, f"{V.code_sq_dist('_codes', '_qcodes')} AS code_dist", "_absmax")
     )
     top = scored.orderBy("code_dist", id_col).limit(k)
     w = Window.orderBy("code_dist", id_col)
@@ -1389,42 +1316,23 @@ def ann_ivf_sq8_topk(
     the broadcast query side, candidate join on the cell key, per-query
     top-k as a keyed agg. At 100 TB the (cell, id, codes) frame is the
     materialized index (ann_ivfpq_indexed's layout with SQ codes)."""
-    absmax = corpus.agg(
-        F.max(
-            F.array_max(F.transform(F.col(vec_col).cast("array<double>"), F.abs))
-        ).alias("_absmax")
-    )
-    code = lambda vec: F.transform(  # noqa: E731
-        vec.cast("array<double>"),
-        lambda x: F.greatest(
-            F.lit(-127).cast("long"),
-            F.least(
-                F.lit(127).cast("long"),
-                F.floor(x / (F.col("_absmax") / 127) + F.lit(0.5)),
-            ),
-        ),
-    )
+    absmax = corpus.selectExpr(f"{V.sq8_absmax(vec_col)} AS _absmax")
     coded = (
         with_cell(corpus, vec_col, centroids)
         .crossJoin(F.broadcast(absmax))
-        .select(F.col(id_col), F.col("_cell"), code(F.col(vec_col)).alias("_codes"))
+        .selectExpr(id_col, "_cell", f"{V.sq8_code(vec_col, '_absmax')} AS _codes")
     )
     qcells = (
         queries.crossJoin(F.broadcast(absmax))
         .select(
             query_id_col,
-            code(F.col(query_vec_col)).alias("_qcodes"),
+            F.expr(V.sq8_code(query_vec_col, "_absmax")).alias("_qcodes"),
             F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
         )
         .select(query_id_col, "_qcodes", F.col("p.cell").alias("_cell"))
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("_codes"), F.col("_qcodes"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = coded.join(F.broadcast(qcells), "_cell").select(
-        query_id_col, id_col, dist.alias("code_dist")
+    scored = coded.join(F.broadcast(qcells), "_cell").selectExpr(
+        query_id_col, id_col, f"{V.code_sq_dist('_codes', '_qcodes')} AS code_dist"
     )
     return topk_per_key(
         scored, query_id_col, id_col, k, score_col="code_dist", asc=True
@@ -1465,43 +1373,26 @@ def quantization_recall(
     )
     exact_top = topk_per_key(exact, "query_id", id_col, k, "dist", asc=True)
 
-    absmax = vectors.agg(
-        F.max(
-            F.array_max(F.transform(F.col(vec_col).cast("array<double>"), F.abs))
-        ).alias("_absmax")
+    absmax = vectors.selectExpr(f"{V.sq8_absmax(vec_col)} AS _absmax")
+    coded = corpus.crossJoin(F.broadcast(absmax)).selectExpr(
+        id_col, f"{V.sq8_code(vec_col, '_absmax')} AS _codes"
     )
-    code = lambda vec: F.transform(  # noqa: E731
-        vec.cast("array<double>"),
-        lambda x: F.greatest(
-            F.lit(-127).cast("long"),
-            F.least(
-                F.lit(127).cast("long"),
-                F.floor(x / (F.col("_absmax") / 127) + F.lit(0.5)),
-            ),
-        ),
-    )
-    coded = corpus.crossJoin(F.broadcast(absmax)).select(
-        F.col(id_col), code(F.col(vec_col)).alias("_codes")
-    )
-    qcoded = qs.crossJoin(F.broadcast(absmax)).select(
-        "query_id", code(F.col("_qv")).alias("_qcodes")
-    )
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("_codes"), F.col("_qcodes"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    qcoded = qs.crossJoin(F.broadcast(absmax)).selectExpr(
+        "query_id", f"{V.sq8_code('_qv', '_absmax')} AS _qcodes"
     )
     sq = (
         coded.crossJoin(F.broadcast(qcoded))
         .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col, sq_dist.cast("double").alias("dist"))
+        .selectExpr(
+            "query_id", id_col, f"CAST({V.code_sq_dist('_codes', '_qcodes')} AS DOUBLE) AS dist"
+        )
     )
     sq_top = topk_per_key(sq, "query_id", id_col, k, "dist", asc=True)
 
-    lo, hi = sign_bit_words(F.col(vec_col))
-    words = corpus.select(F.col(id_col), lo.alias("_lo"), hi.alias("_hi"))
-    qlo, qhi = sign_bit_words(F.col("_qv"))
-    qwords = qs.select("query_id", qlo.alias("_qlo"), qhi.alias("_qhi"))
+    lo, hi = sign_bit_words(vec_col)
+    words = corpus.selectExpr(id_col, f"{lo} AS _lo", f"{hi} AS _hi")
+    qlo, qhi = sign_bit_words("_qv")
+    qwords = qs.selectExpr("query_id", f"{qlo} AS _qlo", f"{qhi} AS _qhi")
     ham = (
         words.crossJoin(F.broadcast(qwords))
         .filter(F.col(id_col) != F.col("query_id"))

@@ -505,10 +505,6 @@ def dedup_embedding_lsh(
     from ..functions import vector as V
     from .ann import lsh_bucket
 
-    # Norm hoist (see semdedup): one l2_norm per VECTOR instead of two
-    # per PAIR — bit-identical scores (the norm is the same sequential-
-    # sum double either way), 3x fewer interpreted HOF aggregates on
-    # the pair stream.
     b = vectors.select(
         F.col(id_col),
         F.col(vec_col),
@@ -525,10 +521,7 @@ def dedup_embedding_lsh(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            (
-                F.expr(V.dot(f"a.{vec_col}", f"b.{vec_col}"))
-                / (F.col("a._nrm") * F.col("b._nrm"))
-            ).alias("score"),
+            F.expr(V.cosine(f"a.{vec_col}", f"b.{vec_col}", "a._nrm", "b._nrm")).alias("score"),
         )
         .filter(F.col("score") >= threshold)
         .select("id_a", "id_b", F.round("score", 6).alias("score"))
@@ -695,13 +688,6 @@ def semdedup(
     from ..functions import vector as V
     from .ann import with_cell
 
-    # Per-vector norm computed ONCE (N evaluations) instead of inside
-    # the pair cosine (2P evaluations, P = within-cell pairs ~ 125x N
-    # at the k=N/250 occupancy): the HOF aggregates run interpreted
-    # (CodegenFallback), so dropping two of the three per pair measured
-    # 25.3 s -> ~12 s on the 2.5M-pair sf1 study. Bit-identical scores:
-    # the norm value is the same sequential-sum double either way, so
-    # dot/(na*nb) reproduces V.cosine exactly and the oracle hash holds.
     b = with_cell(vectors, vec_col, centroids, out_col="cid").select(
         "cid",
         F.col(id_col),
@@ -726,10 +712,7 @@ def semdedup(
             F.col("a.cid").alias("cid"),
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            (
-                F.expr(V.dot(f"a.{vec_col}", f"b.{vec_col}"))
-                / (F.col("a._nrm") * F.col("b._nrm"))
-            ).alias("score"),
+            F.expr(V.cosine(f"a.{vec_col}", f"b.{vec_col}", "a._nrm", "b._nrm")).alias("score"),
         )
         .filter(F.col("score") >= threshold)
     )

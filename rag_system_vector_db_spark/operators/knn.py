@@ -52,12 +52,10 @@ def topk(
 
     The query literal appears once in the plan. For cosine its norm is
     taken on the driver with the same sequential double sum and
-    correctly rounded sqrt Spark's fold evaluates, so the score
-    dot(vec, q) / (l2_norm(vec) * qnorm) is the V.cosine arithmetic
-    tree, bit for bit, and divides with try_divide as V.cosine does: a
-    zero-norm row or query scores NULL, as in DuckDB, and ``score
-    DESC`` sorts it last, so one empty document cannot fail every
-    search. Returns (id_col, score) — score full-precision double.
+    correctly rounded sqrt Spark's fold evaluates, and enters V.cosine
+    as a hoisted norm, so the score is bit for bit the inline one; a
+    zero-norm row or query scores NULL and ``score DESC`` sorts it
+    last. Returns (id_col, score) — score full-precision double.
     """
     q = [float(x) for x in query_vec]
     q_sql = V.sql_literal(q)
@@ -65,10 +63,7 @@ def topk(
         ss = 0.0
         for x in q:
             ss += x * x
-        score = (
-            f"try_divide({V.dot(vec_col, q_sql)},"
-            f" {V.l2_norm(vec_col)} * {V.sql_literal(math.sqrt(ss))})"
-        )
+        score = V.cosine(vec_col, q_sql, nb=V.sql_literal(math.sqrt(ss)))
     else:
         score = _score(metric, vec_col, q_sql)
     order = F.asc("score") if _ascending(metric) else F.desc("score")
@@ -90,15 +85,8 @@ def topk_batch(
     Returns (query_id, id_col, score, rank).
     """
     if metric == "cosine":
-        # Factor the norms out of the pair loop: norm(corpus row) is
-        # computed once per corpus row (projection BELOW the broadcast
-        # join boundary — Catalyst does not collapse it into the join
-        # output), norm(query) once per broadcast query row. The score
-        # dot(a,b) / (norm_a * norm_b) is the SAME arithmetic tree
-        # V.cosine evaluates, so results are bit-identical — this cuts
-        # 3 array folds per pair to 1 (measured 7.5 s -> 2.8 s on the
-        # 500-query classifier eval at sf0.1). try_divide, as in
-        # V.cosine: a zero-norm side scores NULL and ranks last.
+        # norms hoisted (V's docstring): once per corpus row, BELOW
+        # the broadcast join, and once per broadcast query row
         c2 = corpus.selectExpr(id_col, vec_col, f"{V.l2_norm(vec_col)} AS _cnorm")
         q2 = queries.selectExpr(
             query_id_col, query_vec_col, f"{V.l2_norm(query_vec_col)} AS _qnorm"
@@ -106,7 +94,7 @@ def topk_batch(
         scored = c2.crossJoin(F.broadcast(q2)).selectExpr(
             query_id_col,
             id_col,
-            f"try_divide({V.dot(vec_col, query_vec_col)}, _cnorm * _qnorm) AS score",
+            f"{V.cosine(vec_col, query_vec_col, '_cnorm', '_qnorm')} AS score",
         )
     else:
         scored = corpus.crossJoin(F.broadcast(queries)).selectExpr(

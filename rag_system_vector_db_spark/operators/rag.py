@@ -207,12 +207,9 @@ def evaluation_results(
         )
         .groupBy(F.col("query_id").alias("qa_id"))
         .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("rank", text_col))),
-                    lambda s: s[text_col],
-                ),
+            F.expr(
+                f"concat_ws(' ', transform(array_sort(collect_list(struct(`rank`, `{text_col}`))),"
+                f" s -> s.`{text_col}`))"
             ).alias("_ctx"),
             F.min(
                 F.when(F.col("vec_id") == F.col("expected_id"), F.col("rank"))

@@ -291,13 +291,9 @@ def doc_fingerprint(
     posexplode k rows per doc — no wide explode, no window shuffle.
     Returns (doc_id, fp_rank, fp_hash).
     """
-    hashes = F.array_sort(
-        F.array_distinct(
-            F.transform(
-                F.array_distinct(F.expr(X.char_shingles(text_col, shingle_len))),
-                lambda s: F.md5(s),
-            )
-        )
+    hashes = F.expr(
+        "array_sort(array_distinct(transform("
+        f"array_distinct({X.char_shingles(text_col, shingle_len)}), s -> md5(s))))"
     )
     return docs.select(
         F.col(id_col), F.posexplode(F.slice(hashes, 1, k)).alias("pos", "fp_hash")

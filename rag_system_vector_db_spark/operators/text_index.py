@@ -327,7 +327,7 @@ def positional_index_build(
 def _shift_positions(col, off: int):
     """Positions shifted left by ``off`` (term i's positions become
     candidate phrase-start positions)."""
-    return F.transform(col, lambda p: p - off) if off else col
+    return F.expr(f"transform({col}, p -> p - {int(off)})") if off else F.col(col)
 
 
 def phrase_topk(
@@ -359,7 +359,7 @@ def phrase_topk(
     for i, t in enumerate(phrase):
         pi = post.filter(F.col("term") == t).select(
             F.col("doc_id"),
-            _shift_positions(F.col("positions"), i).alias(f"_p{i}"),
+            _shift_positions("positions", i).alias(f"_p{i}"),
         )
         joined = pi if joined is None else joined.join(pi, "doc_id")
     starts = F.col("_p0")

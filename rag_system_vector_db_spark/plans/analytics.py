@@ -503,14 +503,9 @@ def skew_profile(
         per_key.orderBy(F.col("cnt").desc(), F.col("key"))
         .limit(5)
         .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct((-F.col("cnt")).alias("_n"), F.col("key"), F.col("cnt")))
-                    ),
-                    lambda s: F.concat_ws(":", s["key"], s["cnt"]),
-                ),
-                ",",
+            F.expr(
+                "array_join(transform(sort_array(collect_list(struct(-cnt AS _n, key, cnt))),"
+                " s -> concat_ws(':', s.key, s.cnt)), ',')"
             ).alias("top_keys_csv")
         )
     )

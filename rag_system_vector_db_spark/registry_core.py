@@ -7,24 +7,16 @@ ANSI SQL DuckDB runs on the same parquet views. Column names/aliases
 match exactly; float columns are rounded to 6 decimals on both sides
 AFTER any ordering/ranking on full precision, so value-hashes agree —
 through functions.exact (micro-unit integers, one emission) wherever
-a raw 6-dp round could differ between the engines.
+a raw 6-dp round could differ between the engines. Vector arithmetic
+in an oracle is ``functions.vector``'s ``V.dd_*`` twin of the Spark
+builder (``V.dd_cosine`` beside ``V.cosine``), bit-equal by test.
 """
 
 from __future__ import annotations
 
-import math as _math
-import os as _os
-
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from .functions import hashing as H
-from .functions import vector as V
-from .operators import chunking, knn, text_analysis
-from .operators.text_analysis import STOPWORDS
-from .sources import load_table
+from pyspark.sql import DataFrame, SparkSession
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -43,25 +35,3 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-# DuckDB snippets for dot/norm with sequential double accumulation
-# (matches functions.vector exactly — see its module docstring).
-def _dd_dot(a: str, b: str) -> str:
-    return f"list_sum(list_transform(list_zip(({a})::DOUBLE[], ({b})::DOUBLE[]), x -> x[1]*x[2]))"
-
-
-def _dd_norm(a: str) -> str:
-    return f"sqrt(list_sum(list_transform(({a})::DOUBLE[], x -> x*x)))"
-
-
-def _dd_cosine(a: str, b: str) -> str:
-    return f"({_dd_dot(a, b)} / ({_dd_norm(a)} * {_dd_norm(b)}))"
-
-
-def _dd_euclid(a: str, b: str) -> str:
-    # matches functions.vector.euclidean: zip-diff, sequential sum of squares
-    return (
-        f"sqrt(list_sum(list_transform(list_zip(({a})::DOUBLE[], ({b})::DOUBLE[]),"
-        f" x -> (x[1]-x[2])*(x[1]-x[2]))))"
-    )

@@ -26,10 +26,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -180,7 +176,7 @@ def insert_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "vector_norms",
     oracle=f"""
-    SELECT vec_id, round({_dd_norm('embedding')}, 6) AS norm
+    SELECT vec_id, round({V.dd_l2_norm('embedding')}, 6) AS norm
     FROM embeddings
     WHERE vec_id < 100
     """,
@@ -208,7 +204,7 @@ def _query_corpus(corpus: DataFrame, emb: DataFrame, vec_id: int):
     oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
     SELECT vec_id, round(score, 6) AS score FROM (
-        SELECT e.vec_id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT e.vec_id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q
         WHERE e.vec_id <> 0
         ORDER BY score DESC, e.vec_id
@@ -233,7 +229,7 @@ def knn_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings WHERE vec_id < 5
     ), scored AS (
         SELECT q.query_id, e.vec_id,
-               {_dd_cosine('e.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 'q.query_vec')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, vec_id, score,
@@ -265,7 +261,7 @@ def knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings WHERE vec_id < 5
     ), scored AS (
         SELECT q.query_id, e.vec_id,
-               {_dd_cosine('e.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 'q.query_vec')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, vec_id,
@@ -295,7 +291,7 @@ def knn_batch_np(spark, sf_dir):
     "similarity_matrix",
     oracle=f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round({_dd_cosine('a.embedding', 'b.embedding')}, 6) AS score
+           round({V.dd_cosine('a.embedding', 'b.embedding')}, 6) AS score
     FROM embeddings a, embeddings b
     WHERE a.vec_id < 20 AND b.vec_id < 20
     """,
@@ -1011,7 +1007,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7),
     scored AS (
-        SELECT e.vec_id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT e.vec_id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT vec_id, score,
@@ -1054,7 +1050,7 @@ def rag_retrieve(spark, sf_dir):
         FROM embeddings WHERE vec_id < 20
     ), scored AS (
         SELECT q.query_id, e.vec_id,
-               {_dd_cosine('e.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 'q.query_vec')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, vec_id, score,
@@ -1117,7 +1113,7 @@ def rag_eval_retrieval(spark, sf_dir):
         SELECT doc_id AS _id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS bm25_rank
         FROM bm25 ORDER BY bm25 DESC, doc_id LIMIT 20
     ), vec AS (
-        SELECT e.vec_id AS _id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT e.vec_id AS _id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q
     ), vec_top AS (
         SELECT _id, row_number() OVER (ORDER BY score DESC, _id) AS vec_rank
@@ -1278,7 +1274,7 @@ def _ann_lsh_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1291,7 +1287,7 @@ def _ann_lsh_oracle(sf_dir: str) -> str:
         FROM embeddings e JOIN buckets b USING (vec_id)
     ), scored AS (
         SELECT q.query_id, c.vec_id,
-               {_dd_cosine('c.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('c.embedding', 'q.query_vec')} AS score
         FROM c JOIN q ON c.bucket = q.bucket
     ), ranked AS (
         SELECT query_id, vec_id, score,
@@ -1311,7 +1307,7 @@ def _bucketed_pairs_oracle(planes, threshold: float) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1322,7 +1318,7 @@ def _bucketed_pairs_oracle(planes, threshold: float) -> str:
     )
     SELECT id_a, id_b, round(score, 6) AS score FROM (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               {_dd_cosine('a.embedding', 'b.embedding')} AS score
+               {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     ) WHERE score >= {threshold}
     """
@@ -1389,7 +1385,7 @@ def _ivf_common(centroids, n_queries: int) -> str:
             SELECT e.vec_id, e.embedding, c.cid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {_dd_euclid('e.embedding', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
@@ -1401,7 +1397,7 @@ def _ivf_common(centroids, n_queries: int) -> str:
             SELECT q.query_id, q.query_vec, c.cid,
                    row_number() OVER (
                        PARTITION BY q.query_id
-                       ORDER BY {_dd_euclid('q.query_vec', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('q.query_vec', 'c.w')}, c.cid
                    ) AS rn
             FROM q CROSS JOIN cents c
         ) WHERE rn <= 2
@@ -1416,7 +1412,7 @@ def _ivf_oracle(sf_dir: str) -> str:
     return _ivf_common(centroids, 5) + f"""
     , scored AS (
         SELECT p.query_id, s.vec_id,
-               {_dd_cosine('s.embedding', 'p.query_vec')} AS score
+               {V.dd_cosine('s.embedding', 'p.query_vec')} AS score
         FROM assigned s JOIN qprobe p ON s.cid = p.cid
     ), ranked AS (
         SELECT query_id, vec_id, score,
@@ -1455,7 +1451,7 @@ def _multiprobe_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1473,7 +1469,7 @@ def _multiprobe_oracle(sf_dir: str) -> str:
         FROM embeddings e JOIN buckets b USING (vec_id)
     ), scored AS (
         SELECT p.query_id, c.vec_id,
-               {_dd_cosine('c.embedding', 'p.query_vec')} AS score
+               {V.dd_cosine('c.embedding', 'p.query_vec')} AS score
         FROM c JOIN probes p ON c.bucket = p.pb
     ), ranked AS (
         SELECT query_id, vec_id, score,
@@ -1517,7 +1513,7 @@ def _ivf_rerank_oracle(sf_dir: str) -> str:
     return _ivf_common(centroids, 5) + f"""
     , qscored AS (
         SELECT p.query_id, s.vec_id,
-               {_dd_cosine(quant, 'p.query_vec')} AS approx
+               {V.dd_cosine(quant, 'p.query_vec')} AS approx
         FROM assigned s JOIN qprobe p ON s.cid = p.cid
     ), short AS (
         SELECT query_id, vec_id FROM (
@@ -1527,7 +1523,7 @@ def _ivf_rerank_oracle(sf_dir: str) -> str:
         ) WHERE rn <= 10
     ), exact AS (
         SELECT s.query_id, s.vec_id,
-               {_dd_cosine('e.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 'q.query_vec')} AS score
         FROM short s
         JOIN embeddings e ON e.vec_id = s.vec_id
         JOIN q ON q.query_id = s.query_id
@@ -1568,7 +1564,7 @@ def _probe_sweep_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1586,7 +1582,7 @@ def _probe_sweep_oracle(sf_dir: str) -> str:
         FROM q CROSS JOIN (SELECT unnest([{flips}]) AS i) t
     ), cand AS (
         SELECT p.query_id, c.vec_id, p.m_min,
-               {_dd_cosine('c.embedding', 'p.query_vec')} AS score
+               {V.dd_cosine('c.embedding', 'p.query_vec')} AS score
         FROM c JOIN probes p ON c.bucket = p.pb
     ), budgets AS (
         SELECT unnest([{budgets}]) AS m
@@ -1604,7 +1600,7 @@ def _probe_sweep_oracle(sf_dir: str) -> str:
             SELECT q.query_id, e.vec_id,
                    row_number() OVER (
                        PARTITION BY q.query_id
-                       ORDER BY {_dd_cosine('e.embedding', 'q.query_vec')} DESC, e.vec_id
+                       ORDER BY {V.dd_cosine('e.embedding', 'q.query_vec')} DESC, e.vec_id
                    ) AS rank
             FROM embeddings e CROSS JOIN q
         ) WHERE rank <= 10
@@ -1665,7 +1661,7 @@ def _recall_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1681,7 +1677,7 @@ def _recall_oracle(sf_dir: str) -> str:
             SELECT q.query_id, e.vec_id,
                    row_number() OVER (
                        PARTITION BY q.query_id
-                       ORDER BY {_dd_cosine('e.embedding', 'q.query_vec')} DESC, e.vec_id
+                       ORDER BY {V.dd_cosine('e.embedding', 'q.query_vec')} DESC, e.vec_id
                    ) AS rank
             FROM embeddings e CROSS JOIN q
         ) WHERE rank <= 10
@@ -1690,7 +1686,7 @@ def _recall_oracle(sf_dir: str) -> str:
             SELECT p.query_id, c.vec_id,
                    row_number() OVER (
                        PARTITION BY p.query_id
-                       ORDER BY {_dd_cosine('c.embedding', 'p.query_vec')} DESC, c.vec_id
+                       ORDER BY {V.dd_cosine('c.embedding', 'p.query_vec')} DESC, c.vec_id
                    ) AS rank
             FROM c JOIN q p ON c.bucket = p.bucket
         ) WHERE rank <= 10
@@ -1704,7 +1700,7 @@ def _recall_oracle(sf_dir: str) -> str:
             SELECT p.query_id, c.vec_id,
                    row_number() OVER (
                        PARTITION BY p.query_id
-                       ORDER BY {_dd_cosine('c.embedding', 'p.query_vec')} DESC, c.vec_id
+                       ORDER BY {V.dd_cosine('c.embedding', 'p.query_vec')} DESC, c.vec_id
                    ) AS rank
             FROM c JOIN probes p ON c.bucket = p.pb
         ) WHERE rank <= 10
@@ -1949,9 +1945,9 @@ def multimodal_pipeline(spark, sf_dir):
         "kind",
         "n_bytes",
         "content_md5",
-        F.array_join(
-            F.transform("features", lambda x: F.format_string("%.6f", x)), ","
-        ).alias("features_csv"),
+        F.expr("array_join(transform(features, f -> format_string('%.6f', f)), ',')").alias(
+            "features_csv"
+        ),
     )
 
 
@@ -1987,7 +1983,7 @@ def ngram_counts_q(spark, sf_dir):
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM embeddings a JOIN embeddings b
           ON a.vec_id < b.vec_id AND a.vec_id < 200 AND b.vec_id < 200
-        WHERE {_dd_cosine('a.embedding', 'b.embedding')} >= 0.3
+        WHERE {V.dd_cosine('a.embedding', 'b.embedding')} >= 0.3
     ), edges AS (
         SELECT id_a AS src, id_b AS dst FROM pairs
         UNION
@@ -2507,7 +2503,7 @@ def _pca_oracle(sf_dir: str) -> str:
         off = 0.0
         for m, c in zip(mean, comp):
             off += m * c
-        cols.append(f"round({_dd_dot('embedding', lit)} - {off!r}, 6) AS pc{i}")
+        cols.append(f"round({V.dd_dot('embedding', lit)} - {off!r}, 6) AS pc{i}")
     return f"SELECT vec_id, {', '.join(cols)} FROM embeddings"
 
 

@@ -25,22 +25,10 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
 from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _cents_sql, _ivf_common, _ivf_oracle, _planes_sql  # noqa: F401
-
-
-def _dd_euclid2(a: str, b: str) -> str:
-    # squared euclidean — matches functions.vector.sq_euclidean's sequential sum
-    return (
-        f"list_sum(list_transform(list_zip(({a})::DOUBLE[], ({b})::DOUBLE[]),"
-        f" x -> (x[1]-x[2])*(x[1]-x[2])))"
-    )
 
 
 def _books_sql(books) -> str:
@@ -65,7 +53,7 @@ def _pq_codes_cte(books) -> str:
             SELECT e.vec_id, b.m, b.k AS code,
                    row_number() OVER (
                        PARTITION BY e.vec_id, b.m
-                       ORDER BY {_dd_euclid2(sub, 'b.w')}, b.k
+                       ORDER BY {V.dd_sq_euclidean(sub, 'b.w')}, b.k
                    ) AS rn
             FROM embeddings e CROSS JOIN books b
         ) WHERE rn = 1
@@ -103,7 +91,7 @@ def _pq_adc_oracle(sf_dir: str) -> str:
         return f"list_slice((q.query_vec)::DOUBLE[], {mi * dsub + 1}, {(mi + 1) * dsub})"
 
     legs = " + ".join(
-        _dd_euclid2(qsub(mi), f"c{mi}.w") for mi in range(len(books))
+        V.dd_sq_euclidean(qsub(mi), f"c{mi}.w") for mi in range(len(books))
     )  # SQL + is left-associative, matching pq_adc_dist's python loop
     joins = "\n        ".join(
         f"JOIN cw c{mi} ON c{mi}.vec_id = c0.vec_id AND c{mi}.m = {mi}"
@@ -156,7 +144,7 @@ def _pq_recon_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_books_sql(books)},
     best AS (
-        SELECT e.vec_id, b.m, min({_dd_euclid2(sub, 'b.w')}) AS e2
+        SELECT e.vec_id, b.m, min({V.dd_sq_euclidean(sub, 'b.w')}) AS e2
         FROM embeddings e CROSS JOIN books b
         GROUP BY e.vec_id, b.m
     )
@@ -430,13 +418,13 @@ def _semdedup_oracle(sf_dir: str) -> str:
             SELECT e.vec_id, e.embedding, c.cid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {_dd_euclid('e.embedding', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
     ), pairs AS (
         SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
-               {_dd_cosine('a.embedding', 'b.embedding')} AS score
+               {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM assigned a
         JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
     )
@@ -712,7 +700,7 @@ def funnel_analysis(spark, sf_dir):
         FROM embeddings WHERE vec_id < 5
     ), scored AS (
         SELECT d.dim, q.query_id, e.vec_id,
-               {_dd_cosine('e.embedding[1:d.dim]', 'q.query_vec[1:d.dim]')} AS score
+               {V.dd_cosine('e.embedding[1:d.dim]', 'q.query_vec[1:d.dim]')} AS score
         FROM embeddings e CROSS JOIN q CROSS JOIN dims d
     ), ranked AS (
         SELECT dim, query_id, vec_id,
@@ -789,10 +777,10 @@ def _ivf_cell_stats_oracle(sf_dir: str) -> str:
     WITH {_cents_sql(centroids)},
     assigned AS (
         SELECT vec_id, cid, d FROM (
-            SELECT e.vec_id, c.cid, {_dd_euclid('e.embedding', 'c.w')} AS d,
+            SELECT e.vec_id, c.cid, {V.dd_euclidean('e.embedding', 'c.w')} AS d,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {_dd_euclid('e.embedding', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
@@ -895,13 +883,13 @@ def _semdedup_clusters_oracle(sf_dir: str) -> str:
             SELECT e.vec_id, e.embedding, c.cid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {_dd_euclid('e.embedding', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
     ), sempairs AS (
         SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
-               {_dd_cosine('a.embedding', 'b.embedding')} AS score
+               {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM assigned a
         JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
     ), sem AS (
@@ -932,7 +920,7 @@ LAZY_ORACLES["semdedup_clusters"] = _semdedup_clusters_oracle
     allowed AS (
         SELECT doc_id FROM documents WHERE lang = 'en' AND n_chars >= 200
     ), scored AS (
-        SELECT e.vec_id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT e.vec_id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e JOIN allowed a ON a.doc_id = e.vec_id, q
     )
     SELECT vec_id, round(score, 6) AS score,
@@ -974,7 +962,7 @@ def knn_filtered(spark, sf_dir):
     oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7),
     scored AS (
-        SELECT e.label, e.vec_id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT e.label, e.vec_id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q
     ), per_label AS (
         SELECT label, max(score) AS maxsim FROM scored GROUP BY label
@@ -1047,8 +1035,6 @@ def _knn_graph_edges(spark, sf_dir, max_bucket=None):
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = _graph_planes(sf_dir)
-    # norm hoist (see operators/dedup.semdedup): one l2_norm per vector
-    # instead of two per candidate pair; bit-identical scores
     b = emb.select(
         "vec_id",
         "embedding",
@@ -1067,9 +1053,7 @@ def _knn_graph_edges(spark, sf_dir, max_bucket=None):
         .select(
             F.col("a.vec_id").alias("src"),
             F.col("b.vec_id").alias("dst"),
-            F.expr(
-                f"try_divide({V.dot('a.embedding', 'b.embedding')}, a._nrm * b._nrm)"
-            ).alias("score"),
+            F.expr(V.cosine("a.embedding", "b.embedding", "a._nrm", "b._nrm")).alias("score"),
         )
     )
     return knn.topk_per_key(scored, "src", "dst", 3)
@@ -1097,7 +1081,7 @@ def _knn_graph_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1107,7 +1091,7 @@ def _knn_graph_oracle(sf_dir: str) -> str:
         FROM embeddings e JOIN buckets b USING (vec_id)
     ), scored AS (
         SELECT a.vec_id AS src, b.vec_id AS dst,
-               {_dd_cosine('a.embedding', 'b.embedding')} AS score
+               {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM c a JOIN c b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
     ), ranked AS (
         SELECT src, dst, score,
@@ -1166,7 +1150,7 @@ def events_anomaly(spark, sf_dir):
         FROM embeddings WHERE vec_id < 20
     ), scored AS (
         SELECT q.query_id, e.vec_id,
-               {_dd_cosine('e.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 'q.query_vec')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, vec_id, score,
@@ -1255,7 +1239,7 @@ def _ivf_probe_sweep_oracle(sf_dir: str) -> str:
             SELECT e.vec_id, e.embedding, c.cid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {_dd_euclid('e.embedding', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
@@ -1267,13 +1251,13 @@ def _ivf_probe_sweep_oracle(sf_dir: str) -> str:
             SELECT q.query_id, q.query_vec, c.cid,
                    row_number() OVER (
                        PARTITION BY q.query_id
-                       ORDER BY {_dd_euclid('q.query_vec', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('q.query_vec', 'c.w')}, c.cid
                    ) AS rn
             FROM q CROSS JOIN cents c
         ) WHERE rn <= 4
     ), cand AS (
         SELECT p.query_id, s.vec_id, p.m_min,
-               {_dd_cosine('s.embedding', 'p.query_vec')} AS score
+               {V.dd_cosine('s.embedding', 'p.query_vec')} AS score
         FROM assigned s JOIN qprobe p ON s.cid = p.cid
     ), budgets AS (
         SELECT unnest([1, 2, 3, 4]) AS m
@@ -1291,7 +1275,7 @@ def _ivf_probe_sweep_oracle(sf_dir: str) -> str:
             SELECT q.query_id, e.vec_id,
                    row_number() OVER (
                        PARTITION BY q.query_id
-                       ORDER BY {_dd_cosine('e.embedding', 'q.query_vec')} DESC, e.vec_id
+                       ORDER BY {V.dd_cosine('e.embedding', 'q.query_vec')} DESC, e.vec_id
                    ) AS rank
             FROM embeddings e CROSS JOIN q
         ) WHERE rank <= 10
@@ -1492,7 +1476,7 @@ def _hard_negative_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -1502,7 +1486,7 @@ def _hard_negative_oracle(sf_dir: str) -> str:
         FROM embeddings e JOIN buckets b USING (vec_id)
     ), pairs AS (
         SELECT a.vec_id, a.label, n.vec_id AS neg_id, n.label AS neg_label,
-               {_dd_cosine('a.embedding', 'n.embedding')} AS score
+               {V.dd_cosine('a.embedding', 'n.embedding')} AS score
         FROM v a JOIN v n ON a.bucket = n.bucket AND a.label <> n.label
     ), ranked AS (
         SELECT *, row_number() OVER (
@@ -1548,7 +1532,7 @@ def _cluster_purity_oracle(sf_dir: str) -> str:
             SELECT e.vec_id, e.label, c.cid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY {_dd_euclid('e.embedding', 'c.w')}, c.cid
+                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
                    ) AS rn
             FROM embeddings e CROSS JOIN cents c
         ) WHERE rn = 1
@@ -1662,7 +1646,7 @@ def keyword_index_batch(spark, sf_dir):
                row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS bm25_rank
         FROM bm25 QUALIFY bm25_rank <= 20
     ), vec AS (
-        SELECT q.query_id, e.vec_id AS _id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT q.query_id, e.vec_id AS _id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e CROSS JOIN qv q
     ), vec_top AS (
         SELECT query_id, _id,
@@ -1904,7 +1888,7 @@ def _ivfpq_oracle(sf_dir: str) -> str:
         return f"list_slice((p.query_vec)::DOUBLE[], {mi * dsub + 1}, {(mi + 1) * dsub})"
 
     legs = " + ".join(
-        _dd_euclid2(qsub(mi), f"c{mi}.w") for mi in range(len(books))
+        V.dd_sq_euclidean(qsub(mi), f"c{mi}.w") for mi in range(len(books))
     )  # SQL + is left-associative, matching pq_adc_dist's python loop
     joins = "\n        ".join(
         f"JOIN cw c{mi} ON c{mi}.vec_id = c0.vec_id AND c{mi}.m = {mi}"
@@ -1920,7 +1904,7 @@ def _ivfpq_oracle(sf_dir: str) -> str:
             SELECT e.vec_id, b.m, b.k AS code,
                    row_number() OVER (
                        PARTITION BY e.vec_id, b.m
-                       ORDER BY {_dd_euclid2(sub, 'b.w')}, b.k
+                       ORDER BY {V.dd_sq_euclidean(sub, 'b.w')}, b.k
                    ) AS rn
             FROM embeddings e CROSS JOIN books b
         ) WHERE rn = 1
@@ -2597,7 +2581,7 @@ def _ivfpq_residual_oracle(sf_dir: str) -> str:
         return f"list_slice(qr.qr, {mi * dsub + 1}, {(mi + 1) * dsub})"
 
     legs = " + ".join(
-        _dd_euclid2(qrsub(mi), f"c{mi}.w") for mi in range(len(books))
+        V.dd_sq_euclidean(qrsub(mi), f"c{mi}.w") for mi in range(len(books))
     )  # SQL + is left-associative, matching pq_adc_dist_lut's loop
     joins = "\n        ".join(
         f"JOIN cw c{mi} ON c{mi}.vec_id = c0.vec_id AND c{mi}.m = {mi}"
@@ -2617,7 +2601,7 @@ def _ivfpq_residual_oracle(sf_dir: str) -> str:
             SELECT res.vec_id, res.cid, b.m, b.k AS code,
                    row_number() OVER (
                        PARTITION BY res.vec_id, b.m
-                       ORDER BY {_dd_euclid2(rsub, 'b.w')}, b.k
+                       ORDER BY {V.dd_sq_euclidean(rsub, 'b.w')}, b.k
                    ) AS rn
             FROM res CROSS JOIN books b
         ) WHERE rn = 1
@@ -2655,7 +2639,7 @@ LAZY_ORACLES["ann_ivfpq_residual"] = _ivfpq_residual_oracle
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM embeddings a JOIN embeddings b
           ON a.vec_id < b.vec_id AND a.vec_id < 200 AND b.vec_id < 200
-        WHERE {_dd_cosine('a.embedding', 'b.embedding')} >= 0.3
+        WHERE {V.dd_cosine('a.embedding', 'b.embedding')} >= 0.3
     ), edges AS (
         SELECT id_a AS src, id_b AS dst FROM pairs
         UNION
@@ -2789,7 +2773,7 @@ _NDCG_DISC_SQL = "[" + ", ".join(repr(d) for d in _NDCG_DISC) + "]::DOUBLE[]"
         SELECT query_id, doc_id, max(g) AS g FROM rel0 GROUP BY 1, 2
     ), scored AS (
         SELECT q.query_id, e.vec_id,
-               {_dd_cosine("e.embedding", "q.query_vec")} AS score
+               {V.dd_cosine("e.embedding", "q.query_vec")} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, vec_id, row_number() OVER (
@@ -2865,15 +2849,9 @@ def retrieval_ndcg(spark, sf_dir):
         .select(top.query_id.alias("query_id"), F.col("rank"), term.alias("_term"))
         .groupBy("query_id")
         .agg(
-            F.aggregate(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("rank"), F.col("_term")))
-                    ),
-                    lambda s: s["_term"],
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
+            F.expr(
+                "aggregate(transform(sort_array(collect_list(struct(`rank`, _term))),"
+                " s -> s._term), 0D, (acc, t) -> acc + t)"
             ).alias("_dcg")
         )
     )
@@ -2883,14 +2861,12 @@ def retrieval_ndcg(spark, sf_dir):
     ).select(
         "query_id",
         "n_rel",
-        F.aggregate(
-            F.zip_with(
-                F.col("_gs"),
-                F.slice(disc, 1, F.size("_gs")),
-                lambda gg, d: (F.pow(F.lit(2), gg) - 1) * d,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        # Σ (2^g - 1) · disc[i]: a dot of the gains with the discounts
+        F.expr(
+            V.dot(
+                "transform(_gs, g -> pow(2, g) - 1)",
+                f"slice({V.sql_literal(_NDCG_DISC)}, 1, size(_gs))",
+            )
         ).alias("_idcg"),
     )
     return idcg.join(dcg, "query_id", "left").select(
@@ -3438,7 +3414,7 @@ LAZY_ORACLES["mutual_knn"] = _mutual_knn_oracle
 def _kmeans_oracle() -> str:
     """Two unrolled Lloyd rounds in the same fixed-point arithmetic as
     the Spark plan (see kmeans_refine)."""
-    dist = "list_sum(list_transform(list_zip(q.vq, c.cq), p -> (p[1]-p[2])*(p[1]-p[2])))"
+    dist = V.dd_code_sq_dist("q.vq", "c.cq")
 
     def assign(cents: str, out: str) -> str:
         return f"""
@@ -3517,10 +3493,7 @@ def kmeans_refine_q(spark, sf_dir):
     cents = q.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("vq").alias("cq")
     )
-    dist = (
-        "aggregate(zip_with(vq, c.cq, (a, b) -> (a - b) * (a - b)),"
-        " cast(0 as bigint), (acc, x) -> acc + x)"
-    )
+    dist = V.code_sq_dist("vq", "c.cq")
     argmin = F.expr(
         f"array_sort(transform(_cs, c -> struct({dist} AS d, c.cid AS cid)))[0].cid"
     )

@@ -25,10 +25,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -298,7 +294,7 @@ def span_corrupt_corpus_q(spark, sf_dir):
     WITH q AS (
         SELECT embedding AS qv FROM embeddings WHERE vec_id = 0
     ), scored AS (
-        SELECT e.vec_id, {_dd_cosine('e.embedding', 'q.qv')} AS score
+        SELECT e.vec_id, {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q WHERE e.vec_id <> 0
     ), ranked AS (
         SELECT vec_id, score,
@@ -672,11 +668,11 @@ def query_expansion_prf_q(spark, sf_dir):
 
 @query(
     "ann_binary_hamming",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT vec_id,
-               CAST(list_sum([CASE WHEN embedding[i+1] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END FOR i IN range(32)]) AS BIGINT) AS lo,
-               CAST(list_sum([CASE WHEN embedding[i+33] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END FOR i IN range(32)]) AS BIGINT) AS hi
+               {V.dd_sign_bits('embedding[1:32]', 32)} AS lo,
+               {V.dd_sign_bits('embedding[33:64]', 32)} AS hi
         FROM embeddings
     ), q AS (SELECT lo AS qlo, hi AS qhi FROM w WHERE vec_id = 0),
     s AS (
@@ -700,21 +696,16 @@ def ann_binary_hamming(spark, sf_dir):
 
 @query(
     "ann_sq8",
-    oracle="""
+    oracle=f"""
     WITH am AS (
-        SELECT max(list_max(list_transform(embedding::DOUBLE[], x -> abs(x)))) AS absmax
-        FROM embeddings
+        SELECT {V.dd_sq8_absmax('embedding')} AS absmax FROM embeddings
     ), c AS (
-        SELECT vec_id,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(greatest(-127, least(127, floor(x / (am.absmax / 127) + 0.5))) AS BIGINT)) AS codes,
+        SELECT vec_id, {V.dd_sq8_code('embedding', 'am.absmax')} AS codes,
                am.absmax AS absmax
         FROM embeddings, am
     ), q AS (SELECT codes AS qcodes FROM c WHERE vec_id = 0),
     s AS (
-        SELECT c.vec_id,
-               CAST(list_sum(list_transform(list_zip(c.codes, q.qcodes),
-                    p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS code_dist,
+        SELECT c.vec_id, {V.dd_code_sq_dist('c.codes', 'q.qcodes')} AS code_dist,
                c.absmax AS absmax
         FROM c, q WHERE c.vec_id <> 0
     )
@@ -740,7 +731,7 @@ def ann_sq8(spark, sf_dir):
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM embeddings a JOIN embeddings b
           ON a.vec_id < b.vec_id AND a.vec_id < 200 AND b.vec_id < 200
-        WHERE {_dd_cosine('a.embedding', 'b.embedding')} >= 0.3
+        WHERE {V.dd_cosine('a.embedding', 'b.embedding')} >= 0.3
     ), edges AS (
         SELECT id_a AS src, id_b AS dst FROM pairs
         UNION
@@ -1419,25 +1410,17 @@ def _ivf_sq8_oracle(sf_dir: str) -> str:
     from ..operators import ann
 
     centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    sq = (
-        "CAST(greatest(-127, least(127, floor(x / (am.absmax / 127) + 0.5))) AS BIGINT)"
-    )
     return _ivf_common(centroids, 5) + f"""
     , am AS (
-        SELECT max(list_max(list_transform(embedding::DOUBLE[], x -> abs(x)))) AS absmax
-        FROM embeddings
+        SELECT {V.dd_sq8_absmax('embedding')} AS absmax FROM embeddings
     ), ca AS (
-        SELECT a.vec_id, a.cid,
-               list_transform(a.embedding::DOUBLE[], x -> {sq}) AS codes
+        SELECT a.vec_id, a.cid, {V.dd_sq8_code('a.embedding', 'am.absmax')} AS codes
         FROM assigned a, am
     ), cq AS (
-        SELECT p.query_id, p.cid,
-               list_transform(p.query_vec::DOUBLE[], x -> {sq}) AS qcodes
+        SELECT p.query_id, p.cid, {V.dd_sq8_code('p.query_vec', 'am.absmax')} AS qcodes
         FROM qprobe p, am
     ), scored AS (
-        SELECT cq.query_id, ca.vec_id,
-               CAST(list_sum(list_transform(list_zip(ca.codes, cq.qcodes),
-                    p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS code_dist
+        SELECT cq.query_id, ca.vec_id, {V.dd_code_sq_dist('ca.codes', 'cq.qcodes')} AS code_dist
         FROM ca JOIN cq ON ca.cid = cq.cid
     ), ranked AS (
         SELECT query_id, vec_id, code_dist,
@@ -1493,13 +1476,6 @@ def dataset_card_q(spark, sf_dir):
     )
 
 
-_DD_SQ_CODE = (
-    "CAST(greatest(-127, least(127, floor(x / (am.absmax / 127) + 0.5))) AS BIGINT)"
-)
-_DD_SIGN_LO = "CAST(list_sum([CASE WHEN v[i+1] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END FOR i IN range(32)]) AS BIGINT)"
-_DD_SIGN_HI = "CAST(list_sum([CASE WHEN v[i+33] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END FOR i IN range(32)]) AS BIGINT)"
-
-
 @query(
     "quantization_recall",
     oracle=f"""
@@ -1509,31 +1485,29 @@ _DD_SIGN_HI = "CAST(list_sum([CASE WHEN v[i+33] > 0 THEN (1::BIGINT << i) ELSE 0
         SELECT query_id, vec_id FROM (
             SELECT q.query_id, e.vec_id,
                    row_number() OVER (PARTITION BY q.query_id
-                       ORDER BY {_dd_euclid('e.embedding', 'q.qv')}, e.vec_id) AS rn
+                       ORDER BY {V.dd_euclidean('e.embedding', 'q.qv')}, e.vec_id) AS rn
             FROM embeddings e, q WHERE e.vec_id <> q.query_id
         ) WHERE rn <= 10
     ), am AS (
-        SELECT max(list_max(list_transform(embedding::DOUBLE[], x -> abs(x)))) AS absmax
-        FROM embeddings
+        SELECT {V.dd_sq8_absmax('embedding')} AS absmax FROM embeddings
     ), codes AS (
-        SELECT vec_id, list_transform(embedding::DOUBLE[], x -> {_DD_SQ_CODE}) AS c
+        SELECT vec_id, {V.dd_sq8_code('embedding', 'am.absmax')} AS c
         FROM embeddings, am
     ), qcodes AS (
-        SELECT q.query_id, list_transform(q.qv::DOUBLE[], x -> {_DD_SQ_CODE}) AS c
+        SELECT q.query_id, {V.dd_sq8_code('q.qv', 'am.absmax')} AS c
         FROM q, am
     ), sq AS (
         SELECT query_id, vec_id FROM (
             SELECT qc.query_id, e.vec_id,
                    row_number() OVER (PARTITION BY qc.query_id ORDER BY
-                       CAST(list_sum(list_transform(list_zip(e.c, qc.c),
-                            p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT), e.vec_id) AS rn
+                       {V.dd_code_sq_dist('e.c', 'qc.c')}, e.vec_id) AS rn
             FROM codes e, qcodes qc WHERE e.vec_id <> qc.query_id
         ) WHERE rn <= 10
     ), words AS (
-        SELECT vec_id, {_DD_SIGN_LO} AS lo, {_DD_SIGN_HI} AS hi
+        SELECT vec_id, {V.dd_sign_bits('v[1:32]', 32)} AS lo, {V.dd_sign_bits('v[33:64]', 32)} AS hi
         FROM (SELECT vec_id, embedding AS v FROM embeddings)
     ), qwords AS (
-        SELECT q.query_id, {_DD_SIGN_LO} AS lo, {_DD_SIGN_HI} AS hi
+        SELECT q.query_id, {V.dd_sign_bits('v[1:32]', 32)} AS lo, {V.dd_sign_bits('v[33:64]', 32)} AS hi
         FROM (SELECT query_id, qv AS v FROM q) q
     ), ham AS (
         SELECT query_id, vec_id FROM (
@@ -1604,16 +1578,12 @@ def embedding_quality_checks_q(spark, sf_dir):
     conditional sum over per-row HOF signals, and the single all_ok
     boolean is what a scheduler gates the index build on."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
     dim = F.size("embedding")
-    n_bad = F.aggregate(
-        F.transform(v, lambda x: F.when(F.isnan(x) | (F.abs(x) == float("inf")), 1).otherwise(0)),
-        F.lit(0),
-        lambda a, b: a + b,
+    n_bad = F.expr(
+        "aggregate(transform(CAST(embedding AS ARRAY<DOUBLE>), e -> CASE WHEN isnan(e)"
+        f" OR abs(e) = {V.sql_literal(float('inf'))} THEN 1 ELSE 0 END), 0, (acc, n) -> acc + n)"
     )
-    sq = F.aggregate(
-        F.zip_with(v, v, lambda a, b: a * b), F.lit(0.0), lambda a, b: a + b
-    )
+    sq = F.expr(V.dot("embedding", "embedding"))
     base = emb.select(
         "vec_id",
         F.col("embedding").isNull().alias("_null"),
@@ -1995,7 +1965,7 @@ def _knn_graph_2hop_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -2005,7 +1975,7 @@ def _knn_graph_2hop_oracle(sf_dir: str) -> str:
         FROM embeddings e JOIN buckets b USING (vec_id)
     ), scored AS (
         SELECT a.vec_id AS src, b.vec_id AS dst,
-               {_dd_cosine('a.embedding', 'b.embedding')} AS score
+               {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM c a JOIN c b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
     ), e AS (
         SELECT src, dst FROM (
@@ -2221,7 +2191,7 @@ def pre_post_analysis_q(spark, sf_dir):
                END AS kn
         FROM kw_top
     ), vecs AS (
-        SELECT e.vec_id AS doc_id, {_dd_cosine('e.embedding', 'q.qv')} AS raw
+        SELECT e.vec_id AS doc_id, {V.dd_cosine('e.embedding', 'q.qv')} AS raw
         FROM embeddings e, q
     ), vec_top AS (
         SELECT doc_id, round(raw, 6) AS s
@@ -2787,9 +2757,7 @@ def split_ngram_leakage_q(spark, sf_dir):
 
     w = docs.select(
         split.alias("split"),
-        F.explode(
-            F.transform(F.expr(X.word_shingles("text", 8)), lambda s: F.md5(s))
-        ).alias("wh"),
+        F.explode(F.expr(f"transform({X.word_shingles('text', 8)}, s -> md5(s))")).alias("wh"),
     )
     train_w = w.filter(F.col("split") == "train").select("wh").distinct()
     test_w = (

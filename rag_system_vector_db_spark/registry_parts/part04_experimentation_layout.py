@@ -25,10 +25,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -576,12 +572,12 @@ def hll_distinct_q(spark, sf_dir):
     WITH RECURSIVE q AS (
         SELECT embedding AS qv FROM embeddings WHERE vec_id = 0
     ), cand AS (
-        SELECT e.vec_id, {_dd_cosine('e.embedding', 'q.qv')} AS qsim
+        SELECT e.vec_id, {V.dd_cosine('e.embedding', 'q.qv')} AS qsim
         FROM embeddings e, q WHERE e.vec_id <> 0
         ORDER BY qsim DESC, e.vec_id LIMIT 20
     ), pairs AS (
         SELECT a.vec_id AS a, b.vec_id AS b,
-               {_dd_cosine('ea.embedding', 'eb.embedding')} AS sim
+               {V.dd_cosine('ea.embedding', 'eb.embedding')} AS sim
         FROM cand a
         JOIN embeddings ea ON ea.vec_id = a.vec_id
         JOIN cand b ON b.vec_id <> a.vec_id
@@ -807,13 +803,8 @@ def events_histogram_equidepth_q(spark, sf_dir, exact_quantiles: bool = True):
         ).select(
             "event_type",
             "v_u",
-            (
-                F.lit(1)
-                + F.aggregate(
-                    "_edges",
-                    F.lit(0),
-                    lambda acc, e: acc + F.when(e < F.col("v_u"), 1).otherwise(0),
-                )
+            F.expr(
+                "1 + aggregate(_edges, 0, (acc, e) -> acc + CASE WHEN e < v_u THEN 1 ELSE 0 END)"
             ).alias("decile"),
         )
     else:
@@ -1358,7 +1349,7 @@ def mann_whitney_u_q(spark, sf_dir):
         FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 10000
     ), scored AS (
         SELECT t.query_id, e.vec_id, e.label,
-               {_dd_cosine('e.embedding', 't.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 't.query_vec')} AS score
         FROM train e, test t
     ), nn AS (
         SELECT query_id, label FROM (
@@ -1565,9 +1556,7 @@ def survival_km_q(spark, sf_dir):
         F.col("d").alias("n_events"),
         F.col("c").alias("n_censored"),
         F.round(F.col("d").cast("double") / F.col("at_risk"), 6).alias("hazard"),
-        F.round(
-            F.aggregate(F.col("rl"), F.lit(1.0), lambda acc, x: acc * x), 6
-        ).alias("survival"),
+        F.expr("round(aggregate(rl, 1.0D, (acc, r) -> acc * r), 6)").alias("survival"),
     )
 
 
@@ -1585,9 +1574,7 @@ def survival_km_q(spark, sf_dir):
         SELECT label AS clabel, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label
     ), dist AS (
         SELECT e.vec_id, e.label, c.clabel,
-               sqrt(list_sum(list_transform(
-                   list_zip(e.embedding::DOUBLE[], c.cvec),
-                   x -> (x[1] - x[2]) * (x[1] - x[2])))) AS dst
+               {V.dd_euclidean('e.embedding', 'c.cvec')} AS dst
         FROM embeddings e, cent c
     ), ab AS (
         SELECT vec_id, label,
@@ -1628,9 +1615,7 @@ def silhouette_simplified_q(spark, sf_dir):
         .agg(F.round(F.avg("col"), 6).alias("cv"))
     )
     cent = cd.groupBy(F.col("label").alias("clabel")).agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "cv"))), lambda s: s.cv
-        ).alias("cvec")
+        F.expr("transform(sort_array(collect_list(struct(pos, cv))), s -> s.cv)").alias("cvec")
     )
     dist = emb.crossJoin(F.broadcast(cent)).select(
         "vec_id",
@@ -2728,13 +2713,9 @@ def holt_forecast_q(spark, sf_dir):
     )
     ser = m.agg(
         F.count("*").cast("long").alias("n_months"),
-        F.transform(
-            F.sort_array(
-                F.collect_list(
-                    F.struct("month_id", (F.col("rev_c").cast("double") / 100).alias("y"))
-                )
-            ),
-            lambda s: s.y,
+        F.expr(
+            "transform(sort_array(collect_list(struct(month_id, CAST(rev_c AS DOUBLE) / 100 AS y))),"
+            " s -> s.y)"
         ).alias("ys"),
     )
     def step(acc, y):
@@ -3417,7 +3398,7 @@ def _embedding_dedup_recall_oracle(sf_dir: str) -> str:
         ORDER BY {h}, vec_id
         LIMIT {_EDR_SAMPLE_CAP}
     ), dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM sub e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -3426,7 +3407,7 @@ def _embedding_dedup_recall_oracle(sf_dir: str) -> str:
         SELECT s.vec_id, s.embedding, b.bucket FROM sub s JOIN buckets b USING (vec_id)
     ), pairs AS (
         SELECT CASE WHEN a.bucket = b.bucket THEN 1 ELSE 0 END AS cand,
-               CASE WHEN {_dd_cosine('a.embedding', 'b.embedding')} >= 0.3
+               CASE WHEN {V.dd_cosine('a.embedding', 'b.embedding')} >= 0.3
                     THEN 1 ELSE 0 END AS truth
         FROM v a JOIN v b ON a.vec_id < b.vec_id
     )
@@ -3468,20 +3449,15 @@ def embedding_dedup_recall_q(spark, sf_dir):
         "vec_id",
         "embedding",
         ann.lsh_bucket("embedding", planes).alias("_b"),
-        # norm hoist (see operators/dedup.semdedup): bit-identical
         F.expr(V.l2_norm("embedding")).alias("_nrm"),
     )
     a, b = sub.alias("a"), sub.alias("b")
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
         F.when(F.col("a._b") == F.col("b._b"), 1).otherwise(0).alias("cand"),
-        F.when(
-            F.expr(V.dot("a.embedding", "b.embedding"))
-            / (F.col("a._nrm") * F.col("b._nrm"))
-            >= 0.3,
-            1,
-        )
-        .otherwise(0)
-        .alias("truth"),
+        F.expr(
+            f"CASE WHEN {V.cosine('a.embedding', 'b.embedding', 'a._nrm', 'b._nrm')} >= 0.3"
+            " THEN 1 ELSE 0 END"
+        ).alias("truth"),
     )
     return pairs.agg(
         F.count("*").cast("long").alias("n_pairs"),

@@ -25,10 +25,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -313,7 +309,7 @@ def _dedup_threshold_sweep_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -322,7 +318,7 @@ def _dedup_threshold_sweep_oracle(sf_dir: str) -> str:
         SELECT e.vec_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id)
     ), scored AS (
-        SELECT {_dd_cosine('a.embedding', 'b.embedding')} AS score
+        SELECT {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     ), nv AS (SELECT CAST(count(*) AS BIGINT) AS n_vectors FROM embeddings),
     thr AS (SELECT unnest([0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8]) AS tau)
@@ -353,7 +349,6 @@ def dedup_threshold_sweep_q(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = ann.hyperplanes(ann.lsh_bits_for(sf_dir), 64)
-    # norm hoist (see operators/dedup.semdedup): bit-identical scores
     v = emb.select(
         "vec_id",
         "embedding",
@@ -363,12 +358,7 @@ def dedup_threshold_sweep_q(spark, sf_dir):
     a, b = v.alias("a"), v.alias("b")
     scored = a.join(
         b, (F.col("a._b") == F.col("b._b")) & (F.col("a.vec_id") < F.col("b.vec_id"))
-    ).select(
-        (
-            F.expr(V.dot("a.embedding", "b.embedding"))
-            / (F.col("a._nrm") * F.col("b._nrm"))
-        ).alias("score")
-    )
+    ).select(F.expr(V.cosine("a.embedding", "b.embedding", "a._nrm", "b._nrm")).alias("score"))
     nv = load_table(spark, sf_dir, "embeddings").agg(
         F.count("*").cast("long").alias("n_vectors")
     )
@@ -727,7 +717,7 @@ def _recall_sweep_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_planes_sql(planes)},
     dots AS (
-        SELECT e.vec_id, p.pid, {_dd_dot('e.embedding', 'p.w')} AS d
+        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
         FROM embeddings e CROSS JOIN planes p
     ), buckets AS (
         SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
@@ -742,7 +732,7 @@ def _recall_sweep_oracle(sf_dir: str) -> str:
         SELECT query_id, vec_id, rnk FROM (
             SELECT q.query_id, c.vec_id,
                    row_number() OVER (PARTITION BY q.query_id
-                       ORDER BY {_dd_cosine('c.embedding', 'q.query_vec')} DESC,
+                       ORDER BY {V.dd_cosine('c.embedding', 'q.query_vec')} DESC,
                                 c.vec_id) AS rnk
             FROM c JOIN q ON c.bucket = q.bucket
         ) WHERE rnk <= 20
@@ -750,7 +740,7 @@ def _recall_sweep_oracle(sf_dir: str) -> str:
         SELECT query_id, vec_id, rnk FROM (
             SELECT q.query_id, e.vec_id,
                    row_number() OVER (PARTITION BY q.query_id
-                       ORDER BY {_dd_cosine('e.embedding', 'q.query_vec')} DESC,
+                       ORDER BY {V.dd_cosine('e.embedding', 'q.query_vec')} DESC,
                                 e.vec_id) AS rnk
             FROM embeddings e CROSS JOIN q
         ) WHERE rnk <= 20
@@ -2807,8 +2797,8 @@ _ISO_SAMPLE_CAP = 2000
                e.embedding::DOUBLE[] AS ev
         FROM sub e CROSS JOIN mu m
     ), pairs AS (
-        SELECT {_dd_cosine('a.ev', 'b.ev')} AS raw_cos,
-               {_dd_cosine('a.cv', 'b.cv')} AS cen_cos
+        SELECT {V.dd_cosine('a.ev', 'b.ev')} AS raw_cos,
+               {V.dd_cosine('a.cv', 'b.cv')} AS cen_cos
         FROM c a JOIN c b ON a.vec_id < b.vec_id
         WHERE {H.dd_md5_long("(a.vec_id::VARCHAR || ':' || b.vec_id::VARCHAR)")}
               / 1152921504606846976.0 < 0.02
@@ -2842,9 +2832,7 @@ def embedding_isotropy_q(spark, sf_dir):
         .agg(F.round(F.avg("col"), 6).alias("mv"))
     )
     mu = cd.agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "mv"))), lambda s: s.mv
-        ).alias("mvec")
+        F.expr("transform(sort_array(collect_list(struct(pos, mv))), s -> s.mv)").alias("mvec")
     )
     sub = (
         emb.select("vec_id", "embedding")

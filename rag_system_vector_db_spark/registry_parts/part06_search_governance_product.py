@@ -25,10 +25,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -265,9 +261,9 @@ def sampling_weights_ess_q(spark, sf_dir):
         FROM embeddings WHERE vec_id < 5
     )
     SELECT q.query_id, e.vec_id,
-           round({_dd_cosine('e.embedding', 'q.query_vec')}, 6) AS score
+           round({V.dd_cosine('e.embedding', 'q.query_vec')}, 6) AS score
     FROM embeddings e, q
-    WHERE {_dd_cosine('e.embedding', 'q.query_vec')} >= 0.25
+    WHERE {V.dd_cosine('e.embedding', 'q.query_vec')} >= 0.25
       AND e.vec_id <> q.query_id
     """,
 )
@@ -290,13 +286,8 @@ def knn_range_search_q(spark, sf_dir):
     c = emb.select(
         "vec_id", "embedding", F.expr(V.l2_norm("embedding")).alias("_cnorm")
     )
-    scored = c.crossJoin(F.broadcast(queries)).select(
-        "query_id",
-        "vec_id",
-        (
-            F.expr(V.dot("embedding", "query_vec"))
-            / (F.col("_cnorm") * F.col("_qnorm"))
-        ).alias("score"),
+    scored = c.crossJoin(F.broadcast(queries)).selectExpr(
+        "query_id", "vec_id", f"{V.cosine('embedding', 'query_vec', '_cnorm', '_qnorm')} AS score"
     )
     return (
         scored.filter(
@@ -314,7 +305,7 @@ def knn_range_search_q(spark, sf_dir):
         FROM embeddings WHERE vec_id < 5
     ), scored AS (
         SELECT q.query_id, e.vec_id, e.label,
-               {_dd_cosine('e.embedding', 'q.query_vec')} AS score
+               {V.dd_cosine('e.embedding', 'q.query_vec')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, vec_id, label, score,
@@ -365,7 +356,7 @@ def post_filter_recall_q(spark, sf_dir):
         "query_id",
         "vec_id",
         "label = 3 AS _f",
-        f"try_divide({V.dot('embedding', 'query_vec')}, _cnorm * _qnorm) AS score",
+        f"{V.cosine('embedding', 'query_vec', '_cnorm', '_qnorm')} AS score",
     )
     # The overall top 10 lies within the union of each label group's
     # top 10, so one bounded top-k per (query, is-match) feeds both
@@ -1075,7 +1066,7 @@ def list_collections_q(spark, sf_dir):
         FROM embeddings WHERE vec_id < 20
     ), scored AS (
         SELECT q.query_id, q.expected_id, e.vec_id,
-               {_dd_cosine('e.embedding', 'q.qv')} AS score
+               {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q
     ), ctx AS (
         SELECT query_id, vec_id FROM (

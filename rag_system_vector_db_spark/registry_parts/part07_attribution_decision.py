@@ -26,10 +26,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -266,8 +262,8 @@ def padding_waste_audit_q(spark, sf_dir):
     oracle=f"""
     WITH w AS (
         SELECT vec_id, embedding,
-               CAST(list_sum([CASE WHEN embedding[i+1] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END FOR i IN range(32)]) AS BIGINT) AS lo,
-               CAST(list_sum([CASE WHEN embedding[i+33] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END FOR i IN range(32)]) AS BIGINT) AS hi
+               {V.dd_sign_bits('embedding[1:32]', 32)} AS lo,
+               {V.dd_sign_bits('embedding[33:64]', 32)} AS hi
         FROM embeddings
     ), q AS (SELECT lo AS qlo, hi AS qhi, embedding AS qv FROM w WHERE vec_id = 0),
     s1 AS (
@@ -276,27 +272,22 @@ def padding_waste_audit_q(spark, sf_dir):
         ORDER BY bit_count(xor(w.lo, q.qlo)) + bit_count(xor(w.hi, q.qhi)), w.vec_id
         LIMIT 50
     ), am AS (
-        SELECT max(list_max(list_transform(embedding::DOUBLE[], x -> abs(x)))) AS absmax
-        FROM embeddings
+        SELECT {V.dd_sq8_absmax('embedding')} AS absmax FROM embeddings
     ), qc AS (
-        SELECT list_transform(e.embedding::DOUBLE[],
-                   x -> CAST(greatest(-127, least(127, floor(x / (am.absmax / 127) + 0.5))) AS BIGINT)) AS qcodes
+        SELECT {V.dd_sq8_code('e.embedding', 'am.absmax')} AS qcodes
         FROM embeddings e, am WHERE e.vec_id = 0
     ), s2 AS (
         SELECT s1.vec_id, s1.embedding
         FROM s1, am, qc
-        ORDER BY list_sum(list_transform(list_zip(
-                   list_transform(s1.embedding::DOUBLE[],
-                       x -> CAST(greatest(-127, least(127, floor(x / (am.absmax / 127) + 0.5))) AS BIGINT)),
-                   qc.qcodes), p -> (p[1] - p[2]) * (p[1] - p[2]))), s1.vec_id
+        ORDER BY {V.dd_code_sq_dist(V.dd_sq8_code('s1.embedding', 'am.absmax'), 'qc.qcodes')}, s1.vec_id
         LIMIT 20
     ), s3 AS (
-        SELECT s2.vec_id, {_dd_euclid('s2.embedding', 'q.qv')} AS l2
+        SELECT s2.vec_id, {V.dd_euclidean('s2.embedding', 'q.qv')} AS l2
         FROM s2, q
         ORDER BY l2, s2.vec_id LIMIT 10
     ), truth AS (
         SELECT w.vec_id FROM w, q WHERE w.vec_id <> 0
-        ORDER BY {_dd_euclid('w.embedding', 'q.qv')}, w.vec_id LIMIT 10
+        ORDER BY {V.dd_euclidean('w.embedding', 'q.qv')}, w.vec_id LIMIT 10
     )
     SELECT CAST(row_number() OVER (ORDER BY s3.l2, s3.vec_id) AS BIGINT) AS rank,
            s3.vec_id, round(s3.l2, 6) AS exact_l2,
@@ -321,8 +312,8 @@ def cascade_retrieval_sim_q(spark, sf_dir):
     from ..operators.ann import sign_bit_words
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    lo, hi = sign_bit_words(F.col("embedding"))
-    words = emb.select("vec_id", "embedding", lo.alias("_lo"), hi.alias("_hi"))
+    lo, hi = sign_bit_words("embedding")
+    words = emb.selectExpr("vec_id", "embedding", f"{lo} AS _lo", f"{hi} AS _hi")
     q = words.filter(F.col("vec_id") == 0).select(
         F.col("_lo").alias("_qlo"),
         F.col("_hi").alias("_qhi"),
@@ -343,45 +334,17 @@ def cascade_retrieval_sim_q(spark, sf_dir):
         .limit(50)
         .select("vec_id", "embedding")
     )
-    absmax = emb.agg(
-        F.max(
-            F.array_max(F.transform(F.col("embedding").cast("array<double>"), F.abs))
-        ).alias("_absmax")
-    )
-
-    def codes(vec):
-        return F.transform(
-            vec.cast("array<double>"),
-            lambda x: F.greatest(
-                F.lit(-127).cast("long"),
-                F.least(
-                    F.lit(127).cast("long"),
-                    F.floor(x / (F.col("_absmax") / 127) + F.lit(0.5)),
-                ),
-            ),
-        )
-
+    absmax = emb.selectExpr(f"{V.sq8_absmax('embedding')} AS _absmax")
     qc = (
         emb.filter(F.col("vec_id") == 0)
         .crossJoin(F.broadcast(absmax))
-        .select(codes(F.col("embedding")).alias("_qcodes"))
+        .selectExpr(f"{V.sq8_code('embedding', '_absmax')} AS _qcodes")
     )
+    cd = V.code_sq_dist(V.sq8_code("embedding", "_absmax"), "_qcodes")
     s2 = (
         s1.crossJoin(F.broadcast(absmax))
         .crossJoin(F.broadcast(qc))
-        .select(
-            "vec_id",
-            "embedding",
-            F.aggregate(
-                F.zip_with(
-                    codes(F.col("embedding")),
-                    F.col("_qcodes"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("_cd"),
-        )
+        .selectExpr("vec_id", "embedding", f"{cd} AS _cd")
         .orderBy("_cd", "vec_id")
         .limit(20)
         .select("vec_id", "embedding")
@@ -503,7 +466,7 @@ def merge_into_apply_q(spark, sf_dir):
 
 def _seeding_sets(sf_dir: str, k: int = 8, sample_limit: int = 4096):
     """Two deterministic seedings over the bounded sample: naive
-    first-k (kmeans_fit's init) vs Gonzalez farthest-point (the
+    first-k (kmeans_fit_sample's init) vs Gonzalez farthest-point (the
     deterministic k-means++ shape: next seed = point maximizing its
     min distance to the chosen set, ties to lowest index)."""
     import duckdb
@@ -527,14 +490,8 @@ def _seeding_sets(sf_dir: str, k: int = 8, sample_limit: int = 4096):
 
 
 def _min_d2_sql(vec: str, cents: list[list[float]]) -> str:
-    terms = []
-    for c in cents:
-        lit = "[" + ", ".join(repr(v) for v in c) + "]"
-        terms.append(
-            f"list_sum(list_transform(list_zip(({vec})::DOUBLE[], {lit}::DOUBLE[]),"
-            f" x -> (x[1]-x[2])*(x[1]-x[2])))"
-        )
-    return "least(" + ", ".join(terms) + ")"
+    lits = ("[" + ", ".join(repr(v) for v in c) + "]" for c in cents)
+    return "least(" + ", ".join(V.dd_sq_euclidean(vec, lit) for lit in lits) + ")"
 
 
 def _seeding_oracle(sf_dir: str) -> str:
@@ -565,7 +522,7 @@ def _seeding_oracle(sf_dir: str) -> str:
 @query("seeding_quality_eval")  # oracle: LAZY_ORACLES (per-sf seed literals)
 def seeding_quality_eval_q(spark, sf_dir):
     """Quantizer seeding quality (the init step kmeans_refine /
-    kmeans_fit take as given — k-means++-style spread seeding vs the
+    kmeans_fit_sample take as given — k-means++-style spread seeding vs the
     naive first-k init, measured as k-means assignment cost BEFORE
     any Lloyd round): both seed sets fit driver-side on the bounded
     deterministic sample (Gonzalez '85 farthest-point as the
@@ -1146,7 +1103,7 @@ def growth_accounting_q(spark, sf_dir):
         FROM embeddings WHERE vec_id < 10
     ), scored AS (
         SELECT q.query_id, q.expected_id, e.vec_id,
-               {_dd_cosine('e.embedding', 'q.qv')} AS score
+               {V.dd_cosine('e.embedding', 'q.qv')} AS score
         FROM embeddings e, q
     ), ranked AS (
         SELECT query_id, expected_id, vec_id, score,
@@ -1937,9 +1894,9 @@ LAZY_ORACLES["graph_modularity"] = _modularity_oracle
         FROM bm25 ORDER BY bm25 DESC, doc_id LIMIT 20
     ), vec AS (
         SELECT e.vec_id AS doc_id,
-               row_number() OVER (ORDER BY {_dd_cosine('e.embedding', 'q.qv')} DESC, e.vec_id) AS rb
+               row_number() OVER (ORDER BY {V.dd_cosine('e.embedding', 'q.qv')} DESC, e.vec_id) AS rb
         FROM embeddings e, q
-        ORDER BY {_dd_cosine('e.embedding', 'q.qv')} DESC, e.vec_id LIMIT 20
+        ORDER BY {V.dd_cosine('e.embedding', 'q.qv')} DESC, e.vec_id LIMIT 20
     ), shared AS (
         SELECT kw.ra, vec.rb FROM kw JOIN vec USING (doc_id)
     ), depths AS (SELECT unnest(range(1, 21)) AS d),

@@ -26,10 +26,6 @@ from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
     ORACLES,
     QUERIES,
-    _dd_cosine,
-    _dd_dot,
-    _dd_euclid,
-    _dd_norm,
     query,
 )
 
@@ -416,23 +412,8 @@ def jl_projection_audit_q(spark, sf_dir):
     R = _jl_matrix()
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 40)
 
-    def proj(vec):
-        return F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        vec.cast("array<double>"),
-                        V.lit_array(row),
-                        lambda a, b: a * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for row in R
-            ]
-        )
-
-    p = emb.select("vec_id", "embedding", proj(F.col("embedding")).alias("pv"))
+    pv = "array(" + ", ".join(V.dot("embedding", V.sql_literal(row)) for row in R) + ")"
+    p = emb.selectExpr("vec_id", "embedding", f"{pv} AS pv")
     a = p.select(
         F.col("vec_id").alias("ida"),
         F.col("embedding").alias("ea"),
@@ -472,21 +453,15 @@ def _jl_oracle(sf_dir: str) -> str:
     R = _jl_matrix()
 
     def proj_sql(vec: str) -> str:
-        comps = []
-        for row in R:
-            lit = "[" + ", ".join(repr(v) for v in row) + "]"
-            comps.append(
-                f"list_sum(list_transform(list_zip(({vec})::DOUBLE[], {lit}::DOUBLE[]),"
-                f" x -> x[1]*x[2]))"
-            )
-        return "[" + ", ".join(comps) + "]"
+        lits = ("[" + ", ".join(repr(v) for v in row) + "]" for row in R)
+        return "[" + ", ".join(V.dd_dot(vec, lit) for lit in lits) + "]"
 
     return f"""
     WITH p AS (
         SELECT vec_id, embedding, {proj_sql('embedding')} AS pv
         FROM embeddings WHERE vec_id < 40
     ), pairs AS (
-        SELECT {_dd_euclid('a.pv', 'b.pv')} / {_dd_euclid('a.embedding', 'b.embedding')} AS ratio
+        SELECT {V.dd_euclidean('a.pv', 'b.pv')} / {V.dd_euclidean('a.embedding', 'b.embedding')} AS ratio
         FROM p a JOIN p b ON a.vec_id < b.vec_id
     )
     SELECT CAST(count(*) AS BIGINT) AS n_pairs,
@@ -543,20 +518,10 @@ def pca_explained_variance_q(spark, sf_dir):
     refitting the basis."""
     mu, comps, shares = _pca_spectrum(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    mu_lit = V.lit_array(mu)
-    centered = F.zip_with(
-        F.col("embedding").cast("array<double>"), mu_lit, lambda a, b: a - b
-    )
-    projs = [
-        F.aggregate(
-            F.zip_with(centered, V.lit_array(c), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in comps
-    ]
-    row = emb.select(
-        *[p.alias(f"_raw{i}") for i, p in enumerate(projs)]
+    centered = f"zip_with(CAST(embedding AS ARRAY<DOUBLE>), {V.sql_literal(mu)}, (e, m) -> e - m)"
+    projs = [V.dot(centered, V.sql_literal(c)) for c in comps]
+    row = emb.selectExpr(
+        *[f"{p} AS _raw{i}" for i, p in enumerate(projs)]
     ).select(
         *[
             F.expr(to_micro(f"_raw{i}")).alias(f"p{i}")
@@ -609,11 +574,8 @@ def _pca_var_oracle(sf_dir: str) -> str:
     sel = []
     for i, c in enumerate(comps):
         lit = "[" + ", ".join(repr(v) for v in c) + "]"
-        proj = (
-            "list_sum(list_transform(list_zip("
-            f"list_transform(list_zip(embedding::DOUBLE[], {mu_lit}::DOUBLE[]), x -> x[1]-x[2]),"
-            f" {lit}::DOUBLE[]), x -> x[1]*x[2]))"
-        )
+        centered = f"list_transform(list_zip(embedding::DOUBLE[], {mu_lit}::DOUBLE[]), x -> x[1]-x[2])"
+        proj = V.dd_dot(centered, lit)
         sel.append(f"{to_micro(proj)} AS p{i}")
     rows = []
     for i in range(len(comps)):

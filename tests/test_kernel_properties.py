@@ -2,7 +2,8 @@
 Python references (independent of both Spark and DuckDB):
 
 - sign_bit_words must reproduce the bit-by-bit sign encoding.
-- SQ8 codes must match the clamp/floor formula and bound to ±127.
+- SQ8 codes (functions.vector.sq8_code) must match the clamp/floor
+  formula and bound to ±127.
 - The sentinel-space BPE merge (string replace) must equal the greedy
   left-to-right fold reference on ANY symbol sequence.
 """
@@ -31,8 +32,8 @@ def test_sign_bit_words_match_python(spark, vec):
     from rag_system_vector_db_spark.operators.ann import sign_bit_words
 
     df = spark.createDataFrame([(vec,)], "embedding array<double>")
-    lo, hi = sign_bit_words(F.col("embedding"))
-    row = df.select(lo.alias("lo"), hi.alias("hi")).first()
+    lo, hi = sign_bit_words("embedding")
+    row = df.selectExpr(f"{lo} AS lo", f"{hi} AS hi").first()
     want_lo = sum(1 << i for i in range(32) if vec[i] > 0)
     want_hi = sum(1 << i for i in range(32) if vec[32 + i] > 0)
     assert (row.lo, row.hi) == (want_lo, want_hi)
@@ -41,19 +42,11 @@ def test_sign_bit_words_match_python(spark, vec):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(vec_strategy, st.floats(min_value=0.5, max_value=8.0))
 def test_sq8_codes_match_formula_and_bounds(spark, vec, absmax):
+    from rag_system_vector_db_spark.functions import vector as V
+
     df = spark.createDataFrame([(vec,)], "v array<double>")
     scale = absmax / 127
-    codes = df.select(
-        F.transform(
-            "v",
-            lambda x: F.greatest(
-                F.lit(-127).cast("long"),
-                F.least(
-                    F.lit(127).cast("long"), F.floor(x / F.lit(scale) + F.lit(0.5))
-                ),
-            ),
-        ).alias("c")
-    ).first()["c"]
+    codes = df.selectExpr(f"{V.sq8_code('v', V.sql_literal(absmax))} AS c").first()["c"]
     for x, c in zip(vec, codes):
         want = max(-127, min(127, math.floor(x / scale + 0.5)))
         assert c == want

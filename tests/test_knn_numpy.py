@@ -19,6 +19,18 @@ def emb(spark, sf_dir):
     return df, mat[order], ids[order]
 
 
+def _np_lloyd(mat, k, n_iter):
+    """Centroids of n_iter Lloyd rounds from the first k rows (ties to
+    the lowest centroid); an empty cell keeps its centroid."""
+    cents = mat[:k].copy()
+    for _ in range(n_iter):
+        assign = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        for c in range(k):
+            if (assign == c).any():
+                cents[c] = mat[assign == c].mean(axis=0)
+    return cents.tolist()
+
+
 def _np_cosine_topk(mat, ids, q, k, exclude=None):
     sims = mat @ q / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
     order = sorted(range(len(ids)), key=lambda i: (-sims[i], ids[i]))
@@ -81,7 +93,7 @@ def test_ivf_recall_reasonable(emb, spark):
     """IVF with nprobe=4 of k=8 cells should mostly agree with exact
     top-1 (sanity of the cell assignment + probe machinery)."""
     df, mat, ids = emb
-    centroids = ann.kmeans_fit(df, k=8, n_iter=3)
+    centroids = _np_lloyd(mat, k=8, n_iter=3)
     assert len(centroids) == 8 and len(centroids[0]) == 64
     queries = df.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -129,7 +141,7 @@ def test_ivf_rerank_scores_are_exact(emb, spark):
     """Re-ranked scores must equal the exact cosine for the returned
     ids (the quantized first pass only picks the shortlist)."""
     df, mat, ids = emb
-    centroids = ann.kmeans_fit(df, k=4, n_iter=2)
+    centroids = _np_lloyd(mat, k=4, n_iter=2)
     queries = df.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
