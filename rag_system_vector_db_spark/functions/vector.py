@@ -164,8 +164,10 @@ def dd_code_sq_dist(a: str, b: str) -> str:
 
 def _sq8(x: str, absmax: str) -> str:
     # one text on both engines: floor(x / scale + 0.5) clamped to
-    # [-127, 127]; floor is exact, and x / scale is one IEEE division
-    return f"CAST(greatest(-127, least(127, floor({x} / (({absmax}) / 127) + 0.5))) AS BIGINT)"
+    # [-127, 127]; floor is exact, and x / scale is one IEEE division.
+    # An all-zero corpus (absmax 0) takes scale 1, so every code is 0.
+    scale = f"(coalesce(nullif({absmax}, 0), 127) / 127)"
+    return f"CAST(greatest(-127, least(127, floor({x} / {scale} + 0.5))) AS BIGINT)"
 
 
 def sq8_absmax(a: str) -> str:
@@ -204,6 +206,48 @@ def sign_bits(a: str, n: int) -> str:
 
 def dd_sign_bits(a: str, n: int) -> str:
     return (
-        f"CAST(list_sum([CASE WHEN ({a})[i+1] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END"
-        f" FOR i IN range({n})]) AS BIGINT)"
+        f"CAST(list_sum(list_transform(list_slice({a}, 1, {n}),"
+        " (_x, _i) -> CASE WHEN _x > 0 THEN (1::BIGINT << (_i - 1)) ELSE 0::BIGINT END)) AS BIGINT)"
     )
+
+
+# --- nearest centroid: IVF cells, probe lists, PQ codes ----------------------
+
+
+def argmin(d: str) -> str:
+    """0-based index of the first minimum of the DOUBLE array ``d``
+    (ties -> the lowest index) as INT. ``d`` should name a materialized
+    column: the text repeats it, and HOFs get no common subexpression
+    elimination."""
+    return f"CAST(array_position({d}, array_min({d})) - 1 AS INT)"
+
+
+def dd_argmin(d: str) -> str:
+    # the one-element list binds d once (DuckDB has no let)
+    return f"CAST(list_transform([{d}], _d -> list_position(_d, list_min(_d)))[1] - 1 AS INTEGER)"
+
+
+def dd_literal(x) -> str:
+    """DuckDB text of a driver float or nested list of floats. Each
+    double is an exponent literal, which DuckDB parses straight to the
+    same DOUBLE; a plain ``0.1`` is a DECIMAL, and its cast to DOUBLE
+    can miss the value by an ulp."""
+    if isinstance(x, (list, tuple)):
+        return "[" + ", ".join(map(dd_literal, x)) + "]"
+    r = repr(float(x))
+    return r if "e" in r else r + "e0"
+
+
+def dd_nearest_cell(vec: str, cents: str) -> str:
+    """The cell of ``vec``: the index of the nearest row of ``cents``
+    (DuckDB text of a DOUBLE[][], e.g. ``dd_literal(centroids)``) by
+    euclidean distance, ties to the lowest index, as INTEGER; the twin
+    of ann.with_cell."""
+    return dd_argmin(f"list_transform({cents}, _c -> {dd_euclidean(vec, '_c')})")
+
+
+def dd_nearest_cells(vec: str, cents: str, n: int) -> str:
+    """The ``n`` nearest cells of ``vec``, nearest first, ties to the
+    lowest index (an INTEGER[]); the twin of ann.probe_cells."""
+    structs = f"list_transform({cents}, (_c, _i) -> {{'d': {dd_euclidean(vec, '_c')}, 'cell': CAST(_i - 1 AS INTEGER)}})"
+    return f"list_transform(list_slice(list_sort({structs}), 1, {n}), _s -> _s.cell)"

@@ -6,10 +6,15 @@ Two classic index families re-expressed as DataFrame plans:
   query only scores vectors in its bucket. Hyperplanes are
   deterministic (seeded hash) so plans — and the DuckDB oracle, which
   receives the same planes as SQL literals — are reproducible.
-- IVF (inverted file): a Lloyd k-means coarse quantizer fit in numpy
-  on a bounded sample (``kmeans_fit_sample``; only K×dim centroids
-  enter the plan, as literals), then probe the nprobe nearest centroid
-  cells per query.
+- IVF (inverted file) and PQ: one numpy Lloyd fit (``_lloyd_books``;
+  k-means is its one-subspace case) over the driver-side sample
+  ``sources.tables.sample_vectors`` reads; only the centroids and
+  codebooks enter the plan, as literals. A vector's cell, a query's
+  nprobe probe cells and a PQ code are one rule, the nearest centroid
+  with ties to the lowest index, spelled once per engine: ``with_cell``,
+  ``probe_cells`` and ``V.argmin`` in Spark; ``V.dd_nearest_cell(s)``
+  and ``V.dd_argmin`` (through ``dd_ivf_ctes`` and ``dd_pq_codes``)
+  in the DuckDB oracles.
 
 At 100 TB: bucket/cell assignment is a narrow map; candidate scoring
 shuffles only matching buckets (AQE skew-join for hot cells); the
@@ -24,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..sources.tables import duck_parquet_path as _duck_path
+from ..sources.tables import sample_vectors
 from .knn import topk_per_key
 
 
@@ -40,6 +46,12 @@ def lsh_bucket(vec: str, planes: list[list[float]]):
     interpreted-HOF tree size linear in n_planes."""
     dots = f"transform({V.sql_literal(planes)}, pl -> {V.dot(vec, 'pl')})"
     return F.expr(V.sign_bits(dots, len(planes)))
+
+
+def dd_lsh_bucket(vec: str, planes: list[list[float]]) -> str:
+    """DuckDB twin of lsh_bucket."""
+    dots = f"list_transform({V.dd_literal(planes)}, _p -> {V.dd_dot(vec, '_p')})"
+    return V.dd_sign_bits(dots, len(planes))
 
 
 def ann_lsh_topk(
@@ -337,89 +349,118 @@ def planes_for(
     return hyperplanes(lsh_bits_for(sf_dir, rows_per_bucket, bits_min, table=table), dim, seed=seed)
 
 
-def kmeans_fit_sample(
-    sf_dir: str,
-    k: int = 8,
-    n_iter: int = 3,
-    sample_limit: int = 4096,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
+N_ITER = 3  # Lloyd rounds of every driver-side fit
+
+
+def kmeans_fit_sample(sf_dir: str, k: int = 8) -> list[list[float]]:
     """Train the IVF coarse quantizer on a bounded deterministic sample,
     driver-side in numpy — the standard IVF posture (faiss trains
     quantizers on a ~O(100k) subsample however large the corpus is;
     the index then assigns all vectors against the broadcast
-    centroids). Reads the first ``sample_limit`` vectors by id straight
-    from parquet (no Spark job — the sample is KB-to-MB scale), so the
-    fit is exactly reproducible: fixed visit order + numpy float64
-    math. The returned centroids can be inlined as SQL literals into a
+    centroids). The sample is the first max(4096, 16·k) vectors by id
+    (``sample_vectors``), and the fit is ``_lloyd_books`` with one
+    subspace, so the centroids can be inlined as SQL literals into a
     DuckDB oracle the same way LSH planes are.
 
     Mirrors reference scripts/prepare_data.py:50's bounded in-process
     model fit (embedder there, quantizer here)."""
-    import duckdb
+    return _lloyd_books(sample_vectors(sf_dir, max(4096, 16 * k)), 1, k)[0]
 
-    rel = duckdb.sql(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{_duck_path(sf_dir, table)}') "
-        f"ORDER BY {id_col} LIMIT {sample_limit}"
+
+def _assign(x, cents):
+    """Nearest centroid of each row of x, ties -> the lowest index
+    (numpy's argmin, as V.argmin and V.dd_argmin)."""
+    return ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def _lloyd_books(x, m: int, k: int) -> list[list[list[float]]]:
+    """The one Lloyd fit: per subspace of ``m`` (m=1 is plain k-means),
+    init = the first k sample subvectors, N_ITER rounds, an empty cell
+    keeps its centroid. Returns books[m][k][dim/m]."""
+    dim = x.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
+    dsub = dim // m
+    books: list[list[list[float]]] = []
+    for mi in range(m):
+        xs = x[:, mi * dsub : (mi + 1) * dsub]
+        cents = xs[:k].copy()
+        for _ in range(N_ITER):
+            assign = _assign(xs, cents)
+            for c in range(k):
+                members = xs[assign == c]
+                if len(members):
+                    cents[c] = members.mean(axis=0)
+        books.append([[float(v) for v in c] for c in cents])
+    return books
+
+
+def with_cell(df: DataFrame, vec_col, centroids, out_col: str = "_cell") -> DataFrame:
+    """Attach the nearest-centroid cell id (ties -> the lowest cell).
+    The distance array is materialized once per row, then dropped: a
+    nested when(d < best, ...) argmin would duplicate every distance
+    subtree into each later branch, and HOFs evaluate interpreted with
+    no common subexpression elimination (measured 15x slower at
+    sf0.1)."""
+    return (
+        df.withColumn("_cd", _centroid_dists(vec_col, centroids))
+        .withColumn(out_col, F.expr(V.argmin("_cd")))
+        .drop("_cd")
     )
-    x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)
-    centroids = x[:k].copy()
-    for _ in range(n_iter):
-        d2 = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)  # ties -> lowest index, like _nearest_centroid
-        for c in range(k):
-            members = x[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return [[float(v) for v in c] for c in centroids]
 
 
 def _centroid_dists(vec: str, centroids: list[list[float]]):
-    """Array of euclidean distances to each broadcast centroid literal
-    — each distance expression appears exactly ONCE. (A nested
-    when(d < best, ...)-chain argmin duplicates every distance subtree
-    into each later branch; HOFs evaluate interpreted with no common
-    subexpression elimination, so that formulation re-ran the 64-dim
-    euclideans hundreds of times per row — measured 15x slower at
-    sf0.1.)"""
+    """Array of euclidean distances to each centroid literal, each
+    distance expression appearing exactly once."""
     return F.expr(f"transform({V.sql_literal(centroids)}, c -> {V.euclidean(vec, 'c')})")
 
 
-def _argmin(darr):
-    """Index of the first minimum (ties -> lowest cid, the oracle's
-    ORDER BY d, cid). Evaluate on a MATERIALIZED distance column —
-    passing the raw _centroid_dists expression here would inline it
-    twice."""
-    return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-
-
-def _nearest_cells(query_vec: str, centroids: list[list[float]], nprobe: int):
-    """The array of a query's nprobe nearest cells as (cell, d)
-    structs: the nested literal + index-transform has one euclidean
-    subtree per centroid, and the sort is (distance asc, cell id asc)
-    — the explicit cell tie-break makes probe order deterministic on
-    exact-equal distances, matching the oracle's ORDER BY d, cid."""
+def probe_cells(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    nprobe: int,
+    out_col: str = "_cell",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """The probe set of each query: one (query id, query vec, cell,
+    ``_probe`` rank from 1) row for each of its nprobe nearest cells.
+    Cells sort by (distance, cell id), so exact-equal distances probe
+    the lower cell first, as V.dd_nearest_cells does."""
     structs = (
         f"transform({V.sql_literal(centroids)},"
-        f" (c, i) -> named_struct('cell', i, 'd', {V.euclidean(query_vec, 'c')}))"
+        f" (c, i) -> named_struct('cell', i, 'd', {V.euclidean(query_vec_col, 'c')}))"
     )
     order = (
         "(a, b) -> CASE WHEN a.d < b.d THEN -1 WHEN a.d > b.d THEN 1"
         " WHEN a.cell < b.cell THEN -1 ELSE 1 END"
     )
-    return F.expr(f"slice(array_sort({structs}, {order}), 1, {nprobe})")
+    return queries.selectExpr(
+        query_id_col,
+        query_vec_col,
+        f"posexplode(slice(array_sort({structs}, {order}), 1, {int(nprobe)})) AS (_probe, _p)",
+    ).selectExpr(query_id_col, query_vec_col, f"_p.cell AS {out_col}", "_probe + 1 AS _probe")
 
 
-def with_cell(df: DataFrame, vec_col, centroids, out_col: str = "_cell") -> DataFrame:
-    """Attach the nearest-centroid cell id; the distance array is
-    materialized once per row then dropped."""
-    return (
-        df.withColumn("_cd", _centroid_dists(vec_col, centroids))
-        .withColumn(out_col, _argmin(F.col("_cd")))
-        .drop("_cd")
+def dd_ivf_ctes(centroids: list[list[float]], n_queries: int = 0, nprobe: int = 2) -> str:
+    """DuckDB twin of with_cell and probe_cells, as CTEs for an oracle
+    (after its ``WITH``): ``assigned`` (each embeddings row and its
+    ``cid``), ``q`` (query_id, query_vec: the vec_ids below
+    ``n_queries``) and ``qprobe`` (query_id, query_vec, cid, m_min: the
+    probe rank from 1)."""
+    cents = V.dd_literal(centroids)
+    return f"""
+    assigned AS (
+        SELECT *, {V.dd_nearest_cell('embedding', cents)} AS cid FROM embeddings
+    ), q AS (
+        SELECT vec_id AS query_id, embedding AS query_vec
+        FROM embeddings WHERE vec_id < {int(n_queries)}
+    ), qprobe AS (
+        SELECT query_id, query_vec, unnest(cells) AS cid,
+               unnest(range(1, len(cells) + 1)) AS m_min
+        FROM (SELECT *, {V.dd_nearest_cells('query_vec', cents, nprobe)} AS cells FROM q)
     )
+    """
 
 
 def ann_ivf_topk(
@@ -436,14 +477,7 @@ def ann_ivf_topk(
     """IVF probe search: per query, score only the nprobe nearest
     centroid cells. Returns (query_id, id, score, rank)."""
     cell = with_cell(corpus, vec_col, centroids)
-    qcells = (
-        queries.select(
-            query_id_col,
-            query_vec_col,
-            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-        )
-        .select(query_id_col, query_vec_col, F.col("p.cell").alias("_cell"))
-    )
+    qcells = probe_cells(queries, centroids, nprobe, "_cell", query_id_col, query_vec_col)
     scored = (
         cell.join(F.broadcast(qcells), "_cell")
         .select(
@@ -584,19 +618,9 @@ def ivf_probe_sweep(
     max_nprobe passes.
     Returns (n_probes, mean_recall, mean_candidates)."""
     cell = with_cell(corpus, vec_col, centroids)
-    qp = (
-        queries.select(
-            query_id_col,
-            query_vec_col,
-            F.posexplode(_nearest_cells(query_vec_col, centroids, max_nprobe)).alias("_r0", "p"),
-        )
-        .select(
-            query_id_col,
-            query_vec_col,
-            F.col("p.cell").alias("_cell"),
-            (F.col("_r0") + 1).alias("_m_min"),
-        )
-    )
+    qp = probe_cells(
+        queries, centroids, max_nprobe, "_cell", query_id_col, query_vec_col
+    ).withColumnRenamed("_probe", "_m_min")
     # A corpus vector has exactly one cell and a query's probed cells
     # are distinct, so (query, candidate) pairs are unique and _m_min
     # (the candidate's probe rank) is well-defined per pair.
@@ -621,86 +645,27 @@ def ivf_probe_sweep(
 # --- PQ (product quantization) ---
 
 
-def pq_fit_sample(
-    sf_dir: str,
-    m: int = 4,
-    k: int = 16,
-    n_iter: int = 3,
-    sample_limit: int = 4096,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Train per-subspace PQ codebooks (Jégou PAMI'11) on a bounded
+def pq_fit_sample(sf_dir: str) -> list[list[list[float]]]:
+    """Train 4×16 PQ codebooks (Jégou PAMI'11) on the bounded
     deterministic sample, driver-side in numpy — same posture as
     ``kmeans_fit_sample``: faiss trains PQ on an O(100k) subsample
     however large the corpus is, then encodes everything against the
-    broadcast codebooks. dim must divide evenly into ``m`` subspaces;
-    each gets an independent ``k``-centroid Lloyd fit (init = first k
-    sample subvectors, ties -> lowest code). Returns
-    codebooks[m][k][dim/m], inlineable as SQL literals for oracles."""
-    import duckdb
-
-    rel = duckdb.sql(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{_duck_path(sf_dir, table)}') "
-        f"ORDER BY {id_col} LIMIT {sample_limit}"
-    )
-    x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)
-    return _lloyd_books(x, m, k, n_iter)
+    broadcast codebooks. Each of the 4 subspaces gets an independent
+    16-centroid ``_lloyd_books`` fit (ties -> lowest code). Returns
+    codebooks[4][16][dim/4], inlineable as SQL literals for oracles."""
+    return _lloyd_books(sample_vectors(sf_dir, 4096), 4, 16)
 
 
-def _lloyd_books(x, m: int, k: int, n_iter: int) -> list[list[list[float]]]:
-    """Per-subspace Lloyd fit over a sample matrix (shared by the raw
-    and residual PQ trainers): init = first k sample subvectors,
-    ties -> lowest code."""
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    dsub = dim // m
-    books: list[list[list[float]]] = []
-    for mi in range(m):
-        xs = x[:, mi * dsub : (mi + 1) * dsub]
-        cents = xs[:k].copy()
-        for _ in range(n_iter):
-            d2 = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)  # ties -> lowest code
-            for c in range(k):
-                members = xs[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books.append([[float(v) for v in c] for c in cents])
-    return books
-
-
-def pq_fit_residual_sample(
-    sf_dir: str,
-    centroids: list[list[float]],
-    m: int = 4,
-    k: int = 16,
-    n_iter: int = 3,
-    sample_limit: int = 4096,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
+def pq_fit_residual_sample(sf_dir: str, centroids: list[list[float]]) -> list[list[list[float]]]:
     """Residual-PQ codebook fit (faiss IndexIVFPQ ``by_residual=True``,
     its default): each sample vector is assigned to its nearest coarse
-    centroid (exact argmin, ties -> lowest cid — _argmin's semantics)
-    and the codebooks train on the RESIDUALS x − c(x). Residuals
-    cluster far tighter around zero than raw vectors, so the same m×k
-    code budget quantizes finer — the reason faiss defaults to it.
-    Same bounded deterministic sample posture as pq_fit_sample."""
-    import duckdb
-
-    rel = duckdb.sql(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{_duck_path(sf_dir, table)}') "
-        f"ORDER BY {id_col} LIMIT {sample_limit}"
-    )
-    x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)
+    centroid (the Lloyd assignment step) and the codebooks train on
+    the RESIDUALS x − c(x). Residuals cluster far tighter around zero
+    than raw vectors, so the same m×k code budget quantizes finer —
+    the reason faiss defaults to it. Same sample as pq_fit_sample."""
+    x = sample_vectors(sf_dir, 4096)
     c = np.array(centroids, dtype=np.float64)
-    d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-    assign = d2.argmin(axis=1)  # ties -> lowest cid
-    return _lloyd_books(x - c[assign], m, k, n_iter)
+    return _lloyd_books(x - c[_assign(x, c)], 4, 16)
 
 
 def _subspace_d2(vec: str, codebooks: list[list[list[float]]]) -> str:
@@ -719,8 +684,8 @@ def _subspace_d2(vec: str, codebooks: list[list[list[float]]]) -> str:
 
 def pq_code_expr(vec: str, codebooks: list[list[list[float]]]):
     """PQ encode: per subspace, the code of the nearest centroid by
-    squared euclidean (ties -> lowest code, matching the oracle's
-    ORDER BY d, code). The argmin runs on the materialized
+    squared euclidean (ties -> lowest code, V.argmin; dd_pq_codes is
+    the oracle's twin). The argmin runs on the materialized
     per-subspace distance array (_subspace_d2).
     Returns an array<int> of m codes.
 
@@ -731,10 +696,38 @@ def pq_code_expr(vec: str, codebooks: list[list[list[float]]]):
     for ann_pq_adc): the giant tree defeats codegen and re-evaluates
     element accesses the zip_with formulation materializes once. The
     interpreted-but-materialized shape wins."""
-    return F.expr(
-        f"transform({_subspace_d2(vec, codebooks)},"
-        " d -> CAST(array_position(d, array_min(d)) - 1 AS INT))"
+    return F.expr(f"transform({_subspace_d2(vec, codebooks)}, d -> {V.argmin('d')})")
+
+
+def dd_subspace_d2(vec: str, codebooks: list[list[list[float]]]) -> list[str]:
+    """DuckDB twin of _subspace_d2: for each subspace m, the DOUBLE[]
+    of squared distances from the m-th slice of ``vec`` to the codes
+    of codebook m."""
+    dsub = len(codebooks[0][0])
+    return [
+        f"list_transform({V.dd_literal(book)}, _c ->"
+        f" {V.dd_sq_euclidean(f'list_slice(({vec})::DOUBLE[], {mi * dsub + 1}, {(mi + 1) * dsub})', '_c')})"
+        for mi, book in enumerate(codebooks)
+    ]
+
+
+def dd_pq_codes(vec: str, codebooks: list[list[list[float]]]) -> str:
+    """DuckDB twin of pq_code_expr: the INTEGER[] of m codes of ``vec``."""
+    return "[" + ", ".join(V.dd_argmin(d) for d in dd_subspace_d2(vec, codebooks)) + "]"
+
+
+def dd_adc_dist(query_vec: str, codes: str, codebooks: list[list[list[float]]]) -> str:
+    """DuckDB twin of pq_adc_dist: sqrt of Σ_m ||q_m − codebook[m][code_m]||²,
+    added left to right (SQL + is left-associative)."""
+    dsub = len(codebooks[0][0])
+    legs = " + ".join(
+        V.dd_sq_euclidean(
+            f"list_slice(({query_vec})::DOUBLE[], {mi * dsub + 1}, {(mi + 1) * dsub})",
+            f"{V.dd_literal(book)}[({codes})[{mi + 1}] + 1]",
+        )
+        for mi, book in enumerate(codebooks)
     )
+    return f"sqrt({legs})"
 
 
 def pq_adc_dist(query_vec: str, codes: str, codebooks: list[list[list[float]]]):
@@ -869,11 +862,7 @@ def ann_ivf_rerank_topk(
         vec_col,
         centroids,
     ).select(id_col, "_qv", "_cell")
-    qcells = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-    ).select(query_id_col, query_vec_col, F.col("p.cell").alias("_cell"))
+    qcells = probe_cells(queries, centroids, nprobe, "_cell", query_id_col, query_vec_col)
     approx = cell.join(F.broadcast(qcells), "_cell").select(
         query_id_col,
         id_col,
@@ -927,14 +916,8 @@ def ann_ivfpq_topk(
     ).select(
         F.col(id_col), pq_code_expr(vec_col, codebooks).alias("_codes"), "_cell"
     )
-    qcells = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-    ).select(
-        query_id_col,
-        pq_adc_luts(query_vec_col, codebooks).alias("_lut"),
-        F.col("p.cell").alias("_cell"),
+    qcells = probe_cells(queries, centroids, nprobe, "_cell", query_id_col, query_vec_col).select(
+        query_id_col, pq_adc_luts(query_vec_col, codebooks).alias("_lut"), "_cell"
     )
     scored = coded.join(F.broadcast(qcells), "_cell").select(
         query_id_col,
@@ -987,14 +970,8 @@ def ann_ivfpq_indexed_topk(
     embedding. The serving half of the build-once/probe-many story
     ann_ivf_indexed tells for full-precision IVF."""
     idx = spark.read.parquet(index_dir)
-    qcells = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-    ).select(
-        query_id_col,
-        pq_adc_luts(query_vec_col, codebooks).alias("_lut"),
-        F.col("p.cell").alias("cell"),
+    qcells = probe_cells(queries, centroids, nprobe, "cell", query_id_col, query_vec_col).select(
+        query_id_col, pq_adc_luts(query_vec_col, codebooks).alias("_lut"), "cell"
     )
     scored = idx.join(F.broadcast(qcells), "cell").select(
         query_id_col,
@@ -1049,14 +1026,7 @@ def ann_ivf_indexed_topk(
     dynamic partition pruning turns the broadcast probe set into
     directory-level skips before any I/O."""
     idx = spark.read.parquet(index_dir)
-    qcells = (
-        queries.select(
-            query_id_col,
-            query_vec_col,
-            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-        )
-        .select(query_id_col, query_vec_col, F.col("p.cell").alias("cell"))
-    )
+    qcells = probe_cells(queries, centroids, nprobe, "cell", query_id_col, query_vec_col)
     scored = idx.join(F.broadcast(qcells), "cell").select(
         query_id_col,
         id_col,
@@ -1160,15 +1130,11 @@ def ann_ivfpq_residual_topk(
         .select(id_col, pq_code_expr("_res", codebooks).alias("_codes"), "_cell")
     )
     qcells = (
-        queries.select(
-            query_id_col,
-            query_vec_col,
-            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-        )
+        probe_cells(queries, centroids, nprobe, "_cell", query_id_col, query_vec_col)
         .select(
             query_id_col,
-            _residual_expr(query_vec_col, "p.cell", centroids).alias("_res"),
-            F.col("p.cell").alias("_cell"),
+            _residual_expr(query_vec_col, "_cell", centroids).alias("_res"),
+            "_cell",
         )
         .select(query_id_col, pq_adc_luts("_res", codebooks).alias("_lut"), "_cell")
     )
@@ -1323,13 +1289,9 @@ def ann_ivf_sq8_topk(
         .selectExpr(id_col, "_cell", f"{V.sq8_code(vec_col, '_absmax')} AS _codes")
     )
     qcells = (
-        queries.crossJoin(F.broadcast(absmax))
-        .select(
-            query_id_col,
-            F.expr(V.sq8_code(query_vec_col, "_absmax")).alias("_qcodes"),
-            F.explode(_nearest_cells(query_vec_col, centroids, nprobe)).alias("p"),
-        )
-        .select(query_id_col, "_qcodes", F.col("p.cell").alias("_cell"))
+        probe_cells(queries, centroids, nprobe, "_cell", query_id_col, query_vec_col)
+        .crossJoin(F.broadcast(absmax))
+        .selectExpr(query_id_col, f"{V.sq8_code(query_vec_col, '_absmax')} AS _qcodes", "_cell")
     )
     scored = coded.join(F.broadcast(qcells), "_cell").selectExpr(
         query_id_col, id_col, f"{V.code_sq_dist('_codes', '_qcodes')} AS code_dist"

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.tables import duck_parquet_path as _duck_path
+from ..sources.tables import sample_vectors
 
 DIM = 64
 
@@ -156,40 +156,32 @@ def embed_documents(
 
 
 def pca_fit_sample(
-    sf_dir: str,
-    n_components: int = 2,
-    sample_limit: int = 4096,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[list[float], list[list[float]]]:
-    """Fit a PCA basis on a bounded deterministic sample, driver-side
-    in numpy — the same posture as ann.kmeans_fit_sample: dimensionality
-    models train on an O(100k) subsample regardless of corpus size, the
-    projection then applies to every vector via broadcast literals.
-    Reads the first ``sample_limit`` vectors by id straight from
-    parquet (KB-to-MB scale, no Spark job), float64 eigh, components
-    sign-fixed so each one's largest-|loading| entry is positive —
-    fully reproducible, so the basis can be inlined as SQL literals
-    into a DuckDB oracle exactly like LSH planes / IVF centroids.
-    Returns (mean, components[n_components][dim])."""
-    import duckdb
-
-    rel = duckdb.sql(
-        f"SELECT {id_col}, {vec_col} FROM read_parquet('{_duck_path(sf_dir, table)}') "
-        f"ORDER BY {id_col} LIMIT {sample_limit}"
-    )
-    x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)
+    sf_dir: str, n_components: int = 2
+) -> tuple[list[float], list[list[float]], list[float]]:
+    """Fit a PCA basis on the driver-side fit sample
+    (``sources.tables.sample_vectors``: the first 4096 vectors by id, no
+    Spark job), in numpy: dimensionality models train on a bounded
+    subsample regardless of corpus size, and the projection then
+    applies to every vector via broadcast literals. float64 eigh, and
+    each component is sign-fixed so its largest-|loading| entry is
+    positive — fully reproducible, so the basis can be inlined as SQL
+    literals into a DuckDB oracle exactly like LSH planes / IVF
+    centroids. Returns (mean, components[n_components][dim], shares):
+    shares[i] is component i's eigenvalue over the sum of all
+    eigenvalues."""
+    x = sample_vectors(sf_dir, 4096)
     mu = x.mean(axis=0)
     xc = x - mu
-    _, vecs = np.linalg.eigh(xc.T @ xc)  # ascending eigenvalues
-    comps = []
+    vals, vecs = np.linalg.eigh(xc.T @ xc)  # ascending eigenvalues
+    tot = float(vals.sum())
+    comps, shares = [], []
     for i in range(1, n_components + 1):
         v = vecs[:, -i]
         if v[int(np.abs(v).argmax())] < 0:
             v = -v
         comps.append([float(c) for c in v])
-    return [float(m) for m in mu], comps
+        shares.append(float(vals[-i]) / tot)
+    return [float(m) for m in mu], comps, shares
 
 
 def pca_project(

@@ -128,15 +128,17 @@ def topk_batch_np(
     import numpy as np
     import pandas as pd
 
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    qids = [r[0] for r in q_rows]
-    qmat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
     # Output id types follow the INPUT schemas (string/int ids work the
     # same as long — a hardcoded "long" would null them out in Arrow).
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     id_t = corpus.schema[id_col].dataType.simpleString()
     schema = f"{query_id_col} {qid_t}, {id_col} {id_t}, score double"
+    q_rows = queries.select(query_id_col, query_vec_col).collect()
+    if not q_rows:  # no query, no rows
+        return topk_per_key(corpus.sparkSession.createDataFrame([], schema), query_id_col, id_col, k)
+    qids = [r[0] for r in q_rows]
+    qmat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    qnorm = np.linalg.norm(qmat, axis=1)
 
     def score_batches(batches):
         for pdf in batches:

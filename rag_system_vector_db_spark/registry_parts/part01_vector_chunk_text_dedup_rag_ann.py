@@ -17,7 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
-from ..operators import chunking, knn, text_analysis  # noqa: F401
+from ..operators import ann, chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..operators.vector_store import resolve_log
 from ..sources import load_table  # noqa: F401
@@ -961,7 +961,7 @@ def dedup_simhash_capped(spark, sf_dir):
     )
 
 
-@query("dedup_embedding_lsh")  # oracle attached after _planes_sql below
+@query("dedup_embedding_lsh")  # oracle attached after _bucketed_pairs_oracle below
 def dedup_embedding_lsh(spark, sf_dir):
     """Embedding near-dup at scale: corpus-sized LSH buckets
     (ann.planes_for: bits = log2(N/7.8), floor 6 — the r7 semdedup
@@ -969,7 +969,7 @@ def dedup_embedding_lsh(spark, sf_dir):
     generate candidates, exact cosine ≥ 0.3 on same-bucket pairs
     only. Floors reproduce the historical 6-plane plan at the N=500
     gate scales; the lazy oracle sizes identically."""
-    from ..operators import ann, dedup
+    from ..operators import dedup
 
     # split=True: the per-row hyperplane dot products (map-side LSH
     # bucketing) are the hot path — measured 2x faster parallelized.
@@ -987,7 +987,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     all-pairs form survives only as
     dedup.dedup_embedding_cosine(all_pairs=True), the explicit
     bounded-slice escape hatch (see dedup_cluster's pair seed)."""
-    from ..operators import ann, dedup
+    from ..operators import dedup
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     return dedup.dedup_embedding_cosine(
@@ -1238,24 +1238,13 @@ def _sized_planes4(sf_dir: str) -> list[list[float]]:
     log N so bucket occupancy — candidate volume per query and
     same-bucket pair volume per vector — stays ~constant (6 bits at
     sf0.1, 9 at the derived sf1)."""
-    from ..operators import ann
-
     return ann.planes_for(sf_dir, rows_per_bucket=31.25, bits_min=4)
-
-
-def _planes_sql(planes) -> str:
-    rows = ", ".join(
-        f"({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])" for i, p in enumerate(planes)
-    )
-    return f"planes(pid, w) AS (VALUES {rows})"
 
 
 @query("ann_lsh_cosine")
 def ann_lsh_cosine(spark, sf_dir):
     """Random-hyperplane LSH search: 4 planes → 16 buckets, score only
     same-bucket candidates, top-3 per query."""
-    from ..operators import ann
-
     # Corpus side split (heavy map-side plane dots); the broadcast
     # query side stays an unsplit scan so no exchange sits under it.
     emb = load_table(spark, sf_dir, "embeddings", split=True)
@@ -1272,13 +1261,8 @@ def ann_lsh_cosine(spark, sf_dir):
 def _ann_lsh_oracle(sf_dir: str) -> str:
     planes = _sized_planes4(sf_dir)
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), q AS (
         SELECT e.vec_id AS query_id, e.embedding AS query_vec, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id) WHERE e.vec_id < 5
@@ -1305,13 +1289,8 @@ LAZY_ORACLES["ann_lsh_cosine"] = _ann_lsh_oracle
 def _bucketed_pairs_oracle(planes, threshold: float) -> str:
     """Bucketed near-dup pair oracle: same-bucket pairs, exact cosine."""
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), v AS (
         SELECT e.vec_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id)
@@ -1325,14 +1304,10 @@ def _bucketed_pairs_oracle(planes, threshold: float) -> str:
 
 
 def _dedup_embedding_lsh_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     return _bucketed_pairs_oracle(ann.planes_for(sf_dir), 0.3)
 
 
 def _dedup_embedding_cosine_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     return _bucketed_pairs_oracle(
         ann.planes_for(sf_dir, rows_per_bucket=31.25, bits_min=4, seed=7), 0.3
     )
@@ -1351,13 +1326,11 @@ def ann_ivf(spark, sf_dir):
     query. The fitted centroids are driver-held literals, so the same
     centroids inline into the DuckDB oracle and the whole path is
     hash-checked."""
-    from ..operators import ann
-
     # corpus side split: cell assignment is CPU-heavy per-row work
     # (K 64-dim distances in interpreted HOFs); query side stays an
     # unsplit scan so no exchange sits under the broadcast.
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1367,49 +1340,9 @@ def ann_ivf(spark, sf_dir):
     )
 
 
-def _cents_sql(centroids) -> str:
-    rows = ", ".join(
-        f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(centroids)
-    )
-    return f"cents(cid, w) AS (VALUES {rows})"
-
-
-def _ivf_common(centroids, n_queries: int) -> str:
-    """Shared CTEs: exact-argmin cell assignment (ties -> lowest cid,
-    like _nearest_centroid's strict <) and 2-probe query cell choice."""
-    return f"""
-    WITH {_cents_sql(centroids)},
-    assigned AS (
-        SELECT vec_id, embedding, cid FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
-                   ) AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    ), q AS (
-        SELECT vec_id AS query_id, embedding AS query_vec
-        FROM embeddings WHERE vec_id < {n_queries}
-    ), qprobe AS (
-        SELECT query_id, query_vec, cid FROM (
-            SELECT q.query_id, q.query_vec, c.cid,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {V.dd_euclidean('q.query_vec', 'c.w')}, c.cid
-                   ) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 2
-    )
-    """
-
-
 def _ivf_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    return _ivf_common(centroids, 5) + f"""
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    return "WITH" + ann.dd_ivf_ctes(centroids, 5) + f"""
     , scored AS (
         SELECT p.query_id, s.vec_id,
                {V.dd_cosine('s.embedding', 'p.query_vec')} AS score
@@ -1432,8 +1365,6 @@ def ann_lsh_multiprobe(spark, sf_dir):
     """Multi-probe LSH (Lv VLDB'07): each query also probes the
     n_planes buckets one flipped bit away — one index, 1+n_planes
     probes' recall."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = _sized_planes4(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
@@ -1449,13 +1380,8 @@ def _multiprobe_oracle(sf_dir: str) -> str:
     planes = _sized_planes4(sf_dir)
     flips = ", ".join(str(i) for i in range(len(planes)))
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), q AS (
         SELECT e.vec_id AS query_id, e.embedding AS query_vec, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id) WHERE e.vec_id < 5
@@ -1490,12 +1416,10 @@ def ann_ivf_rerank(spark, sf_dir):
     (PQ-code stand-in) build a 10-deep shortlist; exact cosine re-ranks
     only shortlist rows. Sample-trained quantizer → centroid literals →
     fully hash-checked."""
-    from ..operators import ann
-
     # split/unsplit sides chosen as in ann_ivf (heavy map work vs
     # broadcast query scan)
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1506,11 +1430,9 @@ def ann_ivf_rerank(spark, sf_dir):
 
 
 def _ivf_rerank_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     quant = "list_transform((s.embedding)::DOUBLE[], x -> round(x, 1))"
-    return _ivf_common(centroids, 5) + f"""
+    return "WITH" + ann.dd_ivf_ctes(centroids, 5) + f"""
     , qscored AS (
         SELECT p.query_id, s.vec_id,
                {V.dd_cosine(quant, 'p.query_vec')} AS approx
@@ -1546,8 +1468,6 @@ def ann_probe_sweep(spark, sf_dir):
     per query for 1..5 probes — the curve that sizes a multi-probe
     index's budget. Single plan: the budget is an exploded column over
     one bucket join (no driver-side per-budget loop)."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = _sized_planes4(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10).select(
@@ -1562,13 +1482,8 @@ def _probe_sweep_oracle(sf_dir: str) -> str:
     flips = ", ".join(str(i) for i in range(len(planes)))
     budgets = ", ".join(str(i) for i in range(len(planes) + 1))
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), q AS (
         SELECT e.vec_id AS query_id, e.embedding AS query_vec, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id) WHERE e.vec_id < 10
@@ -1636,8 +1551,6 @@ def ann_recall_at_k(spark, sf_dir):
     """Recall@10 harness: single-probe vs multi-probe LSH against the
     exact brute-force top-10, per query — the evaluation loop that
     justifies an ANN index's probe budget."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = _sized_planes4(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20).select(
@@ -1659,13 +1572,8 @@ def _recall_oracle(sf_dir: str) -> str:
     planes = _sized_planes4(sf_dir)
     flips = ", ".join(str(i) for i in range(len(planes)))
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), q AS (
         SELECT e.vec_id AS query_id, e.embedding AS query_vec, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id) WHERE e.vec_id < 20
@@ -2488,7 +2396,7 @@ def pca_project(spark, sf_dir):
     literals — dot-product HOFs, no shuffle."""
     from ..operators import embedding
 
-    mean, comps = embedding.pca_fit_sample(sf_dir, n_components=2)
+    mean, comps, _ = embedding.pca_fit_sample(sf_dir)
     vecs = load_table(spark, sf_dir, "embeddings", split=True)
     return embedding.pca_project(vecs, mean, comps)
 
@@ -2496,7 +2404,7 @@ def pca_project(spark, sf_dir):
 def _pca_oracle(sf_dir: str) -> str:
     from ..operators import embedding
 
-    mean, comps = embedding.pca_fit_sample(sf_dir, n_components=2)
+    mean, comps, _ = embedding.pca_fit_sample(sf_dir)
     cols = []
     for i, comp in enumerate(comps, start=1):
         lit = f"[{', '.join(repr(x) for x in comp)}]::DOUBLE[]"

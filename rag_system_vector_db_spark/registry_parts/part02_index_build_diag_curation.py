@@ -17,7 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
-from ..operators import chunking, knn, text_analysis  # noqa: F401
+from ..operators import ann, chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
 
@@ -28,37 +28,7 @@ from ..registry_core import (  # noqa: F401
     query,
 )
 
-from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _cents_sql, _ivf_common, _ivf_oracle, _planes_sql  # noqa: F401
-
-
-def _books_sql(books) -> str:
-    rows = ", ".join(
-        f"({mi}, {ki}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
-        for mi, book in enumerate(books)
-        for ki, c in enumerate(book)
-    )
-    return f"books(m, k, w) AS (VALUES {rows})"
-
-
-def _pq_codes_cte(books) -> str:
-    """Shared CTE: per-(vector, subspace) nearest-code assignment by
-    squared euclidean, ties -> lowest code (operators.ann.pq_code_expr's
-    argmin semantics)."""
-    dsub = len(books[0][0])
-    sub = f"list_slice((e.embedding)::DOUBLE[], b.m*{dsub} + 1, b.m*{dsub} + {dsub})"
-    return f"""
-    WITH {_books_sql(books)},
-    codes AS (
-        SELECT vec_id, m, code FROM (
-            SELECT e.vec_id, b.m, b.k AS code,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id, b.m
-                       ORDER BY {V.dd_sq_euclidean(sub, 'b.w')}, b.k
-                   ) AS rn
-            FROM embeddings e CROSS JOIN books b
-        ) WHERE rn = 1
-    )
-    """
+from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS  # noqa: F401
 
 
 @query("ann_pq_adc")  # oracle: LAZY_ORACLES["ann_pq_adc"] (codebook literals)
@@ -68,10 +38,8 @@ def ann_pq_adc(spark, sf_dir):
     encoded to 4 codes/vector, queries scan all codes with asymmetric
     distance. The fitted codebooks inline into the DuckDB oracle as
     literals, so encode + ADC + ranking are all hash-checked."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
+    books = ann.pq_fit_sample(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -82,34 +50,16 @@ def ann_pq_adc(spark, sf_dir):
 
 
 def _pq_adc_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
-    dsub = len(books[0][0])
-
-    def qsub(mi: int) -> str:
-        return f"list_slice((q.query_vec)::DOUBLE[], {mi * dsub + 1}, {(mi + 1) * dsub})"
-
-    legs = " + ".join(
-        V.dd_sq_euclidean(qsub(mi), f"c{mi}.w") for mi in range(len(books))
-    )  # SQL + is left-associative, matching pq_adc_dist's python loop
-    joins = "\n        ".join(
-        f"JOIN cw c{mi} ON c{mi}.vec_id = c0.vec_id AND c{mi}.m = {mi}"
-        for mi in range(1, len(books))
-    )
-    return _pq_codes_cte(books) + f"""
-    , cw AS (
-        SELECT c.vec_id, c.m, b.w
-        FROM codes c JOIN books b ON b.m = c.m AND b.k = c.code
+    books = ann.pq_fit_sample(sf_dir)
+    return f"""
+    WITH coded AS (
+        SELECT vec_id, {ann.dd_pq_codes('embedding', books)} AS codes FROM embeddings
     ), q AS (
         SELECT vec_id AS query_id, embedding AS query_vec
         FROM embeddings WHERE vec_id < 5
     ), scored AS (
-        SELECT q.query_id, c0.vec_id, sqrt({legs}) AS dist
-        FROM cw c0
-        {joins}
-        CROSS JOIN q
-        WHERE c0.m = 0
+        SELECT q.query_id, c.vec_id, {ann.dd_adc_dist('q.query_vec', 'c.codes', books)} AS dist
+        FROM coded c, q
     ), ranked AS (
         SELECT query_id, vec_id, dist,
                row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rank
@@ -128,25 +78,17 @@ def pq_reconstruction_error_q(spark, sf_dir):
     """Per-subspace mean squared PQ quantization error over the whole
     corpus — the metric that sizes m/k for a target recall. One narrow
     projection + one map-side-combinable groupBy."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
+    books = ann.pq_fit_sample(sf_dir)
     return ann.pq_reconstruction_error(emb, books)
 
 
 def _pq_recon_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
-    dsub = len(books[0][0])
-    sub = f"list_slice((e.embedding)::DOUBLE[], b.m*{dsub} + 1, b.m*{dsub} + {dsub})"
+    books = ann.pq_fit_sample(sf_dir)
+    errs = ", ".join(f"list_min({d})" for d in ann.dd_subspace_d2("embedding", books))
     return f"""
-    WITH {_books_sql(books)},
-    best AS (
-        SELECT e.vec_id, b.m, min({V.dd_sq_euclidean(sub, 'b.w')}) AS e2
-        FROM embeddings e CROSS JOIN books b
-        GROUP BY e.vec_id, b.m
+    WITH best AS (
+        SELECT unnest(range({len(books)})) AS m, unnest([{errs}]) AS e2 FROM embeddings
     )
     SELECT CAST(m AS BIGINT) AS subspace, CAST(count(*) AS BIGINT) AS n,
            round(avg(e2), 6) AS mse
@@ -205,9 +147,7 @@ def ann_ivf_indexed(spark, sf_dir):
     so pruning skips non-probed cells' directories before I/O. Result
     contract identical to ann_ivf, so the same centroid-literal oracle
     hash-checks the whole build+search path."""
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     index_dir = _os.path.join(
         _WAREHOUSE, f"ivf_index_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
@@ -224,7 +164,7 @@ def ann_ivf_indexed(spark, sf_dir):
     )
 
 
-LAZY_ORACLES["ann_ivf_indexed"] = _ivf_oracle
+LAZY_ORACLES["ann_ivf_indexed"] = LAZY_ORACLES["ann_ivf"]
 
 
 # ---------------------------------------------------------------------------
@@ -398,31 +338,19 @@ def semdedup_q(spark, sf_dir):
     measured remedy rendered into the registered plan AND its oracle
     (the lazy render re-fits per sf-dir, so the gate hash-checks the
     same k the engine ran)."""
-    from ..operators import ann, dedup
+    from ..operators import dedup
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     k = ann.kmeans_k_for(sf_dir)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=k, n_iter=3, sample_limit=max(4096, 16 * k))
+    centroids = ann.kmeans_fit_sample(sf_dir, k)
     return dedup.semdedup(emb, centroids, threshold=0.3)
 
 
 def _semdedup_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     k = ann.kmeans_k_for(sf_dir)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=k, n_iter=3, sample_limit=max(4096, 16 * k))
+    centroids = ann.kmeans_fit_sample(sf_dir, k)
     return f"""
-    WITH {_cents_sql(centroids)},
-    assigned AS (
-        SELECT vec_id, embedding, cid FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
-                   ) AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    ), pairs AS (
+    WITH {ann.dd_ivf_ctes(centroids)}, pairs AS (
         SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
                {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM assigned a
@@ -725,8 +653,6 @@ def matryoshka_recall(spark, sf_dir):
     cosine top-10 on 16/32/64-dim prefixes graded as recall@10 vs the
     full 64-dim top-10 — one plan, corpus scanned once, dim exploded
     on the broadcast query side."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     queries = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 5
@@ -743,10 +669,8 @@ def ivf_cell_stats(spark, sf_dir):
     this is the measurement that sizes k or triggers re-training.
     One narrow assignment pass (broadcast centroid literals) + one
     map-side-combinable groupBy(cell)."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     assigned = ann.with_cell(emb, "embedding", centroids, out_col="cid")
     dists = ann._centroid_dists("embedding", centroids)
     d = assigned.withColumn("_d", F.get(dists, F.col("cid")))
@@ -770,26 +694,17 @@ def ivf_cell_stats(spark, sf_dir):
 
 
 def _ivf_cell_stats_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    cents = V.dd_literal(centroids)
     return f"""
-    WITH {_cents_sql(centroids)},
-    assigned AS (
-        SELECT vec_id, cid, d FROM (
-            SELECT e.vec_id, c.cid, {V.dd_euclidean('e.embedding', 'c.w')} AS d,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
-                   ) AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    ), tot AS (SELECT CAST(count(*) AS DOUBLE) AS t FROM assigned)
+    WITH {ann.dd_ivf_ctes(centroids)}, dist AS (
+        SELECT cid, {V.dd_euclidean('embedding', f'{cents}[cid + 1]')} AS d FROM assigned
+    ), tot AS (SELECT CAST(count(*) AS DOUBLE) AS t FROM dist)
     SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs,
            round(avg(d), 6) AS mean_dist,
            round(max(d), 6) AS max_dist,
            round(count(*) / (SELECT t FROM tot), 6) AS share
-    FROM assigned GROUP BY cid
+    FROM dist GROUP BY cid
     """
 
 
@@ -861,33 +776,21 @@ def semdedup_clusters(spark, sf_dir):
     hash-checks even the iteration). k scales with N (kmeans_k_for)
     like semdedup above — the registered plan is the one the sf1
     study measured scale-safe."""
-    from ..operators import ann, dedup
+    from ..operators import dedup
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     k = ann.kmeans_k_for(sf_dir)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=k, n_iter=3, sample_limit=max(4096, 16 * k))
+    centroids = ann.kmeans_fit_sample(sf_dir, k)
     sem = dedup.semdedup(emb, centroids, threshold=0.3)
     pairs = sem.select(F.col("keeper_id").alias("doc_a"), F.col("vec_id").alias("doc_b"))
     return dedup.dedup_cluster(pairs, "doc_a", "doc_b")
 
 
 def _semdedup_clusters_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     k = ann.kmeans_k_for(sf_dir)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=k, n_iter=3, sample_limit=max(4096, 16 * k))
+    centroids = ann.kmeans_fit_sample(sf_dir, k)
     return f"""
-    WITH RECURSIVE {_cents_sql(centroids)},
-    assigned AS (
-        SELECT vec_id, embedding, cid FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
-                   ) AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    ), sempairs AS (
+    WITH RECURSIVE {ann.dd_ivf_ctes(centroids)}, sempairs AS (
         SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b,
                {V.dd_cosine('a.embedding', 'b.embedding')} AS score
         FROM assigned a
@@ -1030,7 +933,6 @@ def _knn_graph_edges(spark, sf_dir, max_bucket=None):
     over-occupied buckets before the self-join — the same mega-bucket
     guard the pair-dedup family has; capped ≡ uncapped when no bucket
     exceeds the cap."""
-    from ..operators import ann
     from ..operators.dedup import cap_hot_buckets
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)
@@ -1079,13 +981,8 @@ def knn_graph_lsh(spark, sf_dir):
 def _knn_graph_oracle(sf_dir: str) -> str:
     planes = _graph_planes(sf_dir)
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), c AS (
         SELECT e.vec_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id)
@@ -1217,10 +1114,8 @@ def ivf_probe_sweep(spark, sf_dir):
     ONE plan: the budget is an exploded column over a single cell join
     (no driver-side per-nprobe loop), same centroid literals as
     ann_ivf so the whole sweep is hash-checked."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1229,33 +1124,9 @@ def ivf_probe_sweep(spark, sf_dir):
 
 
 def _ivf_probe_sweep_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     return f"""
-    WITH {_cents_sql(centroids)},
-    assigned AS (
-        SELECT vec_id, embedding, cid FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
-                   ) AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    ), q AS (
-        SELECT vec_id AS query_id, embedding AS query_vec
-        FROM embeddings WHERE vec_id < 10
-    ), qprobe AS (
-        SELECT query_id, query_vec, cid, rn AS m_min FROM (
-            SELECT q.query_id, q.query_vec, c.cid,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {V.dd_euclidean('q.query_vec', 'c.w')}, c.cid
-                   ) AS rn
-            FROM q CROSS JOIN cents c
-        ) WHERE rn <= 4
-    ), cand AS (
+    WITH {ann.dd_ivf_ctes(centroids, 10, nprobe=4)}, cand AS (
         SELECT p.query_id, s.vec_id, p.m_min,
                {V.dd_cosine('s.embedding', 'p.query_vec')} AS score
         FROM assigned s JOIN qprobe p ON s.cid = p.cid
@@ -1455,8 +1326,6 @@ def hard_negative_mining(spark, sf_dir):
     Bucket-bound candidate volume — the same corpus-sized index
     dedup_embedding_lsh uses (ann.planes_for, floor 6 at gate
     scales)."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = ann.planes_for(sf_dir)
     out = ann.hard_negative_mining(emb, planes)
@@ -1470,17 +1339,10 @@ def hard_negative_mining(spark, sf_dir):
 
 
 def _hard_negative_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     planes = ann.planes_for(sf_dir)
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), v AS (
         SELECT e.vec_id, e.embedding, e.label, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id)
@@ -1508,10 +1370,8 @@ def cluster_purity(spark, sf_dir):
     ivf_cell_stats' occupancy balance): per cell, occupancy, distinct
     labels, majority label + share. Same fitted centroid literals as
     ann_ivf; one assignment pass + two map-side-combinable groupBys."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     return ann.cluster_purity(emb, centroids).select(
         "cell",
         "n",
@@ -1522,21 +1382,9 @@ def cluster_purity(spark, sf_dir):
 
 
 def _cluster_purity_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     return f"""
-    WITH {_cents_sql(centroids)},
-    assigned AS (
-        SELECT vec_id, label, cid FROM (
-            SELECT e.vec_id, e.label, c.cid,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {V.dd_euclidean('e.embedding', 'c.w')}, c.cid
-                   ) AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    ), per_label AS (
+    WITH {ann.dd_ivf_ctes(centroids)}, per_label AS (
         SELECT cid, label, count(*) AS c FROM assigned GROUP BY cid, label
     ), ranked AS (
         SELECT cid, label, c,
@@ -1828,11 +1676,9 @@ def ann_ivfpq(spark, sf_dir):
     coarse quantizer and the codebooks are sample-fitted driver-side
     and inline into the DuckDB oracle as literals, so cell assignment,
     PQ encode, probe choice, ADC and ranking are all hash-checked."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    books = ann.pq_fit_sample(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1851,10 +1697,8 @@ def ann_ivfpq_indexed(spark, sf_dir):
     directories before I/O. Result contract identical to ann_ivfpq, so
     the same centroid+codebook-literal oracle hash-checks the whole
     build+ADC path."""
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    books = ann.pq_fit_sample(sf_dir)
     index_dir = _os.path.join(
         _WAREHOUSE, f"ivfpq_index_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
@@ -1877,47 +1721,15 @@ def ann_ivfpq_indexed(spark, sf_dir):
 
 
 def _ivfpq_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    books = ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
-    dsub = len(books[0][0])
-    sub = f"list_slice((e.embedding)::DOUBLE[], b.m*{dsub} + 1, b.m*{dsub} + {dsub})"
-
-    def qsub(mi: int) -> str:
-        return f"list_slice((p.query_vec)::DOUBLE[], {mi * dsub + 1}, {(mi + 1) * dsub})"
-
-    legs = " + ".join(
-        V.dd_sq_euclidean(qsub(mi), f"c{mi}.w") for mi in range(len(books))
-    )  # SQL + is left-associative, matching pq_adc_dist's python loop
-    joins = "\n        ".join(
-        f"JOIN cw c{mi} ON c{mi}.vec_id = c0.vec_id AND c{mi}.m = {mi}"
-        for mi in range(1, len(books))
-    )
-    # _ivf_common: cents + per-vector cell (assigned) + queries (q) +
-    # 2-probe cells (qprobe); then the PQ half: books + per-(vec,
-    # subspace) code + the code's centroid (cw); ADC only on rows whose
-    # assigned cell is probed.
-    return _ivf_common(centroids, 5) + f"""
-    , {_books_sql(books)}, codes AS (
-        SELECT vec_id, m, code FROM (
-            SELECT e.vec_id, b.m, b.k AS code,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id, b.m
-                       ORDER BY {V.dd_sq_euclidean(sub, 'b.w')}, b.k
-                   ) AS rn
-            FROM embeddings e CROSS JOIN books b
-        ) WHERE rn = 1
-    ), cw AS (
-        SELECT c.vec_id, c.m, b.w
-        FROM codes c JOIN books b ON b.m = c.m AND b.k = c.code
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    books = ann.pq_fit_sample(sf_dir)
+    # ADC only on the rows whose assigned cell is probed
+    return "WITH" + ann.dd_ivf_ctes(centroids, 5) + f"""
+    , coded AS (
+        SELECT vec_id, cid, {ann.dd_pq_codes('embedding', books)} AS codes FROM assigned
     ), scored AS (
-        SELECT p.query_id, c0.vec_id, sqrt({legs}) AS dist
-        FROM cw c0
-        {joins}
-        JOIN assigned a ON a.vec_id = c0.vec_id
-        JOIN qprobe p ON a.cid = p.cid
-        WHERE c0.m = 0
+        SELECT p.query_id, c.vec_id, {ann.dd_adc_dist('p.query_vec', 'c.codes', books)} AS dist
+        FROM coded c JOIN qprobe p ON c.cid = p.cid
     ), ranked AS (
         SELECT query_id, vec_id, dist,
                row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rank
@@ -2555,11 +2367,9 @@ def ann_ivfpq_residual(spark, sf_dir):
     residual codebooks inline into the DuckDB oracle, so assignment,
     residual encode, probe choice, per-cell LUT ADC and ranking are
     all hash-checked."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    books = ann.pq_fit_residual_sample(sf_dir, centroids, m=4, k=16, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    books = ann.pq_fit_residual_sample(sf_dir, centroids)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -2570,55 +2380,25 @@ def ann_ivfpq_residual(spark, sf_dir):
 
 
 def _ivfpq_residual_oracle(sf_dir: str) -> str:
-    from ..operators import ann
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    books = ann.pq_fit_residual_sample(sf_dir, centroids)
+    cents = V.dd_literal(centroids)
 
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    books = ann.pq_fit_residual_sample(sf_dir, centroids, m=4, k=16, n_iter=3)
-    dsub = len(books[0][0])
-    rsub = f"list_slice(res.r, b.m*{dsub} + 1, b.m*{dsub} + {dsub})"
+    def residual(vec: str) -> str:
+        # x − c(x) elementwise: the float sequence of Spark's zip_with
+        return f"list_transform(list_zip(({vec})::DOUBLE[], {cents}[cid + 1]), x -> x[1] - x[2])"
 
-    def qrsub(mi: int) -> str:
-        return f"list_slice(qr.qr, {mi * dsub + 1}, {(mi + 1) * dsub})"
-
-    legs = " + ".join(
-        V.dd_sq_euclidean(qrsub(mi), f"c{mi}.w") for mi in range(len(books))
-    )  # SQL + is left-associative, matching pq_adc_dist_lut's loop
-    joins = "\n        ".join(
-        f"JOIN cw c{mi} ON c{mi}.vec_id = c0.vec_id AND c{mi}.m = {mi}"
-        for mi in range(1, len(books))
-    )
-    # residuals (corpus AND query side) are elementwise x − c against
-    # the SAME cell the row assigned/probed — list_zip subtraction
-    # computes the identical float sequence as Spark's zip_with
-    return _ivf_common(centroids, 5) + f"""
-    , {_books_sql(books)}, res AS (
-        SELECT a.vec_id, a.cid,
-               list_transform(list_zip((a.embedding)::DOUBLE[], c.w),
-                              x -> x[1] - x[2]) AS r
-        FROM assigned a JOIN cents c ON c.cid = a.cid
-    ), codes AS (
-        SELECT vec_id, cid, m, code FROM (
-            SELECT res.vec_id, res.cid, b.m, b.k AS code,
-                   row_number() OVER (
-                       PARTITION BY res.vec_id, b.m
-                       ORDER BY {V.dd_sq_euclidean(rsub, 'b.w')}, b.k
-                   ) AS rn
-            FROM res CROSS JOIN books b
-        ) WHERE rn = 1
-    ), cw AS (
-        SELECT c.vec_id, c.cid, c.m, b.w
-        FROM codes c JOIN books b ON b.m = c.m AND b.k = c.code
+    # the ADC LUT is per (query, probed cell): q − c changes with the cell
+    return "WITH" + ann.dd_ivf_ctes(centroids, 5) + f"""
+    , res AS (
+        SELECT vec_id, cid, {residual('embedding')} AS r FROM assigned
+    ), coded AS (
+        SELECT vec_id, cid, {ann.dd_pq_codes('r', books)} AS codes FROM res
     ), qres AS (
-        SELECT p.query_id, p.cid,
-               list_transform(list_zip((p.query_vec)::DOUBLE[], c.w),
-                              x -> x[1] - x[2]) AS qr
-        FROM qprobe p JOIN cents c ON c.cid = p.cid
+        SELECT query_id, cid, {residual('query_vec')} AS qr FROM qprobe
     ), scored AS (
-        SELECT qr.query_id, c0.vec_id, sqrt({legs}) AS dist
-        FROM cw c0
-        {joins}
-        JOIN qres qr ON c0.cid = qr.cid
-        WHERE c0.m = 0
+        SELECT p.query_id, c.vec_id, {ann.dd_adc_dist('p.qr', 'c.codes', books)} AS dist
+        FROM coded c JOIN qres p ON c.cid = p.cid
     ), ranked AS (
         SELECT query_id, vec_id, dist,
                row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rank

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
-from ..operators import chunking, knn, text_analysis  # noqa: F401
+from ..operators import ann, chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
 
@@ -28,7 +28,7 @@ from ..registry_core import (  # noqa: F401
     query,
 )
 
-from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_PRED, _DD_SHINGLES, _dd_sw_ratio, _ivf_common, _planes_sql  # noqa: F401
+from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_PRED, _DD_SHINGLES, _dd_sw_ratio  # noqa: F401
 from .part02_index_build_diag_curation import _knn_graph_edges, _kw_index_dir  # noqa: F401
 
 
@@ -689,8 +689,6 @@ def ann_binary_hamming(spark, sf_dir):
     """Sign-binarized Hamming top-10 (faiss IndexBinaryFlat): 64 dims
     → two 32-bit words (8 B/vector), xor+popcount distance — exact
     integers end-to-end."""
-    from ..operators import ann
-
     return ann.binary_hamming_topk(load_table(spark, sf_dir, "embeddings", split=True))
 
 
@@ -719,8 +717,6 @@ def ann_sq8(spark, sf_dir):
     """Uniform int8 scalar-quantizer L2 top-10 (faiss QT_8bit_uniform):
     one global scale, Σ(Δcode)² in exact longs, rescale to float space
     only on the 10 emitted rows."""
-    from ..operators import ann
-
     return ann.sq8_topk(load_table(spark, sf_dir, "embeddings", split=True))
 
 
@@ -1395,10 +1391,8 @@ def ann_ivf_sq8_q(spark, sf_dir):
     cells bound which vectors scan, int8 codes bound comparison cost;
     symmetric integer distance keeps the whole composite path
     hash-exact."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    centroids = ann.kmeans_fit_sample(sf_dir)
     queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1407,10 +1401,8 @@ def ann_ivf_sq8_q(spark, sf_dir):
 
 
 def _ivf_sq8_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
-    centroids = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    return _ivf_common(centroids, 5) + f"""
+    centroids = ann.kmeans_fit_sample(sf_dir)
+    return "WITH" + ann.dd_ivf_ctes(centroids, 5) + f"""
     , am AS (
         SELECT {V.dd_sq8_absmax('embedding')} AS absmax FROM embeddings
     ), ca AS (
@@ -1537,8 +1529,6 @@ def quantization_recall_q(spark, sf_dir):
     """Recall@10 of the int8-SQ and sign-binary towers vs exact float
     L2 — the quantization-loss measurement that sizes the refinement
     stage; zero-hit queries still emit their recall=0 row."""
-    from ..operators import ann
-
     return ann.quantization_recall(load_table(spark, sf_dir, "embeddings", split=True))
 
 
@@ -1963,13 +1953,8 @@ def _knn_graph_2hop_oracle(sf_dir: str) -> str:
 
     planes = _graph_planes(sf_dir)
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), c AS (
         SELECT e.vec_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
-from ..operators import chunking, knn, text_analysis  # noqa: F401
+from ..operators import ann, chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
 
@@ -28,7 +28,7 @@ from ..registry_core import (  # noqa: F401
     query,
 )
 
-from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _planes_sql, _query_corpus  # noqa: F401
+from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _query_corpus  # noqa: F401
 from .part02_index_build_diag_curation import _knn_graph_edges, _knn_graph_oracle, _qcls_weights_sql  # noqa: F401
 
 
@@ -3386,23 +3386,16 @@ _EDR_SAMPLE_CAP = 2000
 
 
 def _embedding_dedup_recall_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     planes = ann.planes_for(sf_dir)
     h = H.dd_md5_long("vec_id::VARCHAR")
     return f"""
-    WITH {_planes_sql(planes)},
-    sub AS (
+    WITH sub AS (
         SELECT vec_id, embedding FROM embeddings
         WHERE {h} / 1152921504606846976.0 < 0.3
         ORDER BY {h}, vec_id
         LIMIT {_EDR_SAMPLE_CAP}
-    ), dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM sub e CROSS JOIN planes p
     ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM sub
     ), v AS (
         SELECT s.vec_id, s.embedding, b.bucket FROM sub s JOIN buckets b USING (vec_id)
     ), pairs AS (
@@ -3435,8 +3428,6 @@ def embedding_dedup_recall_q(spark, sf_dir):
     same-bucket pairs on the identical sample, and ONE self-join
     computes both flags per pair so recall and precision come from
     one exact-integer aggregate."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = ann.planes_for(sf_dir)
     h = F.expr(H.md5_long("CAST(vec_id AS STRING)"))

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
-from ..operators import chunking, knn, text_analysis  # noqa: F401
+from ..operators import ann, chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
 
@@ -28,7 +28,7 @@ from ..registry_core import (  # noqa: F401
     query,
 )
 
-from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS, _planes_sql  # noqa: F401
+from .part01_vector_chunk_text_dedup_rag_ann import _DD_BANDS, _DD_MINHASH_SIG, _DD_SHINGLES, _DD_TOKS  # noqa: F401
 from .part02_index_build_diag_curation import _knn_graph_edges, _knn_graph_oracle  # noqa: F401
 from .part04_experimentation_layout import _classifier_calibration_oracle  # noqa: F401
 
@@ -303,17 +303,10 @@ def intraclass_correlation_q(spark, sf_dir):
 
 
 def _dedup_threshold_sweep_oracle(sf_dir: str) -> str:
-    from ..operators import ann
-
     planes = ann.hyperplanes(ann.lsh_bits_for(sf_dir), 64)
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), v AS (
         SELECT e.vec_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id)
@@ -345,8 +338,6 @@ def dedup_threshold_sweep_q(spark, sf_dir):
     bucket COUNT scales with N (lsh_bits_for: bits = log2(N/7.8), so
     expected occupancy is constant and pair volume linear; a fixed
     6-bit table would go quadratic at 10x data)."""
-    from ..operators import ann
-
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     planes = ann.hyperplanes(ann.lsh_bits_for(sf_dir), 64)
     v = emb.select(
@@ -715,13 +706,8 @@ def _recall_sweep_oracle(sf_dir: str) -> str:
 
     planes = _sized_planes4(sf_dir)
     return f"""
-    WITH {_planes_sql(planes)},
-    dots AS (
-        SELECT e.vec_id, p.pid, {V.dd_dot('e.embedding', 'p.w')} AS d
-        FROM embeddings e CROSS JOIN planes p
-    ), buckets AS (
-        SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) AS bucket
-        FROM dots GROUP BY vec_id
+    WITH buckets AS (
+        SELECT vec_id, {ann.dd_lsh_bucket('embedding', planes)} AS bucket FROM embeddings
     ), q AS (
         SELECT e.vec_id AS query_id, e.embedding AS query_vec, b.bucket
         FROM embeddings e JOIN buckets b USING (vec_id) WHERE e.vec_id < 20
@@ -770,8 +756,6 @@ def recall_at_k_sweep_q(spark, sf_dir):
     is (queries x <=20)-bounded and every k in the grid is a
     conditional sum over that joined frame — 4 cutoffs, zero extra
     retrieval passes."""
-    from ..operators import ann
-
     from .part01_vector_chunk_text_dedup_rag_ann import _sized_planes4
 
     emb = load_table(spark, sf_dir, "embeddings", split=True)

@@ -20,7 +20,7 @@ from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round
 from ..operators import chunking, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
-from ..sources.tables import duck_parquet_path  # noqa: F401
+from ..sources.tables import sample_vectors
 
 from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
@@ -464,20 +464,15 @@ def merge_into_apply_q(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _seeding_sets(sf_dir: str, k: int = 8, sample_limit: int = 4096):
-    """Two deterministic seedings over the bounded sample: naive
-    first-k (kmeans_fit_sample's init) vs Gonzalez farthest-point (the
+def _seeding_sets(sf_dir: str):
+    """Two deterministic 8-seed sets over the fit sample: naive first-k
+    (the init of ann._lloyd_books) vs Gonzalez farthest-point (the
     deterministic k-means++ shape: next seed = point maximizing its
     min distance to the chosen set, ties to lowest index)."""
-    import duckdb
     import numpy as np
 
-    emb_path = duck_parquet_path(sf_dir, "embeddings")
-    rel = duckdb.sql(
-        f"SELECT vec_id, embedding FROM read_parquet('{emb_path}') "
-        f"ORDER BY vec_id LIMIT {sample_limit}"
-    )
-    x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)
+    k = 8
+    x = sample_vectors(sf_dir, 4096)
     firstk = [[float(v) for v in row] for row in x[:k]]
     chosen = [0]
     d2 = ((x - x[0]) ** 2).sum(axis=1)
@@ -521,9 +516,10 @@ def _seeding_oracle(sf_dir: str) -> str:
 
 @query("seeding_quality_eval")  # oracle: LAZY_ORACLES (per-sf seed literals)
 def seeding_quality_eval_q(spark, sf_dir):
-    """Quantizer seeding quality (the init step kmeans_refine /
-    kmeans_fit_sample take as given — k-means++-style spread seeding vs the
-    naive first-k init, measured as k-means assignment cost BEFORE
+    """Quantizer seeding quality (the init step kmeans_refine and
+    ann.kmeans_fit_sample take as given: the first k sample vectors) —
+    k-means++-style spread seeding vs that naive first-k init,
+    measured as k-means assignment cost BEFORE
     any Lloyd round): both seed sets fit driver-side on the bounded
     deterministic sample (Gonzalez '85 farthest-point as the
     deterministic k-means++ shape), then ONE corpus pass scores both

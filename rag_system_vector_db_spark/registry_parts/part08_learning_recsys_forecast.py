@@ -17,10 +17,9 @@ from pyspark.sql import functions as F  # noqa: F401
 from ..functions import hashing as H  # noqa: F401
 from ..functions import vector as V  # noqa: F401
 from ..functions.exact import MICRO, dd_round_div, emit_micro, from_micro, round6, round_div, to_micro  # noqa: F401
-from ..operators import chunking, knn, text_analysis  # noqa: F401
+from ..operators import chunking, embedding, knn, text_analysis  # noqa: F401
 from ..operators.text_analysis import STOPWORDS  # noqa: F401
 from ..sources import load_table  # noqa: F401
-from ..sources.tables import duck_parquet_path  # noqa: F401
 
 from ..registry_core import (  # noqa: F401
     LAZY_ORACLES,
@@ -477,33 +476,6 @@ def _jl_oracle(sf_dir: str) -> str:
 LAZY_ORACLES["jl_projection_audit"] = _jl_oracle
 
 
-def _pca_spectrum(sf_dir: str, k: int = 8, sample_limit: int = 4096):
-    """Sample-fit PCA basis WITH eigenvalue shares (extends
-    embedding.pca_fit_sample's posture)."""
-    import duckdb
-    import numpy as np
-
-    emb_path = duck_parquet_path(sf_dir, "embeddings")
-    rel = duckdb.sql(
-        f"SELECT vec_id, embedding FROM read_parquet('{emb_path}') "
-        f"ORDER BY vec_id LIMIT {sample_limit}"
-    )
-    x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)
-    mu = x.mean(axis=0)
-    xc = x - mu
-    vals, vecs = np.linalg.eigh(xc.T @ xc)
-    tot = float(vals.sum())
-    comps, shares = [], []
-    for i in range(1, k + 1):
-        v = vecs[:, -i]
-        jmax = int(np.abs(v).argmax())
-        if v[jmax] < 0:
-            v = -v
-        comps.append([float(t) for t in v])
-        shares.append(float(vals[-i]) / tot)
-    return [float(t) for t in mu], comps, shares
-
-
 @query("pca_explained_variance")  # oracle: LAZY (basis literals)
 def pca_explained_variance_q(spark, sf_dir):
     """PCA spectrum audit (the sizing table behind pca_project and
@@ -516,7 +488,7 @@ def pca_explained_variance_q(spark, sf_dir):
     cumulative explained share per rank. A sample share that
     disagrees with the measured column is the drift alarm for
     refitting the basis."""
-    mu, comps, shares = _pca_spectrum(sf_dir)
+    mu, comps, shares = embedding.pca_fit_sample(sf_dir, n_components=8)
     emb = load_table(spark, sf_dir, "embeddings", split=True)
     centered = f"zip_with(CAST(embedding AS ARRAY<DOUBLE>), {V.sql_literal(mu)}, (e, m) -> e - m)"
     projs = [V.dot(centered, V.sql_literal(c)) for c in comps]
@@ -569,7 +541,7 @@ def pca_explained_variance_q(spark, sf_dir):
 
 
 def _pca_var_oracle(sf_dir: str) -> str:
-    mu, comps, shares = _pca_spectrum(sf_dir)
+    mu, comps, shares = embedding.pca_fit_sample(sf_dir, n_components=8)
     mu_lit = "[" + ", ".join(repr(v) for v in mu) + "]"
     sel = []
     for i, c in enumerate(comps):

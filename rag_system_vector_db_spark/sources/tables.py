@@ -117,6 +117,32 @@ def duck_parquet_path(sf_dir: str, name: str) -> str:
     return f"{path}/*.parquet" if os.path.isdir(path) else path
 
 
+class EmptySampleError(ValueError):
+    """A driver-side fit found no vectors to train on."""
+
+
+def sample_vectors(sf_dir: str, n: int):
+    """The fit sample of every driver-side model (IVF centroids, PQ
+    codebooks, PCA basis, seedings): the first ``n`` embeddings by
+    vec_id (all of them in a smaller corpus) as a (rows, dim) float64
+    matrix, read straight from parquet with no Spark job. The fixed
+    visit order and float64 math make each fit reproducible, so its
+    literals can be inlined into a DuckDB oracle. A corpus with no
+    vectors raises EmptySampleError, on the Spark build and on its
+    oracle alike."""
+    import duckdb
+    import numpy as np
+
+    rel = duckdb.sql(
+        f"SELECT embedding FROM read_parquet('{duck_parquet_path(sf_dir, 'embeddings')}') "
+        f"ORDER BY vec_id LIMIT {int(n)}"
+    )
+    x = np.array([list(r[0]) for r in rel.fetchall()], dtype=np.float64)
+    if not len(x):
+        raise EmptySampleError(f"no embeddings to fit on in {sf_dir}")
+    return x
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (mirrors the DuckDB oracle's
     pre-registered views, so SQL text can be shared)."""

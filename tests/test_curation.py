@@ -102,11 +102,11 @@ def test_pca_basis_is_orthonormal_and_ranked(sf_dir):
 
     from rag_system_vector_db_spark.operators.embedding import pca_fit_sample
 
-    mean, comps = pca_fit_sample(sf_dir, n_components=2)
+    mean, comps, _ = pca_fit_sample(sf_dir)
     c = np.array(comps)
     assert np.allclose(c @ c.T, np.eye(2), atol=1e-9)
     # deterministic: same input -> identical basis
-    mean2, comps2 = pca_fit_sample(sf_dir, n_components=2)
+    mean2, comps2, _ = pca_fit_sample(sf_dir)
     assert mean == mean2 and comps == comps2
 
 
@@ -119,7 +119,7 @@ def test_pca_projection_captures_leading_variance(spark, sf_dir):
     )
 
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    mean, comps = pca_fit_sample(sf_dir, n_components=2)
+    mean, comps, _ = pca_fit_sample(sf_dir)
     out = pca_project(vecs, mean, comps).toPandas()
     # pc1 is the leading component: it must carry at least as much
     # sample variance as pc2

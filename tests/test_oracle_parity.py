@@ -10,6 +10,7 @@ import pytest
 
 from rag_system_vector_db_spark.registry import LAZY_ORACLES, ORACLES, QUERIES
 from rag_system_vector_db_spark.sources import TABLES
+from rag_system_vector_db_spark.sources.tables import EmptySampleError
 from tests.oracle import compare, duck_connection
 
 
@@ -69,6 +70,7 @@ def test_duckdb_spills_outside_the_checkout(sf_dir, monkeypatch):
         "rollup_grain_advisor",
         "rag_pipeline_e2e",
         "eval_results_artifact",
+        "knn_batch_np",
     ],
 )
 def test_absent_query_row_matches_oracle(name, spark, sf_dir, tmp_path):
@@ -76,15 +78,53 @@ def test_absent_query_row_matches_oracle(name, spark, sf_dir, tmp_path):
     query row: the retrieval entries return the oracle's no rows, and
     the summaries its one row of zero counts and NULL ratios (a ratio
     over zero rows is NULL, as DuckDB's x/0 is)."""
-    for t in TABLES:
-        schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
-        pq.write_table(schema.empty_table(), tmp_path / f"{t}.parquet")
+    _empty_tables(sf_dir, tmp_path)
     con = duck_connection(str(tmp_path))
     oracle = ORACLES.get(name) or LAZY_ORACLES[name](str(tmp_path))
     try:
         compare(QUERIES[name](spark, str(tmp_path)), con, oracle)
     finally:
         con.close()
+
+
+def _empty_tables(sf_dir, out) -> None:
+    for t in TABLES:
+        schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
+        pq.write_table(schema.empty_table(), out / f"{t}.parquet")
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_ivf",
+        "ann_ivf_rerank",
+        "ann_ivf_indexed",
+        "ann_ivf_sq8",
+        "ann_ivfpq",
+        "ann_ivfpq_indexed",
+        "ann_ivfpq_residual",
+        "ivf_cell_stats",
+        "ivf_probe_sweep",
+        "cluster_purity",
+        "semdedup",
+        "semdedup_clusters",
+        "ann_pq_adc",
+        "pq_reconstruction_error",
+        "seeding_quality_eval",
+        "pca_project",
+        "pca_explained_variance",
+    ],
+)
+def test_empty_fit_sample_raises_on_both_sides(name, spark, sf_dir, tmp_path):
+    """A driver-side fit (IVF centroids, PQ codebooks, PCA basis,
+    seedings) has nothing to train on in an empty corpus. The Spark
+    build and its lazy oracle call the same fit, so both raise the one
+    named error of sources.tables.sample_vectors."""
+    _empty_tables(sf_dir, tmp_path)
+    with pytest.raises(EmptySampleError):
+        QUERIES[name](spark, str(tmp_path))
+    with pytest.raises(EmptySampleError):
+        LAZY_ORACLES[name](str(tmp_path))
 
 
 def test_hill_tail_index_with_fewer_orders_than_k(spark, sf_dir, tmp_path):

@@ -145,7 +145,7 @@ def test_ivf_cell_assignment_single_distance_subtrees(spark, sf_dir):
     from rag_system_vector_db_spark.operators import ann
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
+    cents = ann.kmeans_fit_sample(sf_dir)
     plan = _optimized(ann.with_cell(emb, "embedding", cents))
     # one aggregate(zip_with(...)) euclidean per centroid, inside ONE
     # transform over the nested literal -> the distance machinery

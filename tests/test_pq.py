@@ -15,7 +15,7 @@ from rag_system_vector_db_spark.operators import ann, embedding
 
 @pytest.fixture(scope="module")
 def books(sf_dir):
-    return ann.pq_fit_sample(sf_dir, m=4, k=16, n_iter=3)
+    return ann.pq_fit_sample(sf_dir)
 
 
 @pytest.fixture(scope="module")
@@ -94,7 +94,7 @@ def test_int8_error_bounded_by_half_step(spark, sf_dir):
 def test_ivf_indexed_prunes_partitions(spark, sf_dir, tmp_path):
     """The materialized layout must expose cell as a partition column
     and prune non-probed directories at plan time."""
-    cents = ann.kmeans_fit_sample(sf_dir, k=4, n_iter=2)
+    cents = ann.kmeans_fit_sample(sf_dir, k=4)
     idx_dir = str(tmp_path / "ivf_idx")
     ann.ivf_index_build(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"), cents, idx_dir
@@ -116,7 +116,7 @@ def test_ivf_indexed_prunes_partitions(spark, sf_dir, tmp_path):
 
 def test_ivf_indexed_equals_unindexed(spark, sf_dir, tmp_path):
     """Same result contract as the in-plan IVF search."""
-    cents = ann.kmeans_fit_sample(sf_dir, k=4, n_iter=2)
+    cents = ann.kmeans_fit_sample(sf_dir, k=4)
     idx_dir = str(tmp_path / "ivf_idx2")
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     ann.ivf_index_build(corpus, cents, idx_dir)
@@ -135,7 +135,7 @@ def test_ivfpq_indexed_prunes_and_matches_inline(spark, sf_dir, tmp_path, books)
     """The code-only IVF-PQ layout must (a) store NO embedding column
     (the 64x size win), (b) prune non-probed cell directories at plan
     time, and (c) reproduce the inline ann_ivfpq_topk ranking."""
-    cents = ann.kmeans_fit_sample(sf_dir, k=4, n_iter=2)
+    cents = ann.kmeans_fit_sample(sf_dir, k=4)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     idx_dir = str(tmp_path / "ivfpq_idx")
     ann.ivfpq_index_build(emb, cents, books, idx_dir)
@@ -195,8 +195,8 @@ def test_residual_pq_reconstructs_tighter_than_raw(spark, sf_dir, books):
     m×k code budget, residual codebooks (trained on x − c(x)) must
     reconstruct with LOWER total squared error than raw-vector
     codebooks. Checked corpus-wide via numpy replays of both encoders."""
-    cents = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    rbooks = ann.pq_fit_residual_sample(sf_dir, cents, m=4, k=16, n_iter=3)
+    cents = ann.kmeans_fit_sample(sf_dir)
+    rbooks = ann.pq_fit_residual_sample(sf_dir, cents)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     mat = np.array(
         [r.embedding for r in emb.orderBy("vec_id").collect()], dtype=np.float64
@@ -222,8 +222,8 @@ def test_residual_pq_reconstructs_tighter_than_raw(spark, sf_dir, books):
 def test_residual_ivfpq_runs_and_ranks(spark, sf_dir):
     """Smoke + contract: residual IVF-PQ returns k ranked rows per
     query with ascending distances."""
-    cents = ann.kmeans_fit_sample(sf_dir, k=8, n_iter=3)
-    rbooks = ann.pq_fit_residual_sample(sf_dir, cents, m=4, k=16, n_iter=3)
+    cents = ann.kmeans_fit_sample(sf_dir)
+    rbooks = ann.pq_fit_residual_sample(sf_dir, cents)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -237,3 +237,54 @@ def test_residual_ivfpq_runs_and_ranks(spark, sf_dir):
         rows.sort()
         assert [r for r, _ in rows] == [1, 2, 3]
         assert all(a[1] <= b[1] for a, b in zip(rows, rows[1:]))
+
+
+def test_nearest_centroid_twins_agree_on_ties(spark, tmp_path):
+    """with_cell, probe_cells and pq_code_expr equal their DuckDB twins
+    (V.dd_nearest_cell, V.dd_nearest_cells, ann.dd_pq_codes) row for
+    row, and an exact tie goes to the lowest index on both engines:
+    centroid 3 repeats centroid 1, and code 2 of each book repeats
+    code 0."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rag_system_vector_db_spark.functions import vector as V
+
+    rng = np.random.default_rng(7)
+    mat = rng.standard_normal((200, 8)).round(1)
+    cents = [[float(v) for v in c] for c in mat[:4]]
+    cents[3] = cents[1]
+    books = [[[float(v) for v in c] for c in rng.standard_normal((4, 4)).round(1)] for _ in range(2)]
+    for b in books:
+        b[2] = b[0]
+    path = str(tmp_path / "v.parquet")
+    pq.write_table(
+        pa.table({"vec_id": pa.array(range(len(mat)), pa.int64()), "embedding": pa.array(mat.tolist())}),
+        path,
+    )
+    df = spark.read.parquet(path)
+    cells = ann.with_cell(df, "embedding", cents, out_col="cell").select(
+        "vec_id", "cell", ann.pq_code_expr("embedding", books).alias("codes")
+    )
+    probes = (
+        ann.probe_cells(df.selectExpr("vec_id AS query_id", "embedding AS query_vec"), cents, 3)
+        .groupBy("query_id")
+        .agg(F.expr("transform(sort_array(collect_list(struct(_probe, _cell))), s -> s._cell)").alias("p"))
+    )
+    got = {
+        r.vec_id: (r.cell, list(r.codes), list(r.p))
+        for r in cells.join(probes, cells.vec_id == probes.query_id).collect()
+    }
+    lit = V.dd_literal(cents)
+    want = {
+        r[0]: (r[1], r[2], r[3])
+        for r in duckdb.sql(
+            f"SELECT vec_id, {V.dd_nearest_cell('embedding', lit)}, {ann.dd_pq_codes('embedding', books)},"
+            f" {V.dd_nearest_cells('embedding', lit, 3)} FROM read_parquet('{path}')"
+        ).fetchall()
+    }
+    assert got == want
+    assert 3 not in {c for c, _, _ in got.values()}  # the tie goes to cell 1
+    assert all(2 not in codes for _, codes, _ in got.values())
+    assert all(p.index(1) < p.index(3) for _, _, p in got.values() if 3 in p)

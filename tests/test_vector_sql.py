@@ -32,7 +32,7 @@ import pytest
 from rag_system_vector_db_spark.functions import text as X
 from rag_system_vector_db_spark.functions import vector as V
 from rag_system_vector_db_spark.operators import knn
-from rag_system_vector_db_spark.operators.ann import ann_lsh_topk, hard_negative_mining
+from rag_system_vector_db_spark.operators.ann import ann_lsh_topk, hard_negative_mining, sq8_topk
 from rag_system_vector_db_spark.operators.dedup import dedup_embedding_lsh, semdedup
 from rag_system_vector_db_spark.operators.hybrid import hybrid_search_rrf
 from rag_system_vector_db_spark.operators.vector_store import VectorCollection
@@ -88,10 +88,12 @@ def _edge_parquet(path) -> str:
     return str(path)
 
 
-@pytest.fixture(scope="module", params=["sf", "random384", "edge64"])
+@pytest.fixture(scope="module", params=["sf", "random384", "edge64", "zeros64"])
 def math_vectors(request, sf_dir, tmp_path_factory):
     if request.param == "edge64":
         return _edge_parquet(tmp_path_factory.mktemp("v") / "edge.parquet")
+    if request.param == "zeros64":  # absmax 0: the SQ8 scale is 1, every code 0
+        return _random_parquet(tmp_path_factory.mktemp("v") / "zeros.parquet", 40, 64, zero_rows=range(40))
     if request.param == "sf":
         return f"{sf_dir}/embeddings.parquet"
     return _random_parquet(tmp_path_factory.mktemp("v") / "rand.parquet", 2000, 384, zero_rows=[5])
@@ -99,7 +101,8 @@ def math_vectors(request, sf_dir, tmp_path_factory):
 
 def test_vector_math_equals_duckdb_exactly(spark, math_vectors):
     """Each Spark builder equals its dd_ twin bit for bit, zero rows
-    (NULL cosines) and SQ8 half-way and clamp inputs included."""
+    (NULL cosines), an all-zero corpus, and SQ8 half-way and clamp
+    inputs included."""
     df = spark.read.parquet(math_vectors)
     side = df.crossJoin(df.selectExpr(f"{V.sq8_absmax('embedding')} AS am")).selectExpr(
         "vec_id",
@@ -157,6 +160,23 @@ def test_vector_math_equals_duckdb_exactly(spark, math_vectors):
         assert codes[1][:2] == [127, -127]
         assert codes[2] == list(range(1, 33)) + list(range(0, -32, -1))  # half up
         assert codes[3][0] == 127 and codes[3][32] == -126
+    if math_vectors.endswith("zeros.parquet"):
+        assert {v[6] for v in got.values()} == {0.0}
+        assert {tuple(v[7]) for v in got.values()} == {(0,) * 64}
+
+
+def test_sq8_topk_on_an_all_zero_corpus_matches_oracle(spark, tmp_path):
+    """absmax 0 takes the SQ8 scale 1 on both engines: every code and
+    code distance is 0, not an ANSI division by zero in Spark and code
+    127 in DuckDB."""
+    path = _random_parquet(tmp_path / "embeddings.parquet", 3, 4, zero_rows=range(3))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    try:
+        compare(sq8_topk(spark.read.parquet(path)), con, ORACLES["ann_sq8"])
+    finally:
+        con.close()
+    assert [tuple(r) for r in sq8_topk(spark.read.parquet(path)).collect()] == [(1, 1, 0, 0.0), (2, 2, 0, 0.0)]
 
 
 def test_topk_scores_equal_duckdb_cosine_exactly(spark, vectors):
@@ -431,20 +451,34 @@ def test_no_python_lambda_hofs_in_vector_math():
 
 
 # A fold is spelled once, in functions/vector.py: the Column-API and
-# Spark SQL ``aggregate(zip_with(...))`` and DuckDB's
-# ``list_sum(list_transform(list_zip(...)))``.
+# Spark SQL ``aggregate(zip_with(...))``, DuckDB's
+# ``list_sum(list_transform(list_zip(...)))``, and the LSH bucket id as
+# a sum of ``1::BIGINT << pid`` over a planes table (V.dd_sign_bits).
 _FOLD = re.compile(
     r"(?<![\w.])(?:F\s*\.\s*)?aggregate\s*\(\s*(?:F\s*\.\s*)?zip_with\s*\("
     r"|(?<![\w.])list_sum\s*\(\s*list_transform\s*\(\s*list_zip\s*\("
+    r"|1::BIGINT\s*<<\s*pid\b"
 )
 FOLD_HOME = "functions/vector.py"
+# The nearest-centroid rule has one home per layer. The driver's fit
+# sample is read once, in sources/tables.py (``ORDER BY <id> LIMIT {n}``
+# SQL, then ``fetchall()], dtype=np.float64``). An oracle's nearest
+# cell, probe list or PQ code is V.dd_argmin, never a row_number window
+# over ``CROSS JOIN cents``, so the window argmin has no home at all.
+_SAMPLE_READ = re.compile(
+    r"ORDER\s+BY\s+\{?[\w.]+\}?\s+LIMIT\s+\{"
+    r"|fetchall\s*\(\s*\)\s*\]\s*,\s*dtype\s*=\s*np\s*\.\s*float64"
+)
+SAMPLE_HOME = "sources/tables.py"
+_WINDOW_ARGMIN = re.compile(r"CROSS\s+JOIN\s+cents\b")
 # (file, enclosing function, reason)
 FOLD_EXCEPTIONS: list[tuple[str, str, str]] = []
 
 
-def _fold_offences(src: str):
-    """Line of each fold shape in the code and string literals of
-    ``src``; docstrings and comments are prose, not code."""
+def _fold_offences(src: str, pattern=_FOLD):
+    """Line of each ``pattern`` match (a fold shape by default) in the
+    code and string literals of ``src``; docstrings and comments are
+    prose, not code."""
     docs = {
         (n.lineno, n.col_offset)
         for n in ast.walk(ast.parse(src))
@@ -458,13 +492,13 @@ def _fold_offences(src: str):
         for off, ch in enumerate(" " + text):
             chars.append(ch)
             lines.append(tok.start[0] + text.count("\n", 0, off))
-    for m in _FOLD.finditer("".join(chars)):
+    for m in pattern.finditer("".join(chars)):
         yield lines[m.start()]
 
 
-def _unexcused_folds(rel: str, src: str, used: set):
+def _unexcused_folds(rel: str, src: str, used: set, pattern=_FOLD):
     tree = ast.parse(src)
-    for line in _fold_offences(src):
+    for line in _fold_offences(src, pattern):
         fn = _enclosing(tree, line)
         excused = [e for e in FOLD_EXCEPTIONS if e[:2] == (rel, fn)]
         used.update(excused)
@@ -481,6 +515,7 @@ def test_fold_lint_flags_every_spelling():
         'd = ("aggregate("\n     "zip_with(a, b, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")',
         'q = f"""SELECT list_sum(list_transform(\n    list_zip(a, b), x -> x[1]*x[2])) FROM t"""',
         'q = "ORDER BY list_sum(list_transform(list_zip(c.codes, q.qcodes), p -> p[1]))"',
+        'q = f"SELECT vec_id, sum(CASE WHEN d > 0 THEN (1::BIGINT << pid) ELSE 0 END) FROM dots"',
     ]
     assert [len(list(_fold_offences(s))) for s in bad] == [1] * len(bad)
     assert list(_fold_offences(bad[5])) == [1]
@@ -498,6 +533,46 @@ def test_fold_lint_flags_every_spelling():
     assert list(_unexcused_folds("operators/knn.py", src, used)) == [
         "operators/knn.py:2 (g): return F.expr('aggregate(zip_with(a, b, (x, y) -> x), 0D, (acc, v) -> acc + v)')"
     ]
+
+
+def test_nearest_centroid_lint_flags_every_spelling():
+    reads = [
+        'rel = duckdb.sql(f"SELECT vec_id, embedding FROM t ORDER BY vec_id LIMIT {sample_limit}")',
+        'rel = duckdb.sql(\n    f"SELECT {id_col}, {vec_col} FROM t "\n    f"ORDER BY {id_col} LIMIT {n}"\n)',
+        "x = np.array([list(r[1]) for r in rel.fetchall()], dtype=np.float64)",
+        "x = np.array(\n    [list(r[1]) for r in rel.fetchall()],\n    dtype=np.float64,\n)",
+    ]
+    assert [len(list(_fold_offences(s, _SAMPLE_READ))) for s in reads] == [1] * len(reads)
+    assert list(_fold_offences(reads[1], _SAMPLE_READ)) == [3]
+    argmins = [
+        'q = f"SELECT e.vec_id, c.cid FROM embeddings e CROSS JOIN cents c"',
+        'q = """SELECT q.query_id FROM q\n    CROSS   JOIN cents c"""',
+    ]
+    assert [list(_fold_offences(s, _WINDOW_ARGMIN)) for s in argmins] == [[1], [2]]
+    ok = (
+        'def f():\n    """Reads ORDER BY vec_id LIMIT {n} and fetchall()], dtype=np.float64."""\n'
+        '    q = f"SELECT * FROM t ORDER BY {h}, vec_id LIMIT {cap}"  # CROSS JOIN cents\n'
+        '    r = "SELECT * FROM bm25 ORDER BY bm25 DESC, doc_id LIMIT 10"\n'
+        "    m = np.array([list(r[1]) for r in rows], dtype=np.float64)\n"
+        '    c = "FROM embeddings e CROSS JOIN centroids_by_label c"\n'
+    )
+    assert not list(_fold_offences(ok, _SAMPLE_READ)) and not list(_fold_offences(ok, _WINDOW_ARGMIN))
+
+
+def test_sample_reads_and_argmins_only_in_their_homes():
+    used: set = set()
+    found = [
+        hit
+        for p in sorted(PKG.rglob("*.py"))
+        for pattern, home in ((_SAMPLE_READ, SAMPLE_HOME), (_WINDOW_ARGMIN, None))
+        if p.relative_to(PKG).as_posix() != home
+        for hit in _unexcused_folds(p.relative_to(PKG).as_posix(), p.read_text(), used, pattern)
+    ]
+    assert not found, (
+        "read the fit sample with sources.tables.sample_vectors, and take the"
+        " nearest centroid with V.dd_nearest_cell(s) / V.dd_argmin:\n" + "\n".join(found)
+    )
+    assert len(list(_fold_offences((PKG / SAMPLE_HOME).read_text(), _SAMPLE_READ))) == 2
 
 
 def test_folds_only_in_functions_vector():
